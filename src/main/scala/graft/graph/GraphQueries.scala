@@ -684,7 +684,8 @@ object GraphQueries {
     // rmat generation (`oink/rmat.cpp`): deterministic seeded generator;
     // degree histogram like examples/rmat.cpp:155-163. The generator is a
     // pure function of (params, seed, numTasks=16) — independent of sf and
-    // partition layout (GraphSpec proves run-to-run determinism) — so the
+    // partition layout (GraphSpec proves run-to-run determinism and the
+    // same edge set under 1, 3 and 8 shuffle partitions) — so the
     // histogram is a constant the oracle can state outright, like
     // q_rmat_count. NOTE: this pin is a determinism/regression check, not
     // an independent derivation — any intentional change to the generator

@@ -5,13 +5,13 @@ import java.util.Locale
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Equivalence check for the r19 convergence-mode delta fusion
-  * (Iterative.pagerank / personalizedPagerank with tol > 0, the
-  * b_pagerank_tol / b_ppr_tol windows): prints row count, Σrank and an
-  * order-independent checksum of the ROUNDED ranks for the tol-mode
-  * runs. Run on the pre-change and post-change binaries in the same
-  * sandbox: identical lines = the fused Σ|Δrank| observation stopped
-  * at the same round with bit-identical ranks.
+/** Equivalence check for Iterative.pagerank / personalizedPagerank in
+  * fixed and convergence (tol > 0, the b_pagerank_tol / b_ppr_tol
+  * windows) modes: prints row count, Σrank and an order-independent
+  * checksum of the ROUNDED ranks, with the Spark jobs, stages and task
+  * time each call took. Run on two binaries in the same sandbox:
+  * identical signatures = both stopped at the same round with the same
+  * rounded ranks.
   *
   * Usage: runMain graft.tools.R19PrDeltaCheck <sfDir>
   */
@@ -42,9 +42,6 @@ object R19PrDeltaCheck {
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong
-    val deserMs = new java.util.concurrent.atomic.AtomicLong
     val stageLog =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, String)]
     spark.sparkContext.addSparkListener(
@@ -56,9 +53,6 @@ object R19PrDeltaCheck {
             s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
           stages.incrementAndGet()
           taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-          gcMs.addAndGet(s.stageInfo.taskMetrics.jvmGCTime)
-          cpuMs.addAndGet(s.stageInfo.taskMetrics.executorCpuTime / 1000000L)
-          deserMs.addAndGet(s.stageInfo.taskMetrics.executorDeserializeTime)
           stageLog.add((s.stageInfo.taskMetrics.executorRunTime,
             s.stageInfo.numTasks,
             s.stageInfo.name.linesIterator.next().take(120)))
@@ -96,75 +90,6 @@ object R19PrDeltaCheck {
         .formatLocal(Locale.ROOT, np, stages.get - s0,
           (taskMs.get - t0) / 1e3, (System.nanoTime() - w0) / 1e9 - 0.3))
       stageLog.clear()
-    }
-
-    def phase(name: String)(body: => Unit): Unit = {
-      val (j0, s0, t0) = (jobs.get, stages.get, taskMs.get)
-      val (c0, g0, d0) = (cpuMs.get, gcMs.get, deserMs.get)
-      val w0 = System.nanoTime()
-      body
-      Thread.sleep(300)
-      println(("[prdelta] phase %s jobs=%d stages=%d taskSec=%.2f " +
-        "cpuSec=%.2f gcSec=%.2f deserSec=%.2f wall=%.2f").formatLocal(
-        Locale.ROOT, name, jobs.get - j0,
-        stages.get - s0, (taskMs.get - t0) / 1e3,
-        (cpuMs.get - c0) / 1e3, (gcMs.get - g0) / 1e3,
-        (deserMs.get - d0) / 1e3,
-        (System.nanoTime() - w0) / 1e9))
-      stageLog.clear()
-    }
-
-    // warm the source scan once so neither setup variant pays
-    // first-touch parquet/codegen costs
-    graft.graph.GraphOps.edgesFromLineitem(spark, sfDir).count()
-
-    // pre-r19 setup shape: vertices and w derived INDEPENDENTLY from
-    // `directed` — two source scans, two distinct exchanges
-    {
-      import org.apache.spark.storage.StorageLevel
-      val edges = graft.graph.GraphOps.edgesFromLineitem(spark, sfDir)
-      val directed = edges.where(col("src") =!= col("dst")).distinct()
-      val vertices = graft.graph.GraphOps.vertexExtract(directed)
-        .repartition(col("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val outDeg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val w = directed.join(outDeg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      phase("setup_OLD_both") { vertices.count(); w.count() }
-      w.unpersist(); vertices.unpersist()
-    }
-
-    // phase bisect of the pagerank round economics (mirrors
-    // Iterative.pagerank's internals — pagerankStep is private[graft])
-    {
-      import org.apache.spark.storage.StorageLevel
-      val edges = graft.graph.GraphOps.edgesFromLineitem(spark, sfDir)
-      val directed = edges.where(col("src") =!= col("dst")).distinct()
-      val outDeg = directed.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val w = directed.join(outDeg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val vertices = graft.graph.GraphOps.vertexExtract(
-          w.select(col("src"), col("dst")))
-        .repartition(col("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var n = 0.0
-      phase("setup_NEW_both") { n = vertices.count().toDouble; w.count() }
-      var ranks = vertices.withColumn("rank", lit(1.0 / n)).localCheckpoint()
-      (1 to 5).foreach { i =>
-        phase(s"round$i") {
-          val next = graft.graph.Iterative
-            .pagerankStep(ranks, w, vertices, n, 0.85).localCheckpoint()
-          graft.core.Checkpoints.release(ranks)
-          ranks = next
-        }
-      }
-      phase("final_count") { ranks.count() }
-      graft.core.Checkpoints.release(ranks)
-      w.unpersist(); vertices.unpersist()
     }
 
     val edges = graft.graph.GraphOps.edgesFromLineitem(spark, sfDir)

@@ -254,6 +254,69 @@ class GraphSpec extends AnyFunSuite {
     assert(mass == 8L * (1L << 10))
   }
 
+  /** Runs `body` under each spark.sql.shuffle.partitions in {1, 3, 8}. */
+  private def underLayouts[T](body: => T): Seq[T] = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try Seq(1, 3, 8).map { n => spark.conf.set(key, n.toString); body }
+    finally spark.conf.set(key, prev)
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    graft.core.Checkpoints.release(df)
+    out
+  }
+
+  test("rmat, ccFind and pagerank do not depend on the partition layout") {
+    val p = RMat.Params(9, 4, 0.57, 0.19, 0.19, 0.05, 0.0, 3L)
+    val gens = underLayouts(pairs(RMat.generate(spark, p, numTasks = 8)))
+    assert(gens.forall(_ == gens.head) && gens.head.size == 4 * (1 << 9))
+    // one fixed input for the graph loops; twoComponents adds a path and
+    // a triangle apart from the R-MAT graph
+    val g = edges(gens.head.toSeq.map { case (a, b) => (a + 1000L, b + 1000L) } ++
+      Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L), (20L, 21L)): _*)
+    val ccs = underLayouts(pairs(Iterative.ccFind(g)))
+    assert(ccs.forall(_ == ccs.head))
+    assert(ccs.head.filter(_._1 < 1000L) == Set((1L, 1L), (2L, 1L), (3L, 1L),
+      (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)))
+    // the job count is the round count plus a constant, so equal job
+    // counts mean the tol-mode loop stopped after the same round
+    val prs = underLayouts {
+      val (pr, jobs) = SparkJobs.count(Iterative.pagerank(g, tol = 1e-6))
+      val ranks = pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      graft.core.Checkpoints.release(pr)
+      (ranks, jobs)
+    }
+    prs.foreach { case (ranks, jobs) =>
+      assert(jobs == prs.head._2, s"pagerank jobs per layout: ${prs.map(_._2)}")
+      assert(ranks.keySet == prs.head._1.keySet)
+      ranks.foreach { case (v, r) => assert(math.abs(r - prs.head._1(v)) < 1e-12) }
+    }
+  }
+
+  test("rmat, ccFind and pagerank leave no persisted RDD behind") {
+    val sc = spark.sparkContext
+    def leftover(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      graft.core.Checkpoints.release(call)
+      assert(leftover(before).isEmpty, s"$name left RDDs ${leftover(before)} persisted")
+    }
+    val path = edges((0L until 15L).map(i => (i, i + 1)): _*)
+    val star = edges((2L, 1L), (3L, 1L), (4L, 1L), (1L, 5L))
+    val p = RMat.Params(7, 4, 0.57, 0.19, 0.19, 0.05, 0.0, 9L)
+    check("ccFind")(Iterative.ccFind(path))
+    check("ccFind at maxIter")(Iterative.ccFind(path, maxIter = 3))
+    check("pagerank")(Iterative.pagerank(star))
+    check("pagerank at maxIter")(Iterative.pagerank(star, tol = 1e-300, maxIter = 3))
+    check("pagerank fixed rounds")(Iterative.pagerank(star, tol = 0.0, maxIter = 3))
+    check("rmat")(RMat.generate(spark, p, numTasks = 4))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    intercept[IllegalArgumentException](RMat.generate(spark, p, numTasks = 4, maxRounds = 1))
+    assert(leftover(before).isEmpty, s"failed rmat left RDDs ${leftover(before)} persisted")
+  }
+
   test("ANF with an ample sketch returns exact r-hop reach sizes") {
     // path 1-2-3-4 plus isolated edge 10-11; below k the KMV sketch
     // degenerates to the exact distinct count, so every vertex must

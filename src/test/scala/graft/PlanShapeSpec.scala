@@ -155,20 +155,46 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("Generate"), s"expected a generator plan:\n$p")
   }
 
-  test("a pagerank round computes its shuffle once (exchange reuse)") {
-    // the contrib branch and the dangling-mass branch of pagerankStep both
-    // sit above the same groupBy(dst) Exchange; if exchange reuse breaks,
-    // every round pays the ranks-join-edges shuffle twice
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
-    val vertices = Seq(1L, 2L, 3L, 4L, 5L).toDF("v") // 5 is dangling
-    val ranks = vertices.withColumn("rank", lit(0.2))
-    val w = edges.withColumn("w", lit(1.0))
-    val df = graft.graph.Iterative.pagerankStep(ranks, w, vertices, 5.0, 0.85)
-    df.collect() // AQE defers exchange reuse to runtime — check the FINAL plan
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("ReusedExchange"),
-      s"dangling-mass branch must reuse the contrib shuffle:\n$p")
+  test("pagerank, ccFind and rmat submit at most 2 Spark jobs per round") {
+    // a round of each loop is one reduceByKey and one runJob, so the
+    // bound leaves room for one extra job a round
+    val perRound = 2
+    val constant = 3
+    def bounded(name: String, rounds: Int, jobs: Int): Unit =
+      assert(jobs <= perRound * rounds + constant,
+        s"$name: $jobs Spark jobs for $rounds rounds")
+
+    // star into a hub plus a dangling tail: ranks never settle exactly,
+    // so both modes run all maxIter rounds
+    val g = TestSession.edges((2L, 1L), (3L, 1L), (4L, 1L), (1L, 5L), (5L, 6L))
+    for (tol <- Seq(0.0, 1e-300)) {
+      val (pr, jobs) = SparkJobs.count(
+        graft.graph.Iterative.pagerank(g, tol = tol, maxIter = 6))
+      graft.core.Checkpoints.release(pr)
+      bounded(s"pagerank tol=$tol", 6, jobs)
+    }
+
+    // path 0-1-...-15: the min label travels one hop a round, so 15
+    // rounds change labels and a 16th finds the fixpoint
+    val path = TestSession.edges((0L until 15L).map(i => (i, i + 1)): _*)
+    val (cc, ccJobs) = SparkJobs.count(graft.graph.Iterative.ccFind(path))
+    assert(cc.collect().forall(_.getLong(1) == 0L))
+    graft.core.Checkpoints.release(cc)
+    bounded("ccFind", 16, ccJobs)
+
+    // rmat runs exactly as many rounds as the smallest maxRounds that
+    // reaches the target; every smaller budget fails its require
+    val p = graft.gen.RMat.Params(8, 4, 0.57, 0.19, 0.19, 0.05, 0.0, 5L)
+    def gen(rounds: Int) = graft.gen.RMat.generate(spark, p, numTasks = 4,
+      maxRounds = rounds)
+    val rounds = (1 to 20).find { r =>
+      try { graft.core.Checkpoints.release(gen(r)); true }
+      catch { case _: IllegalArgumentException => false }
+    }.get
+    assert(rounds > 1, "the fixture must need a dedup round")
+    val (rm, rmJobs) = SparkJobs.count(gen(rounds))
+    graft.core.Checkpoints.release(rm)
+    bounded("RMat.generate", rounds, rmJobs)
   }
 
   test("repetition stats is a zero-shuffle native projection") {
