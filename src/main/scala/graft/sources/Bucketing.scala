@@ -25,6 +25,33 @@ object Bucketing {
       .sortBy(key)
       .saveAsTable(table)
 
+  /** Append `df` to the bucketed table `table` with at most one new file
+    * per bucket. The writer computes bucket = pmod(murmur3(cols), B) per
+    * row and every task writes its own file to every bucket it holds,
+    * so an unaligned append adds tasks × buckets files. Rows are first
+    * hash-partitioned on the bucket columns into n partitions, n the
+    * largest divisor of B not above `spark.sql.shuffle.partitions`:
+    * pmod(h, B) then fixes pmod(h, n), so each bucket's rows sit in one
+    * task. Columns are cast to the table's types (insertInto matches by
+    * position) so the partitioning hashes the values the writer
+    * buckets. */
+  def appendAligned(spark: SparkSession, df: DataFrame, table: String): Unit = {
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val spec = meta.bucketSpec.getOrElse(
+      throw new IllegalArgumentException(s"$table is not bucketed"))
+    require(df.columns.length == meta.schema.length,
+      s"$table has ${meta.schema.length} columns, the appended frame ${df.columns.length}")
+    val typed = df.select(df.columns.zip(meta.schema.fields).map {
+      case (c, f) => df.col(c).cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
+    val b = spec.numBuckets
+    val n = (math.min(b, spark.sessionState.conf.numShufflePartitions) to 1 by -1)
+      .find(b % _ == 0).get
+    typed.repartition(n, spec.bucketColumnNames.map(typed.col): _*)
+      .write.mode("append").insertInto(table)
+  }
+
   /** Auto-scaled bucket count for the stored-index families (r14
     * verdict "what's missing" #3 — the [[IvfIndex.autoCells]] clamp
     * discipline applied to bucket counts), CALIBRATED BY MEASUREMENT

@@ -132,7 +132,8 @@ object DedupIndex {
   }
 
   /** Ingest ADMITTED docs into the index: bands, shingles, and sizes
-    * insert with the tables' bucket specs, so the next batch dedups
+    * insert with the tables' bucket specs, at most one file per bucket
+    * each ([[Bucketing.appendAligned]]), so the next batch dedups
     * against corpus ∪ admitted with no rebuild. The caller owns id
     * freshness (the [[IvfIndex.append]] contract) — admitted rows come
     * out of [[dedupAgainst]], which guarantees they are not near-dups
@@ -140,12 +141,12 @@ object DedupIndex {
   def append(spark: SparkSession, name: String, admitted: DataFrame,
       textCol: String, idCol: String, k: Int = 3, numHashes: Int = 64,
       bands: Int = 16): Unit = {
-    bandRows(admitted, textCol, idCol, k, numHashes, bands)
-      .write.mode("append").insertInto(s"${name}_bands")
+    Bucketing.appendAligned(spark,
+      bandRows(admitted, textCol, idCol, k, numHashes, bands), s"${name}_bands")
     val sh = Dedup.shingles(admitted, textCol, idCol, k).localCheckpoint()
-    sh.write.mode("append").insertInto(s"${name}_shingles")
-    sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-      .write.mode("append").insertInto(s"${name}_sizes")
+    Bucketing.appendAligned(spark, sh, s"${name}_shingles")
+    Bucketing.appendAligned(spark,
+      sh.groupBy(col("id")).agg(count(lit(1)).as("n")), s"${name}_sizes")
   }
 
   /** Maintenance: rewrite all three appended tables one-file-per-bucket

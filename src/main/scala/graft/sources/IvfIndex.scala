@@ -197,7 +197,8 @@ object IvfIndex {
     * [[serveInt8]] keep their pruned-scan plans with zero reindexing:
     * a crawl batch becomes searchable the moment its append commits.
     * Cost per batch: one broadcast-quantizer argmin over the fresh
-    * rows + one bucketed write of |fresh| rows — nothing touches the
+    * rows + one bucketed write of |fresh| rows, at most one new file
+    * per cell ([[Bucketing.appendAligned]]) — nothing touches the
     * existing corpus. The CALLER owns id freshness (the incremental-
     * dedup admission contract): appending an id that already has a
     * posting duplicates it — run the engine's dedup/admission gate
@@ -230,7 +231,7 @@ object IvfIndex {
           else centsTab
         postingRows(vecs, cents)
       }
-    rows.write.mode("append").insertInto(s"${name}_cells")
+    Bucketing.appendAligned(spark, rows, s"${name}_cells")
   }
 
   /** Maintenance: rewrite the appended cells table one-file-per-bucket
@@ -315,7 +316,8 @@ object IvfIndex {
     *      small-files regime); neither → no write at all, the pass
     *      costs two metadata reads and one column-pruned groupBy;
     *   3. RE-MEASURE: skew after, so the caller's log carries the
-    *      before/after pair — and, per R13DriftProbe's third finding
+    *      before/after pair (a pass that wrote nothing reports
+    *      skewAfter = skewBefore without rescanning) — and, per R13DriftProbe's third finding
     *      (a rebuild can LOWER tight-probe recall), the caller should
     *      run [[reprobeRecall]] → [[pickNProbe]] after any
     *      `refreshed = true` pass before narrowing nProbe (label-free:
@@ -339,7 +341,7 @@ object IvfIndex {
       if (doCompact) compact(spark, name)
       else Map.empty[String, (Long, Long)]
     Maintenance(skew, doRefresh, doCompact,
-      occupancySkew(spark, name), files)
+      if (doCompact) occupancySkew(spark, name) else skew, files)
   }
 
   /** One point on the recall/nProbe frontier: what [[serve]] at this

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Compact, IvfIndex, TextIndex}
+import graft.sources.{Compact, DedupIndex, IvfIndex, TextIndex}
 
 /** Bucket-preserving compaction contract (r12 verdict #2): after
   * thousands of `append` batches a bucketed index is thousands of small
@@ -62,6 +62,30 @@ class CompactSpec extends AnyFunSuite {
       s"compaction must keep the pruned serve plan:\n$p")
     assert(served.collect().map(_.toSeq).toSet == beforeAnswer,
       "served answers must be byte-identical across compaction")
+  }
+
+  test("one append adds at most one file per bucket to each index table") {
+    val docs = Tables.documents(spark, sf0001)
+    val fresh = graft.llm.Sampling.hashSample(docs, "doc_id", 0.2)
+    DedupIndex.build(spark, docs.join(fresh.select(col("doc_id")),
+      Seq("doc_id"), "left_anti"), "text", "doc_id", "graft_dedup_align")
+    val emb = Tables.embeddings(spark, sf0001)
+    IvfIndex.build(spark, emb.where(col("vec_id") >= 200), "vec_id",
+      "embedding", "graft_ivf_align", numCentroids = 8)
+    val tables = Seq("graft_dedup_align_bands", "graft_dedup_align_shingles",
+      "graft_dedup_align_sizes", "graft_ivf_align_cells")
+    val before = tables.map(t => t -> filesPerBucket(t)).toMap
+    // a crawl batch arrives spread over several tasks
+    DedupIndex.append(spark, "graft_dedup_align", fresh.repartition(4),
+      "text", "doc_id")
+    IvfIndex.append(spark, "graft_ivf_align",
+      emb.where(col("vec_id") < 200).repartition(4), "vec_id", "embedding")
+    for (t <- tables) {
+      val added = filesPerBucket(t).map { case (b, n) =>
+        b -> (n - before(t).getOrElse(b, 0)) }
+      assert(added.values.sum > 0 && added.values.forall(_ <= 1),
+        s"$t: files added per bucket $added")
+    }
   }
 
   test("compaction is repeatable: generations alternate, answers stable") {

@@ -119,6 +119,40 @@ class IvfLifecycleSpec extends AnyFunSuite {
       s"the healthy pass must write nothing: $m2")
   }
 
+  /** Scans of `table` by the queries `body` runs. */
+  private def tableScans[T](table: String)(body: => T): (T, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        n.addAndGet(qe.optimizedPlan.collect {
+          case r: LogicalRelation
+              if r.catalogTable.exists(_.identifier.table == table) => 1
+        }.sum)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, n.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a no-op maintain pass scans the cells table once and keeps its skew") {
+    val mname = "graft_ivf_noop"
+    IvfIndex.build(spark, Tables.embeddings(spark, sf0001), "vec_id",
+      "embedding", mname, numCentroids = 16)
+    val (m, scans) = tableScans(s"${mname}_cells") {
+      IvfIndex.maintain(spark, mname)
+    }
+    assert(!m.refreshed && !m.compacted && m.files.isEmpty,
+      s"a freshly built index needs no maintenance: $m")
+    assert(m.skewAfter == m.skewBefore, s"nothing moved, so neither did skew: $m")
+    assert(scans == 1, s"the no-op pass must read the cells table once, read it $scans times")
+  }
+
   test("reprobeRecall measures the frontier label-free; pickNProbe picks the narrowest sufficient dial") {
     built
     val frontier = IvfIndex.reprobeRecall(spark, name,

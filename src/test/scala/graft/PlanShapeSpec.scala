@@ -314,6 +314,37 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected partial+final aggregates for BOTH phases:\n$p")
   }
 
+  /** A small HTML corpus and an int file for the file-kernel plans. */
+  private lazy val fileFixture: (String, String) = {
+    val html = java.nio.file.Files.createTempDirectory("graft_plan_html")
+    Seq("a", "b").foreach(f => java.nio.file.Files.writeString(
+      html.resolve(s"$f.html"), s"""<p>$f word\t<a href="http://x/$f">x</a></p>"""))
+    val ints = java.nio.file.Files.createTempDirectory("graft_plan_ints")
+    java.nio.file.Files.write(ints.resolve("i.bin"), Array[Byte](1, 0, 0, 0, 2, 0, 0, 0))
+    (html.toString, ints.toString)
+  }
+
+  test("file tokenizing plans the native strtok: no regex split, HOF filter or regex") {
+    val words = graft.text.TextOps.readWordsFromFiles(spark, fileFixture._1)
+    val names = words.queryExecution.optimizedPlan.flatMap(
+      _.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+    val banned = names.filter(n => n == "StringSplit" || n == "ArrayFilter" ||
+      n.contains("RLike") || n.startsWith("RegExp") || n == "Like")
+    assert(banned.isEmpty, s"regex or higher-order nodes in the tokenizer plan: $banned")
+    assert(names.contains("StrTok"), s"expected the StrTok expression: $names")
+  }
+
+  test("url index and intcount each plan exactly one aggregation exchange") {
+    withoutAqe {
+      val urls = graft.text.TextOps.urlIndexFromFiles(spark, fileFixture._1)
+      assert(shuffleCount(urls) == 1,
+        s"map-side dedup leaves only the url groupBy:\n${urls.queryExecution.executedPlan}")
+      val ints = graft.text.TextOps.intCountFromBinaryFiles(spark, fileFixture._2)
+      assert(shuffleCount(ints) == 1,
+        s"per-task counts merge in one sum per key:\n${ints.queryExecution.executedPlan}")
+    }
+  }
+
   test("decontamination broadcasts the eval side; the corpus never shuffles") {
     val p = plan("q_decontaminate")
     assert(p.contains("BroadcastHashJoin"),
