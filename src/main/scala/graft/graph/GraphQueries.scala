@@ -182,9 +182,10 @@ object GraphQueries {
   /** DuckDB replay of [[Iterative.personalizedPagerank]] on the mod-1000
     * lineitem graph: same unrolled chain as [[pagerankLineitemSql]], but
     * teleport + dangling mass return to the source set only. The CASE
-    * mirrors the Spark expression term for term, so the doubles agree
-    * bitwise before the shared 6dp rounding (the dangling subtraction
-    * identity is the one ~1e-15 exception, same as q_pagerank). */
+    * mirrors the per-vertex rank arithmetic of the Spark rounds term for
+    * term; contribution sums and the dangling mass (1 − Σcontrib there, a
+    * sum of dangling ranks here) differ only in accumulation order, ~1e-15
+    * noise absorbed by the shared 6dp rounding, as in q_pagerank. */
   private def pprLineitemSql(iters: Int, sources: Seq[Long]): String = {
     val sList = sources.mkString(", ")
     val sN = s"CAST(${sources.size}.0 AS DOUBLE)"
@@ -888,11 +889,11 @@ object GraphQueries {
 
     // personalized pagerank: teleport + dangling mass return to the seed
     // set {0, 7, 42}; 5 fixed rounds, the oracle unrolls the same chain
-    // with the CASE mirroring the Spark rank expression term for term
+    // with the CASE mirroring the per-vertex rank arithmetic term for term
     Q("q_ppr",
       (s, d) => Iterative.personalizedPagerank(
         GraphOps.edgesFromLineitem(s, d), Seq(0L, 7L, 42L),
-        alpha = 0.85, iters = 5)
+        alpha = 0.85, tol = 0.0, maxIter = 5)
         .select(col("v"), round(col("rank"), 6).as("rank")),
       Some(pprLineitemSql(5, Seq(0L, 7L, 42L)))),
 

@@ -32,42 +32,13 @@ object Dedup {
   def shingleArray(text: Column, k: Int): Column =
     graft.functions.ShingleArray.shingles(split(text, "\\s+"), k)
 
-  /** Spread a small document frame across the session's cores before
-    * the shingle explode (r19 — the text-side twin of
-    * `Multimodal.spreadForCodec`, guide §2.5 input parallelism): at
-    * bench scale the corpus is ONE parquet split, so the
-    * tokenize+shingle map of every dedup query ran as a single task
-    * while 31 cores idled (stage-profiled: 1.5 s serial on
-    * q_ngram_jaccard_pairs — and the shingle checkpoint it feeds then
-    * handed every downstream scan the same single partition).
-    * Hash-repartitions on the id (deterministic under task retry) ONLY
-    * when the input has fewer partitions than the session's
-    * parallelism; at 100 TB scan splits already provide ≥ cores and
-    * this is a no-op. Guarded like spreadForCodec: `df.rdd` under AQE
-    * eagerly executes shuffle stages already in the plan, so the probe
-    * is skipped when the analyzed plan carries an exchange-introducing
-    * node — derived frames (index appends, join outputs) pass through
-    * unchanged. */
-  private def spreadForShingles(docs: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val narrow = docs.queryExecution.analyzed.collectFirst {
-      case p: RepartitionOperation => p
-      case p: Join => p
-      case p: Aggregate => p
-      case p: Sort => p
-    }.isEmpty
-    if (!narrow) docs
-    else {
-      val target = docs.sparkSession.sparkContext.defaultParallelism
-      if (docs.rdd.getNumPartitions < target)
-        docs.repartition(target, col(idCol))
-      else docs
-    }
-  }
-
-  /** Distinct word k-shingles per document: (id, shingle). */
+  /** Distinct word k-shingles per document: (id, shingle). A narrow,
+    * under-partitioned input is spread across the cores first
+    * ([[graft.core.Spread.acrossCores]]): at bench scale the corpus is
+    * ONE parquet split, and the tokenize + shingle map ran as a single
+    * task (stage-profiled r19: 1.5 s serial on q_ngram_jaccard_pairs). */
   def shingles(docs: DataFrame, textCol: String, idCol: String, k: Int = 3): DataFrame =
-    spreadForShingles(docs, idCol).select(col(idCol).as("id"),
+    graft.core.Spread.acrossCores(docs, idCol).select(col(idCol).as("id"),
       explode(shingleArray(col(textCol), k)).as("shingle"))
 
   /** Decontamination: flag training documents that share any word

@@ -87,50 +87,20 @@ object Multimodal {
     * allocation + boxing PER BYTE it paid (r18, guide §1.2 step 2:
     * per-task work on the fingerprint hot paths — every raster row,
     * block, PCM segment and sampled frame formats one 16-byte digest). */
-  /** Spread a payload frame across the session's cores before a
-    * per-row codec pass (r18, guide §2.5 input parallelism): a small
-    * corpus arrives as ONE parquet split, so every encode/decode
-    * mapPartitions stage otherwise runs in a single task while the
-    * rest of the box idles — measured at sf0.1: 2,000 PNG encodes cost
-    * 0.19 s single-threaded, yet the codec queries spent seconds in
-    * one-task stages. Hash-repartitions on `media_id` (deterministic
-    * under task retry — never a rand-derived key) ONLY when the input
-    * has fewer partitions than the session's parallelism; at 100 TB
-    * scan splits already provide ≥ cores partitions and this is a
-    * no-op, so no constant is tuned to local mode. The moved bytes are
-    * exactly the payloads one codec pass is about to read — the
-    * cheapest point to buy the whole downstream chain's parallelism.
+  /** [[graft.core.Spread.acrossCores]] on `media_id` before a per-row
+    * codec pass (r18): measured at sf0.1, 2,000 PNG encodes cost 0.19 s
+    * single-threaded, yet the codec queries spent seconds in one-task
+    * stages. The moved bytes are exactly the payloads one codec pass is
+    * about to read — the cheapest point to buy the whole downstream
+    * chain's parallelism.
     *
     * CALL-SITE CONTRACT: only at the SYNTHESIS tables, whose upstream
-    * is a plain scan/select — never inside the fingerprint derivations.
-    * `df.rdd` under AQE eagerly executes any shuffle stages already in
-    * the plan to finalize it, so a partition check above an
-    * exchange-bearing input re-runs the whole upstream encode as a
-    * side effect (measured r18: q_image_dedup 1.64 → 5.88 s with the
-    * check inside imageDHash; reverted). Derivations inherit the
-    * synthesis tables' spread partitioning through the narrow chain. */
-  private def spreadForCodec(df: DataFrame): DataFrame = {
-    // guard the probe itself (r18 ADVICE): `df.rdd` under AQE eagerly
-    // executes any shuffle already in the plan, so the partition check
-    // is only safe over a narrow scan/select chain. Rather than trust
-    // the scaladoc alone, skip the probe when the analyzed plan carries
-    // an exchange-introducing node — a violating caller then gets its
-    // frame back unchanged instead of silently re-running its upstream.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val narrow = df.queryExecution.analyzed.collectFirst {
-      case p: RepartitionOperation => p
-      case p: Join => p
-      case p: Aggregate => p
-      case p: Sort => p
-    }.isEmpty
-    if (!narrow) df
-    else {
-      val target = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < target)
-        df.repartition(target, col("media_id"))
-      else df
-    }
-  }
+    * is a plain scan/select — never inside the fingerprint derivations,
+    * which inherit the synthesis tables' spread partitioning through the
+    * narrow chain (measured r18: q_image_dedup 1.64 → 5.88 s with the
+    * partition probe inside imageDHash). */
+  private def spreadForCodec(df: DataFrame): DataFrame =
+    graft.core.Spread.acrossCores(df, "media_id")
 
   private val HexChars = "0123456789abcdef".toCharArray
   private[graft] def hexString(bytes: Array[Byte]): String = {
@@ -1076,27 +1046,34 @@ object Multimodal {
     * bytes / 64 MB (the guide's partition sizing) — at 100 TB the
     * bytes term dominates and this coalesces a many-thousand-split
     * scan down to ~64 MB partitions, exactly §2.2's
-    * fewer-larger-partitions move; when the storage info is not yet
-    * visible the frame is returned unchanged (safe default). Coalesce
-    * is narrow (no exchange) and deterministic (contiguous merge); all
-    * consumers are key-based aggregates/joins, so results cannot
-    * depend on the partitioning. */
+    * fewer-larger-partitions move; see [[coalesceTarget]] for when the
+    * frame is returned unchanged. Coalesce is narrow (no exchange) and
+    * deterministic (contiguous merge); all consumers are key-based
+    * aggregates/joins, so results cannot depend on the partitioning. */
   private[graft] def checkpointFrames(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
-    val spark = cp.sparkSession
-    val par = spark.sparkContext.defaultParallelism
+    val sc = cp.sparkSession.sparkContext
     val info = cp.queryExecution.analyzed.collectFirst {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.flatMap(id => spark.sparkContext.getRDDStorageInfo.find(_.id == id))
-    info match {
-      case Some(i) =>
-        val bytes = i.memSize + i.diskSize
-        val target = math.max(par,
-          math.ceil(bytes.toDouble / (64L << 20).toDouble).toInt)
-        if (i.numPartitions > target) cp.coalesce(target) else cp
-      case None => cp
-    }
+      }.flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
+    coalesceTarget(info, sc.defaultParallelism).fold(cp)(cp.coalesce)
   }
+
+  /** The partition count [[checkpointFrames]] coalesces a checkpoint with
+    * storage report `info` to: max(`par`, materialized bytes / 64 MB), or
+    * None to keep the checkpoint as it is — when that is no fewer
+    * partitions, or when the report is missing or incomplete. The async
+    * listener bus fills the report in, so right after the checkpoint the
+    * RDD can be absent or only partly reported, and a partial byte count
+    * would silently collapse the target to `par`. */
+  private[graft] def coalesceTarget(info: Option[org.apache.spark.storage.RDDInfo],
+      par: Int): Option[Int] =
+    info.flatMap { i =>
+      val target = math.max(par,
+        math.ceil((i.memSize + i.diskSize).toDouble / (64L << 20)).toInt)
+      if (i.numCachedPartitions == i.numPartitions && target < i.numPartitions) Some(target)
+      else None
+    }
 
   private[graft] def stopFrames(frames: DataFrame, maxDf: Int): DataFrame =
     frames.groupBy(col("fm"))

@@ -137,7 +137,7 @@ object Rehearse100 {
       "g_ppr" -> ((s, d) =>
         (GraphOps.edgesFromLineitem(s, d), 1000L,
           (e: DataFrame) => Iterative.personalizedPagerank(
-            e, Seq(0L, 7L, 42L), alpha = 0.85, iters = 5))))
+            e, Seq(0L, 7L, 42L), alpha = 0.85, tol = 0.0, maxIter = 5))))
   }
 
   private def shifted(base: DataFrame, mod: Long): DataFrame =

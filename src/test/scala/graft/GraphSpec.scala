@@ -201,19 +201,44 @@ class GraphSpec extends AnyFunSuite {
     assert(Triangles.triangleCount(star).head().getLong(0) == 0L)
   }
 
-  test("ssspMulti equals the per-source sssp runs; goodSources picks top degree") {
+  test("ssspMulti matches a driver-side Dijkstra per source; goodSources picks top degree") {
     val s = spark
     import s.implicits._
-    val w = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 5.0), (3L, 4L, 1.0),
-      (5L, 6L, 2.0)).toDF("src", "dst", "w")
-    val multi = Iterative.ssspMulti(w, Seq(1L, 5L)).collect()
+    // seeded random digraph on 0..29 plus 40 → 41 → 0 (40 is reached from
+    // no source, 41 only from itself) and the sink 50 (3 → 50), a source
+    // that reaches nothing
+    val r = new scala.util.Random(17)
+    val arcs = Seq.fill(90)((r.nextInt(30).toLong, r.nextInt(30).toLong))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (a, b, 1.0 + r.nextInt(100) / 100.0) } ++
+      Seq((40L, 41L, 0.5), (41L, 0L, 0.25), (3L, 50L, 1.3))
+    // textbook Dijkstra: a vertex's distance is its predecessor's plus
+    // the arc weight, the same path-order sum Bellman-Ford forms
+    def dijkstra(src: Long): Map[Long, Double] = {
+      val out = arcs.groupBy(_._1)
+      val dist = scala.collection.mutable.Map(src -> 0.0)
+      val done = scala.collection.mutable.Set.empty[Long]
+      val queue = scala.collection.mutable.PriorityQueue((0.0, src))(
+        Ordering.by[(Double, Long), Double](_._1).reverse)
+      while (queue.nonEmpty) {
+        val (d, u) = queue.dequeue()
+        if (done.add(u)) out.getOrElse(u, Nil).foreach { case (_, v, w) =>
+          if (dist.get(v).forall(d + w < _)) { dist(v) = d + w; queue.enqueue((d + w, v)) }
+        }
+      }
+      dist.toMap
+    }
+    val sources = Seq(0L, 17L, 50L, 41L)
+    val got = Iterative.ssspMulti(arcs.toDF("src", "dst", "w"), sources).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val singles = Seq(1L, 5L).flatMap(src =>
-      Iterative.sssp(w, src).collect()
-        .map(r => (src, r.getLong(0)) -> r.getDouble(1))).toMap
-    assert(multi == singles)
+    val want = sources.flatMap(src => dijkstra(src).map { case (v, d) => (src, v) -> d }).toMap
+    assert(got == want)
+    assert(!got.contains((0L, 40L)) && !got.contains((0L, 41L)))
+    assert(got.keySet.filter(_._1 == 50L) == Set((50L, 50L)))
     // out-degree: 1→{2,3}, 2→{3}, 3→{4}, 5→{6}; top-2 = 1, then min-id of
     // the degree-1 tie group
+    val w = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 5.0), (3L, 4L, 1.0),
+      (5L, 6L, 2.0)).toDF("src", "dst", "w")
     assert(Iterative.goodSources(w, 2) == Seq(1L, 2L))
   }
 
@@ -282,17 +307,23 @@ class GraphSpec extends AnyFunSuite {
       (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)))
     // the job count is the round count plus a constant, so equal job
     // counts mean the tol-mode loop stopped after the same round
-    val prs = underLayouts {
-      val (pr, jobs) = SparkJobs.count(Iterative.pagerank(g, tol = 1e-6))
-      val ranks = pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      graft.core.Checkpoints.release(pr)
-      (ranks, jobs)
+    def sameRanks(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val runs = underLayouts {
+        val (pr, jobs) = SparkJobs.count(call)
+        val ranks = pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        graft.core.Checkpoints.release(pr)
+        (ranks, jobs)
+      }
+      runs.foreach { case (ranks, jobs) =>
+        assert(jobs == runs.head._2, s"$name jobs per layout: ${runs.map(_._2)}")
+        assert(ranks.keySet == runs.head._1.keySet)
+        ranks.foreach { case (v, r) => assert(math.abs(r - runs.head._1(v)) < 1e-12) }
+      }
     }
-    prs.foreach { case (ranks, jobs) =>
-      assert(jobs == prs.head._2, s"pagerank jobs per layout: ${prs.map(_._2)}")
-      assert(ranks.keySet == prs.head._1.keySet)
-      ranks.foreach { case (v, r) => assert(math.abs(r - prs.head._1(v)) < 1e-12) }
-    }
+    sameRanks("pagerank")(Iterative.pagerank(g, tol = 1e-6))
+    // sources in the small components and in the R-MAT part
+    sameRanks("personalizedPagerank")(
+      Iterative.personalizedPagerank(g, Seq(1L, 12L, gens.head.head._1 + 1000L)))
   }
 
   test("rmat, ccFind and pagerank leave no persisted RDD behind") {
@@ -311,10 +342,16 @@ class GraphSpec extends AnyFunSuite {
     check("pagerank")(Iterative.pagerank(star))
     check("pagerank at maxIter")(Iterative.pagerank(star, tol = 1e-300, maxIter = 3))
     check("pagerank fixed rounds")(Iterative.pagerank(star, tol = 0.0, maxIter = 3))
+    check("personalizedPagerank")(Iterative.personalizedPagerank(star, Seq(2L, 5L)))
+    check("personalizedPagerank fixed rounds")(
+      Iterative.personalizedPagerank(star, Seq(2L), tol = 0.0, maxIter = 3))
     check("rmat")(RMat.generate(spark, p, numTasks = 4))
     val before = sc.getPersistentRDDs.keySet.toSet
     intercept[IllegalArgumentException](RMat.generate(spark, p, numTasks = 4, maxRounds = 1))
     assert(leftover(before).isEmpty, s"failed rmat left RDDs ${leftover(before)} persisted")
+    intercept[IllegalArgumentException](Iterative.personalizedPagerank(star, Seq(2L, 99L)))
+    assert(leftover(before).isEmpty,
+      s"personalizedPagerank with a missing source left RDDs ${leftover(before)} persisted")
   }
 
   test("ANF with an ample sketch returns exact r-hop reach sizes") {
@@ -403,13 +440,13 @@ class GraphSpec extends AnyFunSuite {
     // is dangling and returns to A → A = 0.5 + 0.5·0.5 = 0.75, B = 0.25
     val e = edges((1L, 2L))
     val got = Iterative.personalizedPagerank(e, Seq(1L), alpha = 0.5,
-      iters = 2).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      tol = 0.0, maxIter = 2).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 0.75, 2L -> 0.25))
     // with S = every vertex the PPR formula IS pagerank (associativity
     // differs, so compare at 1e-12, not bitwise)
     val g = twoComponents
     val ppr = Iterative.personalizedPagerank(g,
-      Seq(1L, 2L, 3L, 10L, 11L, 12L, 20L, 21L), alpha = 0.85, iters = 3)
+      Seq(1L, 2L, 3L, 10L, 11L, 12L, 20L, 21L), alpha = 0.85, tol = 0.0, maxIter = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val pr = Iterative.pagerank(g, alpha = 0.85, tol = 0.0, maxIter = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

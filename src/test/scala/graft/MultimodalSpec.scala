@@ -26,6 +26,26 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.imgHeight(96) === 2)
   }
 
+  test("checkpointFrames coalesces only from a complete storage report") {
+    def report(parts: Int, cached: Int, bytes: Long) = {
+      val i = new org.apache.spark.storage.RDDInfo(1, "cp", parts,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, false, Nil)
+      i.numCachedPartitions = cached
+      i.memSize = bytes
+      i
+    }
+    val mb = 1L << 20
+    // complete: max(parallelism, bytes / 64 MB), only when that is fewer
+    assert(Multimodal.coalesceTarget(Some(report(64, 64, 5 * mb)), 4) == Some(4))
+    assert(Multimodal.coalesceTarget(Some(report(64, 64, 640 * mb)), 4) == Some(10))
+    assert(Multimodal.coalesceTarget(Some(report(8, 8, 640 * mb)), 4) == None)
+    assert(Multimodal.coalesceTarget(Some(report(4, 4, 1 * mb)), 4) == None)
+    // partial or missing: the listener bus has not caught up, keep it
+    assert(Multimodal.coalesceTarget(Some(report(64, 10, 1 * mb)), 4) == None)
+    assert(Multimodal.coalesceTarget(Some(report(64, 0, 0L)), 4) == None)
+    assert(Multimodal.coalesceTarget(None, 4) == None)
+  }
+
   test("PNG round-trip is lossless: decoded raster = payload + zero pad") {
     val cases = Seq(
       Array.empty[Byte],

@@ -156,8 +156,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("pagerank, ccFind and rmat submit at most 2 Spark jobs per round") {
-    // a round of each loop is one reduceByKey and one runJob, so the
-    // bound leaves room for one extra job a round
+    // a round of each loop (personalizedPagerank runs pagerank's) is one
+    // reduceByKey and one runJob, so the bound leaves room for one extra
+    // job a round
     val perRound = 2
     val constant = 3
     def bounded(name: String, rounds: Int, jobs: Int): Unit =
@@ -172,6 +173,10 @@ class PlanShapeSpec extends AnyFunSuite {
         graft.graph.Iterative.pagerank(g, tol = tol, maxIter = 6))
       graft.core.Checkpoints.release(pr)
       bounded(s"pagerank tol=$tol", 6, jobs)
+      val (ppr, pprJobs) = SparkJobs.count(graft.graph.Iterative.personalizedPagerank(
+        g, Seq(2L, 5L), tol = tol, maxIter = 6))
+      graft.core.Checkpoints.release(ppr)
+      bounded(s"personalizedPagerank tol=$tol", 6, pprJobs)
     }
 
     // path 0-1-...-15: the min label travels one hop a round, so 15
@@ -195,6 +200,23 @@ class PlanShapeSpec extends AnyFunSuite {
     val (rm, rmJobs) = SparkJobs.count(gen(rounds))
     graft.core.Checkpoints.release(rm)
     bounded("RMat.generate", rounds, rmJobs)
+  }
+
+  test("the spread guard never runs a shuffle already in the plan") {
+    // `df.rdd` under AQE runs every exchange of the plan, so the spread
+    // probes only narrow frames; Deduplicate and Window exchange too
+    val docs = Tables.documents(spark, sf0001)
+    val deduped = docs.dropDuplicates("doc_id")
+    val windowed = docs.withColumn("n", count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))))
+    for ((name, df) <- Seq("dropDuplicates" -> deduped, "window" -> windowed)) {
+      val (_, jobs) = SparkJobs.count(graft.llm.Dedup.shingles(df, "text", "doc_id"))
+      assert(jobs == 0, s"$name: shingles submitted $jobs Spark jobs while planning")
+    }
+    // a narrow, single-split scan is still spread across the cores
+    val spread = graft.llm.Dedup.shingles(docs, "text", "doc_id").queryExecution.analyzed
+      .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression])
+    assert(spread, "the narrow docs scan must be spread")
   }
 
   test("repetition stats is a zero-shuffle native projection") {

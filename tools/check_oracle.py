@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Dev-only pre-flight for the driver's DuckDB oracle compare.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [query ...]
 
-Replicates the driver's check shape: for each query in oracle_sql.json,
+The oracle comparison: for each query in oracle_sql.json
+(or only the named queries, e.g. after a SPARK_GRAFT_ONLY Verify run),
 run the SQL in DuckDB over the sfDir parquet tables, load the Spark
 parquet result, sort columns by name + rows, and diff values.
 This script is developer tooling only — the shipped library is pure Scala.
@@ -30,7 +31,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=()):
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -38,6 +39,12 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
+    unknown = [q for q in only if q not in oracles]
+    if unknown:
+        print(f"no oracle for: {', '.join(unknown)}")
+        return 1
+    if only:
+        oracles = {q: oracles[q] for q in only}
 
     n_pass = n_fail = 0
     for name in sorted(oracles):
@@ -78,4 +85,4 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))
