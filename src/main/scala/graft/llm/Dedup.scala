@@ -11,10 +11,16 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB):
   *  - exact dedup shuffles 16-byte digests, never full documents;
   *  - MinHash: signatures are H=64 longs per doc computed in one
-  *    explode+groupBy pass (whole-stage-codegen'd xxhash64, no UDFs);
-  *    banding turns all-pairs into equi-join on (band, bandHash) — the
-  *    classic shuffle-lean LSH join; verification uses signature overlap
-  *    only (no second pass over shingles);
+  *    zero-shuffle native projection ([[graft.functions.MinHashSig]]);
+  *    banding turns all-pairs into an equi-join on the band key — the
+  *    classic shuffle-lean LSH join. [[minHashLshPairs]] verifies by
+  *    signature overlap; every other MinHash path verifies candidates by
+  *    exact shingle Jaccard in ONE shared stage ([[verifiedPairs]]), fed
+  *    shingles of candidate documents only;
+  *  - cross admission ([[incrementalDedup]], [[graft.sources.DedupIndex]])
+  *    bands with the portable [[graft.functions.MinHashBands]] under one
+  *    fixed parameter set, so a stored index and its probe always agree
+  *    and a SQL oracle replays the exact candidate set;
   *  - SimHash: 64 codegen'd bit-sum aggregations → one long fingerprint;
   *    candidate pairs via 16-bit band buckets, verified with bit_count(xor);
   *  - exact n-gram Jaccard is the quadratic truth oracle — intended for
@@ -132,76 +138,85 @@ object Dedup {
     * candidates) in the EXISTING corpus — the per-crawl-batch step of a
     * growing corpus, where re-deduplicating the whole corpus per batch
     * is the scale anti-pattern. Cross-banding only: fresh×fresh and
-    * corpus×corpus pairs are never formed, the corpus side ships
-    * signatures (64 longs/doc) rather than text through the band join,
-    * and shingles are joined for candidate documents only. With
-    * recall-adequate banding the admitted set equals the exact
-    * cross-Jaccard answer (the q_minhash_lsh_pairs row pins that
-    * banding-recall equivalence), which is what the oracle computes.
+    * corpus×corpus pairs are never formed, the corpus side ships 16
+    * band keys per doc rather than text through the band join, and
+    * shingles are joined for candidate documents only
+    * ([[verifiedPairs]]). Banding is the portable
+    * [[graft.functions.MinHashBands]] under the fixed admission
+    * parameters ([[bandRows]]), so the DuckDB oracle replays the exact
+    * candidate set, recall misses included. [[graft.sources.DedupIndex]]
+    * answers the same admission from a stored corpus derivation.
     * Returns the admitted fresh rows. */
   def incrementalDedup(fresh: DataFrame, corpus: DataFrame, textCol: String,
-      idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tau: Double = 0.8, portable: Boolean = false): DataFrame = {
-    val cand = crossBandCandidates(fresh, corpus, textCol, idCol,
-        k, numHashes, bands, portable)
-      .localCheckpoint()
-    val fSh = shingles(fresh, textCol, idCol, k)
-      .join(cand.select(col("fid").as("id")).distinct(), Seq("id"), "left_semi")
-    val cSh = shingles(corpus, textCol, idCol, k)
-      .join(cand.select(col("cid").as("id")).distinct(), Seq("id"), "left_semi")
-    val fSize = fSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val cSize = cSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val dup = cand
-      .join(fSh.select(col("id").as("fid"), col("shingle")), "fid")
-      .join(cSh.select(col("id").as("cid"), col("shingle")), Seq("cid", "shingle"))
-      .groupBy(col("fid"), col("cid")).agg(count(lit(1)).as("c"))
-      .join(fSize.select(col("id").as("fid"), col("n").as("nf")), "fid")
-      .join(cSize.select(col("id").as("cid"), col("n").as("nc")), "cid")
-      .where(round(col("c") / (col("nf") + col("nc") - col("c")), 4) >= tau)
-      .select(col("fid").as(idCol)).distinct()
+      idCol: String, tau: Double = 0.8): DataFrame = {
+    val cand = crossBandCandidates(bandRows(fresh, textCol, idCol),
+      bandRows(corpus, textCol, idCol)).localCheckpoint()
+    val fSh = shingles(fresh, textCol, idCol, AdmitK)
+      .join(cand.select(col("da").as("id")).distinct(), Seq("id"), "left_semi")
+    val cSh = shingles(corpus, textCol, idCol, AdmitK)
+      .join(cand.select(col("db").as("id")).distinct(), Seq("id"), "left_semi")
+    val dup = verifiedPairs(cand, fSh, cSh, shingleCounts(fSh),
+      shingleCounts(cSh), tau).select(col("da").as(idCol)).distinct()
     fresh.join(dup, Seq(idCol), "left_anti")
   }
 
-  /** The cross-banding candidate stage of [[incrementalDedup]], exposed
-    * so PlanShapeSpec can pin its load-bearing property: ONE equi-join on
-    * the band key between the fresh side and the corpus side — never a
-    * fresh×fresh or corpus×corpus branch (re-deduplicating the corpus
-    * per batch is exactly what the incremental shape exists to avoid).
-    *
-    * `portable = true` swaps the XXH64 signature+band hashing for
-    * [[graft.functions.MinHashBands]] — identical join shape and
-    * identical statistical behavior, but every hash is portable int64
-    * arithmetic, so a SQL oracle replays the exact candidate set
-    * (including any banding recall misses) instead of appealing to a
-    * probabilistic recall equivalence. The XXH64 default stays the
-    * production path (faster per byte); DedupScaleSpec pins the two
-    * variants' admitted sets against each other. */
-  private[graft] def crossBandCandidates(fresh: DataFrame, corpus: DataFrame,
-      textCol: String, idCol: String, k: Int, numHashes: Int,
-      bands: Int, portable: Boolean = false): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    def bandKeysSig = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), b * r + 1, r)).as("bh"))
-    }
-    def bandKeysPortable = (0 until bands).map { b =>
-      struct(lit(b).as("band"), element_at(col("sig"), b + 1).as("bh"))
-    }
-    def banded(docs: DataFrame, as: String) = {
-      val (sigs, keys) =
-        if (portable)
-          (docs.select(col(idCol).as("id"),
-            graft.functions.MinHashBands.minhashBands(
-              split(col(textCol), "\\s+"), k, numHashes, bands).as("sig"))
-            .where(col("sig").isNotNull), bandKeysPortable)
-        else
-          (minHashSignatures(docs, textCol, idCol, k, numHashes), bandKeysSig)
-      sigs.select(col("id").as(as), explode(array(keys: _*)).as("bk"))
-    }
-    banded(fresh, "fid").join(banded(corpus, "cid"), "bk")
-      .select(col("fid"), col("cid")).distinct()
-  }
+  /** Cross-admission index parameters: word 3-shingles, 64 MinHash
+    * functions in 16 bands of 4. One set for [[incrementalDedup]] and for
+    * every [[graft.sources.DedupIndex]] build, append and probe — an
+    * index banded under other parameters than its probe would match no
+    * band key and silently admit everything. */
+  private[graft] val AdmitK = 3
+  private val AdmitHashes = 64
+  private val AdmitBands = 16
+
+  /** (doc_id, bkh) cross-admission band-key rows via the portable
+    * [[graft.functions.MinHashBands]]: bkh = band · 2^40 + bandHash. The
+    * band hash is < 1e9+7 < 2^30, so bkh is injective and one-key
+    * equality ≡ (band, bandHash) equality. Docs with fewer than
+    * [[AdmitK]] words have no band rows. */
+  private[graft] def bandRows(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        graft.functions.MinHashBands.minhashBands(split(col(textCol), "\\s+"),
+          AdmitK, AdmitHashes, AdmitBands).as("sig"))
+      .where(col("sig").isNotNull)
+      .select(col("doc_id"), explode(array((0 until AdmitBands).map(b =>
+        element_at(col("sig"), b + 1) + lit(b * (1L << 40))): _*)).as("bkh"))
+
+  /** Cross candidates (da = fresh id, db = corpus id) from two
+    * [[bandRows]] frames, exposed so PlanShapeSpec can pin the
+    * load-bearing property: ONE equi-join on bkh between the fresh side
+    * and the corpus side — never a fresh×fresh or corpus×corpus branch
+    * (re-deduplicating the corpus per batch is exactly what the
+    * incremental shape exists to avoid). */
+  private[graft] def crossBandCandidates(freshBands: DataFrame,
+      corpusBands: DataFrame): DataFrame =
+    freshBands.select(col("doc_id").as("da"), col("bkh"))
+      .join(corpusBands.select(col("doc_id").as("db"), col("bkh")), "bkh")
+      .select(col("da"), col("db")).distinct()
+
+  /** (id, n): distinct shingles per document. */
+  private[graft] def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
+
+  /** The exact-Jaccard verify stage of every candidate→verify near-dup
+    * path: candidate pairs (da, db), each side's shingles (id, shingle)
+    * already semi-filtered to candidate ids, and each side's sizes
+    * (id, n). Join order: cand ⋈ a-shingles ⋈ b-shingles on
+    * (db, shingle) → per-pair overlap c → ⋈ a-sizes ⋈ b-sizes. Returns
+    * (da, db, jaccard) with jaccard = round(c / (na + nb − c), 4) ≥ tau. */
+  private[graft] def verifiedPairs(cand: DataFrame, aSh: DataFrame,
+      bSh: DataFrame, aSize: DataFrame, bSize: DataFrame,
+      tau: Double): DataFrame =
+    cand
+      .join(aSh.select(col("id").as("da"), col("shingle")), "da")
+      .join(bSh.select(col("id").as("db"), col("shingle")), Seq("db", "shingle"))
+      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
+      .join(aSize.select(col("id").as("da"), col("n").as("na")), "da")
+      .join(bSize.select(col("id").as("db"), col("n").as("nb")), "db")
+      .select(col("da"), col("db"),
+        round(col("c") / (col("na") + col("nb") - col("c")), 4).as("jaccard"))
+      .where(col("jaccard") >= tau)
 
   /** EXACT incremental dedup with a Bloom pre-filter: admit fresh
     * documents whose normalized content fingerprint is not in the
@@ -309,19 +324,9 @@ object Dedup {
   def minHashLshPairs(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       tau: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val sigs = minHashSignatures(docs, textCol, idCol, k, numHashes)
       .localCheckpoint() // reused: banding + both sides of verification
-    val bandKeys = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), b * r + 1, r)).as("bh"))
-    }
-    val banded = sigs.select(col("id"), explode(array(bandKeys: _*)).as("bk"))
-    val cand = banded.select(col("id").as("da"), col("bk"))
-      .join(banded.select(col("id").as("db"), col("bk")), "bk")
-      .where(col("da") < col("db"))
-      .select(col("da"), col("db")).distinct()
+    val cand = selfBandCandidates(sigs, numHashes, bands)
     val sigArr = sigs.select(col("id"), col("sig"))
     cand
       .join(sigArr.select(col("id").as("da"), col("sig").as("sa")), "da")
@@ -345,35 +350,32 @@ object Dedup {
   def minHashLshPairsExact(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       tau: Double = 0.8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = minHashSignatures(docs, textCol, idCol, k, numHashes)
-    val bandKeys = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), b * r + 1, r)).as("bh"))
-    }
-    val banded = sigs.select(col("id"), explode(array(bandKeys: _*)).as("bk"))
-    val cand = banded.select(col("id").as("da"), col("bk"))
-      .join(banded.select(col("id").as("db"), col("bk")), "bk")
-      .where(col("da") < col("db"))
-      .select(col("da"), col("db")).distinct()
+    val cand = selfBandCandidates(
+      minHashSignatures(docs, textCol, idCol, k, numHashes), numHashes, bands)
       .localCheckpoint()
     val candIds = cand.select(col("da").as("id"))
       .union(cand.select(col("db").as("id"))).distinct()
     val sh = shingles(docs, textCol, idCol, k)
       .join(candIds, Seq("id"), "left_semi")
       .localCheckpoint()
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("id").as("da"), col("shingle")), "da")
-      .join(sh.select(col("id").as("db"), col("shingle")), Seq("db", "shingle"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-    inter
-      .join(sizes.select(col("id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        round(col("c") / (col("na") + col("nb") - col("c")), 4).as("jaccard"))
-      .where(col("jaccard") >= tau)
+    val sizes = shingleCounts(sh)
+    verifiedPairs(cand, sh, sh, sizes, sizes, tau)
+  }
+
+  /** XXH64 self-banding of MinHash signatures (id, sig): `bands` keys
+    * (band, xxhash64 of the band's numHashes/bands values) per doc,
+    * self-joined on the key → distinct candidate pairs (da, db), da < db. */
+  private def selfBandCandidates(sigs: DataFrame, numHashes: Int,
+      bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val r = numHashes / bands
+    val banded = sigs.select(col("id"), explode(array((0 until bands).map(b =>
+      struct(lit(b).as("band"),
+        xxhash64(slice(col("sig"), b * r + 1, r)).as("bh"))): _*)).as("bk"))
+    banded.select(col("id").as("da"), col("bk"))
+      .join(banded.select(col("id").as("db"), col("bk")), "bk")
+      .where(col("da") < col("db"))
+      .select(col("da"), col("db")).distinct()
   }
 
   /** Fuzzy (edit-distance-verified) near-dup pairs — the
@@ -693,9 +695,8 @@ object Dedup {
     * production default for a corpus whose dup regime is unknown. */
   def minHashLshPairsAdaptive(docs: DataFrame, textCol: String,
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tau: Double = 0.8,
-      threshold: Double = CollapseDispatchThreshold): DataFrame =
-    if (dupRate(docs, textCol) >= threshold)
+      tau: Double = 0.8): DataFrame =
+    if (dupRate(docs, textCol) >= CollapseDispatchThreshold)
       minHashLshPairsCollapsed(docs, textCol, idCol, k, numHashes, bands,
         tau)
     else minHashLshPairsExact(docs, textCol, idCol, k, numHashes, bands,
@@ -704,9 +705,8 @@ object Dedup {
   /** [[minHashLshPairsAdaptive]] for the edit-verified pair list. */
   def editDistancePairsAdaptive(docs: DataFrame, textCol: String,
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tauJ: Double = 0.8, maxRel: Double = 0.3,
-      threshold: Double = CollapseDispatchThreshold): DataFrame =
-    if (dupRate(docs, textCol) >= threshold)
+      tauJ: Double = 0.8, maxRel: Double = 0.3): DataFrame =
+    if (dupRate(docs, textCol) >= CollapseDispatchThreshold)
       editDistancePairsCollapsed(docs, textCol, idCol, k, numHashes,
         bands, tauJ, maxRel)
     else editDistancePairs(docs, textCol, idCol, k, numHashes, bands,
@@ -715,9 +715,8 @@ object Dedup {
   /** [[minHashLshPairsAdaptive]] for the cluster chain. */
   def dedupClustersAdaptive(docs: DataFrame, textCol: String,
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tau: Double = 0.8,
-      threshold: Double = CollapseDispatchThreshold): DataFrame =
-    if (dupRate(docs, textCol) >= threshold)
+      tau: Double = 0.8): DataFrame =
+    if (dupRate(docs, textCol) >= CollapseDispatchThreshold)
       dedupClustersCollapsed(docs, textCol, idCol, k, numHashes, bands,
         tau)
     else dedupClusters(
@@ -727,9 +726,8 @@ object Dedup {
   /** [[dedupClustersAdaptive]] for the edit-verified cluster chain. */
   def editDedupClustersAdaptive(docs: DataFrame, textCol: String,
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      tauJ: Double = 0.8, maxRel: Double = 0.3,
-      threshold: Double = CollapseDispatchThreshold): DataFrame =
-    if (dupRate(docs, textCol) >= threshold)
+      tauJ: Double = 0.8, maxRel: Double = 0.3): DataFrame =
+    if (dupRate(docs, textCol) >= CollapseDispatchThreshold)
       editDedupClustersCollapsed(docs, textCol, idCol, k, numHashes,
         bands, tauJ, maxRel)
     else dedupClusters(

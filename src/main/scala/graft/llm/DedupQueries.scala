@@ -76,16 +76,15 @@ object DedupQueries {
     // hashes, per-function minima, band hashes, the cross-only candidate
     // join, and the exact-Jaccard verification over candidates. The green
     // no longer appeals to banding recall: a recall miss would reproduce
-    // identically on both sides. The XXH64 production variant keeps the
-    // same join shape and is pinned against this one in DedupScaleSpec.
+    // identically on both sides. This portable banding is the only one
+    // the admission path has (Dedup.bandRows, shared with DedupIndex).
     Q("q_incremental_dedup",
       (s, d) => {
         val docs = Tables.documents(s, d)
         val fresh = Sampling.hashSample(docs, "doc_id", 0.2)
         val corpus = docs.join(fresh.select(col("doc_id")),
           Seq("doc_id"), "left_anti")
-        Dedup.incrementalDedup(fresh, corpus, "text", "doc_id",
-            portable = true)
+        Dedup.incrementalDedup(fresh, corpus, "text", "doc_id")
           .select(col("doc_id"))
       },
       Some(incrementalDedupSql)),

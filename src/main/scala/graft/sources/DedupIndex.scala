@@ -13,10 +13,10 @@ import graft.llm.Dedup
   * signature work re-paid for an identical answer. This index writes
   * that derivation to disk once, as three bucketed tables:
   *
-  *   - `<name>_bands` (doc_id, bkh): one row per (doc, band) with the
-  *     injective composite key bkh = band · 2^40 + bandHash (band < 16,
-  *     hash < 2^30 — no overlap), bucketed by bkh. The banded candidate
-  *     join becomes a SINGLE-KEY equi-join whose stored side is already
+  *   - `<name>_bands` (doc_id, bkh): one row per (doc, band) from
+  *     [[Dedup.bandRows]] — the injective composite key bkh = band ·
+  *     2^40 + bandHash — bucketed by bkh. The banded candidate join is a
+  *     SINGLE-KEY equi-join whose stored side is already
   *     hash-distributed — no corpus-side shuffle, ever.
   *   - `<name>_shingles` (id, shingle), bucketed by id: the exact-
   *     Jaccard verifier's corpus side, read only for candidate docs
@@ -25,109 +25,70 @@ import graft.llm.Dedup
   *   - `<name>_sizes` (id, n), bucketed by id: per-doc shingle counts
   *     for the Jaccard denominator.
   *
-  * Serving ([[dedupAgainst]]) computes the FRESH batch's bands and
-  * shingles (|fresh| work) and admits exactly what
-  * `incrementalDedup(portable = true)` admits — pinned row-for-row in
-  * DedupIndexSpec, so the stored layout changes cost, never answers.
-  * [[append]] closes the ingest loop: admitted docs join the index
-  * (bands + shingles + sizes inserted with the tables' bucket specs),
-  * so the next batch dedups against corpus ∪ admitted with no rebuild.
+  * Build, [[append]] and [[dedupAgainst]] band and shingle under
+  * Dedup's one fixed admission parameter set, so a probe always matches
+  * the index it reads. Serving derives only the FRESH batch's bands and
+  * shingles (|fresh| work) and verifies candidates in the same stage as
+  * `incrementalDedup` ([[Dedup.verifiedPairs]]), so it admits exactly
+  * what `incrementalDedup` admits — the stored layout changes cost,
+  * never answers. [[append]] closes the ingest loop: admitted docs join
+  * the index (bands + shingles + sizes inserted with the tables' bucket
+  * specs), so the next batch dedups against corpus ∪ admitted with no
+  * rebuild.
   *
   * 100 TB shape: the per-batch cost drops from O(|corpus| + |fresh|)
   * signature derivation to O(|fresh|) + a bucket-aligned probe of the
   * stored postings; the corpus's text is never read at all (bands and
-  * shingles are the only columns the verifier touches). Uses the
-  * PORTABLE mixer hashes so the DuckDB oracle replays the stored keys
-  * term for term. */
+  * shingles are the only columns the verifier touches). The band keys
+  * are PORTABLE mixer hashes, so the DuckDB oracle replays the stored
+  * keys term for term. */
 object DedupIndex {
 
-  /** (doc_id, bkh) band-key rows via the portable
-    * [[graft.functions.MinHashBands]] — bkh = band · 2^40 + bandHash,
-    * injective, so one-key equality ≡ (band, bandHash) equality. */
-  private def bandRows(docs: DataFrame, textCol: String, idCol: String,
-      k: Int, numHashes: Int, bands: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        graft.functions.MinHashBands.minhashBands(
-          split(col(textCol), "\\s+"), k, numHashes, bands).as("sig"))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id"), explode(array((0 until bands).map(b =>
-        element_at(col("sig"), b + 1) + lit(b * 1099511627776L)): _*))
-        .as("bkh"))
-
-  /** [[build]] at the [[Bucketing.autoBuckets]] dial. The sizing row
-    * count is the bands table's |docs| × bands — known analytically, so
-    * no derivation runs twice; shingles/sizes share the bucket count
-    * (one dial per index, the family contract). Returns the chosen
-    * bucket count. */
-  def buildAuto(spark: SparkSession, corpus: DataFrame, textCol: String,
-      idCol: String, name: String, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16,
-      basePath: String = IvfIndex.defaultBase): Int = {
-    val kb = Bucketing.autoBuckets(corpus.count() * bands)
-    build(spark, corpus, textCol, idCol, name, k, numHashes, bands,
-      buckets = kb, basePath = basePath)
-    kb
-  }
+  /** Bucket count shared by all three tables. */
+  private val Buckets = 16
 
   def build(spark: SparkSession, corpus: DataFrame, textCol: String,
-      idCol: String, name: String, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, buckets: Int = 16,
+      idCol: String, name: String,
       basePath: String = IvfIndex.defaultBase): Unit = {
     // each table hash-partitioned by its bucket column before the
     // bucketed write: one file per bucket, not tasks × buckets (the
     // IvfIndex.build recipe)
-    bandRows(corpus, textCol, idCol, k, numHashes, bands)
+    Dedup.bandRows(corpus, textCol, idCol)
       .repartition(col("bkh"))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_bands")
-      .bucketBy(buckets, "bkh").sortBy("bkh")
+      .bucketBy(Buckets, "bkh").sortBy("bkh")
       .saveAsTable(s"${name}_bands")
-    val sh = Dedup.shingles(corpus, textCol, idCol, k)
+    val sh = Dedup.shingles(corpus, textCol, idCol, Dedup.AdmitK)
     sh.repartition(col("id"))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_shingles")
-      .bucketBy(buckets, "id").sortBy("id")
+      .bucketBy(Buckets, "id").sortBy("id")
       .saveAsTable(s"${name}_shingles")
-    sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    Dedup.shingleCounts(sh)
       .repartition(col("id"))
       .write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_sizes")
-      .bucketBy(buckets, "id").sortBy("id")
+      .bucketBy(Buckets, "id").sortBy("id")
       .saveAsTable(s"${name}_sizes")
   }
 
-  /** Admit the fresh rows not near-duplicating the INDEXED corpus —
-    * byte-identical semantics to
-    * `Dedup.incrementalDedup(fresh, corpus, portable = true)`, with the
-    * corpus derivation read from the stored layout instead of
-    * recomputed. */
+  /** Admit the fresh rows not near-duplicating the INDEXED corpus — the
+    * answer of `Dedup.incrementalDedup(fresh, corpus)`, with the corpus
+    * band keys, shingles and sizes read from the stored tables instead
+    * of recomputed. */
   def dedupAgainst(spark: SparkSession, name: String, fresh: DataFrame,
-      textCol: String, idCol: String, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, tau: Double = 0.8): DataFrame = {
-    val fBand = bandRows(fresh, textCol, idCol, k, numHashes, bands)
-      .select(col("doc_id").as("fid"), col("bkh"))
-    val cand = fBand
-      .join(spark.table(s"${name}_bands")
-        .select(col("doc_id").as("cid"), col("bkh")), "bkh")
-      .select(col("fid"), col("cid")).distinct()
-      .localCheckpoint()
-    val fSh = Dedup.shingles(fresh, textCol, idCol, k)
-      .join(cand.select(col("fid").as("id")).distinct(), Seq("id"),
+      textCol: String, idCol: String, tau: Double = 0.8): DataFrame = {
+    val cand = Dedup.crossBandCandidates(Dedup.bandRows(fresh, textCol, idCol),
+      spark.table(s"${name}_bands")).localCheckpoint()
+    val fSh = Dedup.shingles(fresh, textCol, idCol, Dedup.AdmitK)
+      .join(cand.select(col("da").as("id")).distinct(), Seq("id"),
         "left_semi")
     val cSh = spark.table(s"${name}_shingles")
-      .join(cand.select(col("cid").as("id")).distinct(), Seq("id"),
+      .join(cand.select(col("db").as("id")).distinct(), Seq("id"),
         "left_semi")
-    val fSize = fSh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val dup = cand
-      .join(fSh.select(col("id").as("fid"), col("shingle")), "fid")
-      .join(cSh.select(col("id").as("cid"), col("shingle")),
-        Seq("cid", "shingle"))
-      .groupBy(col("fid"), col("cid")).agg(count(lit(1)).as("c"))
-      .join(fSize.select(col("id").as("fid"), col("n").as("nf")), "fid")
-      .join(spark.table(s"${name}_sizes")
-        .select(col("id").as("cid"), col("n").as("nc")), "cid")
-      .where(round(col("c") / (col("nf") + col("nc") - col("c")), 4) >= tau)
-      .select(col("fid").as(idCol)).distinct()
+    val dup = Dedup.verifiedPairs(cand, fSh, cSh, Dedup.shingleCounts(fSh),
+      spark.table(s"${name}_sizes"), tau).select(col("da").as(idCol)).distinct()
     fresh.join(dup, Seq(idCol), "left_anti")
   }
 
@@ -139,23 +100,14 @@ object DedupIndex {
     * out of [[dedupAgainst]], which guarantees they are not near-dups
     * of anything already indexed. */
   def append(spark: SparkSession, name: String, admitted: DataFrame,
-      textCol: String, idCol: String, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): Unit = {
-    Bucketing.appendAligned(spark,
-      bandRows(admitted, textCol, idCol, k, numHashes, bands), s"${name}_bands")
-    val sh = Dedup.shingles(admitted, textCol, idCol, k).localCheckpoint()
+      textCol: String, idCol: String): Unit = {
+    Bucketing.appendAligned(spark, Dedup.bandRows(admitted, textCol, idCol),
+      s"${name}_bands")
+    val sh = Dedup.shingles(admitted, textCol, idCol, Dedup.AdmitK)
+      .localCheckpoint()
     Bucketing.appendAligned(spark, sh, s"${name}_shingles")
-    Bucketing.appendAligned(spark,
-      sh.groupBy(col("id")).agg(count(lit(1)).as("n")), s"${name}_sizes")
+    Bucketing.appendAligned(spark, Dedup.shingleCounts(sh), s"${name}_sizes")
   }
-
-  /** Maintenance: rewrite all three appended tables one-file-per-bucket
-    * under their own bucket specs ([[Compact.compactTable]]; the
-    * [[IvfIndex.compact]] contract — answers and pruned plans
-    * unchanged, run from the maintenance window that owns `append`). */
-  def compact(spark: SparkSession, name: String): Map[String, (Long, Long)] =
-    Seq(s"${name}_bands", s"${name}_shingles", s"${name}_sizes")
-      .map(t => t -> Compact.compactTable(spark, t)).toMap
 
   /** Scheduled maintenance: compact exactly the fragmented tables,
     * else no-op ([[Compact.maintainTables]], r13 verdict #3). */

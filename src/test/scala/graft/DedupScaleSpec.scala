@@ -268,14 +268,12 @@ class DedupScaleSpec extends AnyFunSuite {
       s"32-bit banding must shrink candidates: $cand32 vs $cand16")
   }
 
-  test("portable and XXH64 incremental dedup admit the same documents") {
+  test("in-memory and stored incremental dedup admit the same documents") {
     // A corpus with genuine cross near-dups: fresh docs 1..6 where 1 and
     // 2 are near-copies of corpus docs (1-word edit in 40 words → J ≈
     // 0.93 over 3-shingles), 3 shares half its text (J ≈ 0.33, below
-    // tau), 4-6 are novel. Both hash families must reject exactly {1, 2}:
-    // the portable square-mixer variant exists for oracle replay, not as
-    // a semantic fork, and this pin keeps the two variants' admitted
-    // sets from drifting apart.
+    // tau), 4-6 are novel. Both the in-memory path and the stored index
+    // must reject exactly {1, 2}.
     def words(tag: String, n: Int) = (0 until n).map(i => s"$tag$i")
     def t(ws: Seq[String]) = ws.mkString(" ")
     val a = words("apple", 40)
@@ -293,14 +291,15 @@ class DedupScaleSpec extends AnyFunSuite {
       (102L, t(b.updated(30, "tweaked"))),
       (103L, t(c)),
       (104L, t(words("foxtrot", 40))))
-    def admitted(portable: Boolean): Set[Long] =
-      Dedup.incrementalDedup(fresh, corpus, "text", "doc_id",
-          portable = portable)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-    val xxh = admitted(portable = false)
-    val por = admitted(portable = true)
-    info(s"admitted: xxh64 ${xxh.toSeq.sorted}, portable ${por.toSeq.sorted}")
-    assert(xxh == Set(3L, 4L, 5L, 6L))
-    assert(por == xxh)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.collect().map(_.getAs[Long]("doc_id")).toSet
+    val mem = ids(Dedup.incrementalDedup(fresh, corpus, "text", "doc_id"))
+    graft.sources.DedupIndex.build(spark, corpus, "text", "doc_id",
+      "graft_dedup_scale_pin")
+    val stored = ids(graft.sources.DedupIndex.dedupAgainst(spark,
+      "graft_dedup_scale_pin", fresh, "text", "doc_id"))
+    info(s"admitted: in-memory ${mem.toSeq.sorted}, stored ${stored.toSeq.sorted}")
+    assert(mem == Set(3L, 4L, 5L, 6L))
+    assert(stored == mem)
   }
 }

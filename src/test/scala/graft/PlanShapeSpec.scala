@@ -266,7 +266,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val corpus = docs.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_anti")
     withoutAqe {
       val cand = graft.llm.Dedup.crossBandCandidates(
-        fresh, corpus, "text", "doc_id", 3, 64, 16)
+        graft.llm.Dedup.bandRows(fresh, "text", "doc_id"),
+        graft.llm.Dedup.bandRows(corpus, "text", "doc_id"))
       // the corpus anti-join above contributes one Join; the candidate
       // stage itself must add exactly ONE more — the fresh×corpus band
       // join. A fresh×fresh or corpus×corpus branch would add a third.
@@ -279,8 +280,8 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(bandJoins.head.leftKeys.nonEmpty,
         "the band join must be an equi-join on the band key")
       val p = cand.queryExecution.executedPlan.toString
-      assert(p.contains("minhash_sig"),
-        s"both sides must band the zero-shuffle native signatures:\n$p")
+      assert(p.contains("minhash_bands"),
+        s"both sides must band with the native portable band keys:\n$p")
     }
   }
 
