@@ -24,11 +24,24 @@ class TopKIdsAggregator(k: Int) extends Aggregator[Ranked, Seq[Ranked], String] 
 
   override def zero: Seq[Ranked] = Vector.empty
 
+  /** Inserts `in` into the sorted buffer, dropping whatever falls past
+    * the K-th place; a full buffer whose last entry ranks at or above
+    * `in` is returned as is. */
   override def reduce(buf: Seq[Ranked], in: Ranked): Seq[Ranked] =
-    (buf :+ in).sorted(ord).take(k)
+    if (buf.nonEmpty && buf.length >= k && !ord.lt(in, buf.last)) buf
+    else merge(buf, Vector(in))
 
-  override def merge(a: Seq[Ranked], b: Seq[Ranked]): Seq[Ranked] =
-    (a ++ b).sorted(ord).take(k)
+  /** The K best of two sorted buffers, by one linear merge. */
+  override def merge(a: Seq[Ranked], b: Seq[Ranked]): Seq[Ranked] = {
+    val out = Vector.newBuilder[Ranked]
+    val (x, y) = (a.iterator.buffered, b.iterator.buffered)
+    var n = 0
+    while (n < k && (x.hasNext || y.hasNext)) {
+      out += (if (!y.hasNext || (x.hasNext && ord.lteq(x.head, y.head))) x.next() else y.next())
+      n += 1
+    }
+    out.result()
+  }
 
   override def finish(r: Seq[Ranked]): String = r.map(_.id).mkString(",")
 

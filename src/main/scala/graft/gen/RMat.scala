@@ -1,7 +1,7 @@
 package graft.gen
 
-import org.apache.spark.SparkContext
-import org.apache.spark.rdd.RDD
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -19,10 +19,11 @@ import graft.core.Rounds
   *
   * Determinism at any scale (SURVEY.md §7.4.1): the reference seeds
   * `drand48` per processor; we seed a Random per (seed, task, round) with
-  * an explicit task count, so the emitted edge multiset is identical
+  * an explicit stream count, so the emitted edge multiset is identical
   * regardless of cluster layout. Dedup is one [[graft.core.Rounds]] step
-  * per round — the batch reduces into the partitions of a sorted edge set
-  * kept as primitive arrays, one shuffle and one Spark job per round;
+  * per round — the streams run inside the state's partitions and their
+  * edges move as deduplicated blocks into the partitions of a sorted edge
+  * set kept as primitive arrays, one exchange and one Spark job per round;
   * rounds are few because the deficit shrinks geometrically.
   */
 object RMat {
@@ -32,21 +33,27 @@ object RMat {
       a: Double, b: Double, c: Double, d: Double,
       fraction: Double, seed: Long)
 
-  /** One generation batch: EXACTLY `howMany` edges across `numTasks`
-    * deterministic tasks (`map(rmat_generate)`, one task per proc in the
-    * reference) — the remainder spread over the low task ids, so a round
-    * can never emit more than the deficit it was asked for. Each edge
-    * (i, j) is packed as `i << nlevels | j` and keyed for the dedup. */
-  private def batch(sc: SparkContext, p: Params, howMany: Long,
-      numTasks: Int, round: Int): RDD[(Long, Unit)] = {
+  /** One generation batch, run by state partition `part` of `parts`:
+    * EXACTLY `howMany` edges across `numTasks` deterministic RNG streams
+    * (`map(rmat_generate)`, one stream per proc in the reference) — the
+    * remainder spread over the low stream ids, so a round can never emit
+    * more than the deficit it was asked for. Partition `part` runs the
+    * streams `part, part + parts, ...`, so the batch is the same edge
+    * multiset on any layout. Each edge (i, j) is packed as
+    * `i << nlevels | j`; the partition's edges leave as one sorted,
+    * deduplicated block per receiving partition. */
+  private def batch(p: Params, howMany: Long, numTasks: Int, round: Int,
+      part: Int, parts: Int): Iterator[(Int, Array[Long])] = {
     val base = howMany / numTasks
     val extra = howMany % numTasks
     val order = 1L << p.nlevels
-    sc.parallelize(0 until numTasks, numTasks).flatMap { task =>
+    val out = Array.fill(parts)(mutable.ArrayBuilder.make[Long])
+    for (task <- part until numTasks by parts) {
       val perTask = base + (if (task < extra) 1L else 0L)
       val rng = new java.util.Random(p.seed * 1000003L + task * 8191L + round)
       val (a0, b0, c0, d0) = (p.a, p.b, p.c, p.d)
-      Iterator.fill(perTask.toInt) {
+      var e = 0L
+      while (e < perTask) {
         var (i, j) = (0L, 0L)
         var delta = order >> 1
         var (a, b, c, dq) = (a0, b0, c0, d0)
@@ -69,30 +76,37 @@ object RMat {
           delta >>= 1
           lvl += 1
         }
-        ((i << p.nlevels) | j, ())
+        val edge = (i << p.nlevels) | j
+        out(Rounds.partOf(edge, parts)) += edge
+        e += 1
       }
     }
+    Iterator.range(0, parts).filter(out(_).length > 0)
+      .map(q => (q, Rounds.sortedDistinct(out(q).result())))
   }
 
   /** Generate until exactly `nnonzero * 2^nlevels` unique edges
     * (`oink/rmat.cpp:50-70` loop: map(add=1) → collate → reduce(cull)).
-    * Each round is one [[graft.core.Rounds]] step: the batch's packed
-    * edges reduce into the partitioner (map-side dedup), merge into the
-    * partition's sorted edge set, and the round's one job returns the
+    * Each round is one [[graft.core.Rounds]] step: every state partition
+    * generates its share of the batch and sends each partition one
+    * deduplicated block of the edges it owns, the receiver merges them
+    * into its sorted edge set, and the round's one job returns the
     * per-partition set sizes. */
   def generate(spark: SparkSession, p: Params, numTasks: Int = 32,
       maxRounds: Int = 20): DataFrame = {
     require(p.nlevels <= 31, s"nlevels ${p.nlevels} > 31: an edge packs into one Long")
     val target = p.nnonzero.toLong * (1L << p.nlevels)
-    val sc = spark.sparkContext
-    val rounds = new Rounds(spark)
+    val rounds = new Rounds(spark, "rmat")
     try {
-      var edges = rounds.init(sc.emptyRDD[(Long, Unit)])(_ => Array.emptyLongArray)
+      val parts = rounds.parts
+      var edges = rounds.init[Unit, Unit, EdgeSet](spark.sparkContext.emptyRDD)(
+        _ => Iterator.empty)((part, _) => new EdgeSet(part, Array.emptyLongArray))
       var have = 0L
       var round = 0
       while (have < target && round < maxRounds) {
-        val fresh = batch(sc, p, target - have, numTasks, round)
-        val (next, sizes) = rounds.step(edges, fresh)((u, _) => u)(addEdges)(_.length.toLong)
+        val (deficit, r) = (target - have, round)
+        val (next, sizes) = rounds.step(edges)(
+          s => batch(p, deficit, numTasks, r, s.part, parts))(addEdges)(_.edges.length.toLong)
         edges = next
         have = sizes.sum
         round += 1
@@ -105,13 +119,16 @@ object RMat {
       require(have == target,
         s"rmat under-delivered $have/$target edges after $round rounds")
       val (shift, mask) = (p.nlevels, (1L << p.nlevels) - 1)
-      rounds.frame(edges, Schema)(_.iterator.map(e => Row(e >>> shift, e & mask)))
+      rounds.frame(edges, Schema)(_.edges.iterator.map(e => Row(e >>> shift, e & mask)))
     } finally rounds.close()
   }
 
-  /** A partition's sorted edge set with a batch's fresh edges merged in. */
-  private def addEdges(set: Array[Long], fresh: Iterator[(Long, Unit)]): Array[Long] =
-    Rounds.sortedDistinct(set ++ fresh.map(_._1))
+  /** State partition `part`'s sorted edge set. */
+  private final class EdgeSet(val part: Int, val edges: Array[Long]) extends Serializable
+
+  /** A partition's edge set with the fresh blocks merged in. */
+  private def addEdges(set: EdgeSet, fresh: Iterator[(Int, Array[Long])]): EdgeSet =
+    new EdgeSet(set.part, Rounds.sortedDistinct(set.edges ++ fresh.flatMap(_._2)))
 
   private val Schema = StructType(Seq(
     StructField("src", LongType, nullable = false),

@@ -66,6 +66,20 @@ object EngineProperties extends Properties("graft") {
       graft.gen.RMat.generate(spark, p, numTasks = 7).count() == nnz.toLong * 32
     }
 
+  property("TopKIdsAggregator equals sort-then-take, ties broken by id") = {
+    val ranked = Gen.listOf(Gen.zip(Gen.chooseNum(0, 3), Gen.chooseNum(0L, 20L)))
+      .map(_.map { case (s, id) => graft.functions.Ranked(s * 0.5, id) })
+    forAll(ranked, ranked, Gen.chooseNum(0, 6)) { (a, b, k) =>
+      val agg = new graft.functions.TopKIdsAggregator(k)
+      val ord = Ordering.by[graft.functions.Ranked, (Double, Long)](r => (-r.score, r.id))
+      def reference(rs: Seq[graft.functions.Ranked]) = rs.sorted(ord).take(k)
+      val (bufA, bufB) = (a.foldLeft(agg.zero)(agg.reduce), b.foldLeft(agg.zero)(agg.reduce))
+      bufA == reference(a) && bufB == reference(b) &&
+        agg.merge(bufA, bufB) == reference(a ++ b) &&
+        agg.finish(agg.merge(bufA, bufB)) == reference(a ++ b).map(_.id).mkString(",")
+    }
+  }
+
   private val messyTextGen: Gen[String] =
     Gen.listOf(Gen.frequency(
       (8, Gen.alphaNumChar), (1, Gen.oneOf(' ', '\t', '\n', '\r')),

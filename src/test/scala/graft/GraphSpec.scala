@@ -85,6 +85,38 @@ class GraphSpec extends AnyFunSuite {
     assert(Triangles.triangleCount(path).head().getLong(0) == 0L)
   }
 
+  /** Triangles of the simple undirected graph under `pairs`, by testing
+    * every vertex triple. */
+  private def bruteForceTriangles(pairs: Seq[(Long, Long)]): Long = {
+    val e = pairs.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }.toSet
+    val vs = e.flatMap { case (a, b) => Seq(a, b) }.toSeq.sorted
+    (for {
+      i <- vs.indices; j <- i + 1 until vs.length; k <- j + 1 until vs.length
+      if e((vs(i), vs(j))) && e((vs(i), vs(k))) && e((vs(j), vs(k)))
+    } yield 1L).sum
+  }
+
+  /** A seeded random multigraph on 0 until n: duplicate and reversed
+    * edges, self-loops (a vertex with only a self-loop is isolated), and
+    * the hub 0 joined to every other vertex. */
+  private def multigraph(n: Int, seed: Int): Seq[(Long, Long)] = {
+    val r = new scala.util.Random(seed)
+    val random = Seq.fill(3 * n)((r.nextInt(n).toLong, r.nextInt(n).toLong))
+    random ++ random.take(n).map(_.swap) ++ random.take(n / 2) ++
+      Seq((n + 1L, n + 1L), (n + 2L, n + 2L)) ++ (1 until n).map(v => (0L, v.toLong))
+  }
+
+  test("triangleCount equals a driver-side brute-force count on random multigraphs") {
+    for ((n, seed) <- Seq((12, 1), (40, 2), (70, 3), (70, 4))) {
+      val pairs = multigraph(n, seed)
+      val m = pairs.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
+        .distinct.length
+      if (n >= 40) assert(n - 1 > 2 * math.sqrt(m), s"hub degree ${n - 1} vs m = $m")
+      assert(Triangles.triangleCount(edges(pairs: _*)).head().getLong(0) ==
+        bruteForceTriangles(pairs), s"n = $n, seed = $seed")
+    }
+  }
+
   test("neighTriEdges emits neighbor + opposite triangle edges (oink/neigh_tri.cpp semantics, K4)") {
     val k4 = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val rows = Triangles.neighTriEdges(k4).collect()
@@ -320,6 +352,11 @@ class GraphSpec extends AnyFunSuite {
         ranks.foreach { case (v, r) => assert(math.abs(r - runs.head._1(v)) < 1e-12) }
       }
     }
+    val tris = underLayouts(Triangles.triangleCount(g).head().getLong(0))
+    assert(tris.forall(_ == tris.head))
+    val hubbed = multigraph(70, 5)
+    val hubTris = underLayouts(Triangles.triangleCount(edges(hubbed: _*)).head().getLong(0))
+    assert(hubTris.forall(_ == bruteForceTriangles(hubbed)), s"per layout: $hubTris")
     sameRanks("pagerank")(Iterative.pagerank(g, tol = 1e-6))
     // sources in the small components and in the R-MAT part
     sameRanks("personalizedPagerank")(
@@ -346,7 +383,21 @@ class GraphSpec extends AnyFunSuite {
     check("personalizedPagerank fixed rounds")(
       Iterative.personalizedPagerank(star, Seq(2L), tol = 0.0, maxIter = 3))
     check("rmat")(RMat.generate(spark, p, numTasks = 4))
+    check("triangleCount")(Triangles.triangleCount(star))
     val before = sc.getPersistentRDDs.keySet.toSet
+    // an edge frame that fails inside the first job of each loop
+    val failing = path.select(
+      when(col("src") === 7L, raise_error(lit("edge 7 fails"))).otherwise(col("src")).as("src"),
+      col("dst"))
+    Seq[(String, () => Any)](
+      "ccFind" -> (() => Iterative.ccFind(failing)),
+      "pagerank" -> (() => Iterative.pagerank(failing)),
+      "triangleCount" -> (() => Triangles.triangleCount(failing))).foreach { case (name, call) =>
+      val e = intercept[Exception](call())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("edge 7 fails")), e)
+      assert(leftover(before).isEmpty, s"failed $name left RDDs ${leftover(before)} persisted")
+    }
     intercept[IllegalArgumentException](RMat.generate(spark, p, numTasks = 4, maxRounds = 1))
     assert(leftover(before).isEmpty, s"failed rmat left RDDs ${leftover(before)} persisted")
     intercept[IllegalArgumentException](Iterative.personalizedPagerank(star, Seq(2L, 99L)))

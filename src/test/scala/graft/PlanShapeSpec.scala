@@ -157,8 +157,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("pagerank, ccFind and rmat submit at most 2 Spark jobs per round") {
     // a round of each loop (personalizedPagerank runs pagerank's) is one
-    // reduceByKey and one runJob, so the bound leaves room for one extra
-    // job a round
+    // block exchange and one runJob, so the bound leaves room for one
+    // extra job a round
     val perRound = 2
     val constant = 3
     def bounded(name: String, rounds: Int, jobs: Int): Unit =
@@ -200,6 +200,51 @@ class PlanShapeSpec extends AnyFunSuite {
     val (rm, rmJobs) = SparkJobs.count(gen(rounds))
     graft.core.Checkpoints.release(rm)
     bounded("RMat.generate", rounds, rmJobs)
+  }
+
+  test("triangleCount submits at most 3 Spark jobs") {
+    // two rounds, one job each, on an R-MAT graph (a checkpointed frame)
+    // and on a local edge frame
+    val p = graft.gen.RMat.Params(8, 4, 0.57, 0.19, 0.19, 0.05, 0.0, 5L)
+    val rmat = graft.gen.RMat.generate(spark, p, numTasks = 4)
+    val k4 = TestSession.edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    for ((name, g) <- Seq("rmat" -> rmat, "K4" -> k4)) {
+      val (n, jobs) = SparkJobs.count(graft.graph.Triangles.triangleCount(g).head().getLong(0))
+      assert(n >= 0L)
+      assert(jobs <= 3, s"$name: triangleCount ran $jobs Spark jobs")
+    }
+    graft.core.Checkpoints.release(rmat)
+  }
+
+  test("every job of a Rounds loop names its operator, and a round job its round") {
+    val sc = spark.sparkContext
+    val g = TestSession.edges((2L, 1L), (3L, 1L), (4L, 1L), (1L, 5L), (5L, 6L), (6L, 4L))
+    def labelled(op: String)(call: => Any): Unit = {
+      val (_, descriptions) = SparkJobs.describe {
+        sc.setJobDescription("caller")
+        call match {
+          case df: org.apache.spark.sql.DataFrame => graft.core.Checkpoints.release(df)
+          case _ => ()
+        }
+        assert(sc.getLocalProperty("spark.job.description") == "caller",
+          s"$op did not restore the caller's job description")
+      }
+      assert(descriptions.nonEmpty)
+      descriptions.foreach(d => assert(d != null && d.startsWith(s"$op "),
+        s"$op submitted a job described as $d: $descriptions"))
+      val rounds = descriptions.filter(_.startsWith(s"$op round "))
+      assert(rounds.nonEmpty && rounds == rounds.indices.map(k => s"$op round ${k + 1}"),
+        s"$op round jobs: $rounds")
+      assert(descriptions.forall(d => rounds.contains(d) || d == s"$op init" || d == s"$op frame"),
+        s"$op phases: $descriptions")
+    }
+    labelled("pagerank")(graft.graph.Iterative.pagerank(g, maxIter = 5))
+    labelled("personalizedPagerank")(
+      graft.graph.Iterative.personalizedPagerank(g, Seq(2L), maxIter = 5))
+    labelled("ccFind")(graft.graph.Iterative.ccFind(g))
+    labelled("rmat")(graft.gen.RMat.generate(spark,
+      graft.gen.RMat.Params(6, 4, 0.57, 0.19, 0.19, 0.05, 0.0, 5L), numTasks = 4))
+    labelled("triangleCount")(graft.graph.Triangles.triangleCount(g).head())
   }
 
   test("the spread guard never runs a shuffle already in the plan") {
