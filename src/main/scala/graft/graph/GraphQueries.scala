@@ -839,14 +839,14 @@ object GraphQueries {
         // LOUDLY if the margin is breached instead of surfacing an
         // opaque hash diff (r10 ADVICE)
         val (m, rounds) = Iterative.maximalMatchingWithRounds(
-          GraphOps.sparseEdgesFromLineitem(s, d), seed = 7L)
+          GraphOps.sparseEdgesFromLineitem(s, d))
         require(rounds <= 12,
           s"maximalMatching converged in $rounds rounds but the oracle " +
-            "unrolls 12 — re-probe (tools/R10MatchProbe) and widen the " +
-            "unroll margin for this data scale")
+            "unrolls 12 — re-measure the rounds to convergence at this " +
+            "data scale (SCALE.md, round 13) and widen the unroll margin")
         m
       },
-      Some(matchingSql(seed = 7L, rounds = 12))),
+      Some(matchingSql(seed = Iterative.MatchingSeed, rounds = 12))),
 
     // Adamic–Adar link prediction: top-100 distance-2 pairs by summed
     // 1/ln(deg) over common neighbors; existing edges anti-joined away
@@ -881,8 +881,8 @@ object GraphQueries {
           GraphOps.midEdgesFromLineitem(s, d), k = 3)
         require(rounds <= 4,
           s"kTruss converged in $rounds peel rounds but the oracle " +
-            "unrolls 4 — re-probe (tools/R10TrussProbe) and widen the " +
-            "unroll margin for this data scale")
+            "unrolls 4 — re-measure the peel rounds at this data scale " +
+            "(SCALE.md, round 10) and widen the unroll margin")
         t
       },
       Some(kTrussSql(3, 4))),

@@ -245,27 +245,32 @@ object Iterative {
     * Scale: per round one explode + min aggregate (map-side partials)
     * and two vertex-keyed equi-joins; the active edge frame shrinks
     * monotonically and is checkpointed lazily (the convergence count
-    * materializes it). */
-  def maximalMatching(edges: DataFrame, seed: Long = 7L,
-      maxIter: Int = 50): DataFrame =
-    maximalMatchingWithRounds(edges, seed, maxIter)._1
+    * materializes it). Priorities use [[MatchingSeed]]; the loop stops
+    * after at most 50 rounds. */
+  def maximalMatching(edges: DataFrame): DataFrame =
+    maximalMatchingWithRounds(edges)._1
+
+  /** The [[lubyPriority]] seed of [[maximalMatching]], which the
+    * q_matching oracle replays. */
+  val MatchingSeed = 7L
+  private val MatchingMaxIter = 50
 
   /** [[maximalMatching]] plus the CONVERGED round count — the q_matching
     * oracle unrolls a fixed number of nomination rounds, and convergence
     * depth grows with graph size (O(log n)), so the registered query
     * asserts rounds ≤ the unrolled constant for a clear margin-breach
     * message instead of an opaque hash diff (r10 ADVICE). */
-  def maximalMatchingWithRounds(edges: DataFrame, seed: Long = 7L,
-      maxIter: Int = 50): (DataFrame, Int) = {
+  def maximalMatchingWithRounds(edges: DataFrame): (DataFrame, Int) = {
     val eprio = lubyPriority(
-      pmod(col("src"), lit(1000000007L)) * lit(100003L) + col("dst"), seed)
+      pmod(col("src"), lit(1000000007L)) * lit(100003L) + col("dst"),
+      MatchingSeed)
     var u = GraphOps.edgeUpper(edges).withColumn("prio", eprio)
       .localCheckpoint()
     val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var m = u.count()
     var iter = 0
     val empty = u.select(col("src"), col("dst")).limit(0).localCheckpoint()
-    while (m > 0 && iter < maxIter) {
+    while (m > 0 && iter < MatchingMaxIter) {
       val e = struct(col("prio"), col("src"), col("dst"))
       val best = u
         .select(explode(array(col("src"), col("dst"))).as("v"), e.as("e"))

@@ -449,16 +449,17 @@ object Dedup {
     * never shuffle twice). Every stage keys on md5(shingle) DIGESTS,
     * not the shingle strings: the df aggregate, candidate self-join and
     * intersection joins shuffle fixed 16-byte-entropy keys instead of
-    * strings whose width grows with vocabulary (the r8 ×100 probe
-    * measured the swap at −26 % on the candidate stage — R8ContainProbe,
-    * SCALE.md). The DuckDB oracle replays the SAME digests, so a
-    * collision (two shingles merging) reproduces identically on both
-    * sides — the green stays collision-exact, not no-collision-
-    * probabilistic (the q_incremental_dedup replay discipline). */
+    * strings whose width grows with vocabulary (the ×100 rehearsal
+    * measured the swap at −26 % on the candidate stage — SCALE.md
+    * "Where q_containment_pairs' seconds go", round 9). The DuckDB
+    * oracle replays the SAME digests, so a collision (two shingles
+    * merging) reproduces identically on both sides — the green stays
+    * collision-exact, not no-collision-probabilistic (the
+    * q_incremental_dedup replay discipline). Shingles are 3 words. */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 3, tau: Double = 0.8, maxDf: Long = 50L,
+      tau: Double = 0.8, maxDf: Long = 50L,
       minShared: Long = 1L): DataFrame = {
-    val sh = shingles(docs, textCol, idCol, k)
+    val sh = shingles(docs, textCol, idCol)
       .select(col("id"), md5(col("shingle")).as("shingle"))
       .localCheckpoint()
     val cand = containmentCandidates(sh, maxDf, minShared).localCheckpoint()

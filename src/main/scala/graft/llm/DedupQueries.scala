@@ -224,7 +224,7 @@ object DedupQueries {
     // digests, so a hash collision reproduces identically on both sides
     Q("q_containment_pairs",
       (s, d) => Dedup.containmentPairs(Tables.documents(s, d), "text",
-        "doc_id", k = 3, tau = 0.8, maxDf = 20L, minShared = 5L),
+        "doc_id", tau = 0.8, maxDf = 20L, minShared = 5L),
       Some(s"""WITH $shingleCte,
                shd AS (SELECT doc_id, md5(shingle) AS shingle FROM sh),
                df AS (SELECT shingle, count(*) AS df FROM shd GROUP BY shingle),

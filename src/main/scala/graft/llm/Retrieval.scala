@@ -1,9 +1,9 @@
 package graft.llm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.text.TextOps
 
 /** Hybrid lexical + semantic retrieval with reciprocal-rank fusion
@@ -67,16 +67,13 @@ object Retrieval {
         val probes = broadcast(probeIds
           .join(emb.select(col(embIdCol).as("probe_id"), col(vecCol).as("qv")),
             "probe_id"))
-        val byQ = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("doc").asc)
-        probes
+        val scored = probes
           .crossJoin(emb.select(col(embIdCol).as("doc"), col(vecCol).as("nv")))
           .where(col("doc") =!= col("probe_id"))
           .select(col("qid"), col("doc"),
             round(Similarity.cosine(col("qv"), col("nv")), 6).as("cos"))
-          .withColumn("rank_sem", row_number().over(byQ).cast("long"))
-          .where(col("rank_sem") <= kEach)
-          .select(col("qid"), col("doc"), col("rank_sem"))
+        TopK.perKey(scored, "qid", kEach, col("cos").desc, col("doc").asc)
+          .select(col("qid"), col("doc"), col("rn").as("rank_sem"))
       case IvfRetriever(numCentroids, nProbe) =>
         val pred = col(embIdCol).isin(queries.map(_._3): _*)
         val knn = Similarity.ivfKnn(emb, embIdCol, vecCol, pred,
@@ -112,10 +109,7 @@ object Retrieval {
           when(col("rank_sem").isNotNull,
             lit(1.0) / (lit(rrfC.toDouble) + col("rank_sem"))).otherwise(lit(0.0)),
           6).as("rrf"))
-    val byRrf = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("doc").asc)
-    fused.withColumn("rn", row_number().over(byRrf).cast("long"))
-      .where(col("rn") <= kOut)
+    TopK.perKey(fused, "qid", kOut, col("rrf").desc, col("doc").asc)
       .withColumnRenamed("doc", "doc_id")
   }
 

@@ -1,8 +1,9 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.TopK
 
 /** Similarity search over embedding columns (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and random-hyperplane
@@ -46,11 +47,7 @@ object Similarity {
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rn").cast("long").as("rn"))
+    TopK.perKey(scored, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Exact embedding near-duplicate pairs: all pairs with cosine ≥ tau.
@@ -210,10 +207,11 @@ object Similarity {
     * either engine) and the sum 6dp-rounded. Everything is replayable
     * term for term in SQL, so ANN queries over this fixture are
     * hash-green with the SAME oracle discipline as the raw-fixture ones
-    * while exercising the clustered regime — and `tools/RecallProbe`
-    * measures recall on the IDENTICAL derivation the registered queries
-    * run. The derivation is a one-time per-row projection (higher-order
-    * transform, CodegenFallback) — off the per-pair scoring hot path.
+    * while exercising the clustered regime — and the recall rows of
+    * SCALE.md "ANN recall, measured" (round 11) were taken on the
+    * IDENTICAL derivation the registered queries run. The derivation
+    * is a one-time per-row projection (higher-order transform,
+    * CodegenFallback) — off the per-pair scoring hot path.
     * Returns (idCol, embedding array<double>). */
   def syntheticClustered(emb: DataFrame, idCol: String,
       nClusters: Int = 16, dim: Int = 64): DataFrame = {
@@ -293,12 +291,10 @@ object Similarity {
           col(v).as("vv"))).as("s"))
         .select(col(id), col("s.vv").as(v), col("s.cid").as("cid"))
     } else {
-      val w = Window.partitionBy(col(id)).orderBy(col("csim").desc, col("cid").asc)
-      df.crossJoin(cents)
+      val scored = df.crossJoin(cents)
         .select(col(id), col(v), col("cid"),
           safeCsim(col(v), col("cv")).as("csim"))
-        .withColumn("crn", row_number().over(w))
-        .where(col("crn") <= n)
+      TopK.perKey(scored, id, n, col("csim").desc, col("cid").asc)
         .select(col(id), col(v), col("cid"))
     }
 
@@ -334,11 +330,7 @@ object Similarity {
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rn").cast("long").as("rn"))
+    TopK.perKey(scored, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Random-hyperplane LSH bucket id: `nPlanes` sign bits of dot products
@@ -398,11 +390,7 @@ object Similarity {
       .select(col("qid"), col("nid"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
       .distinct()
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rn").cast("long").as("rn"))
+    TopK.perKey(scored, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Semantic decontamination: flag TRAINING vectors whose embedding
@@ -695,12 +683,8 @@ object Similarity {
     val scored = pairs
       .groupBy(col("qid"), col("vid"))
       .agg(round(sum(col("d")), 6).as("dist"))
-    val byQuery = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("vid").asc)
-    scored.withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("vid").as("nid"), col("dist"),
-        col("rn").cast("long").as("rn"))
+    TopK.perKey(scored, "qid", k, col("dist").asc, col("vid").asc)
+      .select(col("qid"), col("vid").as("nid"), col("dist"), col("rn"))
   }
 
   def pqKnn(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
@@ -740,12 +724,7 @@ object Similarity {
       .join(broadcast(queries), "qid")
       .select(col("qid"), col("nid"),
         round(pqSq(col("qv"), col("nv")), 6).as("dist"))
-    val byQuery = Window.partitionBy(col("qid"))
-      .orderBy(col("dist").asc, col("nid").asc)
-    exact.withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("dist"),
-        col("rn").cast("long").as("rn"))
+    TopK.perKey(exact, "qid", k, col("dist").asc, col("nid").asc)
   }
 
   /** IVF-PQ: the composed billion-scale ANN layout — IVF's coarse cells
@@ -866,25 +845,19 @@ object Similarity {
             round(x / col("scale"), 0))))).as("nc"))
     val queries = broadcast(emb.where(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("qv")))
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("acos").desc, col("nid").asc)
-    val shortlist = queries.crossJoin(corpus)
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qv"), col("nc")), 6).as("acos"))
-      .withColumn("rn", row_number().over(wA))
-      .where(col("rn") <= shortlistK)
+    val shortlist = TopK.perKey(
+        queries.crossJoin(corpus)
+          .where(col("qid") =!= col("nid"))
+          .select(col("qid"), col("nid"),
+            round(cosine(col("qv"), col("nc")), 6).as("acos")),
+        "qid", shortlistK, col("acos").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
     val full = emb.select(col(idCol).as("nid"), col(vecCol).as("nv"))
     val exact = broadcast(shortlist).join(full, "nid")
       .join(broadcast(queries), "qid")
       .select(col("qid"), col("nid"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    exact.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rn").cast("long").as("rn"))
+    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Matryoshka-style (MRL, Kusupati et al. 2022) dimension-ladder KNN:
@@ -909,14 +882,12 @@ object Similarity {
       slice(col(vecCol), 1, truncDim).as("nt"))
     val queriesT = broadcast(emb.where(queryPred)
       .select(col(idCol).as("qid"), slice(col(vecCol), 1, truncDim).as("qt")))
-    val wT = Window.partitionBy(col("qid"))
-      .orderBy(col("tcos").desc, col("nid").asc)
-    val shortlist = queriesT.crossJoin(corpusT)
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qt"), col("nt")), 6).as("tcos"))
-      .withColumn("rn", row_number().over(wT))
-      .where(col("rn") <= shortlistK)
+    val shortlist = TopK.perKey(
+        queriesT.crossJoin(corpusT)
+          .where(col("qid") =!= col("nid"))
+          .select(col("qid"), col("nid"),
+            round(cosine(col("qt"), col("nt")), 6).as("tcos")),
+        "qid", shortlistK, col("tcos").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
     val corpus = emb.select(col(idCol).as("nid"), col(vecCol).as("nv"))
     val queries = emb.where(queryPred)
@@ -925,11 +896,7 @@ object Similarity {
       .join(broadcast(queries), "qid")
       .select(col("qid"), col("nid"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    exact.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"), col("rn").cast("long").as("rn"))
+    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Mutual-kNN graph, cell-bounded: edges (a, b) where each vector is
@@ -1002,14 +969,12 @@ object Similarity {
       }
     def side(a: String, v: String) = assigned
       .select(col("cid"), col("vid").as(a), col("v").as(v))
-    val w = Window.partitionBy(col("a"))
-      .orderBy(col("cos").desc, col("b").asc)
-    val knn = side("a", "va").join(side("b", "vb"), "cid")
-      .where(col("a") =!= col("b"))
-      .select(col("a"), col("b"),
-        round(cosine(col("va"), col("vb")), 6).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    val knn = TopK.perKey(
+        side("a", "va").join(side("b", "vb"), "cid")
+          .where(col("a") =!= col("b"))
+          .select(col("a"), col("b"),
+            round(cosine(col("va"), col("vb")), 6).as("cos")),
+        "a", k, col("cos").desc, col("b").asc)
       .select(col("a"), col("b"), col("cos"))
     knn.join(knn.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"),
         "left_semi")

@@ -206,7 +206,7 @@ object SimilarityQueries {
     // 16-codeword codebooks, 50-deep exact re-rank shortlist — measured
     // recall@5 at sf0.1 = 0.70 on the adversarial near-uniform fixture
     // and 0.98 on the registered clustered fixture
-    // (tools/RecallProbe, SCALE.md "ANN recall, measured"), vs
+    // (SCALE.md "ANN recall, measured", round 11), vs
     // 0.00-0.06 for the fixture dial. Same plan shape — finer codebooks
     // change the broadcast
     // table sizes (m·ksub codewords), never the join structure: the
@@ -411,7 +411,7 @@ object SimilarityQueries {
     // deployment would run at this cell count: measured recall@5 at
     // sf0.1 = 0.56 on the near-uniform fixture and 1.00 on the
     // registered clustered fixture — where even nProbe=2 reaches 0.96
-    // (tools/RecallProbe; SCALE.md "ANN recall, measured"), still
+    // (SCALE.md "ANN recall, measured", round 11), still
     // scanning only nProbe/numCentroids = 25% of the corpus — the
     // recall/fan-in dial with NO plan change (same broadcast quantizer,
     // same cell equi-join; only the per-query probe fan-out widens).
@@ -444,8 +444,8 @@ object SimilarityQueries {
 
     // IVF on the CLUSTERED fixture at nProbe=8 — the regime the layout
     // is built for: measured recall@5 = 1.00 vs the exact twin above
-    // while scanning 8/64 = 12.5 % of cells (tools/RecallProbe, which
-    // runs the IDENTICAL derivation; SCALE.md "ANN recall, measured").
+    // while scanning 8/64 = 12.5 % of cells (SCALE.md "ANN recall,
+    // measured", round 11, taken on the IDENTICAL derivation).
     // Together with the raw-fixture rows this registers both ends of
     // the geometry axis: near-uniform worst case and clustered
     // production case, every stage oracle-replayed in both.
@@ -508,19 +508,18 @@ object SimilarityQueries {
     // measured SLOWER than the pinned 64 at ×1000 (5.6 s of empty-task
     // scheduling) while √N serves AT the pinned-64 row's time probing
     // 2.3 % of the corpus instead of a quarter, recall 1.000 once
-    // nProbe is re-probed to 32 (R14AutoKProbe / SCALE.md — the
-    // R13DriftProbe discipline). At every fixture SF the clamp floors
+    // nProbe is re-probed to 32 (SCALE.md "auto-scaled IVF cell count,
+    // measured at ×1000", round 14). At every fixture SF the clamp floors
     // to k = 64, so the runner SHARES the 64-cell index + memo and the
     // oracle is the same full replay; the require is the standard
     // corpus-derived-dial regime guard — at rehearsal scale it trips
-    // loudly (the probe tool, not this entry, measures that regime)
-    // instead of hash-red.
+    // loudly instead of hash-red.
     Q("q_embed_ivf_knn_auto_stored",
       (s, d) => {
         val (name, k) = graft.sources.IvfIndex.ensureBuiltAuto(s, d)
         require(k == 64,
           s"auto-k=$k: the oracle replays the 64-cell regime — widen " +
-            "the replay or use R14AutoKProbe for at-scale measurement")
+            "the replay; SCALE.md round 14 holds the at-scale rows")
         val queries = Tables.embeddings(s, d).where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
         graft.sources.IvfIndex.serve(s, name, queries, k = 5, nProbe = 16)
@@ -529,7 +528,7 @@ object SimilarityQueries {
 
     // the stored index's cell-occupancy census — the exact quantity
     // IvfIndex.occupancySkew reduces for the measured refresh trigger
-    // (max/mean > ~8, R13DriftProbe), read from the PERSISTED postings
+    // (max/mean > ~8, SCALE.md round 13), read from the PERSISTED postings
     // and hash-checked against a full replay of the flat assignment:
     // the lifecycle's detect step runs on an oracle-verified observable.
     // One column-pruned groupBy over the bucket column — no vector bytes.
@@ -657,7 +656,8 @@ object SimilarityQueries {
     // cancels, so code-space cosine IS the asymmetric dequantized
     // score), 20-deep shortlist, exact float re-rank — the FAISS
     // IndexScalarQuantizer production shape. Codes + scoring + re-rank
-    // all replayed; recall measured on both fixtures (RecallProbe).
+    // all replayed; recall measured on both fixtures (SCALE.md
+    // "Round 12: SQ8 recall, measured").
     Q("q_embed_int8_knn",
       (s, d) => Similarity.int8Knn(Tables.embeddings(s, d), "vec_id",
         "embedding", col("vec_id") < 10, shortlistK = 20, k = 5),

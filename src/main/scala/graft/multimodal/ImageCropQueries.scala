@@ -451,7 +451,7 @@ object ImageCropQueries {
   /** The live entries + the STORED fingerprint twins (r13 verdict #1):
     * same answers, served from [[graft.sources.MediaIndex]]'s persisted
     * (media_id, h_lo, h_hi) table — the decode+dHash pass (33.6 s of
-    * the ×100 row, R13MediaProbe) runs once at build/ingest; the query
+    * the ×100 row, SCALE.md round 13) runs once at build/ingest; the query
     * scans 16-byte fingerprint rows and never opens a payload. Oracles
     * are the live queries' full replays VERBATIM (shared by reference,
     * not copied), because the stored layout changes cost, never

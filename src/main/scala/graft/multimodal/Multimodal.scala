@@ -266,8 +266,9 @@ object Multimodal {
     * round-6 10× rehearsal caught (q_decode_audio_features 22× at 10×
     * data): every facade call re-scans the SPI registry under a lock and
     * burns control-flow exceptions on non-matching providers, so 32
-    * executor threads decode SLOWER than one (R6AudioProbe: 64k decodes
-    * 3.1 s single-thread, 5.0 s on 32). Resolving the concrete
+    * executor threads decode SLOWER than one (64k decodes 3.1 s
+    * single-thread, 5.0 s on 32 — SCALE.md "The audio-codec scale
+    * killer the rehearsal caught", round 6). Resolving the concrete
     * `AudioFileReader`/`AudioFileWriter` once and calling it directly is
     * the codec-context-hoisting the mapPartitions decode shape exists
     * for — here the context is JVM-static because the providers are
@@ -444,19 +445,19 @@ object Multimodal {
 
   /** Image near-dup pairs from [[imageDHash]] fingerprints via the
     * SimHash band discipline (`llm/Dedup.simHashPairs`): 4×16-bit bands
-    * of the 64-bit hash — a ≤`maxDist` pair (maxDist < 16) shares at
-    * least one band only probabilistically, but with ≤3 distance the
-    * pigeonhole guarantees a shared band; at the default 6 the bands
-    * are the standard recall/cost dial. Candidates are an EQUI-join on
+    * of the 64-bit hash; pairs within Hamming distance 6 are kept. Such
+    * a pair shares at least one band only probabilistically (with ≤3
+    * distance the pigeonhole guarantees a shared band); 6 is the
+    * standard recall/cost dial. Candidates are an EQUI-join on
     * (band index, band value); verification re-joins the fingerprints
     * and filters on exact Hamming distance (bit_count of xor per half).
     * Zero cross-products — the 100 TB shape is the text SimHash one:
     * band buckets bound candidate volume, fingerprints (16 bytes) ride
     * the shuffles, payloads never do. */
-  def imageDedupPairs(media: DataFrame, maxDist: Int = 6,
+  def imageDedupPairs(media: DataFrame,
       decode: Array[Byte] => Array[Byte] = decodePngBytes,
       maxBandDf: Int = 10000): DataFrame =
-    dhashPairs(imageDHash(media, decode), maxDist, maxBandDf)
+    dhashPairs(imageDHash(media, decode), 6, maxBandDf)
 
   /** Temporal difference-hash over the DECODED PCM stream — the audio
     * analog of [[imageDHash]], completing the multimodal dedup family
@@ -1039,7 +1040,7 @@ object Multimodal {
     * partitions, and EVERY downstream stage of the pair machinery
     * (band maps, digest aggregates, rep joins — 5+ scans) then pays
     * 2× parallelism tasks of per-task fixed overhead over KB-sized
-    * partitions (R19StageProfile: ~40 of q_image_crop2d_perceptual's
+    * partitions (a round-19 stage profile: ~40 of q_image_crop2d_perceptual's
     * 69 taskSec sat in 64-task scans of a 5 MB checkpoint). The target
     * is data-derived, never a local constant: floor =
     * defaultParallelism (keep every core busy), cap = materialized

@@ -138,8 +138,7 @@ object MultimodalQueries {
     // OR-of-bands join — candidate discipline AND the estimate itself
     // are both replayed, so a codec, packing, or banding bug mismatches.
     Q("q_image_dedup",
-      (s, d) => Multimodal.imageDedupPairs(Multimodal.imageTable(s, d),
-        maxDist = 6),
+      (s, d) => Multimodal.imageDedupPairs(Multimodal.imageTable(s, d)),
       Some(imageFpCte(
         """SELECT doc_id AS media_id, hex(encode(text)) AS h,
                        octet_length(encode(text)) AS n_bytes

@@ -55,7 +55,7 @@ object Bucketing {
   /** Auto-scaled bucket count for the stored-index families (r14
     * verdict "what's missing" #3 — the [[IvfIndex.autoCells]] clamp
     * discipline applied to bucket counts), CALIBRATED BY MEASUREMENT
-    * (R15VideoProbe, ×1000 = 42M digest rows): a √N-style growth to
+    * (SCALE.md round 15, ×1000 = 42M digest rows): a √N-style growth to
     * 206 buckets made the gate serve 3–4× SLOWER than pinned 16
     * (aligned 3.31 → 14.04 s, clip 2.88 → 11.52 s) — the r14
     * task-floor finding again: every bucket schedules a FilePartition

@@ -1,9 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.llm.Similarity
 
 /** PERSISTED IVF index: the ANN layout written to disk once at ingest and
@@ -117,10 +117,11 @@ object IvfIndex {
     // every cell lands in exactly one task, so the writer emits ONE
     // file per bucket instead of (tasks × buckets) fragments — at
     // auto-scaled k that difference is ~500k tiny files vs 15625, and
-    // the R14AutoKProbe serve row moved 7.4 s → 5.6 s on this change
-    // alone (SCALE.md); the fresh source frame is not a bucketed table, so
-    // the planner's repartition elision (the compactTable trap) does
-    // not apply. Cell occupancy keeps the per-task write balanced.
+    // the ×1000 auto-k serve row moved 7.4 s → 5.6 s on this change
+    // alone (SCALE.md round 14); the fresh source frame is not a
+    // bucketed table, so the planner's repartition elision (the
+    // compactTable trap) does not apply. Cell occupancy keeps the
+    // per-task write balanced.
     cells.repartition(col("cell")).write.mode("overwrite")
       .format("parquet")
       .option("path", s"$basePath/${name}_cells")
@@ -178,12 +179,7 @@ object IvfIndex {
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         round(Similarity.cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"),
-        col("rn").cast("long").as("rn"))
+    TopK.perKey(scored, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** INCREMENTAL ingest into the stored layout (the connection
@@ -268,27 +264,29 @@ object IvfIndex {
   }
 
   /** Occupancy skew (max cell size / mean over occupied cells) of the
-    * stored postings — the MEASURED refresh trigger (R13DriftProbe,
-    * SCALE.md round 13): appended drift CROWDS the few stale cells
-    * nearest the new mass while recall holds (0.98 @ nProbe=16 even at
-    * 100 % drifted append), so recall monitoring never fires; the
-    * observable that moves is this skew (14.5× at 100 % drifted vs
-    * ≤ ~7 balanced), and serve cost is the size of the probed cells.
-    * One column-pruned groupBy over `cell` — no vector bytes read. */
+    * stored postings — the MEASURED refresh trigger (SCALE.md round
+    * 13): appended drift CROWDS the few stale cells nearest the new
+    * mass while recall holds (0.98 @ nProbe=16 even at 100 % drifted
+    * append), so recall monitoring never fires; the observable that
+    * moves is this skew (14.5× at 100 % drifted vs ≤ ~7 balanced), and
+    * serve cost is the size of the probed cells. One column-pruned
+    * groupBy over `cell` — no vector bytes read. An index with no
+    * postings has skew 1.0. */
   def occupancySkew(spark: SparkSession, name: String): Double = {
     val r = spark.table(s"${name}_cells").groupBy(col("cell"))
       .agg(count(lit(1)).as("n"))
       .agg(max(col("n")).cast("double"), avg(col("n"))).head()
-    r.getDouble(0) / r.getDouble(1)
+    if (r.isNullAt(0)) 1.0 else r.getDouble(0) / r.getDouble(1)
   }
 
   /** The rebuild policy as a callable: true when [[occupancySkew]]
     * crosses `maxOverMean`. The default is the measured number —
-    * R13DriftProbe saw ≤ ~7 at 50 % drifted append and 14.5 at 100 %,
-    * so ~8 sits between the healthy and degenerate regimes. After a
-    * triggered [[refresh]], re-probe recall before narrowing nProbe
-    * (the probe's third finding: redistributing a crowded cell can
-    * split neighborhoods that crowding kept colocated). */
+    * the round-13 drift rows (SCALE.md) saw ≤ ~7 at 50 % drifted
+    * append and 14.5 at 100 %, so ~8 sits between the healthy and
+    * degenerate regimes. After a triggered [[refresh]], re-probe
+    * recall before narrowing nProbe (their third finding:
+    * redistributing a crowded cell can split neighborhoods that
+    * crowding kept colocated). */
   def needsRefresh(spark: SparkSession, name: String,
       maxOverMean: Double = 8.0): Boolean =
     occupancySkew(spark, name) >= maxOverMean
@@ -306,7 +304,7 @@ object IvfIndex {
     * call, not a hand-run probe script). One pass:
     *
     *   1. DETECT: [[occupancySkew]] over the stored postings (the
-    *      measured drift observable — R13DriftProbe showed recall
+    *      measured drift observable — SCALE.md round 13 showed recall
     *      monitoring never fires while skew moves 7 → 14.5);
     *   2. DECIDE + ACT: skew ≥ `maxOverMean` → [[refresh]] (Lloyd
     *      retrain from the index's own postings — which rewrites the
@@ -317,8 +315,9 @@ object IvfIndex {
     *      costs two metadata reads and one column-pruned groupBy;
     *   3. RE-MEASURE: skew after, so the caller's log carries the
     *      before/after pair (a pass that wrote nothing reports
-    *      skewAfter = skewBefore without rescanning) — and, per R13DriftProbe's third finding
-    *      (a rebuild can LOWER tight-probe recall), the caller should
+    *      skewAfter = skewBefore without rescanning) — and, per the
+    *      round-13 drift rows' third finding (a rebuild can LOWER
+    *      tight-probe recall), the caller should
     *      run [[reprobeRecall]] → [[pickNProbe]] after any
     *      `refreshed = true` pass before narrowing nProbe (label-free:
     *      the index's own stored vectors are the truth set). Kept out
@@ -349,7 +348,7 @@ object IvfIndex {
   final case class RecallPoint(nProbe: Int, recall: Double)
 
   /** The RE-PROBE step as a callable (closing the loop [[maintain]]'s
-    * scaladoc leaves to the caller, and the step R14AutoKProbe showed
+    * scaladoc leaves to the caller, and the step SCALE.md round 14 showed
     * is MANDATORY whenever the cell dial moves: growing 64 → 1415
     * cells at fixed nProbe=16 dropped recall 1.000 → 0.900; nProbe=32
     * restored it at the same measured serve time). No labeled queries
@@ -360,7 +359,7 @@ object IvfIndex {
     * tiebreaks [[serve]] uses), then measure what [[serve]] recovers
     * at each dial. Run it after any `refreshed = true` [[maintain]]
     * pass or cell-count change, BEFORE narrowing nProbe
-    * (R13DriftProbe's third finding: a rebuild can LOWER tight-probe
+    * (SCALE.md round 13, third finding: a rebuild can LOWER tight-probe
     * recall). Self-queries always find themselves in their own cell,
     * so the measured quantity is the neighbors' recall — [[serve]]'s
     * qid =!= nid exclusion keeps self-hits out of both sides. */
@@ -403,14 +402,14 @@ object IvfIndex {
 
   /** Maintenance REBUILD from the index's own stored postings — the
     * act step of the measured lifecycle (detect [[occupancySkew]] →
-    * decide [[needsRefresh]] → act here → verify with RecallProbe
+    * decide [[needsRefresh]] → act here → verify with [[reprobeRecall]]
     * before narrowing nProbe). Retrains the quantizer over the CURRENT
     * corpus (mixer-sample seeds, then `lloydIters` rounds of
     * spherical-k-means refinement: assignment is the same 6dp cosine
     * argmin [[serve]] routes by, and because cosine cancels scale the
     * plain per-cell mean routes identically to its normalized form —
     * the refinement moves centroids INTO appended mass the r12 sample
-    * quantizer provably never picked, R13DriftProbe finding #3),
+    * quantizer provably never picked, SCALE.md round 13, finding #3),
     * reassigns every stored vector, and overwrites both tables under
     * their catalog locations. Nothing external is read: the index owns
     * its vectors, so refresh needs no access to the original corpus.
@@ -505,14 +504,12 @@ object IvfIndex {
     val codeSide = stored.select(col("vec_id").as("nid"),
       transform(col("codes"), x => x.cast("double")).as("nc"),
       col("cell").as("cid"))
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("acos").desc, col("nid").asc)
-    val shortlist = routed.join(codeSide, "cid")
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(Similarity.cosine(col("qv"), col("nc")), 6).as("acos"))
-      .withColumn("rn", row_number().over(wA))
-      .where(col("rn") <= shortlistK)
+    val shortlist = TopK.perKey(
+        routed.join(codeSide, "cid")
+          .where(col("qid") =!= col("nid"))
+          .select(col("qid"), col("nid"),
+            round(Similarity.cosine(col("qv"), col("nc")), 6).as("acos")),
+        "qid", shortlistK, col("acos").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
     val exact = broadcast(shortlist)
       .join(stored.select(col("vec_id").as("nid"), col("vec").as("nv")),
@@ -520,12 +517,7 @@ object IvfIndex {
       .join(broadcast(queries.select(col("qid"), col("qv"))), "qid")
       .select(col("qid"), col("nid"),
         round(Similarity.cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid").asc)
-    exact.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("cos"),
-        col("rn").cast("long").as("rn"))
+    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
   }
 
   /** Memoized build keyed by (sfDir, data fingerprint): the registered
@@ -564,14 +556,14 @@ object IvfIndex {
     * ALSO the right point for Spark's execution model: a bucketed scan
     * builds one FilePartition per bucket even for pruned buckets
     * (empty file lists still schedule tasks), so cells are a per-query
-    * task cost too. MEASURED on the ×1000 synthesis (R14AutoKProbe,
+    * task cost too. MEASURED on the ×1000 synthesis (SCALE.md round 14,
     * 2M vectors, quiet box): occupancy-targeted k = N/128 = 15625
     * cells served in 5.6 s — almost all of it empty-task scheduling —
     * while √N ≈ 1415 serves at the pinned-64 row's time (1.7 s, the
     * local[32] task floor) probing 2.3 % of the corpus where 64 cells
     * probe a QUARTER (the r13 ×1000 note) — the reduction that
     * dominates once the scan is data-bound at cluster scale. Recall
-    * follows the re-probe discipline (R13DriftProbe): 0.900 at the
+    * follows the re-probe discipline (SCALE.md round 13): 0.900 at the
     * 64-cell dial's nProbe=16, restored to 1.000 at nProbe=32 at the
     * SAME measured serve time. minCells = 64 keeps every fixture-scale
     * build on the flat exact argmin the oracles replay; past

@@ -9,8 +9,8 @@ import graft.multimodal.Multimodal
   * stored-index family ([[IvfIndex]] vectors, [[TextIndex]] lexical,
   * [[DedupIndex]] text near-dup), closing the r13 verdict's one `weak`:
   * q_image_dedup / q_audio_dedup re-decoded every payload and recomputed
-  * every dHash on every run — the ×100 decomposition (R13MediaProbe) put
-  * that at 33.6 s of the 83.4 s row, honest linear INGEST work being
+  * every dHash on every run — the ×100 decomposition (SCALE.md round
+  * 13) put that at 33.6 s of the 83.4 s row, honest linear INGEST work being
   * paid at QUERY time. This index stores the 128-bit perceptual
   * fingerprint once, at ingest, as one bucketed table:
   *
@@ -64,7 +64,7 @@ object MediaIndex {
     * frame is checkpointed (the decode+hash pass must not run twice),
     * counted, and written with bytes-per-bucket-targeted buckets — the
     * bucket-count analog of [[IvfIndex.ensureBuiltAuto]], calibrated by
-    * the R15VideoProbe measurement (see [[Bucketing.autoBuckets]]).
+    * the round-15 ×1000 measurement (see [[Bucketing.autoBuckets]]).
     * Returns the chosen bucket count; fixture AND rehearsal scales stay
     * at the measured-optimal 16-bucket floor. */
   def buildAuto(spark: SparkSession, fingerprints: DataFrame,
@@ -262,10 +262,11 @@ object MediaIndex {
 
   /** Label-free recall re-probe for the banding dial — the
     * [[IvfIndex.reprobeRecall]] discipline for fingerprints, the step
-    * R14MediaRecallProbe showed is mandatory knowledge for setting
-    * maxDist (4×16 banding is pigeonhole-guaranteed only at dist ≤ 3;
-    * measured 0.92/0.83/0.67 at 4/5/6 on the audio corpus): sample
-    * `sampleSize` stored fingerprints as a probe batch, brute-force
+    * SCALE.md's round-14 media-banding recall rows showed is mandatory
+    * knowledge for setting maxDist (4×16 banding is
+    * pigeonhole-guaranteed only at dist ≤ 3; measured 0.92/0.83/0.67
+    * at 4/5/6 on the audio corpus): sample `sampleSize` stored
+    * fingerprints as a probe batch, brute-force
     * Hamming truth against the whole corpus (sample BROADCAST, corpus
     * streams map-side — linear in the corpus with a 16-byte × sample
     * constant, the affordable maintenance-window pass), run the banded

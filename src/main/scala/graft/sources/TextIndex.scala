@@ -1,9 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TopK
 import graft.text.TextOps
 
 /** PERSISTED lexical (BM25) index — the retrieval-family member of the
@@ -140,14 +140,11 @@ object TextIndex {
     val tot = spark.table(s"${name}_totals")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     val qdf = broadcast(qterms.join(dfc, "word"))
-    val byQ = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    probe.join(qdf, "word")
+    val scored = probe.join(qdf, "word")
       .crossJoin(broadcast(tot))
       .groupBy(col("qid"), col("doc_id"))
       .agg(round(sum(TextOps.bm25Term(k1, b)), 6).as("score"))
-      .withColumn("rn", row_number().over(byQ).cast("long"))
-      .where(col("rn") <= k)
+    TopK.perKey(scored, "qid", k, col("score").desc, col("doc_id").asc)
   }
 
   /** Run `body` (which must EXECUTE its scan — e.g. an eager

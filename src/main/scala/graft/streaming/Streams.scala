@@ -79,7 +79,8 @@ object Streams {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Session clone with state partitioning sized for the drain: every
+  /** Session clone with state partitioning sized for the drain (at most
+    * 8 shuffle partitions, never more than the caller's): every
     * stateful operator instantiates one state store per shuffle
     * partition, and at harness scale the 32-way default spends more time
     * creating stores than processing events (measured: interval join
@@ -89,10 +90,7 @@ object Streams {
   private def tuned(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     val parent = spark.conf.get("spark.sql.shuffle.partitions", "8").toInt
-    val drainParts = spark.conf.getOption("graft.stream.shufflePartitions")
-      .flatMap(_.toIntOption).getOrElse(8)
-    s.conf.set("spark.sql.shuffle.partitions",
-      math.min(drainParts, parent).toString)
+    s.conf.set("spark.sql.shuffle.partitions", math.min(8, parent).toString)
     // newSession does NOT inherit runtime confs — carry the graft.*
     // operational knobs (e.g. the StreamSmoke multi-batch cap) across
     spark.conf.getAll.foreach { case (k, v) =>

@@ -95,14 +95,14 @@ GROUP BY d.doc_id"""
     * merge list and symbol vocabulary are driver-side, vocabulary-
     * bounded values, deterministic per (corpus, filter, rounds) — so
     * re-deriving them on every q_bpe_encode run re-pays the training
-    * driver-loop for an identical answer. R11BpeProbe at sf0.1: train
+    * driver-loop for an identical answer. SCALE.md round 11 at sf0.1: train
     * 1.4 s warm vs encode 0.9 s — training was ~60 % of the query. The
     * production discipline is exactly this split ("train once, encode
     * every batch"); q_bpe_train stays UNCACHED because timing the
     * training loop is its whole purpose.
     *
     * The cache key is (sfDir, data fingerprint), not the path alone:
-    * tools like Rehearse/StreamSmoke rewrite fixture dirs in place, and
+    * tools like StreamSmoke rewrite fixture dirs in place, and
     * a path-keyed memo would silently encode with STALE merges — the
     * result would no longer be a pure function of the input tables
     * (r11 ADVICE). The fingerprint is one cheap 1-row aggregate over

@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.core.TopK
 import graft.functions.StrTok
 
 /** Text-processing capabilities of the reference:
@@ -87,7 +88,6 @@ object TextOps {
     * partition). */
   def tfIdfTopK(docs: DataFrame, textCol: String, docCol: String,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // tf feeds both the scoring join and the df aggregate; without a
     // checkpoint the tokenize+explode subtree executes once per reference
     // (no ReusedExchange across the broadcast boundary — the r9 kmeans
@@ -100,10 +100,7 @@ object TextOps {
     val scored = tf.join(dfc, "word").crossJoin(broadcast(nd))
       .withColumn("tfidf",
         round(col("tf") * log(col("n_docs") / col("df")), 6))
-    val byDoc = Window.partitionBy(col(docCol))
-      .orderBy(col("tfidf").desc, col("word").asc)
-    scored.withColumn("rn", row_number().over(byDoc))
-      .where(col("rn") <= k)
+    TopK.perKey(scored, docCol, k, col("tfidf").desc, col("word").asc)
       .select(col(docCol), col("word"), col("tf"), col("tfidf"))
   }
 
@@ -142,7 +139,6 @@ object TextOps {
   def bm25TopK(docs: DataFrame, textCol: String, docCol: String,
       queries: Seq[(String, String)], k: Int = 5, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = words(docs, textCol, docCol)
     // tf is referenced FOUR times (scoring join, dl, dfc→qdf, tot→dl) and
     // Spark does not reuse the exchange across the broadcast subtrees, so
@@ -162,15 +158,12 @@ object TextOps {
     }.toDF("qid", "word")
     val qdf = broadcast(qterms.join(dfc, "word"))
     val term = bm25Term(k1, b)
-    val byQ = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col(docCol).asc)
-    tf.join(qdf, "word")
+    val scored = tf.join(qdf, "word")
       .join(dl, docCol)
       .crossJoin(broadcast(tot))
       .groupBy(col("qid"), col(docCol))
       .agg(round(sum(term), 6).as("score"))
-      .withColumn("rn", row_number().over(byQ).cast("long"))
-      .where(col("rn") <= k)
+    TopK.perKey(scored, "qid", k, col("score").desc, col(docCol).asc)
   }
 
   /** Inverted index: token → sorted distinct posting list + frequency. */

@@ -62,8 +62,8 @@ class BucketingSpec extends AnyFunSuite {
     assert(Bucketing.autoBuckets(0L) == 16)
     assert(Bucketing.autoBuckets(33000L) == 16,
       "fixture-scale builds stay at the 16-bucket oracle regime")
-    // the measured R15VideoProbe calibration: 42M rows must STAY at the
-    // floor (sqrt-growth to 206 buckets made serve 3-4x slower — the
+    // the measured round-15 calibration (SCALE.md): 42M rows must STAY
+    // at the floor (sqrt-growth to 206 buckets made serve 3-4x slower — the
     // per-bucket task floor dominates until file bytes genuinely grow)
     assert(Bucketing.autoBuckets(42000000L) == 16,
       "rehearsal-scale corpora stay at the measured-optimal floor")

@@ -80,6 +80,24 @@ class IndexRemoveSpec extends AnyFunSuite {
       s"the rewritten cells scan must stay bucket-pruned:\n$p")
   }
 
+  test("IvfIndex.maintain and serve on an index whose every vector was removed") {
+    val emb = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding")).where(col("vec_id") < 40)
+    IvfIndex.build(spark, emb, "vec_id", "embedding", "graft_ivf_rm_all",
+      numCentroids = 4)
+    IvfIndex.remove(spark, "graft_ivf_rm_all", emb.select(col("vec_id")))
+    assert(spark.table("graft_ivf_rm_all_cells").count() == 0)
+    // no occupied cell: skew is 1.0, so the pass neither refreshes a
+    // quantizer over nothing nor compacts an empty table
+    val m = IvfIndex.maintain(spark, "graft_ivf_rm_all")
+    assert(m == IvfIndex.Maintenance(1.0, refreshed = false,
+      compacted = false, skewAfter = 1.0, files = Map.empty))
+    val queries = emb.where(col("vec_id") < 4)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    assert(IvfIndex.serve(spark, "graft_ivf_rm_all", queries, k = 5,
+      nProbe = 4).count() == 0)
+  }
+
   test("DedupIndex.remove: an erased document stops vetoing its re-crawled twin") {
     val s = spark
     import s.implicits._

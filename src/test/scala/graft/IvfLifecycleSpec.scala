@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.IvfIndex
 
 /** The measured index lifecycle end-to-end: appended DRIFT must fire
-  * the occupancy-skew trigger (R13DriftProbe's finding — recall holds
+  * the occupancy-skew trigger (SCALE.md round 13 — recall holds
   * while the hot cell balloons, so skew, not recall, is the
   * observable), and [[IvfIndex.refresh]] must rebalance the partition
   * WITHOUT touching the stored corpus rows or the full-probe answer
@@ -18,9 +18,9 @@ class IvfLifecycleSpec extends AnyFunSuite {
   private val name = "graft_ivf_lifecycle"
 
   // built once per suite: base = even ids at 16 cells, then a strongly
-  // drifted append (dims rotated by 7, +2.0 offset — the R13DriftProbe
-  // synthesis, amplified so the drifted mass crowds into few cells at
-  // this fixture size). Deterministic end to end.
+  // drifted append (dims rotated by 7, +2.0 offset — SCALE.md's
+  // round-13 drift synthesis, amplified so the drifted mass crowds
+  // into few cells at this fixture size). Deterministic end to end.
   private lazy val built: Unit = {
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"))

@@ -79,7 +79,8 @@ class IvfRoutedSpec extends AnyFunSuite {
     // full probe for the serve pin: the routed partition may park vec 3
     // outside the query's top-2 FLAT-probed cells (the documented
     // nProbe=1 coarse approximation) — recall at tight probes is
-    // RecallProbe's business, this test pins append-routing consistency
+    // IvfIndex.reprobeRecall's business (SCALE.md "ANN recall,
+    // measured"); this test pins append-routing consistency
     val q = src.select(lit(9000003L).as("qid"), col("embedding").as("qv"))
     val top = IvfIndex.serve(spark, routedName, q, k = 1, nProbe = 16)
       .collect().map(r => (r.getLong(1), r.getDouble(2)))

@@ -23,7 +23,7 @@ class MediaIndexSpec extends AnyFunSuite {
       "graft_media_spec_img")
     val stored = rows(MediaIndex.pairs(spark, "graft_media_spec_img",
       maxDist = 6))
-    val live = rows(Multimodal.imageDedupPairs(media, maxDist = 6))
+    val live = rows(Multimodal.imageDedupPairs(media))
     assert(stored == live)
   }
 

@@ -486,7 +486,7 @@ class TextLlmSpec extends AnyFunSuite {
       (1L, inner), // fully contained in doc 2
       (2L, inner + " iota kappa lambda mu nu xi omicron pi rho sigma tau"),
       (3L, "wholly unrelated words about spark shuffles and catalyst plans"))
-    val got = Dedup.containmentPairs(d, "text", "doc_id", k = 3, tau = 0.9)
+    val got = Dedup.containmentPairs(d, "text", "doc_id", tau = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getDouble(2), r.getDouble(3)))).toMap
     assert(got.keySet == Set((1L, 2L)), s"got $got")
@@ -496,7 +496,7 @@ class TextLlmSpec extends AnyFunSuite {
       .count() == 0)
     // hot-shingle exclusion is deterministic: with maxDf = 1 no shingle
     // is rare, so no candidates exist at all
-    assert(Dedup.containmentPairs(d, "text", "doc_id", k = 3, tau = 0.9,
+    assert(Dedup.containmentPairs(d, "text", "doc_id", tau = 0.9,
       maxDf = 1L).count() == 0)
   }
 
