@@ -559,9 +559,9 @@ object Dedup {
     * the exact banding-entry condition. A doc with < k words never
     * enters the uncollapsed banding, so its verbatim twins are NOT
     * paired there and must not acquire a cluster here (the same edge
-    * [[expandThroughDigests]] guards via [[shingleableReps]]). `k` is
-    * threaded for that predicate alone; it must match the shingle size
-    * the supplied pair generator bands with. */
+    * [[graft.core.Collapse.expandThroughDigests]] guards via
+    * [[shingleableReps]]). `k` is threaded for that predicate alone; it
+    * must match the shingle size the supplied pair generator bands with. */
   def collapsedClusters(docs: DataFrame, textCol: String, idCol: String,
       k: Int)(pairsOnReps: DataFrame => DataFrame): DataFrame = {
     val (reps, members) = digestCollapse(docs, textCol, idCol)
@@ -594,35 +594,6 @@ object Dedup {
       editDistancePairs(_, textCol, idCol, k, numHashes, bands, tauJ,
         maxRel))
 
-  /** Reconstitute the FULL pair list from representative pairs: every
-    * rep pair expands across both digest groups' member lists (the
-    * scores carry over verbatim — byte-identical members share shingle
-    * sets and texts, so jaccard/Levenshtein are theirs too), and each
-    * eligible group adds its internal pairs at the identical-content
-    * scores. `eligibleReps` must hold exactly the groups the
-    * UNCOLLAPSED pipeline would self-pair — i.e. those whose text
-    * yields ≥ 1 shingle: a shingle-less doc never enters banding, so
-    * its verbatim twins are NOT paired uncollapsed and must not be
-    * invented here. Output rows are per-pair (da < db re-established
-    * after expansion); row generation replaces per-pair verification,
-    * which is the whole point — the expansion is O(answer), the
-    * verification O(distinct content). */
-  private def expandThroughDigests(repPairs: DataFrame, members: DataFrame,
-      eligibleReps: DataFrame, intraScores: Seq[Column]): DataFrame = {
-    val carried = repPairs.columns.filterNot(Set("da", "db")).map(col)
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da") +:
-        greatest(col("ia"), col("ib")).as("db") +: carried: _*)
-    val em = members.join(eligibleReps, "rep")
-    val intra = em.select(col("rep"), col("id").as("ia"))
-      .join(em.select(col("rep"), col("id").as("ib")), "rep")
-      .where(col("ia") < col("ib"))
-      .select(col("ia").as("da") +: col("ib").as("db") +: intraScores: _*)
-    cross.unionByName(intra)
-  }
-
   /** Groups whose representative text yields at least one word
     * k-shingle — the exact banding-entry condition, so expansion
     * self-pairs precisely the groups the uncollapsed pipeline would. */
@@ -643,10 +614,10 @@ object Dedup {
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       tau: Double = 0.8): DataFrame = {
     val (reps, members) = digestCollapse(docs, textCol, idCol)
-    expandThroughDigests(
+    graft.core.Collapse.expandThroughDigests(
       minHashLshPairsExact(reps, textCol, idCol, k, numHashes, bands, tau),
-      members, shingleableReps(reps, textCol, idCol, k),
-      Seq(lit(1.0).as("jaccard")))
+      members, shingleableReps(reps, textCol, idCol, k)
+        .select(col("rep"), lit(1.0).as("jaccard")))
   }
 
   /** [[editDistancePairs]] with the exact-digest collapse in front —
@@ -659,11 +630,11 @@ object Dedup {
       idCol: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       tauJ: Double = 0.8, maxRel: Double = 0.3): DataFrame = {
     val (reps, members) = digestCollapse(docs, textCol, idCol)
-    expandThroughDigests(
+    graft.core.Collapse.expandThroughDigests(
       editDistancePairs(reps, textCol, idCol, k, numHashes, bands, tauJ,
         maxRel),
-      members, shingleableReps(reps, textCol, idCol, k),
-      Seq(lit(1.0).as("jaccard"), lit(0L).as("edit_dist"),
+      members, shingleableReps(reps, textCol, idCol, k).select(col("rep"),
+        lit(1.0).as("jaccard"), lit(0L).as("edit_dist"),
         lit(0.0).as("rel_edit")))
   }
 

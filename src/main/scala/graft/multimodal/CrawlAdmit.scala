@@ -148,8 +148,8 @@ object CrawlAdmit {
     * Clip dials (each a [[VideoIndex]]-family temporal index):
     *   - `audioClipIdx` folds EXCERPT refusal into the audio flag: an
     *     item embedding stored audio — invisible to the whole-stream
-    *     fingerprint — refuses when ≥ `minFrames` of its PCM segments
-    *     match stored segments at one consistent offset.
+    *     fingerprint — refuses when ≥ [[Multimodal.MinFrames]] of its
+    *     PCM segments match stored segments at one consistent offset.
     *   - `imageCropIdx` adds vertical-crop refusal to the image flag
     *     (raster rows, shift = vertical offset).
     *   - `imageCrop2dIdx` adds 2D (horizontal/general) crop refusal:
@@ -169,7 +169,7 @@ object CrawlAdmit {
     *     video admits. */
   def admitFlags(spark: SparkSession, batch: DataFrame, textIdx: String,
       imageIdx: String, audioIdx: String, videoIdx: String,
-      maxDist: Int = 6, minFrames: Int = 2, tau: Double = 0.8,
+      maxDist: Int = 6, tau: Double = 0.8,
       videoPerceptual: Boolean = false,
       audioClipIdx: Option[String] = None,
       imageCropIdx: Option[String] = None,
@@ -181,13 +181,13 @@ object CrawlAdmit {
     flagsFrom(spark,
       deriveInputs(spark, batch, audioClipIdx, imageCropIdx,
         imageCrop2dIdx, videoKeyframeIdx, checkpointFps = false),
-      textIdx, imageIdx, audioIdx, videoIdx, maxDist, minFrames, tau,
+      textIdx, imageIdx, audioIdx, videoIdx, maxDist, tau,
       videoPerceptual, audioClipIdx, imageCropIdx, audioClipPerceptual,
       imageCropPerceptual, imageCrop2dIdx, videoKeyframeIdx, stopCache)
 
   private def flagsFrom(spark: SparkSession, in: BatchInputs,
       textIdx: String, imageIdx: String, audioIdx: String,
-      videoIdx: String, maxDist: Int, minFrames: Int, tau: Double,
+      videoIdx: String, maxDist: Int, tau: Double,
       videoPerceptual: Boolean, audioClipIdx: Option[String],
       imageCropIdx: Option[String], audioClipPerceptual: Boolean,
       imageCropPerceptual: Boolean,
@@ -195,17 +195,18 @@ object CrawlAdmit {
       videoKeyframeIdx: Option[String],
       stopCache: Option[VideoIndex.StopCache] = None): DataFrame = {
     val ids = in.b.select(col("doc_id"))
-    // each clip leg picks its gate by ITS OWN toggle (byte-exact
-    // clipAgainst unless the caller opts into the perceptual regime)
-    def clipRefusal(idx: String, grid: DataFrame,
-        perceptual: Boolean): DataFrame =
-      (if (perceptual)
-        VideoIndex.clipPerceptualAgainst(spark, idx, grid, maxDist,
-          minFrames,
-          stopBands = stopCache.map(_.get(s"${idx}_bstop")))
-      else VideoIndex.clipAgainst(spark, idx, grid, minFrames,
-        stop = stopCache.map(_.get(s"${idx}_stop"))))
+    // the temporal legs' refusal sets: each leg picks its match by ITS
+    // OWN toggle (byte-exact unless the caller opts into the perceptual
+    // regime); aligned legs refuse whole copies, shift-tolerant ones
+    // clips and crops
+    def refused(idx: String, rows: DataFrame, perceptual: Boolean,
+        shifts: Boolean): DataFrame = {
+      val m = if (perceptual) Multimodal.Perceptual(maxDist)
+        else Multimodal.Exact
+      VideoIndex.pairsAgainst(spark, idx, rows, m, shifts,
+        stopCache.map(_.get(VideoIndex.stopTable(idx, m))))
         .select(col("fid").as("doc_id")).distinct()
+    }
     // the up-to-eight gate legs are independent read-only plans over the
     // shared checkpointed inputs, each eagerly materializing its own
     // broadcast fresh side — built concurrently (inParallel scaladoc);
@@ -224,13 +225,8 @@ object CrawlAdmit {
       // video then refuses too — the curation default at real crawl
       // scale; the registered q_crawl_admit keeps the byte-exact leg its
       // oracle replays)
-      () => Some((if (videoPerceptual)
-          VideoIndex.perceptualAgainst(spark, videoIdx, in.vFrames, maxDist,
-            minFrames,
-            stopBands = stopCache.map(_.get(s"${videoIdx}_bstop")))
-        else VideoIndex.pairsAgainst(spark, videoIdx, in.vFrames, minFrames,
-          stop = stopCache.map(_.get(s"${videoIdx}_stop"))))
-        .select(col("fid").as("doc_id")).distinct()),
+      () => Some(refused(videoIdx, in.vFrames, videoPerceptual,
+        shifts = false)),
       // `imageCropIdx` adds CROP refusal to the image leg (the
       // audioClipIdx discipline over raster rows): a batch item that is
       // a vertical crop / banner edit of stored material slips the
@@ -239,9 +235,9 @@ object CrawlAdmit {
       // horizontal/general regime over 8×1 blocks at one consistent
       // packed (row, col) shift.
       () => (imageCropIdx zip in.imgRows).map { case (idx, rw) =>
-        clipRefusal(idx, rw, imageCropPerceptual) },
+        refused(idx, rw, imageCropPerceptual, shifts = true) },
       () => (imageCrop2dIdx zip in.imgBlocks).map { case (idx, bl) =>
-        clipRefusal(idx, bl, perceptual = false) },
+        refused(idx, bl, perceptual = false, shifts = true) },
       // `audioClipIdx` adds EXCERPT refusal to the audio leg: the
       // whole-stream fingerprint is blind to stored material embedded in
       // (or lifted from) a batch item — every envelope window moves —
@@ -249,16 +245,14 @@ object CrawlAdmit {
       // offset (the index is modality-agnostic over temporal rows;
       // `audioClipPerceptual` additionally catches a re-MASTERED excerpt)
       () => (audioClipIdx zip in.audSeg).map { case (idx, seg) =>
-        clipRefusal(idx, seg, audioClipPerceptual) },
+        refused(idx, seg, audioClipPerceptual, shifts = true) },
       // `videoKeyframeIdx` adds real-codec refusal: the decoded-keyframe
       // digests gate byte-exactly against the stored keyframe index (the
       // aligned pairsAgainst — md5 of decoded bytes is codec-independent,
       // so a PNG→BMP re-wrap of stored material refuses here while both
       // synthetic-frame legs, reading container bytes, are blind to it)
       () => (videoKeyframeIdx zip in.kfFrames).map { case (idx, kf) =>
-        VideoIndex.pairsAgainst(spark, idx, kf, minFrames,
-          stop = stopCache.map(_.get(s"${idx}_stop")))
-          .select(col("fid").as("doc_id")).distinct() }))
+        refused(idx, kf, perceptual = false, shifts = false) }))
     val textAdm = legs(0).get
     val imgAdm0 = legs(1).get
     val audAdm0 = legs(2).get
@@ -294,7 +288,7 @@ object CrawlAdmit {
     * is encoded or decoded twice. Returns the flags. */
   def admitBatch(spark: SparkSession, batch: DataFrame, textIdx: String,
       imageIdx: String, audioIdx: String, videoIdx: String,
-      maxDist: Int = 6, minFrames: Int = 2, tau: Double = 0.8,
+      maxDist: Int = 6, tau: Double = 0.8,
       videoPerceptual: Boolean = false,
       audioClipIdx: Option[String] = None,
       imageCropIdx: Option[String] = None,
@@ -306,7 +300,7 @@ object CrawlAdmit {
     val in = deriveInputs(spark, batch, audioClipIdx, imageCropIdx,
       imageCrop2dIdx, videoKeyframeIdx, checkpointFps = true)
     val flags = flagsFrom(spark, in, textIdx,
-      imageIdx, audioIdx, videoIdx, maxDist, minFrames, tau,
+      imageIdx, audioIdx, videoIdx, maxDist, tau,
       videoPerceptual, audioClipIdx, imageCropIdx, audioClipPerceptual,
       imageCropPerceptual, imageCrop2dIdx, videoKeyframeIdx, stopCache)
       .localCheckpoint()

@@ -11,22 +11,21 @@ object ImageCropQueries {
 
   private val live: Seq[Q] = Seq(
 
-    // IMAGE CROP detection — the image cell of the shift-tolerant
-    // matrix: a vertical crop (banner added or stripped — the
-    // meme-repost edit) moves the whole-image dHash but leaves the
-    // surviving raster ROWS matching the original's at one consistent
-    // vertical offset. Rows are the grid the 16-px-wide raster gives
-    // for free (48 bytes each, rasters are whole rows by the codec
-    // contract), so this is clipPairsFromFrames over imageRowsFp rows
-    // — the third modality riding the same machinery. Fixture: the
-    // exact crop (+4M, rows 1–4) caught at shift +1; the +1-brightness
-    // crop (+5M) correctly invisible to this byte-exact leg.
+    // IMAGE CROP detection — the image cell of the shift-tolerant matrix: a
+    // vertical crop (banner added or stripped — the meme-repost edit) moves
+    // the whole-image dHash but leaves the surviving raster ROWS matching the
+    // original's at one consistent vertical offset. Rows are the grid the
+    // 16-px-wide raster gives for free (48 bytes each, rasters are whole rows
+    // by the codec contract), so this is the shift-tolerant framePairs over
+    // imageRowsFp rows — the third modality riding the same machinery.
+    // Fixture: the exact crop (+4M, rows 1–4) caught at shift +1; the
+    // +1-brightness crop (+5M) correctly invisible to this byte-exact leg.
     Q("q_image_crop_detect",
-      (s, d) => Multimodal.clipPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.imageRowsFp(
           Multimodal.imageTable(s, d)
             .unionByName(Multimodal.imageCropTable(s, d))),
-        minFrames = 2, materializeFrames = true),
+        Multimodal.Exact, shifts = true, materializeFrames = true),
       Some(imageRowCte(corpusOnlyStop = false, perceptual = false) +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -36,14 +35,14 @@ object ImageCropQueries {
               GROUP BY 1, 2, 3 HAVING count(*) >= 2""")),
 
     // the crop CRAWL GATE: both crop regimes arrive fresh against the
-    // corpus-only stored row index — VideoIndex.clipAgainst verbatim
-    // (the temporal index's third modality); only the exact crop
-    // matches.
+    // corpus-only stored row index — the shift-tolerant
+    // VideoIndex.pairsAgainst (the temporal index's third modality); only
+    // the exact crop matches.
     Q("q_image_crop_against",
-      (s, d) => graft.sources.VideoIndex.clipAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltImageRowsCorpus(s, d),
         Multimodal.imageRowsFp(Multimodal.imageCropTable(s, d)),
-        minFrames = 2),
+        Multimodal.Exact, shifts = true),
       Some(imageRowCte(corpusOnlyStop = true, perceptual = false) +
         """SELECT b.media_id AS fid, a.media_id AS cid,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -59,11 +58,11 @@ object ImageCropQueries {
     // banding + Hamming verify + shift grouping catches it at
     // distance 0 at the same vertical offset.
     Q("q_image_crop_perceptual",
-      (s, d) => Multimodal.clipPerceptualFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.imageRowsFp(
           Multimodal.imageTable(s, d)
             .unionByName(Multimodal.imageCropTable(s, d))),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(imageRowCte(corpusOnlyStop = false, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -89,10 +88,10 @@ object ImageCropQueries {
     // fingerprint): the admission decision the byte-exact gate gets
     // wrong for a re-brightened crop of stored material.
     Q("q_image_crop_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.clipPerceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltImageRowsCorpus(s, d),
         Multimodal.imageRowsFp(Multimodal.imageCropTable(s, d)),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(imageRowCte(corpusOnlyStop = true, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -119,7 +118,7 @@ object ImageCropQueries {
     // BLOCKS survive block-aligned crops byte-for-byte at ONE
     // consistent (row, col) offset. The packed `row·2^20 + col` index
     // makes that 2-vector a single subtraction, so
-    // clipPairsFromFrames — and the whole temporal-index family —
+    // framePairs — and the whole temporal-index family —
     // serve it unchanged. Fixture: the right-half crop of rows 1–4
     // (+6M ids, honest 8-px-wide PNG) found at packed shift 2^20 + 1
     // (+1 row, +1 col), with 4 matched blocks; ImageCrop2dSpec pins
@@ -127,11 +126,11 @@ object ImageCropQueries {
     // (indistinguishable from raster padding) are dropped on both
     // sides — the structural analog of the stop discipline.
     Q("q_image_crop2d_detect",
-      (s, d) => Multimodal.clipPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.imageBlocksFp(
           Multimodal.imageTable(s, d)
             .unionByName(Multimodal.imageCrop2dTable(s, d))),
-        minFrames = 2, materializeFrames = true),
+        Multimodal.Exact, shifts = true, materializeFrames = true),
       Some(imageBlockCte(corpusOnlyStop = false) +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -141,15 +140,15 @@ object ImageCropQueries {
               GROUP BY 1, 2, 3 HAVING count(*) >= 2""")),
 
     // the 2D-crop CRAWL GATE: the crop twin arrives fresh against the
-    // corpus-only stored BLOCK index — VideoIndex.clipAgainst verbatim
-    // (fresh blocks broadcast, anti-joined on the _stop sidecar;
-    // stored side map-side on the self-verifying block digest; one
-    // match-bounded (fid, cid, packed shift) exchange).
+    // corpus-only stored BLOCK index — the shift-tolerant
+    // VideoIndex.pairsAgainst (fresh blocks broadcast, anti-joined on the
+    // _stop sidecar; stored side map-side on the self-verifying block digest;
+    // one match-bounded (fid, cid, packed shift) exchange).
     Q("q_image_crop2d_against",
-      (s, d) => graft.sources.VideoIndex.clipAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltImageBlocksCorpus(s, d),
         Multimodal.imageBlocksFp(Multimodal.imageCrop2dTable(s, d)),
-        minFrames = 2),
+        Multimodal.Exact, shifts = true),
       Some(imageBlockCte(corpusOnlyStop = true) +
         """SELECT b.media_id AS fid, a.media_id AS cid,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -165,11 +164,11 @@ object ImageCropQueries {
     // Hamming verify + packed-shift grouping catches it at distance 0
     // at the same (row, col) offset as the exact crop.
     Q("q_image_crop2d_perceptual",
-      (s, d) => Multimodal.clipPerceptualFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.imageBlocksFp(
           Multimodal.imageTable(s, d)
             .unionByName(Multimodal.imageCrop2dTable(s, d))),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(imageBlockCte(corpusOnlyStop = false, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -192,13 +191,13 @@ object ImageCropQueries {
 
     // the perceptual 2D-crop GATE — both crop regimes arrive fresh and
     // BOTH are caught (exact at distance 0, brightness at distance 0
-    // through the invariant fingerprint): clipPerceptualAgainst on the
-    // corpus-only block index.
+    // through the invariant fingerprint): the shift-tolerant perceptual
+    // gate on the corpus-only block index.
     Q("q_image_crop2d_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.clipPerceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltImageBlocksCorpus(s, d),
         Multimodal.imageBlocksFp(Multimodal.imageCrop2dTable(s, d)),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(imageBlockCte(corpusOnlyStop = true, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -461,19 +460,17 @@ object ImageCropQueries {
     // image crop detection served from the persisted raster-row index —
     // the temporal family's third modality; live oracle verbatim.
     Q("q_image_crop_detect_stored",
-      (s, d) => Multimodal.clipPairsFromFrames(
-        s.table(
-          s"${graft.sources.VideoIndex.ensureBuiltImageRows(s, d)}_vf"),
-        minFrames = 2),
+      (s, d) => graft.sources.VideoIndex.pairs(s,
+        graft.sources.VideoIndex.ensureBuiltImageRows(s, d), Multimodal.Exact,
+          shifts = true),
       live.find(_.name == "q_image_crop_detect").get.oracle),
     // 2D crop detection served from the persisted BLOCK index — the
     // fourth grid on the same stored family (packed 2-vector shift);
     // live oracle verbatim.
     Q("q_image_crop2d_detect_stored",
-      (s, d) => Multimodal.clipPairsFromFrames(
-        s.table(
-          s"${graft.sources.VideoIndex.ensureBuiltImageBlocks(s, d)}_vf"),
-        minFrames = 2),
+      (s, d) => graft.sources.VideoIndex.pairs(s,
+        graft.sources.VideoIndex.ensureBuiltImageBlocks(s, d),
+          Multimodal.Exact, shifts = true),
       live.find(_.name == "q_image_crop2d_detect").get.oracle),
   )
 }

@@ -20,18 +20,18 @@ object KeyframeQueries {
     // fingerprints the DECODED raster — so a cross-codec re-wrap
     // (identical keyframes re-encoded PNG → BMP: every container byte
     // differs) is caught as the verbatim dup it is. The pair stage is
-    // videoPairsFromFrames over the decoded-keyframe digests —
+    // the aligned exact framePairs over the decoded-keyframe digests —
     // unchanged machinery, new ingest seam. Oracle: the decoded
     // keyframe IS its 96-byte payload slice (exact 2-row rasters, both
     // codecs lossless), so the replay joins hex slices — no codec in
     // DuckDB, which is exactly the point of fingerprinting decoded
     // bytes.
     Q("q_video_keyframe_dedup",
-      (s, d) => Multimodal.videoPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.videoKeyframesFp(
           Multimodal.videoKeyframeTable(s, d)
             .unionByName(Multimodal.videoKeyframeTwinTable(s, d))),
-        minFrames = 2, materializeFrames = true),
+        Multimodal.Exact, shifts = false, materializeFrames = true),
       Some("""WITH m AS (
                 SELECT doc_id AS media_id, hex(encode(text)) AS h,
                        octet_length(encode(text)) AS n
@@ -67,11 +67,11 @@ object KeyframeQueries {
     // and found here at the consistent shift +2 — the video clip
     // machinery riding the real-codec ingest unchanged.
     Q("q_video_keyframe_clip",
-      (s, d) => Multimodal.clipPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.videoKeyframesFp(
           Multimodal.videoKeyframeTable(s, d)
             .unionByName(Multimodal.videoKeyframeClipTwinTable(s, d))),
-        minFrames = 2, materializeFrames = true),
+        Multimodal.Exact, shifts = true, materializeFrames = true),
       Some("""WITH m AS (
                 SELECT doc_id AS media_id, hex(encode(text)) AS h,
                        octet_length(encode(text)) AS n, 0 AS off
@@ -112,11 +112,11 @@ object KeyframeQueries {
     // gradient survived within maxDist and honestly doesn't where it
     // didn't — the oracle replays the identical byte math either way.
     Q("q_video_keyframe_perceptual",
-      (s, d) => Multimodal.perceptualPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.videoKeyframesFp(
           Multimodal.videoKeyframeTable(s, d)
             .unionByName(Multimodal.videoKeyframePerceptualTwinTable(s, d))),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = false),
       Some(kfPercCte("") +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -136,18 +136,18 @@ object KeyframeQueries {
               SELECT da, db, CAST(count(*) AS BIGINT) AS matched_frames
               FROM pm GROUP BY 1, 2 HAVING count(*) >= 2""")),
 
-    // the perceptual keyframe CRAWL GATE: both lossy twins arrive
-    // fresh against the corpus-only stored keyframe index —
-    // VideoIndex.perceptualAgainst over rows decoded at the index's
-    // persisted stride (keyframesFor), band stop from the corpus side
-    // only, exactly as the _bstop sidecar derives it.
+    // the perceptual keyframe CRAWL GATE: both lossy twins arrive fresh
+    // against the corpus-only stored keyframe index — the aligned perceptual
+    // VideoIndex.pairsAgainst over rows decoded at the index's persisted
+    // stride (keyframesFor), band stop from the corpus side only, exactly as
+    // the _bstop sidecar derives it.
     Q("q_video_keyframe_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.perceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltVideoKeyframesCorpus(s, d),
         graft.sources.VideoIndex.keyframesFor(s,
           graft.sources.VideoIndex.ensureBuiltVideoKeyframesCorpus(s, d),
           Multimodal.videoKeyframePerceptualTwinTable(s, d)),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = false),
       Some(kfPercCte("WHERE media_id < 9700000") +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -267,18 +267,16 @@ object KeyframeQueries {
     // the serve never opens a container. Live oracle verbatim.
     Q("q_video_keyframe_dedup_stored",
       (s, d) => graft.sources.VideoIndex.pairs(s,
-        graft.sources.VideoIndex.ensureBuiltVideoKeyframes(s, d),
-        minFrames = 2),
+        graft.sources.VideoIndex.ensureBuiltVideoKeyframes(s, d)),
       live.find(_.name == "q_video_keyframe_dedup").get.oracle),
     // keyframe CLIP detection served from the persisted decoded-
     // keyframe digests (corpus ∪ re-cut twin) — the container parse +
     // decode the live row re-pays per run happens once at build; live
     // oracle verbatim.
     Q("q_video_keyframe_clip_stored",
-      (s, d) => Multimodal.clipPairsFromFrames(
-        s.table(
-          s"${graft.sources.VideoIndex.ensureBuiltVideoKeyframesClip(s, d)}_vf"),
-        minFrames = 2),
+      (s, d) => graft.sources.VideoIndex.pairs(s,
+        graft.sources.VideoIndex.ensureBuiltVideoKeyframesClip(s, d),
+        Multimodal.Exact, shifts = true),
       live.find(_.name == "q_video_keyframe_clip").get.oracle),
     // perceptual keyframe dedup served from the persisted 5-column
     // decoded-keyframe rows (corpus ∪ lossy twins): container parse +
@@ -286,8 +284,8 @@ object KeyframeQueries {
     // perceptual stage is a pure function of the stored rows (with the
     // persisted maxDf dial + `_bstop` sidecar). Live oracle verbatim.
     Q("q_video_keyframe_perceptual_stored",
-      (s, d) => graft.sources.VideoIndex.pairsPerceptual(s,
+      (s, d) => graft.sources.VideoIndex.pairs(s,
         graft.sources.VideoIndex.ensureBuiltVideoKeyframesPerc(s, d),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual()),
       live.find(_.name == "q_video_keyframe_perceptual").get.oracle))
 }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -532,10 +532,10 @@ object Multimodal {
     * moves energy between windows and reads as different audio — the
     * same clips in a different order IS a different recording, unlike
     * the text side's bag-of-shingles Jaccard. */
-  def audioDedupPairs(media: DataFrame, maxDist: Int = 6,
+  def audioDedupPairs(media: DataFrame,
       decode: Array[Byte] => Array[Byte] = decodeWavBytes,
       maxBandDf: Int = 10000): DataFrame =
-    dhashPairs(audioDHash(media, decode), maxDist, maxBandDf)
+    dhashPairs(audioDHash(media, decode), 6, maxBandDf)
 
   /** A deterministic "re-mastered re-crawl" batch: the `doc_id % 4 = 1`
     * slice re-encoded at 0.9× amplitude (sample′ = sample·9 div 10 —
@@ -608,7 +608,7 @@ object Multimodal {
     * segment — the shape [[graft.sources.VideoIndex]] persists, because
     * that index is modality-agnostic over (media_id, frame_idx, fm,
     * f_lo, f_hi) temporal rows: every clip stage
-    * ([[clipPairsFromFrames]], [[clipPerceptualFromFrames]], the
+    * ([[framePairs]] with `shifts`, the
     * gates) is a pure function of them, so audio excerpt detection
     * rides the stored family with zero new machinery.
     *
@@ -891,7 +891,7 @@ object Multimodal {
     * keyframes in (one sampled stride at every = 2 — a one-keyframe
     * cut would shift sampled positions onto never-sampled ones, the
     * grid-unit granularity every clip leg documents). The aligned
-    * keyframe dedup refuses it; [[clipPairsFromFrames]] over the
+    * keyframe dedup refuses it; the shift-tolerant [[framePairs]] over the
     * decoded-keyframe digests finds it at the consistent shift +2.
     * Docs with ≥ 3 full keyframes REMAINING after the cut (n ≥ 5·96)
     * so ≥ 2 sampled keyframes overlap. */
@@ -927,7 +927,7 @@ object Multimodal {
     *   - VERBATIM re-fetch (+1M ids) — every sampled frame identical;
     *   - EDITED copy (+3M ids, one frame's bytes overwritten, docs long
     *     enough to keep ≥ 2 untouched sampled frames) — the partial
-    *     match [[videoDedupPairs]]'s `minFrames` dial exists to catch;
+    *     match [[videoDedupPairs]]'s [[MinFrames]] tolerance exists to catch;
     *   - RE-CUT (+2M ids, bytes rotated left by one frame) — the same
     *     material starting one frame later is a DIFFERENT cut, and
     *     temporal alignment correctly refuses it (the video analog of
@@ -935,34 +935,33 @@ object Multimodal {
     *     recording").
     * All pure byte edits on ASCII payloads, so DuckDB replays them as
     * string surgery (the q_frame_sample precondition). */
-  def videoTwinTable(spark: SparkSession, sfDir: String,
-      frameBytes: Int): DataFrame = {
+  def videoTwinTable(spark: SparkSession, sfDir: String): DataFrame = {
     val slice = Tables.documents(spark, sfDir)
       .where(pmod(col("doc_id"), lit(4L)) === 1L)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
     val verbatim = slice.select(
       (col("doc_id") + lit(1000000L)).as("media_id"), col("content"))
     val recut = slice
-      .where(length(col("content")) > frameBytes)
+      .where(length(col("content")) > FrameBytes)
       .select((col("doc_id") + lit(2000000L)).as("media_id"),
-        concat(expr(s"substring(content, ${frameBytes + 1})"),
-          expr(s"substring(content, 1, $frameBytes)")).as("content"))
+        concat(expr(s"substring(content, ${FrameBytes + 1})"),
+          expr(s"substring(content, 1, $FrameBytes)")).as("content"))
     val edited = slice
-      .where(length(col("content")) > 4 * frameBytes)
+      .where(length(col("content")) > 4 * FrameBytes)
       .select((col("doc_id") + lit(3000000L)).as("media_id"),
-        concat(expr(s"substring(content, 1, ${2 * frameBytes})"),
-          encode(lit("x" * frameBytes), "UTF-8"),
-          expr(s"substring(content, ${3 * frameBytes + 1})")).as("content"))
+        concat(expr(s"substring(content, 1, ${2 * FrameBytes})"),
+          encode(lit("x" * FrameBytes), "UTF-8"),
+          expr(s"substring(content, ${3 * FrameBytes + 1})")).as("content"))
     verbatim.unionByName(recut).unionByName(edited)
   }
 
   /** Video near-dup pairs via TEMPORALLY-ALIGNED exact frame
-    * fingerprints: every `every`-th `frameBytes` frame gets its md5
+    * fingerprints: every `every`-th [[FrameBytes]]-byte frame gets its md5
     * ([[frameSample]]'s grid and digest), candidates join on
     * (frame_idx, frame_md5) — the same frame bytes at the SAME
-    * position — and a video pair needs ≥ `minFrames` matching sampled
+    * position — and a video pair needs ≥ [[MinFrames]] matching sampled
     * frames. Alignment is the semantics (a re-cut is a different
-    * video); `minFrames` is the tolerance dial (an edited copy still
+    * video); [[MinFrames]] is the tolerance (an edited copy still
     * matches on its untouched frames). Byte-exact md5 is the honest
     * per-frame fingerprint for THIS container's opaque-byte video
     * contract — and byte-exact is ALL it catches: a transcoded or
@@ -984,22 +983,29 @@ object Multimodal {
     * md5), and the only corpus-scale exchange is the final (da, db)
     * count, bounded by truly-matching frames. Output:
     * (da, db, matched_frames). */
-  def videoDedupPairs(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2, minFrames: Int = 2, maxDf: Int = 10000): DataFrame =
+  def videoDedupPairs(media: DataFrame, every: Int = 2,
+      maxDf: Int = 10000): DataFrame =
     // no materializeFrames here: videoFrames is a NATIVE (codegen)
     // derivation over small text payloads — recomputing it under the
     // stop aggregate is cheaper than an extra materialization barrier
     // (measured r18: materializing moved q_video_clip_detect 1.73 →
     // 2.64 s while the codec-decode sites gained 1.5–2.2×)
-    videoPairsFromFrames(videoFrames(media, frameBytes, every), minFrames,
-      maxDf)
+    framePairs(videoFrames(media, every), Exact, shifts = false, maxDf)
+
+  /** Bytes per synthetic video frame: the grid of [[videoFrames]],
+    * [[videoFramesFp]] and the video twin tables. */
+  val FrameBytes = 32
+
+  /** The fewest matching frames that make a temporal pair (at one
+    * offset, for the shift-tolerant stages): an edited copy still
+    * matches on its untouched frames. */
+  val MinFrames = 2
 
   /** The sampled-frame digest derivation — video's INGEST pass and the
     * rows [[graft.sources.VideoIndex]] persists: (media_id, frame_idx,
     * fm), one 16-byte digest per sampled frame, payloads read once. */
-  def videoFrames(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2): DataFrame = {
-    val nFrames = ceil(length(col("content")) / lit(frameBytes.toDouble))
+  def videoFrames(media: DataFrame, every: Int = 2): DataFrame = {
+    val nFrames = ceil(length(col("content")) / lit(FrameBytes.toDouble))
       .cast("int")
     media
       // r14 ADVICE: sequence(0, -1) steps DOWN to [0, -1] — an empty
@@ -1010,29 +1016,10 @@ object Multimodal {
       .where(col("frame_idx") % every === 0)
       .select(col("media_id"),
         col("frame_idx").cast("long").as("frame_idx"),
-        md5(expr(s"substring(content, frame_idx * $frameBytes + 1, " +
-          s"$frameBytes)")).as("fm"))
+        md5(expr(s"substring(content, frame_idx * $FrameBytes + 1, " +
+          s"$FrameBytes)")).as("fm"))
   }
 
-  /** The pair stage over a (media_id, frame_idx, fm) frame-digest
-    * frame — a pure function of it, so the stored index serves
-    * byte-identical answers. Exact-digest collapse (the r13
-    * Dedup.digestCollapse idiom), keyed on the SAMPLED-SEQUENCE digest:
-    * matched_frames is a pure function of the two sampled sequences, so
-    * videos with identical sequences — verbatim re-crawl replicas, and
-    * also videos differing only in unsampled frames — run the frame
-    * join ONCE per distinct sequence and rejoin by expansion: cross
-    * pairs inherit their reps' count, intra pairs match on ALL their
-    * sampled frames, a provable score that is generated, never
-    * computed. Without this the ×10 verbatim rehearsal regime pays the
-    * per-dup-group quadratic in the JOIN (measured 51.8×); with it the
-    * quadratic survives only as the answer's own rows. */
-  /** Digests appearing in more than `maxDf` distinct videos — black
-    * frames, silence, standard intros: the video analog of stopwords.
-    * They carry no copy-detection signal and make every digest join
-    * quadratic in their df, so the pair stages drop them (the text
-    * side's stop-shingle discipline). The set is tiny by construction
-    * (only over-common digests) and rides a broadcast anti-join. */
   /** localCheckpoint + SIZE-ADAPTIVE narrow coalesce for the pair
     * stages' frame-table materializations (r19, guide §2.2 — partition
     * count sized to data, not to the producer's layout): a corpus ∪
@@ -1076,57 +1063,193 @@ object Multimodal {
       else None
     }
 
+  /** Digests appearing in more than `maxDf` distinct videos — black
+    * frames, silence, standard intros: the video analog of stopwords.
+    * They carry no copy-detection signal and make every digest join
+    * quadratic in their df, so the exact pair stage drops them (the
+    * text side's stop-shingle discipline). The set is tiny by
+    * construction (only over-common digests) and rides a broadcast
+    * anti-join. */
   private[graft] def stopFrames(frames: DataFrame, maxDf: Int): DataFrame =
     frames.groupBy(col("fm"))
       .agg(countDistinct(col("media_id")).as("df"))
       .where(col("df") > maxDf).select(col("fm"))
 
-  def videoPairsFromFrames(framesIn: DataFrame, minFrames: Int = 2,
-      maxDf: Int = 10000, materializeFrames: Boolean = false): DataFrame = {
-    // materializeFrames (r18, guide §1.2/§2.4 — don't compute the same
-    // thing twice): the stop-df aggregate AND the checkpointed anti-join
-    // below both consume `raw`, so a LIVE call site whose frames come
-    // out of an expensive derivation (codec decode + digest pass) pays
-    // that derivation TWICE per run. Materializing raw first makes both
-    // consumers read the small 3-column digest rows instead — one
-    // corpus pass, released as soon as the filtered frame exists. A
-    // STORED call site (frames = a parquet read) keeps the default:
-    // there the second pass is a cheap columnar re-scan, and
-    // checkpointing a corpus-sized table would be the regression.
-    val raw0 = framesIn.select(col("media_id"), col("frame_idx"), col("fm"))
-    val raw = if (materializeFrames) checkpointFrames(raw0) else raw0
-    val f = checkpointFrames(
-      raw.join(broadcast(stopFrames(raw, maxDf)), Seq("fm"), "left_anti"))
-    if (materializeFrames) graft.core.Checkpoints.release(raw)
+  /** How the temporal pair stage and gate match two frames. */
+  sealed trait FrameMatch {
+    /** The per-frame code columns the match reads. */
+    private[graft] def codes: Seq[String]
+    /** The equi-join key of a match row, also the stop set's key. */
+    private[graft] def keys: Seq[String]
+  }
+
+  /** Byte-exact: equal md5 `fm` (self-verifying, no distance check). */
+  case object Exact extends FrameMatch {
+    private[graft] val codes = Seq("fm")
+    private[graft] val keys = codes
+  }
+
+  /** Perceptual: a shared unstopped 16-bit band of (f_lo, f_hi) and a
+    * Hamming distance ≤ `maxDist` — the [[dhashPairs]] discipline per
+    * frame, tolerant of re-encodes that perturb every frame's bytes. */
+  final case class Perceptual(maxDist: Int = 6) extends FrameMatch {
+    private[graft] val codes = Seq("f_lo", "f_hi")
+    private[graft] val keys = Seq("bi", "bv")
+  }
+
+  /** A frame table's (media_id, frame_idx, codes…) columns. */
+  private def codeRows(frames: DataFrame, m: FrameMatch): DataFrame =
+    frames.select((Seq("media_id", "frame_idx") ++ m.codes).map(col): _*)
+
+  /** The rows a frame match joins on: the frames themselves for
+    * [[Exact]], one row per 16-bit band for [[Perceptual]]. */
+  private[graft] def matchRows(frames: DataFrame, m: FrameMatch): DataFrame =
+    m match {
+      case Exact => codeRows(frames, m)
+      case _: Perceptual => fpBands(codeRows(frames, m))
+    }
+
+  /** One side of a frame-match join: (`id`, frame, keys…, codes…). The
+    * frame is `frame_idx`, itself a join key, for an aligned match and
+    * `f<s>` for a shift-tolerant one; the perceptual codes ride as
+    * `l<s>`/`h<s>` for the inline Hamming verify. */
+  private[graft] def matchSide(rows: DataFrame, m: FrameMatch,
+      shifts: Boolean, id: String, s: String): DataFrame = {
+    val codes = m match {
+      case Exact => Nil
+      case _: Perceptual => Seq(col("f_lo").as(s"l$s"), col("f_hi").as(s"h$s"))
+    }
+    rows.select(Seq(col("media_id").as(id),
+      col("frame_idx").as(if (shifts) s"f$s" else "frame_idx")) ++
+      m.keys.map(col) ++ codes: _*)
+  }
+
+  /** Count the frame matches between match sides `a` and `b` (suffixes
+    * "a" and "b"), equi-joined on their shared columns and filtered by
+    * `where`, per `group` — and per offset `shift` = fa − fb when
+    * `shifts` — keeping counts ≥ [[MinFrames]]. A perceptual match is
+    * Hamming-verified on the joined row (both codes ride it), and the
+    * duplicates from several shared bands are dropped before the count;
+    * `exchange` first hashes the rows on `group`, which serves both the
+    * distinct and the count with one Exchange. The gates pass false:
+    * their stored side arrives bucketed on its id, which already serves
+    * both. Exact matches need no distinct (one row per frame pair). */
+  private[graft] def countMatches(a: DataFrame, b: DataFrame, m: FrameMatch,
+      shifts: Boolean, group: Seq[String], where: Column,
+      exchange: Boolean): DataFrame = {
+    val joined = a.join(b, a.columns.intersect(b.columns).toSeq).where(where)
+    val rows = m match {
+      case Exact => joined
+      case Perceptual(maxDist) =>
+        val v = joined.where(
+          (expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)")) <= maxDist)
+          .select((group ++ (if (shifts) Seq("fa", "fb")
+            else Seq("frame_idx"))).map(col): _*)
+        (if (exchange) v.repartition(group.map(col): _*) else v).distinct()
+    }
+    val shift = if (shifts) Seq((col("fa") - col("fb")).as("shift")) else Nil
+    rows.groupBy(group.map(col) ++ shift: _*)
+      .agg(count(lit(1)).as("matched_frames"))
+      .where(col("matched_frames") >= MinFrames)
+  }
+
+  /** The temporal pair stage, one implementation for the four cells of
+    * {aligned, shift-tolerant} × {[[Exact]], [[Perceptual]]}: two videos
+    * pair when ≥ [[MinFrames]] of their frames match — at the same
+    * frame_idx, or with `shifts` at one consistent offset (a re-cut or
+    * an excerpt of the same material). Input: (media_id, frame_idx, fm)
+    * for Exact, (media_id, frame_idx, f_lo, f_hi) for Perceptual — any
+    * temporal grid (sampled frames, PCM segments, raster rows, blocks).
+    * Output: (da, db, matched_frames), with `shift` = fa − fb before
+    * matched_frames when `shifts`. A pure function of the rows, so a
+    * stored [[graft.sources.VideoIndex]] serves byte-identical answers.
+    *
+    * Exact-content collapse (the r13 Dedup.digestCollapse idiom), keyed
+    * on the frame-SEQUENCE digest: matches are a pure function of the
+    * two sequences, so videos with identical sequences — verbatim
+    * re-crawl replicas — run the frame join ONCE per distinct sequence
+    * and come back by [[graft.core.Collapse.expandThroughDigests]].
+    * Cross pairs inherit their reps' counts; intra pairs take their
+    * rep's self-match: on an aligned exact grid every kept frame (`sc`),
+    * on an aligned perceptual grid every frame with ≥ 1 unstopped band,
+    * and shift-tolerant the rep's full SELF-correlation histogram
+    * (periodic content overlaps itself at its period), computed only for
+    * reps with ≥ 2 members. Without the collapse the ×10 verbatim
+    * rehearsal regime pays the per-dup-group quadratic in the JOIN
+    * (measured 51.8×); with it the quadratic survives only as the
+    * answer's own rows.
+    *
+    * Stop discipline: Exact drops the digests in more than `maxDf`
+    * videos ([[stopFrames]]) before the collapse, so the sequence digest
+    * covers the kept frames only; Perceptual digests all frames and
+    * drops the band values in more than `maxDf` videos
+    * ([[videoBandStop]]) per band. `stop` passes that set precomputed
+    * (a stored index's `_bstop` sidecar: same set, one aggregate less).
+    *
+    * `materializeFrames` (Exact; r18, guide §1.2/§2.4 — don't compute
+    * the same thing twice): the stop-df aggregate AND the checkpointed
+    * anti-join both consume the input, so a LIVE call site whose frames
+    * come out of an expensive derivation (codec decode + digest pass)
+    * pays that derivation twice. Materializing first makes both read
+    * the small digest rows instead. A STORED call site (a parquet read)
+    * keeps the default: there the second pass is a cheap columnar
+    * re-scan. The perceptual leg always materializes its input. */
+  def framePairs(framesIn: DataFrame, m: FrameMatch, shifts: Boolean,
+      maxDf: Int = 10000, stop: Option[DataFrame] = None,
+      materializeFrames: Boolean = false): DataFrame = {
+    val raw0 = codeRows(framesIn, m)
+    val (f, stopRows) = m match {
+      case Exact =>
+        val raw = if (materializeFrames) checkpointFrames(raw0) else raw0
+        val f = checkpointFrames(raw.join(
+          broadcast(stop.getOrElse(stopFrames(raw, maxDf))), Seq("fm"),
+          "left_anti"))
+        if (materializeFrames) graft.core.Checkpoints.release(raw)
+        (f, (rows: DataFrame) => rows)
+      case _: Perceptual =>
+        val raw = checkpointFrames(raw0)
+        val stopB = stop.getOrElse(videoBandStop(raw, maxDf)).localCheckpoint()
+        (raw, (rows: DataFrame) =>
+          rows.join(broadcast(stopB), Seq("bi", "bv"), "left_anti"))
+    }
+    // `sc` (the kept frame count) comes out of the digest's own list, so
+    // every use of `vdg` shares one aggregate and one exchange
     val vdg = f.groupBy(col("media_id"))
-      .agg(md5(concat_ws(";", sort_array(collect_list(
-        concat_ws(":", col("frame_idx"), col("fm")))))).as("dg"),
-        count(lit(1)).as("sc"))
+      .agg(collect_list(concat_ws(":",
+        (col("frame_idx") +: m.codes.map(col)): _*)).as("fl"))
+      .select(col("media_id"),
+        md5(concat_ws(";", sort_array(col("fl")))).as("dg"),
+        size(col("fl")).as("sc"))
     val repOf = vdg.groupBy(col("dg")).agg(min(col("media_id")).as("rep"))
     val members = vdg.join(repOf, Seq("dg"))
-      .select(col("rep"), col("media_id").as("id"), col("sc"))
-    val repFrames = f.join(
-      repOf.select(col("rep").as("media_id")), Seq("media_id"))
-    val repPairs = repFrames
-      .select(col("media_id").as("da"), col("frame_idx"), col("fm"))
-      .join(repFrames.select(col("media_id").as("db"), col("frame_idx"),
-        col("fm")), Seq("frame_idx", "fm"))
-      .where(col("da") < col("db"))
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da"),
-        greatest(col("ia"), col("ib")).as("db"), col("matched_frames"))
-    val intra = members.select(col("rep"), col("id").as("ia"), col("sc"))
-      .join(members.select(col("rep"), col("id").as("ib")), Seq("rep"))
-      .where(col("ia") < col("ib"))
-      .where(col("sc") >= minFrames)
-      .select(col("ia").as("da"), col("ib").as("db"),
-        col("sc").as("matched_frames"))
-    cross.unionByName(intra)
+      .select(col("rep"), col("media_id").as("id"))
+    val repRows = stopRows(matchRows(
+      f.join(repOf.select(col("rep").as("media_id")), Seq("media_id")), m))
+    def side(rows: DataFrame, id: String, s: String) =
+      matchSide(rows, m, shifts, id, s)
+    val repPairs = countMatches(side(repRows, "da", "a"),
+      side(repRows, "db", "b"), m, shifts, Seq("da", "db"),
+      col("da") < col("db"), exchange = true)
+    val intra = (m, shifts) match {
+      case (_, true) =>
+        // no broadcast hint: tiny on distinct-heavy corpora, but a
+        // dup-heavy crawl makes EVERY rep multi-member — let AQE pick
+        val multi = repRows.join(members.groupBy(col("rep"))
+          .agg(count(lit(1)).as("mc")).where(col("mc") >= 2)
+          .select(col("rep").as("media_id")), Seq("media_id"), "left_semi")
+        countMatches(side(multi, "rep", "a"), side(multi, "rep", "b"), m,
+          shifts, Seq("rep"), lit(true), exchange = true)
+      case (Exact, false) =>
+        vdg.where(col("sc") >= MinFrames)
+          .select(col("media_id").as("rep"), col("sc").as("matched_frames"))
+      case (_: Perceptual, false) =>
+        repRows.select(col("media_id"), col("frame_idx"))
+          .repartition(col("media_id")) // one exchange under both aggregates
+          .distinct().groupBy(col("media_id"))
+          .agg(count(lit(1)).as("esc")).where(col("esc") >= MinFrames)
+          .select(col("media_id").as("rep"), col("esc").as("matched_frames"))
+    }
+    graft.core.Collapse.expandThroughDigests(repPairs, members, intra)
   }
 
   /** The clip-twin fixture for [[videoClipDetect]]: the doc_id % 4 = 1
@@ -1135,118 +1258,42 @@ object Multimodal {
     * join refuses it; the shift-tolerant detector finds it at a
     * consistent shift of +2. Docs longer than 4 frames only (shorter
     * ones can't overlap on ≥ 2 sampled frames). */
-  def videoClipTwinTable(spark: SparkSession, sfDir: String,
-      frameBytes: Int): DataFrame =
+  def videoClipTwinTable(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .where(pmod(col("doc_id"), lit(4L)) === 1L)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-      .where(length(col("content")) > 4 * frameBytes)
+      .where(length(col("content")) > 4 * FrameBytes)
       .select((col("doc_id") + lit(4000000L)).as("media_id"),
-        concat(expr(s"substring(content, ${2 * frameBytes + 1})"),
-          expr(s"substring(content, 1, ${2 * frameBytes})")).as("content"))
+        concat(expr(s"substring(content, ${2 * FrameBytes + 1})"),
+          expr(s"substring(content, 1, ${2 * FrameBytes})")).as("content"))
 
   /** SHIFT-TOLERANT video copy detection — [[videoDedupPairs]]'s
-    * complement: two videos share a CLIP when ≥ `minFrames` sampled
+    * complement: two videos share a CLIP when ≥ [[MinFrames]] sampled
     * frames carry identical bytes at a CONSISTENT temporal offset
     * (frame_idx_a − frame_idx_b constant), the standard frame-hash
     * copy-detection shape. The aligned dedup is this at shift 0; a
     * re-cut of the same material surfaces here at its shift instead of
     * being (correctly) refused there. Detection granularity is the
     * sampling stride: only shifts that are multiples of
-    * every·frameBytes can align sampled frames — the dial a production
+    * every·[[FrameBytes]] can align sampled frames — the dial a production
     * probe batch sets to every=1. Join on the digest alone, group by
     * (pair, shift): at 100 TB each digest bucket holds the few frames
     * sharing those exact bytes, the shift grouping is map-side
     * partial-agged, and verbatim replica mass is collapsed exactly as
-    * in [[videoPairsFromFrames]] (shift is antisymmetric, so expansion
-    * flips its sign when member reordering swaps the pair). Output:
+    * in [[framePairs]] (shift is antisymmetric, so expansion flips its
+    * sign when member reordering swaps the pair). Output:
     * (da, db, shift, matched_frames). */
-  def videoClipDetect(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2, minFrames: Int = 2, maxDf: Int = 10000): DataFrame =
+  def videoClipDetect(media: DataFrame, every: Int = 2,
+      maxDf: Int = 10000): DataFrame =
     // native derivation — same no-materialize reasoning as
     // [[videoDedupPairs]]
-    clipPairsFromFrames(videoFrames(media, frameBytes, every), minFrames,
-      maxDf)
-
-  /** The clip stage over a (media_id, frame_idx, fm) frame — pure
-    * function of it (the [[videoPairsFromFrames]] contract, so the
-    * stored [[graft.sources.VideoIndex]] rows serve it unchanged). */
-  def clipPairsFromFrames(framesIn: DataFrame, minFrames: Int = 2,
-      maxDf: Int = 10000, materializeFrames: Boolean = false): DataFrame = {
-    // materializeFrames: see [[videoPairsFromFrames]] — one derivation
-    // pass for live (expensive-to-derive) frames, default recompute for
-    // stored parquet rows.
-    val raw0 = framesIn.select(col("media_id"), col("frame_idx"), col("fm"))
-    val raw = if (materializeFrames) checkpointFrames(raw0) else raw0
-    val f = checkpointFrames(
-      raw.join(broadcast(stopFrames(raw, maxDf)), Seq("fm"), "left_anti"))
-    if (materializeFrames) graft.core.Checkpoints.release(raw)
-    val vdg = f.groupBy(col("media_id"))
-      .agg(md5(concat_ws(";", sort_array(collect_list(
-        concat_ws(":", col("frame_idx"), col("fm")))))).as("dg"),
-        count(lit(1)).as("sc"))
-    val repOf = vdg.groupBy(col("dg")).agg(min(col("media_id")).as("rep"))
-    val members = vdg.join(repOf, Seq("dg"))
-      .select(col("rep"), col("media_id").as("id"), col("sc"))
-    val repFrames = f.join(
-      repOf.select(col("rep").as("media_id")), Seq("media_id"))
-    val repPairs = repFrames
-      .select(col("media_id").as("da"), col("frame_idx").as("fa"),
-        col("fm"))
-      .join(repFrames.select(col("media_id").as("db"),
-        col("frame_idx").as("fb"), col("fm")), Seq("fm"))
-      .where(col("da") < col("db"))
-      .groupBy(col("da"), col("db"), (col("fa") - col("fb")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da"),
-        greatest(col("ia"), col("ib")).as("db"),
-        // shift is f_first − f_second: negate when the member
-        // reordering swaps which side comes first
-        when(col("ia") < col("ib"), col("shift"))
-          .otherwise(-col("shift")).as("shift"),
-        col("matched_frames"))
-    // intra pairs (identical sampled sequences) match at EVERY shift of
-    // the sequence's SELF-correlation, not just 0 — periodic content
-    // overlaps itself at its period. One self-join per rep generates
-    // the full shift histogram each member pair inherits — but only
-    // reps with ≥ 2 members HAVE member pairs to inherit it, so the
-    // self-join runs on that (usually tiny) slice alone: on a
-    // mostly-distinct corpus the unrestricted version pays the whole
-    // self-correlation for nothing.
-    val multiReps = members.groupBy(col("rep"))
-      .agg(count(lit(1)).as("mc")).where(col("mc") >= 2)
-      .select(col("rep"))
-    // no broadcast hint: tiny on distinct-heavy corpora, but a
-    // dup-heavy crawl makes EVERY rep multi-member — let AQE pick
-    val multiFrames = repFrames.join(
-      multiReps.select(col("rep").as("media_id")),
-      Seq("media_id"), "left_semi")
-    val selfCorr = multiFrames
-      .select(col("media_id").as("rep"), col("frame_idx").as("fa"),
-        col("fm"))
-      .join(multiFrames.select(col("media_id").as("rep"),
-        col("frame_idx").as("fb"), col("fm")), Seq("rep", "fm"))
-      .groupBy(col("rep"), (col("fa") - col("fb")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    val intra = members.select(col("rep"), col("id").as("ia"))
-      .join(members.select(col("rep"), col("id").as("ib")), Seq("rep"))
-      .where(col("ia") < col("ib"))
-      .join(selfCorr, Seq("rep"))
-      .select(col("ia").as("da"), col("ib").as("db"), col("shift"),
-        col("matched_frames"))
-    cross.unionByName(intra)
-  }
+    framePairs(videoFrames(media, every), Exact, shifts = true, maxDf)
 
   case class VideoFpRow(media_id: Long, frame_idx: Long, fm: String,
       f_lo: Long, f_hi: Long)
 
   /** The per-frame PERCEPTUAL fingerprint bits over the zero-padded
-    * `frameBytes` window `d[from, until)` — the frame-level analog of
+    * `fb`-byte window `d[from, until)` — the frame-level analog of
     * [[imageDHash]]'s gradient bits, shaped for short raw frames (the
     * measured envelope-hash rejection in [[videoDedupPairs]]'s scaladoc
     * rules out windowed means here): bit k of the low half compares
@@ -1288,8 +1335,7 @@ object Multimodal {
     * AND transcode-tolerant dedup (banded fp + Hamming). One
     * mapPartitions pass: payload bytes are read once, both fingerprints
     * come out of the same frame slice. */
-  def videoFramesFp(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2): DataFrame = {
+  def videoFramesFp(media: DataFrame, every: Int = 2): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("media_id"), col("content")).as[MediaRow]
@@ -1298,33 +1344,34 @@ object Multimodal {
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.flatMap { r =>
           val n = r.content.length
-          val nFrames = (n + frameBytes - 1) / frameBytes
+          val nFrames = (n + FrameBytes - 1) / FrameBytes
           (0 until nFrames).iterator.filter(_ % every == 0).map { fi =>
-            val from = fi * frameBytes
-            val until = math.min(from + frameBytes, n)
+            val from = fi * FrameBytes
+            val until = math.min(from + FrameBytes, n)
             md.reset()
             md.update(r.content, from, until - from)
             val fm = hexString(md.digest())
-            val (lo, hi) = frameFpBits(r.content, from, until, frameBytes)
+            val (lo, hi) = frameFpBits(r.content, from, until, FrameBytes)
             VideoFpRow(r.media_id, fi.toLong, fm, lo, hi)
           }
         }
       }.toDF()
   }
 
-  /** 4×16-bit band explode over a per-frame fingerprint frame
-    * (media_id, frame_idx, f_lo, f_hi) — the [[dhashPairs]] band layout
-    * with the frame dimension carried through. */
-  private[graft] def fpBands(frames: DataFrame): DataFrame =
-    frames.select(col("media_id"), col("frame_idx"), col("f_lo"),
-        col("f_hi"), explode(array(
-          struct(lit(0).as("bi"), (col("f_lo") % 65536L).as("bv")),
-          struct(lit(1).as("bi"), expr("f_lo div 65536L").as("bv")),
-          struct(lit(2).as("bi"), (col("f_hi") % 65536L).as("bv")),
-          struct(lit(3).as("bi"), expr("f_hi div 65536L").as("bv"))))
-        .as("b"))
-      .select(col("media_id"), col("frame_idx"), col("f_lo"), col("f_hi"),
-        col("b.bi").as("bi"), col("b.bv").as("bv"))
+  /** The 4×16-bit bands of a fingerprint held as two non-negative
+    * 32-bit halves `lo`/`hi`: one row per band (bi, bv), every input
+    * column carried — the one band layout of the banded pair stages,
+    * gates and stop sets (image/audio dHash: `h_lo`/`h_hi`; frames:
+    * `f_lo`/`f_hi`). */
+  private[graft] def fpBands(df: DataFrame, lo: String = "f_lo",
+      hi: String = "f_hi"): DataFrame =
+    df.withColumn("b", explode(array(
+        struct(lit(0).as("bi"), (col(lo) % 65536L).as("bv")),
+        struct(lit(1).as("bi"), expr(s"$lo div 65536L").as("bv")),
+        struct(lit(2).as("bi"), (col(hi) % 65536L).as("bv")),
+        struct(lit(3).as("bi"), expr(s"$hi div 65536L").as("bv")))))
+      .select(df.columns.map(col) :+ col("b.bi").as("bi") :+
+        col("b.bv").as("bv"): _*)
 
   /** Band values carried by more than `maxDf` distinct VIDEOS — the
     * perceptual analog of [[stopFrames]]: the frame-level band join is
@@ -1349,89 +1396,15 @@ object Multimodal {
     * PER FRAME: 4×16-bit band candidates on (frame_idx, band) —
     * alignment stays the semantics, a re-cut is still refused — exact
     * Hamming verification ≤ `maxDist` on the candidate row, then the
-    * aligned ≥ `minFrames` count of [[videoDedupPairs]]. Verbatim
+    * aligned ≥ [[MinFrames]] count of [[videoDedupPairs]]. Verbatim
     * replica mass is collapsed on the fp-SEQUENCE digest exactly as the
     * md5 family collapses (matched_frames is a pure function of the two
     * fp sequences); band-df discipline (see [[videoBandStop]]) bounds
     * the candidate join. Output: (da, db, matched_frames). */
-  def videoPerceptualPairs(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2, maxDist: Int = 6, minFrames: Int = 2,
-      maxDf: Int = 10000): DataFrame =
-    perceptualPairsFromFrames(videoFramesFp(media, frameBytes, every),
-      maxDist, minFrames, maxDf)
-
-  /** The perceptual pair stage over a (media_id, frame_idx, f_lo, f_hi)
-    * frame — a pure function of it (the [[videoPairsFromFrames]]
-    * contract: the stored [[graft.sources.VideoIndex]] rows serve it
-    * byte-identically). */
-  def perceptualPairsFromFrames(framesIn: DataFrame, maxDist: Int = 6,
-      minFrames: Int = 2, maxDf: Int = 10000,
-      stopBands: Option[DataFrame] = None): DataFrame = {
-    val raw = checkpointFrames(framesIn.select(col("media_id"),
-      col("frame_idx"), col("f_lo"), col("f_hi")))
-    val stopB = stopBands.getOrElse(videoBandStop(raw, maxDf))
-      .localCheckpoint()
-    // collapse on the fp-sequence digest: identical sequences (verbatim
-    // replicas — and frames equal in fp though not in bytes) run the
-    // band join once per distinct sequence and inherit by expansion
-    val vdg = raw.groupBy(col("media_id"))
-      .agg(md5(concat_ws(";", sort_array(collect_list(concat_ws(":",
-        col("frame_idx"), col("f_lo"), col("f_hi")))))).as("dg"))
-    val repOf = vdg.groupBy(col("dg")).agg(min(col("media_id")).as("rep"))
-    val members = vdg.join(repOf, Seq("dg"))
-      .select(col("rep"), col("media_id").as("id"))
-    val repFrames = raw.join(
-      repOf.select(col("rep").as("media_id")), Seq("media_id"))
-    val repBands = fpBands(repFrames)
-      .join(broadcast(stopB), Seq("bi", "bv"), "left_anti")
-    // inline Hamming verify on the band-join row (the codes ride the
-    // band rows) — see clipPerceptualFromFrames: same answers, two
-    // fewer joins, distinct over verified rows only
-    val repPairs = repBands.select(col("media_id").as("da"),
-        col("frame_idx"), col("bi"), col("bv"),
-        col("f_lo").as("la"), col("f_hi").as("ha"))
-      .join(repBands.select(col("media_id").as("db"), col("frame_idx"),
-        col("bi"), col("bv"), col("f_lo").as("lb"),
-        col("f_hi").as("hb")), Seq("frame_idx", "bi", "bv"))
-      .where(col("da") < col("db"))
-      .where((expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
-        <= maxDist)
-      .select(col("da"), col("db"), col("frame_idx"))
-      // r19 single-exchange discipline for the verified-candidate
-      // dedup+count tail (guide §2.4: two operations keyed the same way
-      // share one exchange): distinct on (pair, frame) then groupBy(pair)
-      // each demanded their own Exchange — hash(pair) satisfies BOTH
-      // clustered distributions, so one explicit pair repartition lets
-      // the two aggregates run exchange-free above it (2 Exchange → 1).
-      // The trade: the multi-band duplicates (≤ 4 bands/frame) cross the
-      // wire un-deduped — 4 small ints per row, strictly match-bounded.
-      .repartition(col("da"), col("db"))
-      .distinct()
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    // intra expansion: identical sequences match at dist 0 on every
-    // frame that still has >= 1 unstopped band — the md5 family's `sc`
-    // with the band discipline replayed
-    val eligCnt = repBands.select(col("media_id"), col("frame_idx"))
-      .repartition(col("media_id")) // single-exchange discipline (above)
-      .distinct().groupBy(col("media_id"))
-      .agg(count(lit(1)).as("esc"))
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da"),
-        greatest(col("ia"), col("ib")).as("db"), col("matched_frames"))
-    val intra = members.select(col("rep"), col("id").as("ia"))
-      .join(members.select(col("rep"), col("id").as("ib")), Seq("rep"))
-      .where(col("ia") < col("ib"))
-      .join(eligCnt.select(col("media_id").as("rep"), col("esc")),
-        Seq("rep"))
-      .where(col("esc") >= minFrames)
-      .select(col("ia").as("da"), col("ib").as("db"),
-        col("esc").as("matched_frames"))
-    cross.unionByName(intra)
-  }
+  def videoPerceptualPairs(media: DataFrame, every: Int = 2,
+      maxDist: Int = 6, maxDf: Int = 10000): DataFrame =
+    framePairs(videoFramesFp(media, every), Perceptual(maxDist),
+      shifts = false, maxDf)
 
   /** SHIFT-TOLERANT PERCEPTUAL video copy detection — the fourth
     * quadrant of the video dedup matrix ({aligned, shift-tolerant} ×
@@ -1442,108 +1415,16 @@ object Multimodal {
     * [[videoClipDetect]] digest-only discipline with the band value
     * standing in for the digest), Hamming-verify ≤ `maxDist` on the
     * candidate row, then group by (pair, frame offset) with the
-    * ≥ `minFrames` consistency threshold. The fp-sequence collapse and
+    * ≥ [[MinFrames]] consistency threshold. The fp-sequence collapse and
     * the band-df stop bound the join exactly as in
-    * [[perceptualPairsFromFrames]]; shift is antisymmetric on
+    * [[videoPerceptualPairs]]; shift is antisymmetric on
     * expansion and intra pairs inherit each rep's full perceptual
-    * SELF-correlation histogram (the [[clipPairsFromFrames]]
+    * SELF-correlation histogram (the [[videoClipDetect]]
     * disciplines). Output: (da, db, shift, matched_frames). */
-  def videoClipPerceptual(media: DataFrame, frameBytes: Int = 32,
-      every: Int = 2, maxDist: Int = 6, minFrames: Int = 2,
-      maxDf: Int = 10000): DataFrame =
-    clipPerceptualFromFrames(videoFramesFp(media, frameBytes, every),
-      maxDist, minFrames, maxDf)
-
-  def clipPerceptualFromFrames(framesIn: DataFrame, maxDist: Int = 6,
-      minFrames: Int = 2, maxDf: Int = 10000,
-      stopBands: Option[DataFrame] = None): DataFrame = {
-    val raw = checkpointFrames(framesIn.select(col("media_id"),
-      col("frame_idx"), col("f_lo"), col("f_hi")))
-    val stopB = stopBands.getOrElse(videoBandStop(raw, maxDf))
-      .localCheckpoint()
-    val vdg = raw.groupBy(col("media_id"))
-      .agg(md5(concat_ws(";", sort_array(collect_list(concat_ws(":",
-        col("frame_idx"), col("f_lo"), col("f_hi")))))).as("dg"))
-    val repOf = vdg.groupBy(col("dg")).agg(min(col("media_id")).as("rep"))
-    val members = vdg.join(repOf, Seq("dg"))
-      .select(col("rep"), col("media_id").as("id"))
-    val repFrames = raw.join(
-      repOf.select(col("rep").as("media_id")), Seq("media_id"))
-    val repBands = fpBands(repFrames)
-      .join(broadcast(stopB), Seq("bi", "bv"), "left_anti")
-    // both fingerprints ride the band rows (fpBands keeps f_lo/f_hi),
-    // so the Hamming verify runs INLINE on the band-join row — the
-    // gates' plan shape: no second fingerprint join, and the
-    // multi-band dedup shrinks to VERIFIED rows only (verify is a pure
-    // function of the pair's codes, so verify-then-distinct ≡
-    // distinct-then-verify). On the text-byte corpora the position-free
-    // band join dominates this stage — low-entropy bytes make 16-bit
-    // band values collide heavily — and the posterior-verify shape paid
-    // two more joins plus a distinct over UNVERIFIED candidates on top.
-    val repPairs = repBands.select(col("media_id").as("da"),
-        col("frame_idx").as("fa"), col("bi"), col("bv"),
-        col("f_lo").as("la"), col("f_hi").as("ha"))
-      .join(repBands.select(col("media_id").as("db"),
-        col("frame_idx").as("fb"), col("bi"), col("bv"),
-        col("f_lo").as("lb"), col("f_hi").as("hb")),
-        Seq("bi", "bv"))
-      .where(col("da") < col("db"))
-      .where((expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
-        <= maxDist)
-      .select(col("da"), col("db"), col("fa"), col("fb"))
-      // single-exchange discipline (perceptualPairsFromFrames): hash on
-      // the pair serves the (pair, fa, fb) dedup AND the (pair, shift)
-      // count — 2 Exchange → 1
-      .repartition(col("da"), col("db"))
-      .distinct()
-      .groupBy(col("da"), col("db"), (col("fa") - col("fb")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da"),
-        greatest(col("ia"), col("ib")).as("db"),
-        when(col("ia") < col("ib"), col("shift"))
-          .otherwise(-col("shift")).as("shift"),
-        col("matched_frames"))
-    // intra: each rep's full perceptual self-correlation histogram
-    // (band candidates against itself, fa = fb included) — computed
-    // ONLY for reps with ≥ 2 members, the only ones whose member pairs
-    // inherit it (the clipPairsFromFrames restriction; here it cuts
-    // the position-free band self-join, the stage's dominant cost on a
-    // distinct-heavy corpus)
-    val multiReps = members.groupBy(col("rep"))
-      .agg(count(lit(1)).as("mc")).where(col("mc") >= 2)
-      .select(col("rep"))
-    val multiBands = repBands.join(
-      multiReps.select(col("rep").as("media_id")),
-      Seq("media_id"), "left_semi")
-    val selfCorr = multiBands.select(col("media_id").as("rep"),
-        col("frame_idx").as("fa"), col("bi"), col("bv"),
-        col("f_lo").as("la"), col("f_hi").as("ha"))
-      .join(multiBands.select(col("media_id").as("rep"),
-        col("frame_idx").as("fb"), col("bi"), col("bv"),
-        col("f_lo").as("lb"), col("f_hi").as("hb")),
-        Seq("rep", "bi", "bv"))
-      .where((expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
-        <= maxDist)
-      .select(col("rep"), col("fa"), col("fb"))
-      // single-exchange discipline: one rep-keyed exchange under both
-      // aggregates (a rep's self-correlation rows are frames²-bounded)
-      .repartition(col("rep"))
-      .distinct()
-      .groupBy(col("rep"), (col("fa") - col("fb")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-    val intra = members.select(col("rep"), col("id").as("ia"))
-      .join(members.select(col("rep"), col("id").as("ib")), Seq("rep"))
-      .where(col("ia") < col("ib"))
-      .join(selfCorr, Seq("rep"))
-      .select(col("ia").as("da"), col("ib").as("db"), col("shift"),
-        col("matched_frames"))
-    cross.unionByName(intra)
-  }
+  def videoClipPerceptual(media: DataFrame, every: Int = 2,
+      maxDist: Int = 6, maxDf: Int = 10000): DataFrame =
+    framePairs(videoFramesFp(media, every), Perceptual(maxDist),
+      shifts = true, maxDf)
 
   /** The gain+re-cut twin for [[videoClipPerceptual]] (+8M ids): the
     * doc_id % 4 = 1 slice rotated by TWO frames (one sampled stride)
@@ -1551,16 +1432,16 @@ object Multimodal {
     * each miss for their own reason (md5 legs: bytes differ; aligned
     * perceptual: positions differ). Caught here at shift 2,
     * distance 0 on full frames. */
-  def videoClipPerceptualTwinTable(spark: SparkSession, sfDir: String,
-      frameBytes: Int): DataFrame = {
+  def videoClipPerceptualTwinTable(spark: SparkSession,
+      sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, sfDir)
       .where(pmod(col("doc_id"), lit(4L)) === 1L)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-      .where(length(col("content")) > 4 * frameBytes)
+      .where(length(col("content")) > 4 * FrameBytes)
       .select((col("doc_id") + lit(8000000L)).as("media_id"),
-        concat(expr(s"substring(content, ${2 * frameBytes + 1})"),
-          expr(s"substring(content, 1, ${2 * frameBytes})")).as("content"))
+        concat(expr(s"substring(content, ${2 * FrameBytes + 1})"),
+          expr(s"substring(content, 1, ${2 * FrameBytes})")).as("content"))
       .as[MediaRow]
       .mapPartitions(_.map(r => MediaRow(r.media_id,
         r.content.map(b => ((b & 0xff) + 1).toByte)))).toDF()
@@ -1582,8 +1463,8 @@ object Multimodal {
     *   - RE-CUT (+7M ids): rotation by one frame — perturbs NOTHING
     *     perceptually, but alignment refuses it, exactly as the md5
     *     family refuses its own re-cut regime. */
-  def videoPerceptualTwinTable(spark: SparkSession, sfDir: String,
-      frameBytes: Int): DataFrame = {
+  def videoPerceptualTwinTable(spark: SparkSession,
+      sfDir: String): DataFrame = {
     import spark.implicits._
     val slice = Tables.documents(spark, sfDir)
       .where(pmod(col("doc_id"), lit(4L)) === 1L)
@@ -1601,10 +1482,10 @@ object Multimodal {
             if (i % 16 == 0) ((b & 0xff) + 2).toByte else b
           })))).toDF()
     val recut = slice
-      .where(length(col("content")) > frameBytes)
+      .where(length(col("content")) > FrameBytes)
       .select((col("doc_id") + lit(7000000L)).as("media_id"),
-        concat(expr(s"substring(content, ${frameBytes + 1})"),
-          expr(s"substring(content, 1, $frameBytes)")).as("content"))
+        concat(expr(s"substring(content, ${FrameBytes + 1})"),
+          expr(s"substring(content, 1, $FrameBytes)")).as("content"))
     gainNoise.unionByName(recut)
   }
 
@@ -1664,7 +1545,7 @@ object Multimodal {
     * DECODED rasters are identical — so the keyframe fingerprints
     * match verbatim, which is the entire point of fingerprinting what
     * the codec DECODED (MultimodalSpec pins both halves). Docs with
-    * ≥ 2 sampled keyframes only, so the pair clears minFrames. */
+    * ≥ 2 sampled keyframes only, so the pair clears [[MinFrames]]. */
   def videoKeyframeTwinTable(spark: SparkSession, sfDir: String): DataFrame =
     videoKeyframeTableOf(
       Tables.documents(spark, sfDir)
@@ -1794,12 +1675,7 @@ object Multimodal {
       .select(col("rep"), col("media_id").as("id"))
     val reps = repOf.select(col("rep").as("media_id"), col("h_lo"),
       col("h_hi"))
-    val bandsAll = reps.select(col("media_id"), explode(array(
-      struct(lit(0).as("bi"), expr("h_lo % 65536L").as("bv")),
-      struct(lit(1).as("bi"), expr("h_lo div 65536L").as("bv")),
-      struct(lit(2).as("bi"), expr("h_hi % 65536L").as("bv")),
-      struct(lit(3).as("bi"), expr("h_hi div 65536L").as("bv")))).as("b"))
-      .select(col("media_id"), col("b.bi").as("bi"), col("b.bv").as("bv"))
+    val bandsAll = fpBands(reps, "h_lo", "h_hi")
     // band-df discipline: reps ARE the distinct fingerprints, so a
     // plain count per (bi, bv) here is the distinct-fp df; a PERSISTED
     // index passes its `_bstop` sidecar instead (same set by
@@ -1826,21 +1702,13 @@ object Multimodal {
         (expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
           .cast("long").as("dist"))
       .where(col("dist") <= maxDist)
-    val cross = repPairs
-      .join(members.select(col("rep").as("da"), col("id").as("ia")), "da")
-      .join(members.select(col("rep").as("db"), col("id").as("ib")), "db")
-      .select(least(col("ia"), col("ib")).as("da"),
-        greatest(col("ia"), col("ib")).as("db"), col("dist"))
     // a rep whose EVERY band is hot matches nothing — not even its own
     // identical-fingerprint group (the oracle's per-pair band predicate
-    // fails on all four terms), so the intra expansion excludes it
-    val eligible = bands.select(col("media_id").as("rep")).distinct()
-    val intra = members.select(col("rep"), col("id").as("ia"))
-      .join(members.select(col("rep"), col("id").as("ib")), "rep")
-      .where(col("ia") < col("ib"))
-      .join(eligible, Seq("rep"), "left_semi")
-      .select(col("ia").as("da"), col("ib").as("db"), lit(0L).as("dist"))
-    cross.unionByName(intra)
+    // fails on all four terms), so only reps with a kept band self-pair,
+    // at dist 0
+    graft.core.Collapse.expandThroughDigests(repPairs, members,
+      bands.select(col("media_id").as("rep")).distinct()
+        .select(col("rep"), lit(0L).as("dist")))
   }
 
   /** CODEC ERROR POLICY: the fault-tolerant twin of [[decodeFeatures]].

@@ -179,8 +179,7 @@ object MultimodalQueries {
           Tables.documents(s, d)
             .where(pmod(col("doc_id"), lit(4L)) === 1L)
             .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-              col("text")))),
-        maxDist = 6),
+              col("text"))))),
       Some(imageFpCte(
         """SELECT doc_id AS media_id, hex(encode(text)) AS h,
                        octet_length(encode(text)) AS n_bytes
@@ -228,8 +227,7 @@ object MultimodalQueries {
     Q("q_audio_dedup",
       (s, d) => Multimodal.audioDedupPairs(
         Multimodal.audioTable(s, d)
-          .unionByName(Multimodal.audioScaledTable(s, d)),
-        maxDist = 6),
+          .unionByName(Multimodal.audioScaledTable(s, d))),
       Some(audioFpCte + mediaBandStopCte(corpusOnly = false) +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(bit_count(xor(a.lo, b.lo))
@@ -265,8 +263,7 @@ object MultimodalQueries {
     Q("q_audio_dedup_against",
       (s, d) => graft.sources.MediaIndex.pairsAgainst(s,
         graft.sources.MediaIndex.ensureBuiltAudioCorpus(s, d),
-        Multimodal.audioDHash(Multimodal.audioScaledTable(s, d)),
-        maxDist = 6),
+        Multimodal.audioDHash(Multimodal.audioScaledTable(s, d))),
       Some(audioFpCte + mediaBandStopCte(corpusOnly = true) +
         """SELECT b.media_id AS fid, a.media_id AS cid,
                      CAST(bit_count(xor(a.lo, b.lo))
@@ -304,8 +301,7 @@ object MultimodalQueries {
     Q("q_audio_dedup_lossy",
       (s, d) => Multimodal.audioDedupPairs(
         Multimodal.audioTable(s, d)
-          .unionByName(Multimodal.audioLossyTable(s, d)),
-        maxDist = 6),
+          .unionByName(Multimodal.audioLossyTable(s, d))),
       Some(audioLossyFpCte + mediaBandStopCte(corpusOnly = false) +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(bit_count(xor(a.lo, b.lo))
@@ -344,8 +340,8 @@ object MultimodalQueries {
     Q("q_video_dedup",
       (s, d) => Multimodal.videoDedupPairs(
         Multimodal.videoTable(s, d)
-          .unionByName(Multimodal.videoTwinTable(s, d, frameBytes = 32)),
-        frameBytes = 32, every = 2, minFrames = 2),
+          .unionByName(Multimodal.videoTwinTable(s, d)),
+        every = 2),
       Some(videoFramesCte() +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(count(*) AS BIGINT) AS matched_frames
@@ -366,8 +362,8 @@ object MultimodalQueries {
     Q("q_video_clip_detect",
       (s, d) => Multimodal.videoClipDetect(
         Multimodal.videoTable(s, d).unionByName(
-          Multimodal.videoClipTwinTable(s, d, frameBytes = 32)),
-        frameBytes = 32, every = 2, minFrames = 2),
+          Multimodal.videoClipTwinTable(s, d)),
+        every = 2),
       Some("""WITH m AS (
                 SELECT doc_id AS media_id, text FROM documents
                 UNION ALL
@@ -406,11 +402,11 @@ object MultimodalQueries {
     // frames here at shift 2; oracle = the clip replay restricted to
     // cross pairs, shift = stored frame − fresh frame.
     Q("q_video_clip_against",
-      (s, d) => graft.sources.VideoIndex.clipAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltVideoCorpus(s, d),
         Multimodal.videoFrames(
-          Multimodal.videoClipTwinTable(s, d, frameBytes = 32)),
-        minFrames = 2),
+          Multimodal.videoClipTwinTable(s, d)),
+        Multimodal.Exact, shifts = true),
       Some("""WITH m AS (
                 SELECT doc_id AS media_id, text FROM documents
                 UNION ALL
@@ -453,8 +449,8 @@ object MultimodalQueries {
       (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltVideoCorpus(s, d),
         Multimodal.videoFrames(
-          Multimodal.videoTwinTable(s, d, frameBytes = 32)),
-        minFrames = 2),
+          Multimodal.videoTwinTable(s, d)),
+        Multimodal.Exact, shifts = false),
       Some(videoFramesCte(corpusOnlyStop = true) +
         """SELECT b.media_id AS fid, a.media_id AS cid,
                      CAST(count(*) AS BIGINT) AS matched_frames
@@ -478,8 +474,8 @@ object MultimodalQueries {
     Q("q_video_dedup_perceptual",
       (s, d) => Multimodal.videoPerceptualPairs(
         Multimodal.videoTable(s, d).unionByName(
-          Multimodal.videoPerceptualTwinTable(s, d, frameBytes = 32)),
-        frameBytes = 32, every = 2, maxDist = 6, minFrames = 2),
+          Multimodal.videoPerceptualTwinTable(s, d)),
+        every = 2),
       Some(percFpCte("") +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -506,11 +502,11 @@ object MultimodalQueries {
     // ALIGNED gate (the clip gate's job). Band stop from the CORPUS
     // side only, exactly as the _bstop sidecar derives it.
     Q("q_video_dedup_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.perceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltVideoCorpus(s, d),
         Multimodal.videoFramesFp(
-          Multimodal.videoPerceptualTwinTable(s, d, frameBytes = 32)),
-        maxDist = 6, minFrames = 2),
+          Multimodal.videoPerceptualTwinTable(s, d)),
+        Multimodal.Perceptual(), shifts = false),
       Some(percFpCte("WHERE media_id < 1000000") +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -544,8 +540,8 @@ object MultimodalQueries {
     Q("q_video_clip_perceptual",
       (s, d) => Multimodal.videoClipPerceptual(
         Multimodal.videoTable(s, d).unionByName(
-          Multimodal.videoClipPerceptualTwinTable(s, d, frameBytes = 32)),
-        frameBytes = 32, every = 2, maxDist = 6, minFrames = 2),
+          Multimodal.videoClipPerceptualTwinTable(s, d)),
+        every = 2),
       Some(percFpCte("", clipPercM) +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -573,11 +569,11 @@ object MultimodalQueries {
     // Oracle = the fourth-quadrant replay restricted to cross pairs,
     // band stop corpus-scoped, shift = stored − fresh.
     Q("q_video_clip_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.clipPerceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltVideoCorpus(s, d),
         Multimodal.videoFramesFp(
-          Multimodal.videoClipPerceptualTwinTable(s, d, frameBytes = 32)),
-        maxDist = 6, minFrames = 2),
+          Multimodal.videoClipPerceptualTwinTable(s, d)),
+        Multimodal.Perceptual(), shifts = true),
       Some(percFpCte("WHERE media_id < 1000000", clipPercM) +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -624,8 +620,8 @@ object MultimodalQueries {
     // envelope window, but its PCM SEGMENT grid matches the original's
     // at a consistent offset. Segments are 32 decoded samples; the
     // match is ≥ 2 identical segments at one offset — literally
-    // clipPairsFromFrames over audioSegmentsFp rows, because the clip
-    // stage is a pure function of (media_id, frame_idx, fm) whatever
+    // the shift-tolerant framePairs over audioSegmentsFp rows, because
+    // the clip stage is a pure function of (media_id, frame_idx, fm) whatever
     // the grid unit. Fixture: the two-regime excerpt twin — the exact
     // excerpt (+2M) caught at shift +2, the 0.9×-gain excerpt (+3M)
     // correctly invisible to this byte-exact leg (the perceptual leg's
@@ -634,11 +630,11 @@ object MultimodalQueries {
     // the engine's md5 equality means; the gain twin's bytes leave
     // ASCII so string md5 can't replay it), stop-df discipline replayed.
     Q("q_audio_clip_detect",
-      (s, d) => Multimodal.clipPairsFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.audioSegmentsFp(
           Multimodal.audioTable(s, d)
             .unionByName(Multimodal.audioExcerptTable(s, d))),
-        minFrames = 2, materializeFrames = true),
+        Multimodal.Exact, shifts = true, materializeFrames = true),
       Some(audioSegCte(corpusOnlyStop = false, perceptual = false) +
         """SELECT a.media_id AS da, b.media_id AS db,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -649,16 +645,16 @@ object MultimodalQueries {
 
     // the excerpt CRAWL GATE: a fresh batch (both excerpt regimes)
     // checks against the corpus-only stored segment index —
-    // VideoIndex.clipAgainst verbatim, because the index is
+    // the shift-tolerant VideoIndex.pairsAgainst, because the index is
     // modality-agnostic over temporal fingerprint rows. Batch segments
     // broadcast (anti-joined on the _stop sidecar), stored side
     // map-side on the self-verifying segment digest, one match-bounded
     // (fid, cid, shift) exchange. Only the exact excerpt matches.
     Q("q_audio_clip_against",
-      (s, d) => graft.sources.VideoIndex.clipAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltAudioSegCorpus(s, d),
         Multimodal.audioSegmentsFp(Multimodal.audioExcerptTable(s, d)),
-        minFrames = 2),
+        Multimodal.Exact, shifts = true),
       Some(audioSegCte(corpusOnlyStop = true, perceptual = false) +
         """SELECT b.media_id AS fid, a.media_id AS cid,
                      CAST(a.seg - b.seg AS BIGINT) AS shift,
@@ -668,19 +664,19 @@ object MultimodalQueries {
               GROUP BY 1, 2, 3 HAVING count(*) >= 2""")),
 
     // GAIN-TOLERANT audio excerpt detection — the perceptual leg: the
-    // 0.9×-amplitude excerpt's every sample byte differs (md5 leg
-    // blind), but each 32-byte segment's gradient fingerprint moves ≤ 5
-    // bits (measured, median 0; unrelated segments at median 26), so
-    // the frame-level banding + Hamming verify + shift grouping of
-    // clipPerceptualFromFrames catches it at the video family's
-    // maxDist = 6 dial. The oracle replays fingerprint byte math, band
-    // candidates, band-df stop, Hamming verify and the shift grouping.
+    // 0.9×-amplitude excerpt's every sample byte differs (md5 leg blind), but
+    // each 32-byte segment's gradient fingerprint moves ≤ 5 bits (measured,
+    // median 0; unrelated segments at median 26), so the frame-level banding
+    // + Hamming verify + shift grouping of the shift-tolerant perceptual
+    // framePairs catches it at the video family's maxDist = 6 dial. The
+    // oracle replays fingerprint byte math, band candidates, band-df stop,
+    // Hamming verify and the shift grouping.
     Q("q_audio_clip_perceptual",
-      (s, d) => Multimodal.clipPerceptualFromFrames(
+      (s, d) => Multimodal.framePairs(
         Multimodal.audioSegmentsFp(
           Multimodal.audioTable(s, d)
             .unionByName(Multimodal.audioExcerptTable(s, d))),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(audioSegCte(corpusOnlyStop = false, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT a.media_id AS da, b.media_id AS db,
@@ -701,18 +697,17 @@ object MultimodalQueries {
                      CAST(count(*) AS BIGINT) AS matched_frames
               FROM pm GROUP BY 1, 2, 3 HAVING count(*) >= 2""")),
 
-    // the perceptual excerpt GATE — both excerpt regimes arrive fresh
-    // and BOTH are caught (exact at distance 0, gain within the dial):
-    // the admission decision the byte-exact gate gets wrong for a
-    // re-mastered excerpt of stored material. clipPerceptualAgainst on
-    // the same corpus-only index: fresh bands broadcast (anti-joined
-    // on _bstop), stored side map-side, Hamming verify inline,
-    // match-bounded exchanges.
+    // the perceptual excerpt GATE — both excerpt regimes arrive fresh and
+    // BOTH are caught (exact at distance 0, gain within the dial): the
+    // admission decision the byte-exact gate gets wrong for a re-mastered
+    // excerpt of stored material. The shift-tolerant perceptual gate on the
+    // same corpus-only index: fresh bands broadcast (anti-joined on _bstop),
+    // stored side map-side, Hamming verify inline, match-bounded exchanges.
     Q("q_audio_clip_perceptual_against",
-      (s, d) => graft.sources.VideoIndex.clipPerceptualAgainst(s,
+      (s, d) => graft.sources.VideoIndex.pairsAgainst(s,
         graft.sources.VideoIndex.ensureBuiltAudioSegCorpus(s, d),
         Multimodal.audioSegmentsFp(Multimodal.audioExcerptTable(s, d)),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       Some(audioSegCte(corpusOnlyStop = true, perceptual = true) +
         """cand AS (
                 SELECT DISTINCT b.media_id AS fid, a.media_id AS cid,
@@ -1449,11 +1444,11 @@ object MultimodalQueries {
   val all: Seq[Q] = live ++ Seq(
     Q("q_image_dedup_stored",
       (s, d) => graft.sources.MediaIndex.pairs(s,
-        graft.sources.MediaIndex.ensureBuiltImage(s, d), maxDist = 6),
+        graft.sources.MediaIndex.ensureBuiltImage(s, d)),
       live.find(_.name == "q_image_dedup").get.oracle),
     Q("q_audio_dedup_stored",
       (s, d) => graft.sources.MediaIndex.pairs(s,
-        graft.sources.MediaIndex.ensureBuiltAudio(s, d), maxDist = 6),
+        graft.sources.MediaIndex.ensureBuiltAudio(s, d)),
       live.find(_.name == "q_audio_dedup").get.oracle),
     // the SAME video pairs served from the PERSISTED frame-digest table
     // (graft.sources.VideoIndex — the fifth stored family): the payload
@@ -1462,31 +1457,31 @@ object MultimodalQueries {
     // is the live replay VERBATIM.
     Q("q_video_dedup_stored",
       (s, d) => graft.sources.VideoIndex.pairs(s,
-        graft.sources.VideoIndex.ensureBuiltVideo(s, d), minFrames = 2),
+        graft.sources.VideoIndex.ensureBuiltVideo(s, d)),
       live.find(_.name == "q_video_dedup").get.oracle),
     // the shift-tolerant detector served from the SAME stored layout —
-    // clipPairsFromFrames is a pure function of the _vf rows, so one
+    // framePairs is a pure function of the _vf rows, so one
     // artifact answers both video operators; live oracle verbatim.
     Q("q_video_clip_detect_stored",
-      (s, d) => Multimodal.clipPairsFromFrames(
-        s.table(s"${graft.sources.VideoIndex.ensureBuiltVideoClip(s, d)}_vf"),
-        minFrames = 2),
+      (s, d) => graft.sources.VideoIndex.pairs(s,
+        graft.sources.VideoIndex.ensureBuiltVideoClip(s, d), Multimodal.Exact,
+        shifts = true),
       live.find(_.name == "q_video_clip_detect").get.oracle),
     // the perceptual pairs served from the persisted 5-column layout
     // (one _vf artifact = aligned dedup + clip detection + transcode-
     // tolerant dedup, all pure functions of the stored rows); live
     // oracle verbatim.
     Q("q_video_dedup_perceptual_stored",
-      (s, d) => graft.sources.VideoIndex.pairsPerceptual(s,
+      (s, d) => graft.sources.VideoIndex.pairs(s,
         graft.sources.VideoIndex.ensureBuiltVideoPerc(s, d),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual()),
       live.find(_.name == "q_video_dedup_perceptual").get.oracle),
     // the fourth quadrant served from the same stored artifact; live
     // oracle verbatim.
     Q("q_video_clip_perceptual_stored",
-      (s, d) => graft.sources.VideoIndex.clipPerceptual(s,
+      (s, d) => graft.sources.VideoIndex.pairs(s,
         graft.sources.VideoIndex.ensureBuiltVideoClipPerc(s, d),
-        maxDist = 6, minFrames = 2),
+        Multimodal.Perceptual(), shifts = true),
       live.find(_.name == "q_video_clip_perceptual").get.oracle),
     // audio excerpt detection served from the persisted segment rows —
     // the modality-agnostic temporal index: one _vf artifact (PCM
@@ -1494,9 +1489,9 @@ object MultimodalQueries {
     // a pure function of its rows; decode + segment fingerprinting ran
     // once at build. Live oracle verbatim.
     Q("q_audio_clip_detect_stored",
-      (s, d) => Multimodal.clipPairsFromFrames(
-        s.table(s"${graft.sources.VideoIndex.ensureBuiltAudioSeg(s, d)}_vf"),
-        minFrames = 2),
+      (s, d) => graft.sources.VideoIndex.pairs(s,
+        graft.sources.VideoIndex.ensureBuiltAudioSeg(s, d), Multimodal.Exact,
+        shifts = true),
       live.find(_.name == "q_audio_clip_detect").get.oracle))
 
   /** The PNG decode-features replay (hex-derived byte math over the

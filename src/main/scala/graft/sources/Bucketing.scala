@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Bucketed-table layout: the persistent co-location contract that turns
   * repeated big joins/aggregations on the same key into zero-shuffle
@@ -88,6 +89,33 @@ object Bucketing {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(key.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
+
+  /** Fixture index builds, one per (prefix, sfDir, data fingerprint). */
+  private val built = scala.collection.concurrent.TrieMap.empty[
+    (String, String, String), String]
+
+  /** Memoized build of the fixture index `<prefix>_<nameSuffix>` over the
+    * fixture at `sfDir`: a registered stored-layout query must not re-pay
+    * the build on every run — that is the point of a persisted index —
+    * but a path-keyed memo would serve a STALE layout after a tool
+    * rewrites the fixture dir in place (the BPE-memo lesson, r11
+    * ADVICE). So the key carries a data fingerprint `fp`, by default the
+    * documents table's (count, max doc_id, sum n_chars): one
+    * column-pruned 1-row aggregate that a data rewrite changes. `build`
+    * writes the index under the given name; returns the name. */
+  def memoBuilt(spark: SparkSession, sfDir: String, prefix: String,
+      fp: Option[String] = None)(build: String => Unit): String = {
+    val key = fp.getOrElse {
+      val r = graft.Tables.documents(spark, sfDir).agg(count(lit(1)),
+        max(col("doc_id")), sum(col("n_chars"))).head()
+      s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
+    }
+    built.getOrElseUpdate((prefix, sfDir, key), {
+      val name = s"${prefix}_${nameSuffix(sfDir + "|" + key)}"
+      build(name)
+      name
+    })
+  }
 
   /** Equi-join two tables bucketed on `key` with equal bucket counts —
     * planner proves co-location from the catalog, no Exchange appears. */

@@ -145,41 +145,23 @@ object DedupIndex {
     * q_incremental_dedup mixer gate: fresh = hashSample 0.2, corpus =
     * the rest), keyed by (sfDir, data fingerprint) — the
     * [[IvfIndex.ensureBuilt]] discipline. */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (String, String), String]
-
-  def ensureBuilt(spark: SparkSession, sfDir: String): String = {
-    val docs = graft.Tables.documents(spark, sfDir)
-    val r = docs.agg(count(lit(1)), max(col("doc_id")),
-      sum(col("n_chars"))).head()
-    val fp = s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
-    built.getOrElseUpdate((sfDir, fp), {
-      val name = s"graft_dedup_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuilt(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_dedup") { name =>
+      val docs = graft.Tables.documents(spark, sfDir)
       val fresh = graft.llm.Sampling.hashSample(docs, "doc_id", 0.2)
       val corpus = docs.join(fresh.select(col("doc_id")), Seq("doc_id"),
         "left_anti")
       build(spark, corpus, "text", "doc_id", name)
-      name
-    })
-  }
+    }
 
   /** Memoized build over the FULL documents corpus — the text leg of
     * the composed multimodal crawl gate
     * ([[graft.multimodal.CrawlAdmit]]): the whole fixture corpus is
     * stored, the batch arrives entirely fresh (unlike [[ensureBuilt]]'s
     * mixer split, where 20 % of the corpus plays the batch). */
-  private val builtFull = scala.collection.concurrent.TrieMap.empty[
-    (String, String), String]
-
-  def ensureBuiltFull(spark: SparkSession, sfDir: String): String = {
-    val docs = graft.Tables.documents(spark, sfDir)
-    val r = docs.agg(count(lit(1)), max(col("doc_id")),
-      sum(col("n_chars"))).head()
-    val fp = s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
-    builtFull.getOrElseUpdate((sfDir, fp), {
-      val name = s"graft_dedupf_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
-      build(spark, docs, "text", "doc_id", name)
-      name
-    })
-  }
+  def ensureBuiltFull(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_dedupf") { name =>
+      build(spark, graft.Tables.documents(spark, sfDir), "text", "doc_id",
+        name)
+    }
 }

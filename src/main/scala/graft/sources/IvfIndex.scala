@@ -527,9 +527,6 @@ object IvfIndex {
     * place (the BPE-memo lesson, r11 ADVICE). The fingerprint is one
     * 1-row aggregate (count + max id); a data rewrite changes it and
     * forces a rebuild. Returns the index name to serve from. */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (String, String), String]
-
   def ensureBuilt(spark: SparkSession, sfDir: String,
       numCentroids: Int = 64): String = {
     val emb = graft.Tables.embeddings(spark, sfDir)
@@ -543,11 +540,9 @@ object IvfIndex {
     val r = emb.agg(count(lit(1)), max(col("vec_id")),
       sum(col("label"))).head()
     val fp = s"${r.get(0)}|${r.get(1)}|${r.get(2)}|$numCentroids"
-    built.getOrElseUpdate((sfDir, fp), {
-      val name = s"graft_ivf_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+    Bucketing.memoBuilt(spark, sfDir, "graft_ivf", Some(fp)) { name =>
       build(spark, emb, "vec_id", "embedding", name, numCentroids)
-      name
-    })
+    }
   }
 
   /** Cell count scaled to the corpus: k = ⌈√N⌉ clamped to [minCells,
@@ -601,11 +596,9 @@ object IvfIndex {
     val r = emb.agg(count(lit(1)), max(col("vec_id")),
       sum(col("label"))).head()
     val fp = s"${r.get(0)}|${r.get(1)}|${r.get(2)}|$numCentroids|routed"
-    built.getOrElseUpdate((sfDir, fp), {
-      val name = s"graft_ivfr_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+    Bucketing.memoBuilt(spark, sfDir, "graft_ivfr", Some(fp)) { name =>
       build(spark, emb, "vec_id", "embedding", name, numCentroids,
         routeAbove = 0)
-      name
-    })
+    }
   }
 }

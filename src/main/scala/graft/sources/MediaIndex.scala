@@ -85,16 +85,6 @@ object MediaIndex {
       spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_fp"))
       .properties.get("graft.maxBandDf").map(_.toInt).getOrElse(10000)
 
-  /** The stored fingerprints' 4×16-bit bands. */
-  private def fpBands(fp: DataFrame): DataFrame =
-    fp.select(explode(array(
-      struct(lit(0).as("bi"), (col("h_lo") % 65536L).as("bv")),
-      struct(lit(1).as("bi"), expr("h_lo div 65536L").as("bv")),
-      struct(lit(2).as("bi"), (col("h_hi") % 65536L).as("bv")),
-      struct(lit(3).as("bi"), (expr("h_hi div 65536L")).as("bv"))))
-      .as("b"))
-      .select(col("b.bi").as("bi"), col("b.bv").as("bv"))
-
   /** (Re)derive the band-value stop sidecar — `_bstop` = (bi, bv) pairs
     * carried by more than `maxBandDf` DISTINCT fingerprints (see
     * [[Multimodal.dhashPairs]]'s discipline scaladoc for why distinct
@@ -109,8 +99,8 @@ object MediaIndex {
   def refreshBandStop(spark: SparkSession, name: String,
       basePath: String = IvfIndex.defaultBase): Long = {
     val maxBandDf = storedMaxBandDf(spark, name)
-    val bstop = fpBands(spark.table(s"${name}_fp")
-        .select(col("h_lo"), col("h_hi")).distinct())
+    val bstop = Multimodal.fpBands(spark.table(s"${name}_fp")
+        .select(col("h_lo"), col("h_hi")).distinct(), "h_lo", "h_hi")
       .groupBy(col("bi"), col("bv")).agg(count(lit(1)).as("df"))
       .where(col("df") > maxBandDf).select(col("bi"), col("bv"))
       .localCheckpoint()
@@ -176,30 +166,22 @@ object MediaIndex {
     * fingerprints come from. */
   def pairsAgainstFp(storedFp: DataFrame, freshFp: DataFrame,
       maxDist: Int = 6, stopBands: Option[DataFrame] = None): DataFrame = {
-    def bandsOf(df: DataFrame, id: String, lo: String, hi: String) =
-      df.select(col("media_id").as(id), col("h_lo").as(lo),
-          col("h_hi").as(hi))
-        .select(col(id), col(lo), col(hi), explode(array(
-          struct(lit(0).as("bi"), (col(lo) % 65536L).as("bv")),
-          struct(lit(1).as("bi"), expr(s"$lo div 65536L").as("bv")),
-          struct(lit(2).as("bi"), (col(hi) % 65536L).as("bv")),
-          struct(lit(3).as("bi"), expr(s"$hi div 65536L").as("bv"))))
-          .as("b"))
-        .select(col(id), col(lo), col(hi), col("b.bi").as("bi"),
-          col("b.bv").as("bv"))
     // band-df discipline on the fresh side: hot band values (df over
     // the CORPUS's distinct fingerprints — the `_bstop` sidecar when
     // serving an index, derived inline for the recompute twin) are
     // dropped before the broadcast so they never fan out map-side
     val stop = stopBands.getOrElse(
-      fpBands(storedFp.select(col("h_lo"), col("h_hi")).distinct())
+      Multimodal.fpBands(storedFp.select(col("h_lo"), col("h_hi"))
+          .distinct(), "h_lo", "h_hi")
         .groupBy(col("bi"), col("bv")).agg(count(lit(1)).as("df"))
         .where(col("df") > 10000).select(col("bi"), col("bv")))
     val fB = broadcast(
-      bandsOf(freshFp, "fid", "la", "ha")
+      Multimodal.fpBands(freshFp.select(col("media_id").as("fid"),
+          col("h_lo").as("la"), col("h_hi").as("ha")), "la", "ha")
         .join(broadcast(stop), Seq("bi", "bv"), "left_anti")
         .localCheckpoint())
-    val sB = bandsOf(storedFp, "cid", "lb", "hb")
+    val sB = Multimodal.fpBands(storedFp.select(col("media_id").as("cid"),
+      col("h_lo").as("lb"), col("h_hi").as("hb")), "lb", "hb")
     sB.join(fB, Seq("bi", "bv"))
       .select(col("fid"), col("cid"),
         (expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
@@ -321,47 +303,26 @@ object MediaIndex {
     * fingerprint) — the [[DedupIndex.ensureBuilt]] discipline. Image:
     * the PNG-encoded media table. Audio: corpus ∪ the 0.9×-amplitude
     * re-crawl batch, matching q_audio_dedup's live input. */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (String, String, String), String]
-
-  private def corpusFp(spark: SparkSession, sfDir: String): String = {
-    val r = graft.Tables.documents(spark, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars"))).head()
-    s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
-  }
-
-  def ensureBuiltImage(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "image"), {
-      val name = s"graft_media_img_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltImage(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_img") { name =>
       build(spark,
         Multimodal.imageDHash(Multimodal.imageTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 
-  def ensureBuiltAudio(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "audio"), {
-      val name = s"graft_media_aud_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltAudio(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_aud") { name =>
       build(spark,
         Multimodal.audioDHash(
           Multimodal.audioTable(spark, sfDir)
             .unionByName(Multimodal.audioScaledTable(spark, sfDir))), name)
-      name
-    })
-  }
+    }
 
   /** Corpus-ONLY audio index — the stored side of the crawl-admission
     * shape ([[pairsAgainst]]/[[dedupAgainst]]): the re-crawl batch stays
     * fresh, never in the store. */
-  def ensureBuiltAudioCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "audio_corpus"), {
-      val name = s"graft_media_audc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltAudioCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_audc") { name =>
       build(spark,
         Multimodal.audioDHash(Multimodal.audioTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 }

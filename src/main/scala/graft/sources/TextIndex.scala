@@ -241,18 +241,9 @@ object TextIndex {
     * (sfDir, data fingerprint) — the [[IvfIndex.ensureBuilt]]
     * discipline: a rewritten fixture changes the fingerprint and forces
     * a rebuild; the registered stored query never re-pays the build. */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (String, String), String]
-
-  def ensureBuilt(spark: SparkSession, sfDir: String): String = {
-    val docs = graft.Tables.documents(spark, sfDir)
-    val r = docs.agg(count(lit(1)), max(col("doc_id")),
-      sum(col("n_chars"))).head()
-    val fp = s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
-    built.getOrElseUpdate((sfDir, fp), {
-      val name = s"graft_text_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
-      build(spark, docs, "text", "doc_id", name)
-      name
-    })
-  }
+  def ensureBuilt(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_text") { name =>
+      build(spark, graft.Tables.documents(spark, sfDir), "text", "doc_id",
+        name)
+    }
 }

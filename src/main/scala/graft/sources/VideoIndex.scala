@@ -17,7 +17,7 @@ import graft.multimodal.Multimodal
   *     rewrite (the [[MediaIndex]] layout with the frame dimension
   *     added).
   *
-  * Serving ([[pairs]]) runs [[Multimodal.videoPairsFromFrames]] — a
+  * Serving ([[pairs]]) runs [[Multimodal.framePairs]] — a
   * pure function of the stored rows, so answers are byte-identical to
   * the live derivation while payloads are never re-read. At 100 TB of
   * video the sidecar is 16 bytes per sampled frame vs the frames
@@ -75,7 +75,7 @@ object VideoIndex {
     // index / the default stride). Persisted so batch fingerprinting
     // for a gate or append derives AT the index's stride (see
     // [[keyframesFor]]) — a batch decoded at every=1 gated against an
-    // every=2 index silently changes match density and minFrames
+    // every=2 index silently changes match density and MinFrames
     // semantics.
     val bdf = if (maxBandDf > 0) maxBandDf else maxDf
     spark.sql(s"ALTER TABLE ${name}_vf SET TBLPROPERTIES " +
@@ -276,26 +276,52 @@ object VideoIndex {
     true
   }
 
-  /** Video near-dup pairs from the STORED digests — byte-identical to
-    * the live [[Multimodal.videoDedupPairs]] over the same corpus (the
-    * inline df discipline reuses the persisted build-time dial). */
+  /** Temporal near-dup pairs from the STORED rows — byte-identical to
+    * the live [[Multimodal.framePairs]] over the same frames (any of the
+    * four cells: `m` × `shifts`), at the persisted build-time dial; the
+    * perceptual cells read the `_bstop` sidecar (the same band stop,
+    * one aggregate less). */
   def pairs(spark: SparkSession, name: String,
-      minFrames: Int = 2): DataFrame =
-    Multimodal.videoPairsFromFrames(spark.table(s"${name}_vf"), minFrames,
-      storedMaxDf(spark, name))
+      m: Multimodal.FrameMatch = Multimodal.Exact,
+      shifts: Boolean = false): DataFrame =
+    Multimodal.framePairs(spark.table(s"${name}_vf"), m, shifts,
+      storedMaxDf(spark, name),
+      if (m == Multimodal.Exact) None else Some(spark.table(s"${name}_bstop")))
 
-  /** INCREMENTAL check — the crawl-admission shape: a fresh batch's
-    * frame digests band against the STORED corpus only, returning CROSS
-    * matches (fid, cid, matched_frames). The batch rides a BROADCAST,
-    * the stored table streams map-side through the (frame_idx, fm)
-    * equi-join — md5 equality is the frame match, so there is no
-    * verify join — and the one exchange is the (fid, cid) count,
-    * bounded by truly-matching frames. */
+  /** INCREMENTAL check — the crawl-admission shape, one gate for the four
+    * cells of [[Multimodal.framePairs]]: a fresh batch's frames match the
+    * STORED corpus only, returning CROSS matches (fid, cid,
+    * matched_frames), with `shift` = stored − fresh before
+    * matched_frames when `shifts`. A re-cut of stored material IS
+    * duplicate data, which only the shift-tolerant gate refuses; a
+    * transcoded copy is refused only by the [[Multimodal.Perceptual]]
+    * one. The batch's match rows — anti-joined on the stop sidecar
+    * (`_stop` digests or `_bstop` bands; `stop` passes it cached) — ride
+    * a BROADCAST, and the stored table streams map-side through the
+    * equi-join with the Hamming verify inline: nothing corpus-sized is
+    * shuffled. The stored scan is bucketed on media_id (= cid), and that
+    * hash partitioning serves the perceptual multi-band distinct and the
+    * count with no Exchange at all (verified r19: a repartition here
+    * adds the plan's only Exchange). */
   def pairsAgainst(spark: SparkSession, name: String,
-      freshFrames: DataFrame, minFrames: Int = 2,
-      stop: Option[DataFrame] = None): DataFrame =
-    pairsAgainstFrames(spark.table(s"${name}_vf"), freshFrames, minFrames,
-      Some(stop.getOrElse(spark.table(s"${name}_stop"))))
+      freshFrames: DataFrame, m: Multimodal.FrameMatch, shifts: Boolean,
+      stop: Option[DataFrame] = None): DataFrame = {
+    val stopKeys = stop.getOrElse(spark.table(stopTable(name, m)))
+      .select(m.keys.map(col): _*)
+    val fB = broadcast(Multimodal.matchSide(
+      Multimodal.matchRows(freshFrames, m)
+        .join(broadcast(stopKeys), m.keys, "left_anti"),
+      m, shifts, "fid", "b").localCheckpoint())
+    Multimodal.countMatches(Multimodal.matchSide(
+        Multimodal.matchRows(spark.table(s"${name}_vf"), m), m, shifts,
+        "cid", "a"),
+      fB, m, shifts, Seq("fid", "cid"), lit(true), exchange = false)
+  }
+
+  /** The stop sidecar a gate under match `m` anti-joins: `_stop`
+    * digests for [[Multimodal.Exact]], `_bstop` bands otherwise. */
+  def stopTable(name: String, m: Multimodal.FrameMatch): String =
+    name + (if (m == Multimodal.Exact) "_stop" else "_bstop")
 
   /** Driver-side cache of the tiny `_stop`/`_bstop` sidecars for a
     * long-running admission loop (r15 verdict "what's missing" #5):
@@ -389,174 +415,17 @@ object VideoIndex {
     }
   }
 
-  /** [[pairsAgainst]] over an explicit stored frame — the recompute
-    * twin's seam ([[MediaIndex.pairsAgainstFp]] discipline). */
-  def pairsAgainstFrames(stored: DataFrame, freshFrames: DataFrame,
-      minFrames: Int = 2, stop: Option[DataFrame] = None): DataFrame = {
-    val fresh0 = freshFrames
-      .select(col("media_id").as("fid"), col("frame_idx"), col("fm"))
-    val fB = broadcast(stop.fold(fresh0)(s =>
-        fresh0.join(broadcast(s.select(col("fm"))), Seq("fm"),
-          "left_anti"))
-      .localCheckpoint())
-    stored.select(col("media_id").as("cid"), col("frame_idx"), col("fm"))
-      .join(fB, Seq("frame_idx", "fm"))
-      .groupBy(col("fid"), col("cid"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-  }
-
-  /** SHIFT-TOLERANT incremental check — [[pairsAgainst]] with the
-    * [[Multimodal.videoClipDetect]] relation: a fresh video matches a
-    * stored one when ≥ `minFrames` sampled frames carry identical bytes
-    * at a CONSISTENT offset. This is the gate a training-data crawler
-    * actually wants — a re-cut of stored material IS duplicate data,
-    * and the aligned gate admits it by design. Same plan shape: batch
-    * broadcast, stored side map-side on the digest key, the shift
-    * grouping rides the same match-bounded exchange. Output:
-    * (fid, cid, shift, matched_frames), shift = stored − fresh. */
-  def clipAgainst(spark: SparkSession, name: String,
-      freshFrames: DataFrame, minFrames: Int = 2,
-      stop: Option[DataFrame] = None): DataFrame = {
-    val fB = broadcast(freshFrames
-      .select(col("media_id").as("fid"), col("frame_idx").as("ff"),
-        col("fm"))
-      .join(broadcast(stop.getOrElse(spark.table(s"${name}_stop"))
-        .select(col("fm"))), Seq("fm"), "left_anti")
-      .localCheckpoint())
-    spark.table(s"${name}_vf")
-      .select(col("media_id").as("cid"), col("frame_idx").as("cf"),
-        col("fm"))
-      .join(fB, Seq("fm"))
-      .groupBy(col("fid"), col("cid"), (col("cf") - col("ff")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-  }
-
-  /** TRANSCODE-TOLERANT pairs from the stored 5-column layout —
-    * [[Multimodal.perceptualPairsFromFrames]] over the `_vf` rows, a
-    * pure function of them (same answers as the live derivation), with
-    * the persisted maxDf dial. */
-  def pairsPerceptual(spark: SparkSession, name: String,
-      maxDist: Int = 6, minFrames: Int = 2): DataFrame =
-    Multimodal.perceptualPairsFromFrames(spark.table(s"${name}_vf"),
-      maxDist, minFrames, storedMaxDf(spark, name),
-      Some(spark.table(s"${name}_bstop"))) // same set, one agg less
-
-  /** SHIFT-TOLERANT PERCEPTUAL pairs from the stored layout — the
-    * fourth quadrant ({shift} × {perceptual}:
-    * [[Multimodal.clipPerceptualFromFrames]]) served from the same
-    * `_vf` artifact as the other three legs, with the persisted dial. */
-  def clipPerceptual(spark: SparkSession, name: String,
-      maxDist: Int = 6, minFrames: Int = 2): DataFrame =
-    Multimodal.clipPerceptualFromFrames(spark.table(s"${name}_vf"),
-      maxDist, minFrames, storedMaxDf(spark, name),
-      Some(spark.table(s"${name}_bstop"))) // same set, one agg less
-
-  /** The PERCEPTUAL crawl gate — [[pairsAgainst]]'s transcode-tolerant
-    * twin: a fresh batch's frame fingerprints band against the STORED
-    * corpus at the same frame position, Hamming-verified inline on the
-    * matched row (both codes ride it — no second corpus join), with the
-    * `_bstop` sidecar anti-joined on the broadcast fresh side so hot
-    * band values never fan out. Exchanges: the match-bounded
-    * (fid, cid, frame_idx) dedup of multi-band hits, then the count.
-    * Output: (fid, cid, matched_frames). */
-  def perceptualAgainst(spark: SparkSession, name: String,
-      freshFrames: DataFrame, maxDist: Int = 6,
-      minFrames: Int = 2, stopBands: Option[DataFrame] = None): DataFrame = {
-    val fB = broadcast(Multimodal.fpBands(
-        freshFrames.select(col("media_id"), col("frame_idx"),
-          col("f_lo"), col("f_hi")))
-      .join(broadcast(stopBands.getOrElse(spark.table(s"${name}_bstop"))),
-        Seq("bi", "bv"), "left_anti")
-      .select(col("media_id").as("fid"), col("frame_idx"), col("bi"),
-        col("bv"), col("f_lo").as("la"), col("f_hi").as("ha"))
-      .localCheckpoint())
-    Multimodal.fpBands(spark.table(s"${name}_vf")
-        .select(col("media_id"), col("frame_idx"), col("f_lo"),
-          col("f_hi")))
-      .select(col("media_id").as("cid"), col("frame_idx"), col("bi"),
-        col("bv"), col("f_lo").as("lb"), col("f_hi").as("hb"))
-      .join(fB, Seq("frame_idx", "bi", "bv"))
-      .where((expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
-        <= maxDist)
-      .select(col("fid"), col("cid"), col("frame_idx"))
-      // ZERO-exchange tail (verified r19, plans/r19/q_video_clip_
-      // perceptual_against_*): the stored scan is bucketed on media_id
-      // (= cid), and HashPartitioning(cid) satisfies BOTH the dedup's
-      // and the count's clustered distribution through the broadcast
-      // join — do NOT repartition here (measured: it adds the plan's
-      // only Exchange)
-      .distinct()
-      .groupBy(col("fid"), col("cid"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-  }
-
-  /** The fourth-quadrant crawl gate — SHIFT-TOLERANT PERCEPTUAL: a
-    * fresh batch matches stored material when ≥ `minFrames` of its
-    * frame fingerprints sit within `maxDist` of stored frames at a
-    * CONSISTENT offset — the gate that catches a copy that is BOTH
-    * transcoded and re-cut, which [[pairsAgainst]] (bytes differ),
-    * [[clipAgainst]] (bytes differ) and [[perceptualAgainst]]
-    * (positions differ) each admit. Same plan economics: fresh bands
-    * broadcast (anti-joined on `_bstop`), stored side map-side with the
-    * Hamming verify inline, match-bounded exchanges. Output:
-    * (fid, cid, shift, matched_frames), shift = stored − fresh. */
-  def clipPerceptualAgainst(spark: SparkSession, name: String,
-      freshFrames: DataFrame, maxDist: Int = 6,
-      minFrames: Int = 2, stopBands: Option[DataFrame] = None): DataFrame = {
-    val fB = broadcast(Multimodal.fpBands(
-        freshFrames.select(col("media_id"), col("frame_idx"),
-          col("f_lo"), col("f_hi")))
-      .join(broadcast(stopBands.getOrElse(spark.table(s"${name}_bstop"))),
-        Seq("bi", "bv"), "left_anti")
-      .select(col("media_id").as("fid"), col("frame_idx").as("ff"),
-        col("bi"), col("bv"), col("f_lo").as("la"), col("f_hi").as("ha"))
-      .localCheckpoint())
-    Multimodal.fpBands(spark.table(s"${name}_vf")
-        .select(col("media_id"), col("frame_idx"), col("f_lo"),
-          col("f_hi")))
-      .select(col("media_id").as("cid"), col("frame_idx").as("cf"),
-        col("bi"), col("bv"), col("f_lo").as("lb"), col("f_hi").as("hb"))
-      .join(fB, Seq("bi", "bv"))
-      .where((expr("bit_count(la ^ lb)") + expr("bit_count(ha ^ hb)"))
-        <= maxDist)
-      .select(col("fid"), col("cid"), col("ff"), col("cf"))
-      // ZERO-exchange tail via the cid bucket partitioning — see
-      // [[perceptualAgainst]]; do NOT repartition here
-      .distinct()
-      .groupBy(col("fid"), col("cid"), (col("cf") - col("ff")).as("shift"))
-      .agg(count(lit(1)).as("matched_frames"))
-      .where(col("matched_frames") >= minFrames)
-  }
-
-  /** Admit the fresh frames whose video has NO stored near-dup — the
-    * crawl gate ([[DedupIndex.dedupAgainst]]'s contract). Feed the
-    * admitted rows to [[append]]; the next batch gates against
-    * corpus ∪ batch. */
+  /** Admit the fresh frames whose video has NO stored near-dup under
+    * match `m` at aligned positions — the crawl gate
+    * ([[DedupIndex.dedupAgainst]]'s contract). The byte-exact gate
+    * admits a transcoded copy of stored material by construction; the
+    * perceptual one refuses it (`freshFrames` then carries the fp
+    * columns, [[Multimodal.videoFramesFp]]). Feed the admitted rows to
+    * [[append]]; the next batch gates against corpus ∪ batch. */
   def dedupAgainst(spark: SparkSession, name: String,
-      freshFrames: DataFrame, minFrames: Int = 2): DataFrame =
+      freshFrames: DataFrame, m: Multimodal.FrameMatch): DataFrame =
     freshFrames.join(
-      pairsAgainst(spark, name, freshFrames, minFrames)
-        .select(col("fid").as("media_id")).distinct(),
-      Seq("media_id"), "left_anti")
-
-  /** [[dedupAgainst]] with the PERCEPTUAL match semantics — the
-    * admission gate a curation pipeline actually wants for video: the
-    * byte-exact gate admits a transcoded/re-encoded copy of stored
-    * material by construction (every frame md5 differs), but a
-    * re-encode IS duplicate training data. Refuses a fresh video when
-    * ≥ `minFrames` of its frame fingerprints sit within `maxDist` of a
-    * stored video's AT THE SAME positions ([[perceptualAgainst]] — a
-    * re-cut still admits here; compose with [[clipAgainst]] when
-    * re-cuts must be refused too). `freshFrames` must carry the fp
-    * columns ([[Multimodal.videoFramesFp]]). */
-  def dedupAgainstPerceptual(spark: SparkSession, name: String,
-      freshFrames: DataFrame, maxDist: Int = 6,
-      minFrames: Int = 2): DataFrame =
-    freshFrames.join(
-      perceptualAgainst(spark, name, freshFrames, maxDist, minFrames)
+      pairsAgainst(spark, name, freshFrames, m, shifts = false)
         .select(col("fid").as("media_id")).distinct(),
       Seq("media_id"), "left_anti")
 
@@ -603,81 +472,50 @@ object VideoIndex {
     * discipline): full = corpus ∪ the three-regime twin table (matching
     * q_video_dedup's live input), corpus-only = the stored side of the
     * crawl-admission query. */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (String, String, String), String]
-
-  private def corpusFp(spark: SparkSession, sfDir: String): String = {
-    val r = graft.Tables.documents(spark, sfDir)
-      .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars"))).head()
-    s"${r.get(0)}|${r.get(1)}|${r.get(2)}"
-  }
-
-  def ensureBuiltVideo(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video"), {
-      val name = s"graft_media_vid_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideo(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vid") { name =>
       build(spark, Multimodal.videoFramesFp(
         Multimodal.videoTable(spark, sfDir).unionByName(
-          Multimodal.videoTwinTable(spark, sfDir, frameBytes = 32))), name)
-      name
-    })
-  }
+          Multimodal.videoTwinTable(spark, sfDir))), name)
+    }
 
   /** Corpus ∪ the clip twin (matching q_video_clip_detect's live
     * input) — the same stored layout serves BOTH video operators:
-    * [[pairs]] (aligned dedup) and [[Multimodal.clipPairsFromFrames]]
-    * (shift-tolerant) are each pure functions of the `_vf` rows. */
-  def ensureBuiltVideoClip(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_clip"), {
-      val name = s"graft_media_vidk_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+    * [[pairs]] aligned and shift-tolerant, each a pure function of the
+    * `_vf` rows. */
+  def ensureBuiltVideoClip(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vidk") { name =>
       build(spark, Multimodal.videoFramesFp(
         Multimodal.videoTable(spark, sfDir).unionByName(
-          Multimodal.videoClipTwinTable(spark, sfDir, frameBytes = 32))),
+          Multimodal.videoClipTwinTable(spark, sfDir))),
         name)
-      name
-    })
-  }
+    }
 
   /** Corpus ∪ the perceptual (re-encode) twin table — matching
     * q_video_dedup_perceptual's live input; the stored rows carry the
-    * 5-column fp layout, so [[pairsPerceptual]] is a pure function of
-    * them. */
-  def ensureBuiltVideoPerc(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_perc"), {
-      val name = s"graft_media_vidp_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+    * 5-column fp layout, so [[pairs]] serves the perceptual cells as a
+    * pure function of them. */
+  def ensureBuiltVideoPerc(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vidp") { name =>
       build(spark, Multimodal.videoFramesFp(
         Multimodal.videoTable(spark, sfDir).unionByName(
-          Multimodal.videoPerceptualTwinTable(spark, sfDir,
-            frameBytes = 32))), name)
-      name
-    })
-  }
+          Multimodal.videoPerceptualTwinTable(spark, sfDir))), name)
+    }
 
   /** Corpus ∪ the gain+re-cut twin — matching q_video_clip_perceptual's
     * live input. */
-  def ensureBuiltVideoClipPerc(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_clipperc"), {
-      val name = s"graft_media_vidcp_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoClipPerc(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vidcp") { name =>
       build(spark, Multimodal.videoFramesFp(
         Multimodal.videoTable(spark, sfDir).unionByName(
-          Multimodal.videoClipPerceptualTwinTable(spark, sfDir,
-            frameBytes = 32))), name)
-      name
-    })
-  }
+          Multimodal.videoClipPerceptualTwinTable(spark, sfDir))), name)
+    }
 
-  def ensureBuiltVideoCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_corpus"), {
-      val name = s"graft_media_vidc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vidc") { name =>
       build(spark,
         Multimodal.videoFramesFp(Multimodal.videoTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 
   /** AUDIO corpus ∪ the two-regime excerpt twin, segmented
     * ([[Multimodal.audioSegmentsFp]]) — the index is modality-agnostic
@@ -686,55 +524,39 @@ object VideoIndex {
     * and gates are pure functions of the persisted rows whether a row's
     * grid unit is a sampled video frame or a PCM segment. Matches
     * q_audio_clip_detect's live input. */
-  def ensureBuiltAudioSeg(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "audio_seg"), {
-      val name = s"graft_media_aus_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltAudioSeg(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_aus") { name =>
       build(spark, Multimodal.audioSegmentsFp(
         Multimodal.audioTable(spark, sfDir).unionByName(
           Multimodal.audioExcerptTable(spark, sfDir))), name)
-      name
-    })
-  }
+    }
 
   /** Audio corpus only, segmented — the stored side of the excerpt
     * crawl gates. */
-  def ensureBuiltAudioSegCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "audio_seg_corpus"), {
-      val name = s"graft_media_ausc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltAudioSegCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_ausc") { name =>
       build(spark, Multimodal.audioSegmentsFp(
         Multimodal.audioTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 
   /** IMAGE corpus ∪ the two-regime crop twin, as raster rows
     * ([[Multimodal.imageRowsFp]]) — the third modality riding the
     * temporal index (the "frame" is a raster row, shift is the
     * vertical offset). Matches q_image_crop_detect's live input. */
-  def ensureBuiltImageRows(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "image_rows"), {
-      val name = s"graft_media_imr_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltImageRows(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_imr") { name =>
       build(spark, Multimodal.imageRowsFp(
         Multimodal.imageTable(spark, sfDir).unionByName(
           Multimodal.imageCropTable(spark, sfDir))), name)
-      name
-    })
-  }
+    }
 
   /** Image corpus only, as raster rows — the stored side of the crop
     * crawl gates. */
-  def ensureBuiltImageRowsCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "image_rows_corpus"), {
-      val name = s"graft_media_imrc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltImageRowsCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_imrc") { name =>
       build(spark, Multimodal.imageRowsFp(
         Multimodal.imageTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 
   /** IMAGE corpus ∪ the 2D-crop twin, as 8×1-px BLOCKS
     * ([[Multimodal.imageBlocksFp]]) — the fourth modality grid on the
@@ -742,49 +564,37 @@ object VideoIndex {
     * `row · 2^20 + col` index makes a (row_shift, col_shift)
     * consistency group one subtraction on the unchanged machinery.
     * Matches q_image_crop2d_detect's live input. */
-  def ensureBuiltImageBlocks(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "image_blocks"), {
-      val name = s"graft_media_imb_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltImageBlocks(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_imb") { name =>
       build(spark, Multimodal.imageBlocksFp(
         Multimodal.imageTable(spark, sfDir).unionByName(
           Multimodal.imageCrop2dTable(spark, sfDir))), name)
-      name
-    })
-  }
+    }
 
   /** REAL-CODEC keyframe corpus ∪ the cross-codec (BMP re-wrap) twin —
     * decoded-keyframe digests through [[Multimodal.videoKeyframesFp]]:
     * the container parse + `javax.imageio` decode run once here; every
     * serve path reads 5-column rows. Matches q_video_keyframe_dedup's
     * live input. */
-  def ensureBuiltVideoKeyframes(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_kf"), {
-      val name = s"graft_media_vkf_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoKeyframes(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vkf") { name =>
       build(spark, Multimodal.videoKeyframesFp(
         Multimodal.videoKeyframeTable(spark, sfDir).unionByName(
           Multimodal.videoKeyframeTwinTable(spark, sfDir))), name,
         kfEvery = 2)
-      name
-    })
-  }
+    }
 
   /** Keyframe corpus ∪ the RE-CUT twin — matching
     * q_video_keyframe_clip's live input, so the shift-tolerant clip
     * stage serves from stored decoded-keyframe digests with the
     * container parse + decode paid once. */
-  def ensureBuiltVideoKeyframesClip(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_kf_clip"), {
-      val name = s"graft_media_vkfc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoKeyframesClip(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vkfc") { name =>
       build(spark, Multimodal.videoKeyframesFp(
         Multimodal.videoKeyframeTable(spark, sfDir).unionByName(
           Multimodal.videoKeyframeClipTwinTable(spark, sfDir))), name,
         kfEvery = 2)
-      name
-    })
-  }
+    }
 
   /** Keyframe corpus ∪ the LOSSY-TRANSCODE twins (gain re-encode +
     * low-bit quantization) — matching q_video_keyframe_perceptual's
@@ -792,39 +602,27 @@ object VideoIndex {
     * frame (the byte-exact keyframe leg is blind) while the gradient
     * fingerprint survives, and the stored 5-column rows serve the
     * perceptual stage as a pure function. */
-  def ensureBuiltVideoKeyframesPerc(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_kf_perc"), {
-      val name = s"graft_media_vkfp_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoKeyframesPerc(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vkfp") { name =>
       build(spark, Multimodal.videoKeyframesFp(
         Multimodal.videoKeyframeTable(spark, sfDir).unionByName(
           Multimodal.videoKeyframePerceptualTwinTable(spark, sfDir))), name,
         kfEvery = 2)
-      name
-    })
-  }
+    }
 
   /** Keyframe corpus only — the stored side of the keyframe crawl
     * gates (the ensureBuilt*Corpus discipline). */
-  def ensureBuiltVideoKeyframesCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "video_kf_corpus"), {
-      val name = s"graft_media_vkfo_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltVideoKeyframesCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_vkfo") { name =>
       build(spark, Multimodal.videoKeyframesFp(
         Multimodal.videoKeyframeTable(spark, sfDir)), name, kfEvery = 2)
-      name
-    })
-  }
+    }
 
   /** Image corpus only, as blocks — the stored side of the 2D-crop
     * crawl gate. */
-  def ensureBuiltImageBlocksCorpus(spark: SparkSession, sfDir: String): String = {
-    val fp = corpusFp(spark, sfDir)
-    built.getOrElseUpdate((sfDir, fp, "image_blocks_corpus"), {
-      val name = s"graft_media_imbc_${Bucketing.nameSuffix(sfDir + "|" + fp)}"
+  def ensureBuiltImageBlocksCorpus(spark: SparkSession, sfDir: String): String =
+    Bucketing.memoBuilt(spark, sfDir, "graft_media_imbc") { name =>
       build(spark, Multimodal.imageBlocksFp(
         Multimodal.imageTable(spark, sfDir)), name)
-      name
-    })
-  }
+    }
 }

@@ -681,12 +681,12 @@ object Streams {
   /** [[streamMediaDedupIngest]]'s VIDEO twin — the crawl-admission
     * loop for the frame-digest family: each micro-batch derives its
     * sampled frame digests, gates through [[graft.sources.VideoIndex
-    * .dedupAgainst]] (temporally-aligned cross match against the STORED
+    * .dedupAgainst]] byte-exactly (aligned cross match against the STORED
     * frames — the corpus is never re-read), and appends ONLY the
     * admitted rows. Same per-batch refresh + materialize-before-append
     * discipline as the siblings. */
   def streamVideoDedupIngest(spark: SparkSession, sfDir: String,
-      indexName: String, pred: Column, minFrames: Int = 2,
+      indexName: String, pred: Column,
       checkpoint: Option[String] = None): Unit = {
     val s = tuned(spark)
     val fresh = documentsStream(s, sfDir).where(pred)
@@ -699,8 +699,8 @@ object Streams {
           .foreach(bs.catalog.refreshTable)
         val frames = graft.multimodal.Multimodal.videoFrames(
           graft.multimodal.Multimodal.videoTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainst(
-          bs, indexName, frames, minFrames).localCheckpoint()
+        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
+          frames, graft.multimodal.Multimodal.Exact).localCheckpoint()
         graft.sources.VideoIndex.append(bs, indexName, admitted)
         ()
       }
@@ -724,7 +724,7 @@ object Streams {
     * re-wrap of material admitted in an earlier batch refuses here —
     * the decoded-bytes invariant at stream time. */
   def streamVideoKeyframeIngest(spark: SparkSession, sfDir: String,
-      indexName: String, pred: Column, minFrames: Int = 2,
+      indexName: String, pred: Column,
       checkpoint: Option[String] = None): Unit = {
     val s = tuned(spark)
     val fresh = documentsStream(s, sfDir).where(pred)
@@ -742,8 +742,8 @@ object Streams {
         // silently change match density against the stored rows
         val frames = graft.sources.VideoIndex.keyframesFor(bs, indexName,
           graft.multimodal.Multimodal.videoKeyframeTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainst(
-          bs, indexName, frames, minFrames).localCheckpoint()
+        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
+          frames, graft.multimodal.Multimodal.Exact).localCheckpoint()
         graft.sources.VideoIndex.append(bs, indexName, admitted)
         ()
       }
@@ -761,7 +761,7 @@ object Streams {
     * that refuses TRANSCODED copies of stored material, not just
     * byte-identical ones: each micro-batch derives the 5-column frame
     * fingerprints once ([[graft.multimodal.Multimodal.videoFramesFp]]),
-    * gates through [[graft.sources.VideoIndex.dedupAgainstPerceptual]]
+    * gates through [[graft.sources.VideoIndex.dedupAgainst]] perceptually
     * (frame-level banding + Hamming against the stored corpus, the
     * `_bstop` sidecar anti-joined), and appends only the admitted
     * rows — md5, fp, df-log and band-log all land in the same insert,
@@ -769,7 +769,7 @@ object Streams {
     * discipline current. */
   def streamVideoPerceptualIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column, maxDist: Int = 6,
-      minFrames: Int = 2, checkpoint: Option[String] = None): Unit = {
+      checkpoint: Option[String] = None): Unit = {
     val s = tuned(spark)
     val fresh = documentsStream(s, sfDir).where(pred)
     val q = fresh.writeStream
@@ -782,8 +782,9 @@ object Streams {
           .foreach(bs.catalog.refreshTable)
         val frames = graft.multimodal.Multimodal.videoFramesFp(
           graft.multimodal.Multimodal.videoTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainstPerceptual(
-          bs, indexName, frames, maxDist, minFrames).localCheckpoint()
+        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
+          frames, graft.multimodal.Multimodal.Perceptual(maxDist))
+          .localCheckpoint()
         graft.sources.VideoIndex.append(bs, indexName, admitted)
         ()
       }

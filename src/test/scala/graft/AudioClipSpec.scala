@@ -45,8 +45,8 @@ class AudioClipSpec extends AnyFunSuite {
   test("an embedded excerpt is found at one consistent shift; the " +
       "aligned whole-stream dedup correctly refuses it") {
     val m = media(wav(1L, base), wav(2L, excerpt))
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.audioSegmentsFp(m), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.audioSegmentsFp(m), Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got == Set((1L, 2L, 2L, 4L)),
@@ -62,9 +62,9 @@ class AudioClipSpec extends AnyFunSuite {
     // singleton shifts, all below minFrames
     val reordered = Seq(5, 2, 4, 3).flatMap(s =>
       base.slice(s * Seg, (s + 1) * Seg)).toArray
-    val got = Multimodal.clipPairsFromFrames(
+    val got = Multimodal.framePairs(
       Multimodal.audioSegmentsFp(media(wav(1L, base), wav(9L, reordered))),
-      minFrames = 2)
+      Multimodal.Exact, shifts = true)
     assert(got.isEmpty)
   }
 
@@ -72,10 +72,10 @@ class AudioClipSpec extends AnyFunSuite {
       "by the perceptual leg at the same consistent shift") {
     val m = media(wav(1L, base), wav(3L, gain(excerpt)))
     val segs = Multimodal.audioSegmentsFp(m).localCheckpoint()
-    assert(Multimodal.clipPairsFromFrames(segs, minFrames = 2).isEmpty,
+    assert(Multimodal.framePairs(segs, Multimodal.Exact, shifts = true).isEmpty,
       "every scaled sample byte differs — md5 equality must refuse")
-    val perc = Multimodal.clipPerceptualFromFrames(segs, maxDist = 6,
-      minFrames = 2)
+    val perc = Multimodal.framePairs(segs, Multimodal.Perceptual(maxDist = 6),
+      shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(perc.contains((1L, 3L, 2L)),
@@ -89,12 +89,12 @@ class AudioClipSpec extends AnyFunSuite {
     // scaladoc states); the overlapping grid buys it back
     val offExcerpt = base.slice(48, 176) // 128 bytes = 4 own segments
     val m = media(wav(1L, base), wav(7L, offExcerpt))
-    assert(Multimodal.clipPairsFromFrames(
-      Multimodal.audioSegmentsFp(m), minFrames = 2).isEmpty,
+    assert(Multimodal.framePairs(
+      Multimodal.audioSegmentsFp(m), Multimodal.Exact, shifts = true).isEmpty,
       "detection granularity IS the grid: a mid-segment offset must " +
         "miss the aligned default")
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.audioSegmentsFp(m, hop = 16), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.audioSegmentsFp(m, hop = 16), Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got == Set((1L, 7L, 3L, 7L)),
@@ -107,25 +107,26 @@ class AudioClipSpec extends AnyFunSuite {
     VideoIndex.build(spark, Multimodal.audioSegmentsFp(corpus),
       "graft_audio_clip_spec")
     // stored exact serve == live derivation
-    val live = Multimodal.clipPairsFromFrames(
-      Multimodal.audioSegmentsFp(corpus), minFrames = 2)
+    val live = Multimodal.framePairs(
+      Multimodal.audioSegmentsFp(corpus), Multimodal.Exact, shifts = true)
       .collect().map(_.toSeq).toSet
-    val stored = Multimodal.clipPairsFromFrames(
-      spark.table("graft_audio_clip_spec_vf"), minFrames = 2)
+    val stored = Multimodal.framePairs(
+      spark.table("graft_audio_clip_spec_vf"), Multimodal.Exact, shifts = true)
       .collect().map(_.toSeq).toSet
     assert(stored == live)
     // the exact gate finds the exact excerpt, misses the gain excerpt
     val fresh = Multimodal.audioSegmentsFp(
       media(wav(100L, excerpt), wav(101L, gain(excerpt))))
       .localCheckpoint()
-    val exactHits = VideoIndex.clipAgainst(spark, "graft_audio_clip_spec",
-      fresh, minFrames = 2)
+    val exactHits = VideoIndex.pairsAgainst(spark, "graft_audio_clip_spec",
+      fresh, Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(exactHits == Set((100L, 1L, 2L)))
     // the perceptual gate catches BOTH regimes at the same shift
-    val percHits = VideoIndex.clipPerceptualAgainst(spark,
-      "graft_audio_clip_spec", fresh, maxDist = 6, minFrames = 2)
+    val percHits = VideoIndex.pairsAgainst(spark,
+      "graft_audio_clip_spec", fresh, Multimodal.Perceptual(maxDist = 6),
+      shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(percHits.contains((100L, 1L, 2L)) &&

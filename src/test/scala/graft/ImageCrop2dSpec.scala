@@ -47,15 +47,15 @@ class ImageCrop2dSpec extends AnyFunSuite {
       "both blind to it") {
     // rows 1..4, right half → an honest 8-px-wide PNG
     val m = media(png(1L, base), png(2L, rightHalf(1, 5), widthPx = 8))
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.imageBlocksFp(m), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.imageBlocksFp(m), Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got == Set((1L, 2L, Stride + 1L, 4L)),
       "4 crop blocks must match base blocks (gy+1, 1) at packed shift " +
         "2^20 (one row) + 1 (one column)")
-    assert(Multimodal.clipPairsFromFrames(
-        Multimodal.imageRowsFp(m), minFrames = 2).isEmpty,
+    assert(Multimodal.framePairs(
+        Multimodal.imageRowsFp(m), Multimodal.Exact, shifts = true).isEmpty,
       "the 24-byte cropped rows reflow under the row grid's fixed " +
         "48-byte pitch — which is why the block grid exists")
     assert(Multimodal.imageDedupPairs(m).isEmpty,
@@ -65,8 +65,8 @@ class ImageCrop2dSpec extends AnyFunSuite {
   test("a pure horizontal crop (every row, right half) lands at packed " +
       "shift 1 — a 0-row, 1-column offset") {
     val m = media(png(1L, base), png(3L, rightHalf(0, 10), widthPx = 8))
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.imageBlocksFp(m), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.imageBlocksFp(m), Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got == Set((1L, 3L, 1L, 10L)))
@@ -90,17 +90,18 @@ class ImageCrop2dSpec extends AnyFunSuite {
       png(4L, px(480).map(b => (b ^ 0x2a).toByte)))
     VideoIndex.build(spark, Multimodal.imageBlocksFp(corpus),
       "graft_image_crop2d_spec")
-    val live = Multimodal.clipPairsFromFrames(
-      Multimodal.imageBlocksFp(corpus), minFrames = 2)
+    val live = Multimodal.framePairs(
+      Multimodal.imageBlocksFp(corpus), Multimodal.Exact, shifts = true)
       .collect().map(_.toSeq).toSet
-    val stored = Multimodal.clipPairsFromFrames(
-      spark.table("graft_image_crop2d_spec_vf"), minFrames = 2)
+    val stored = Multimodal.framePairs(
+      spark.table("graft_image_crop2d_spec_vf"), Multimodal.Exact,
+      shifts = true)
       .collect().map(_.toSeq).toSet
     assert(stored == live)
     val fresh = Multimodal.imageBlocksFp(
       media(png(100L, rightHalf(1, 5), widthPx = 8)))
-    val hits = VideoIndex.clipAgainst(spark, "graft_image_crop2d_spec",
-      fresh, minFrames = 2)
+    val hits = VideoIndex.pairsAgainst(spark, "graft_image_crop2d_spec",
+      fresh, Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(hits == Set((100L, 1L, Stride + 1L)),
@@ -117,15 +118,16 @@ class ImageCrop2dSpec extends AnyFunSuite {
     val unaligned = (1 to 5).flatMap(ri =>
       base.slice(ri * Row + off, ri * Row + off + Blk)).toArray
     val m = media(png(1L, base), png(5L, unaligned, widthPx = 8))
-    assert(Multimodal.clipPairsFromFrames(
-        Multimodal.imageBlocksFp(m), minFrames = 2).isEmpty,
+    assert(Multimodal.framePairs(
+        Multimodal.imageBlocksFp(m), Multimodal.Exact, shifts = true).isEmpty,
       "the aligned grid must be blind to a phase-3 crop")
     // hop 1: the corpus side carries every column phase; packed column
     // ordinals are startPx (hop = 1), so the crop (aligned within its
     // own 8-px raster: ordinals 0,1,..,7 per row... its blocks start
     // at px 0 only at width 8) matches at shift = (1 row, 3 px)
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.imageBlocksFp(m, colHopPx = 1), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.imageBlocksFp(m, colHopPx = 1), Multimodal.Exact,
+      shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(got.contains((1L, 5L, Stride + 3L)),
@@ -138,8 +140,8 @@ class ImageCrop2dSpec extends AnyFunSuite {
     assert(VideoIndex.storedHop(spark, "graft_image_crop2d_hop") == 1)
     val fresh = VideoIndex.blocksFor(spark, "graft_image_crop2d_hop",
       media(png(200L, unaligned, widthPx = 8)))
-    val hits = VideoIndex.clipAgainst(spark, "graft_image_crop2d_hop",
-      fresh, minFrames = 2)
+    val hits = VideoIndex.pairsAgainst(spark, "graft_image_crop2d_hop",
+      fresh, Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(hits.contains((200L, 1L, Stride + 3L)),

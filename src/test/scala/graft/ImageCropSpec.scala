@@ -39,8 +39,8 @@ class ImageCropSpec extends AnyFunSuite {
   test("a vertical crop is found at one consistent row offset; the " +
       "whole-image dHash is blind to it") {
     val m = media(png(1L, base), png(2L, crop))
-    val got = Multimodal.clipPairsFromFrames(
-      Multimodal.imageRowsFp(m), minFrames = 2)
+    val got = Multimodal.framePairs(
+      Multimodal.imageRowsFp(m), Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got == Set((1L, 2L, 1L, 4L)),
@@ -54,10 +54,10 @@ class ImageCropSpec extends AnyFunSuite {
       "the perceptual leg at distance 0") {
     val m = media(png(1L, base), png(3L, brighten(crop)))
     val rows = Multimodal.imageRowsFp(m).localCheckpoint()
-    assert(Multimodal.clipPairsFromFrames(rows, minFrames = 2).isEmpty,
+    assert(Multimodal.framePairs(rows, Multimodal.Exact, shifts = true).isEmpty,
       "every brightened byte differs — md5 equality must refuse")
-    val perc = Multimodal.clipPerceptualFromFrames(rows, maxDist = 0,
-      minFrames = 2)
+    val perc = Multimodal.framePairs(rows, Multimodal.Perceptual(maxDist = 0),
+      shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(perc.contains((1L, 3L, 1L)),
@@ -71,23 +71,24 @@ class ImageCropSpec extends AnyFunSuite {
       png(4L, px(480).map(b => (b ^ 0x2a).toByte)))
     VideoIndex.build(spark, Multimodal.imageRowsFp(corpus),
       "graft_image_crop_spec")
-    val live = Multimodal.clipPairsFromFrames(
-      Multimodal.imageRowsFp(corpus), minFrames = 2)
+    val live = Multimodal.framePairs(
+      Multimodal.imageRowsFp(corpus), Multimodal.Exact, shifts = true)
       .collect().map(_.toSeq).toSet
-    val stored = Multimodal.clipPairsFromFrames(
-      spark.table("graft_image_crop_spec_vf"), minFrames = 2)
+    val stored = Multimodal.framePairs(
+      spark.table("graft_image_crop_spec_vf"), Multimodal.Exact, shifts = true)
       .collect().map(_.toSeq).toSet
     assert(stored == live)
     val fresh = Multimodal.imageRowsFp(
       media(png(100L, crop), png(101L, brighten(crop))))
       .localCheckpoint()
-    val exactHits = VideoIndex.clipAgainst(spark, "graft_image_crop_spec",
-      fresh, minFrames = 2)
+    val exactHits = VideoIndex.pairsAgainst(spark, "graft_image_crop_spec",
+      fresh, Multimodal.Exact, shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(exactHits == Set((100L, 1L, 1L)))
-    val percHits = VideoIndex.clipPerceptualAgainst(spark,
-      "graft_image_crop_spec", fresh, maxDist = 6, minFrames = 2)
+    val percHits = VideoIndex.pairsAgainst(spark,
+      "graft_image_crop_spec", fresh, Multimodal.Perceptual(maxDist = 6),
+      shifts = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(percHits.contains((100L, 1L, 1L)) &&

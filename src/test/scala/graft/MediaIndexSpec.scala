@@ -34,7 +34,7 @@ class MediaIndexSpec extends AnyFunSuite {
       "graft_media_spec_aud")
     val stored = rows(MediaIndex.pairs(spark, "graft_media_spec_aud",
       maxDist = 6))
-    val live = rows(Multimodal.audioDedupPairs(media, maxDist = 6))
+    val live = rows(Multimodal.audioDedupPairs(media))
     assert(stored == live && stored.nonEmpty)
   }
 
@@ -53,7 +53,7 @@ class MediaIndexSpec extends AnyFunSuite {
       Multimodal.audioDHash(batch))
     val after = rows(MediaIndex.pairs(spark, "graft_media_spec_app",
       maxDist = 6))
-    val full = rows(Multimodal.audioDedupPairs(media, maxDist = 6))
+    val full = rows(Multimodal.audioDedupPairs(media))
     assert(after == full && (after -- before).nonEmpty)
   }
 
@@ -103,7 +103,7 @@ class MediaIndexSpec extends AnyFunSuite {
     // truth: the live banded pipeline over corpus ∪ fresh, restricted
     // to CROSS pairs (fresh ids sit at +1000000)
     val truth = rows(Multimodal.audioDedupPairs(
-        corpus.unionByName(fresh), maxDist = 6))
+        corpus.unionByName(fresh)))
       .map(r => (r.head.asInstanceOf[Long], r(1).asInstanceOf[Long],
         r(2).asInstanceOf[Long]))
       .filter(p => (p._1 >= 1000000L) != (p._2 >= 1000000L))

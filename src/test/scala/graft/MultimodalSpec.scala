@@ -241,7 +241,7 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MediaRow(1L, Multimodal.encodeWav(base.getBytes("UTF-8"))),
       Multimodal.MediaRow(2L, Multimodal.encodeWav(scaled)),
       Multimodal.MediaRow(3L, Multimodal.encodeWav(anti.getBytes("UTF-8"))))
-    val pairs = Multimodal.audioDedupPairs(rows.toDF(), maxDist = 6)
+    val pairs = Multimodal.audioDedupPairs(rows.toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.toSeq === Seq((1L, 2L, 0L)))
   }
@@ -287,7 +287,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(expected.exists { case (a, b, _) => fps(a) != fps(b) },
       s"mutated block must land within maxDist of base: " +
         s"dist=${dist(fps(1L), fps(6L))}")
-    val got = Multimodal.audioDedupPairs(rows.toDF(), maxDist = 6)
+    val got = Multimodal.audioDedupPairs(rows.toDF())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected,
       s"only-got=${got -- expected} only-expected=${expected -- got}")
@@ -295,9 +295,8 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("video dedup: verbatim matches all frames, edited copy pays exactly its one edited frame, re-cut refused") {
     val media = Multimodal.videoTable(spark, sf0001)
-      .unionByName(Multimodal.videoTwinTable(spark, sf0001, frameBytes = 32))
-    val pairs = Multimodal.videoDedupPairs(media, frameBytes = 32,
-      every = 2, minFrames = 2).collect()
+      .unionByName(Multimodal.videoTwinTable(spark, sf0001))
+    val pairs = Multimodal.videoDedupPairs(media, every = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byPair = pairs.map(p => (p._1, p._2) -> p._3).toMap
     // verbatim twins: matched = the doc's full sampled frame count
@@ -339,8 +338,7 @@ class MultimodalSpec extends AnyFunSuite {
         .where(pmod(col("media_id"), lit(4L)) === 1L)
         .select((col("media_id") + lit(5000000L)).as("media_id"),
           col("content")))
-    val by3 = Multimodal.videoDedupPairs(media3, frameBytes = 32,
-      every = 2, minFrames = 2).collect()
+    val by3 = Multimodal.videoDedupPairs(media3, every = 2).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     verbatimable.foreach { case (d, n) =>
       val sc = sampled(n)
@@ -354,9 +352,8 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("clip detect finds a one-stride re-cut at shift 2; aligned dedup refuses it") {
     val media = Multimodal.videoTable(spark, sf0001).unionByName(
-      Multimodal.videoClipTwinTable(spark, sf0001, frameBytes = 32))
-    val clips = Multimodal.videoClipDetect(media, frameBytes = 32,
-      every = 2, minFrames = 2).collect()
+      Multimodal.videoClipTwinTable(spark, sf0001))
+    val clips = Multimodal.videoClipDetect(media, every = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // every clip twin is found against its own original, always at the
     // consistent shift of +2 sampled frames (original leads the re-cut)
@@ -367,8 +364,7 @@ class MultimodalSpec extends AnyFunSuite {
         s"clip twin must surface at shift 2 with >= 2 frames: $p")
     }
     // the aligned dedup refuses exactly these pairs — complementarity
-    val aligned = Multimodal.videoDedupPairs(media, frameBytes = 32,
-      every = 2, minFrames = 2).collect()
+    val aligned = Multimodal.videoDedupPairs(media, every = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(!aligned.exists(p => p._2 == p._1 + 4000000L),
       "a one-stride re-cut must not align-match its original")
@@ -376,9 +372,9 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("perceptual video dedup: gain shift caught, noise caught, re-cut refused, md5 family blind to re-encodes") {
     val media = Multimodal.videoTable(spark, sf0001).unionByName(
-      Multimodal.videoPerceptualTwinTable(spark, sf0001, frameBytes = 32))
-    val pairs = Multimodal.videoPerceptualPairs(media, frameBytes = 32,
-      every = 2, maxDist = 6, minFrames = 2).collect()
+      Multimodal.videoPerceptualTwinTable(spark, sf0001))
+    val pairs = Multimodal.videoPerceptualPairs(media, every = 2,
+      maxDist = 6).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byPair = pairs.map(p => (p._1, p._2) -> p._3).toMap
     val docs = graft.Tables.documents(spark, sf0001)
@@ -408,8 +404,7 @@ class MultimodalSpec extends AnyFunSuite {
       "a re-cut must not align-match its original perceptually")
     // and the md5 family is BLIND to both re-encode regimes — the gap
     // the perceptual leg exists to close (r14 verdict top_next)
-    val md5Pairs = Multimodal.videoDedupPairs(media, frameBytes = 32,
-      every = 2, minFrames = 2).collect()
+    val md5Pairs = Multimodal.videoDedupPairs(media, every = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(!md5Pairs.exists(p =>
       p._2 >= 5000000L && p._2 < 7000000L && p._1 == p._2 - 5000000L
@@ -437,14 +432,14 @@ class MultimodalSpec extends AnyFunSuite {
         (1L, 4L, "b1", 65536L * 41 + 41, 65536L * 43 + 43),
         (2L, 4L, "b2", 65536L * 41 + 41, 65536L * 43 + 43))
     val df = frames.toDF("media_id", "frame_idx", "fm", "f_lo", "f_hi")
-    val loose = Multimodal.perceptualPairsFromFrames(df, maxDist = 0,
-      minFrames = 2, maxDf = 10000).collect()
+    val loose = Multimodal.framePairs(df, Multimodal.Perceptual(maxDist = 0),
+      shifts = false, maxDf = 10000).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(loose.length == 28,
       s"without the dial every pair of the 8 matches on the hot frames: " +
         s"${loose.length}")
-    val strict = Multimodal.perceptualPairsFromFrames(df, maxDist = 0,
-      minFrames = 2, maxDf = 5).collect()
+    val strict = Multimodal.framePairs(df, Multimodal.Perceptual(maxDist = 0),
+      shifts = false, maxDf = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(strict.toSeq == Seq((1L, 2L, 2L)),
       s"only the genuine pair at its 2 content frames: ${strict.toSeq}")
@@ -452,8 +447,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("fourth quadrant: a transcoded re-cut is caught ONLY by shift-tolerant perceptual detection") {
     val media = Multimodal.videoTable(spark, sf0001).unionByName(
-      Multimodal.videoClipPerceptualTwinTable(spark, sf0001,
-        frameBytes = 32))
+      Multimodal.videoClipPerceptualTwinTable(spark, sf0001))
     val q4 = Multimodal.videoClipPerceptual(media).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val longEnough = graft.Tables.documents(spark, sf0001)
@@ -504,8 +498,8 @@ class MultimodalSpec extends AnyFunSuite {
       "decoded-keyframe fingerprints must be codec-independent")
     assert(byId(1L).map(_._2).toSet == Set(0L, 2L),
       "every 2nd keyframe sampled; the 12-byte tail carries none")
-    val pairs = Multimodal.videoPairsFromFrames(
-      Multimodal.videoKeyframesFp(m), minFrames = 2)
+    val pairs = Multimodal.framePairs(
+      Multimodal.videoKeyframesFp(m), Multimodal.Exact, shifts = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.toSet == Set((1L, 2L, 2L)),
       "the cross-codec re-wrap is a verbatim dup on all sampled keyframes")
@@ -528,7 +522,7 @@ class MultimodalSpec extends AnyFunSuite {
       .toDF()
     val frames = Multimodal.videoKeyframesFp(m).localCheckpoint()
     // byte-exact: every decoded keyframe's md5 differs → NO pairs
-    val exact = Multimodal.videoPairsFromFrames(frames, minFrames = 2)
+    val exact = Multimodal.framePairs(frames, Multimodal.Exact, shifts = false)
       .collect()
     assert(exact.isEmpty,
       s"the byte-exact keyframe leg must be blind to both lossy twins: " +
@@ -539,8 +533,8 @@ class MultimodalSpec extends AnyFunSuite {
     // this fixture's strictly-varied bytes (consecutive deltas ≥ 4 in
     // magnitude after mod wrap never quantize equal... asserted
     // empirically below as ≥ the gain pair, never asserted blind)
-    val perc = Multimodal.perceptualPairsFromFrames(frames,
-      maxDist = 6, minFrames = 2)
+    val perc = Multimodal.framePairs(frames,
+      Multimodal.Perceptual(maxDist = 6), shifts = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(perc.toSet.contains((1L, 2L, 2L)),
       s"the gain re-encode must pair at distance 0 on both sampled " +
@@ -567,8 +561,7 @@ class MultimodalSpec extends AnyFunSuite {
     // perceptual whole-stream leg: the registered query's exact shape —
     // most twins land within the measured maxDist = 6 dial (sf0.01:
     // 122/123, median 1; outliers are honestly refused)
-    val pairs = Multimodal.audioDedupPairs(corpus.unionByName(twins),
-        maxDist = 6)
+    val pairs = Multimodal.audioDedupPairs(corpus.unionByName(twins))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val slice = Tables.documents(spark, sf0001)
       .where(col("doc_id") % 4 === 1)

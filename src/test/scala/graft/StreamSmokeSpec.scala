@@ -500,7 +500,8 @@ class StreamSmokeSpec extends AnyFunSuite {
       "graft_vperc_gate",
       graft.multimodal.Multimodal.videoFramesFp(
         graft.multimodal.Multimodal.videoTableOf(
-          Seq((950002L, tA1)).toDF("doc_id", "text"))))
+          Seq((950002L, tA1)).toDF("doc_id", "text"))),
+      graft.multimodal.Multimodal.Exact, shifts = false)
     assert(alignedMatches.count() == 0L,
       "md5 equality must not see the transcode")
   }

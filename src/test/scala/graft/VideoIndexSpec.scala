@@ -16,7 +16,7 @@ class VideoIndexSpec extends AnyFunSuite {
     df.collect().map(_.toSeq).toSet
 
   private def fullMedia = Multimodal.videoTable(spark, sf0001)
-    .unionByName(Multimodal.videoTwinTable(spark, sf0001, frameBytes = 32))
+    .unionByName(Multimodal.videoTwinTable(spark, sf0001))
 
   test("stored pairs equal the live derivation over corpus + twins") {
     VideoIndex.build(spark, Multimodal.videoFrames(fullMedia),
@@ -61,12 +61,12 @@ class VideoIndexSpec extends AnyFunSuite {
 
   test("pairsAgainst is cross-only; dedupAgainst admits exactly the unmatched remainder") {
     val corpus = Multimodal.videoTable(spark, sf0001)
-    val fresh = Multimodal.videoTwinTable(spark, sf0001, frameBytes = 32)
+    val fresh = Multimodal.videoTwinTable(spark, sf0001)
     VideoIndex.build(spark, Multimodal.videoFrames(corpus),
       "graft_video_spec_agn")
     val freshFrames = Multimodal.videoFrames(fresh).localCheckpoint()
     val got = VideoIndex.pairsAgainst(spark, "graft_video_spec_agn",
-      freshFrames).collect()
+      freshFrames, Multimodal.Exact, shifts = false).collect()
       .map(r => (math.min(r.getLong(0), r.getLong(1)),
         math.max(r.getLong(0), r.getLong(1)), r.getLong(2))).toSet
     val truth = rows(Multimodal.videoDedupPairs(
@@ -80,7 +80,7 @@ class VideoIndexSpec extends AnyFunSuite {
     val matchedFresh = got.flatMap(p => Seq(p._1, p._2))
       .filter(_ >= 1000000L)
     val admitted = VideoIndex.dedupAgainst(spark, "graft_video_spec_agn",
-      freshFrames).select(col("media_id"))
+      freshFrames, Multimodal.Exact).select(col("media_id"))
       .collect().map(_.getLong(0)).toSet
     val freshIds = freshFrames.select(col("media_id"))
       .collect().map(_.getLong(0)).toSet
@@ -95,16 +95,16 @@ class VideoIndexSpec extends AnyFunSuite {
     VideoIndex.build(spark, Multimodal.videoFrames(corpus),
       "graft_video_spec_clip")
     val recuts = Multimodal.videoFrames(
-      Multimodal.videoClipTwinTable(spark, sf0001, frameBytes = 32))
+      Multimodal.videoClipTwinTable(spark, sf0001))
       .localCheckpoint()
     // aligned gate: one-stride rotations never align — all admitted
     val aligned = VideoIndex.pairsAgainst(spark, "graft_video_spec_clip",
-      recuts)
+      recuts, Multimodal.Exact, shifts = false)
     assert(aligned.count() == 0L,
       "the aligned gate admits re-cuts by design")
     // clip gate: every re-cut caught against its original at shift 2
-    val clips = VideoIndex.clipAgainst(spark, "graft_video_spec_clip",
-      recuts).collect()
+    val clips = VideoIndex.pairsAgainst(spark, "graft_video_spec_clip",
+      recuts, Multimodal.Exact, shifts = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val own = clips.filter(p => p._1 == p._2 + 4000000L)
     assert(own.nonEmpty && own.forall(p => p._3 == 2L && p._4 >= 2L),
@@ -136,10 +136,10 @@ class VideoIndexSpec extends AnyFunSuite {
     VideoIndex.build(spark, Multimodal.videoFrames(corpus),
       "graft_video_spec_plan")
     val freshFrames = Multimodal.videoFrames(
-      Multimodal.videoTwinTable(spark, sf0001, frameBytes = 32))
+      Multimodal.videoTwinTable(spark, sf0001))
       .localCheckpoint()
     val df = VideoIndex.pairsAgainst(spark, "graft_video_spec_plan",
-      freshFrames)
+      freshFrames, Multimodal.Exact, shifts = false)
     df.count()
     val plan = df.queryExecution.executedPlan
     assert(plan.toString.contains("BroadcastHashJoin"),
@@ -164,11 +164,12 @@ class VideoIndexSpec extends AnyFunSuite {
     val corpusDf = corpus.toDF("media_id", "frame_idx", "fm")
     // without the dial every pair of the six matches on the two stop
     // frames; with maxDf = 5 only the genuine pair survives
-    val loose = Multimodal.videoPairsFromFrames(corpusDf, minFrames = 2,
-      maxDf = 10000).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val loose = Multimodal.framePairs(corpusDf, Multimodal.Exact,
+      shifts = false, maxDf = 10000).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
     assert(loose.length == 15, s"all 15 stop-frame pairs: ${loose.toSeq}")
-    val strict = Multimodal.videoPairsFromFrames(corpusDf, minFrames = 2,
-      maxDf = 5).collect()
+    val strict = Multimodal.framePairs(corpusDf, Multimodal.Exact,
+      shifts = false, maxDf = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(strict.toSeq == Seq((1L, 2L, 2L)),
       s"only the genuine pair at its 2 content frames: ${strict.toSeq}")
@@ -181,13 +182,13 @@ class VideoIndexSpec extends AnyFunSuite {
       (200L, 2L, "A"), (200L, 3L, "B"))
       .toDF("media_id", "frame_idx", "fm")
     val admitted = VideoIndex.dedupAgainst(spark, "graft_video_spec_stop",
-      fresh).select(col("media_id")).distinct()
+      fresh, Multimodal.Exact).select(col("media_id")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(admitted == Set(100L),
       s"stop-frame-only video admits, the genuine dup is refused: $admitted")
     // clipAgainst drops them too: only the aligned genuine match shows
-    val clips = VideoIndex.clipAgainst(spark, "graft_video_spec_stop",
-      fresh).collect()
+    val clips = VideoIndex.pairsAgainst(spark, "graft_video_spec_stop",
+      fresh, Multimodal.Exact, shifts = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(clips.toSet == Set((200L, 1L, 0L), (200L, 2L, 0L)),
       s"genuine content matches videos 1 and 2 at shift 0: ${clips.toSeq}")
@@ -220,7 +221,7 @@ class VideoIndexSpec extends AnyFunSuite {
       (200L, 2L, "A"), (200L, 3L, "B"))
       .toDF("media_id", "frame_idx", "fm")
     val admitted = VideoIndex.dedupAgainst(spark, "graft_video_spec_inc",
-      fresh).select(col("media_id")).distinct()
+      fresh, Multimodal.Exact).select(col("media_id")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(admitted == Set(100L), s"viral-digest-only video admits: $admitted")
     // the build-time dial survives compaction (r14 ADVICE: persisted
@@ -234,13 +235,12 @@ class VideoIndexSpec extends AnyFunSuite {
   test("perceptual: stored equals live; the gate is the cross restriction and broadcasts the batch") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val corpus = Multimodal.videoTable(spark, sf0001)
-    val twin = Multimodal.videoPerceptualTwinTable(spark, sf0001,
-      frameBytes = 32)
+    val twin = Multimodal.videoPerceptualTwinTable(spark, sf0001)
     val media = corpus.unionByName(twin)
     VideoIndex.build(spark, Multimodal.videoFramesFp(media),
       "graft_video_spec_perc")
-    val stored = rows(VideoIndex.pairsPerceptual(spark,
-      "graft_video_spec_perc"))
+    val stored = rows(VideoIndex.pairs(spark,
+      "graft_video_spec_perc", Multimodal.Perceptual()))
     val live = rows(Multimodal.videoPerceptualPairs(media))
     assert(stored == live && stored.nonEmpty,
       "the stored 5-column layout must serve the live answers verbatim")
@@ -248,8 +248,9 @@ class VideoIndexSpec extends AnyFunSuite {
     VideoIndex.build(spark, Multimodal.videoFramesFp(corpus),
       "graft_video_spec_percg")
     val freshFp = Multimodal.videoFramesFp(twin).localCheckpoint()
-    val gate = VideoIndex.perceptualAgainst(spark,
-      "graft_video_spec_percg", freshFp)
+    val gate = VideoIndex.pairsAgainst(spark,
+      "graft_video_spec_percg", freshFp, Multimodal.Perceptual(),
+      shifts = false)
     gate.count()
     val got = gate.collect()
       .map(r => (r.getLong(1), r.getLong(0), r.getLong(2))).toSet
@@ -276,17 +277,19 @@ class VideoIndexSpec extends AnyFunSuite {
     VideoIndex.build(spark, Multimodal.videoFramesFp(corpus),
       "graft_video_spec_q4")
     val fresh = Multimodal.videoFramesFp(
-      Multimodal.videoClipPerceptualTwinTable(spark, sf0001,
-        frameBytes = 32)).localCheckpoint()
-    assert(VideoIndex.pairsAgainst(spark, "graft_video_spec_q4", fresh)
+      Multimodal.videoClipPerceptualTwinTable(spark, sf0001)).localCheckpoint()
+    assert(VideoIndex.pairsAgainst(spark, "graft_video_spec_q4", fresh,
+      Multimodal.Exact, shifts = false)
       .count() == 0L, "byte-exact aligned gate is blind (bytes differ)")
-    assert(VideoIndex.clipAgainst(spark, "graft_video_spec_q4", fresh)
+    assert(VideoIndex.pairsAgainst(spark, "graft_video_spec_q4", fresh,
+      Multimodal.Exact, shifts = true)
       .count() == 0L, "byte-exact clip gate is blind (bytes differ)")
-    assert(VideoIndex.perceptualAgainst(spark, "graft_video_spec_q4",
-      fresh).count() == 0L,
+    assert(VideoIndex.pairsAgainst(spark, "graft_video_spec_q4",
+      fresh, Multimodal.Perceptual(), shifts = false).count() == 0L,
       "aligned perceptual gate is blind (positions differ)")
-    val q4 = VideoIndex.clipPerceptualAgainst(spark,
-      "graft_video_spec_q4", fresh).collect()
+    val q4 = VideoIndex.pairsAgainst(spark,
+      "graft_video_spec_q4", fresh, Multimodal.Perceptual(),
+      shifts = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val own = q4.filter(p => p._1 == p._2 + 8000000L)
     assert(own.nonEmpty && own.forall(p => p._3 == 2L && p._4 >= 2L),
@@ -452,7 +455,7 @@ class VideoIndexSpec extends AnyFunSuite {
     (1 to 5).foreach { i =>
       VideoIndex.append(spark, "graft_video_spec_mnt",
         Multimodal.videoFrames(
-          Multimodal.videoTwinTable(spark, sf0001, frameBytes = 32))
+          Multimodal.videoTwinTable(spark, sf0001))
           .withColumn("media_id", col("media_id") + lit(i * 10000000L)))
     }
     val before = rows(VideoIndex.pairs(spark, "graft_video_spec_mnt"))
