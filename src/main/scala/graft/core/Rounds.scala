@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.StructType
 final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
   private val sc = spark.sparkContext
   private val live = mutable.LinkedHashSet.empty[RDD[_]]
-  private val callerDescription = sc.getLocalProperty(Rounds.DescriptionKey)
+  private val label = new JobLabel(sc, op)
   private var round = 0
 
   /** The number of state partitions. */
@@ -92,7 +92,7 @@ final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
   def close(): Unit = {
     live.foreach(_.unpersist(blocking = false))
     live.clear()
-    sc.setLocalProperty(Rounds.DescriptionKey, callerDescription)
+    label.close()
   }
 
   /** The (receiver, block) pairs of `blocks` delivered: partition p holds
@@ -107,8 +107,7 @@ final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
       preservesPartitioning = true)
   }
 
-  private def describe(phase: String): Unit =
-    sc.setJobDescription(s"$op $phase")
+  private def describe(phase: String): Unit = label(phase)
 
   private def keep[B](rdd: RDD[B]): RDD[B] = {
     live += rdd.localCheckpoint()
@@ -117,9 +116,6 @@ final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
 }
 
 object Rounds {
-
-  /** The local property `SparkContext.setJobDescription` sets. */
-  private val DescriptionKey = "spark.job.description"
 
   /** The state partition of key `v` among `parts`: `HashPartitioner`'s
     * placement of a boxed Long. */

@@ -127,6 +127,16 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
+  /** The expression's fold over two equal-length arrays already widened
+    * to doubles: Σ a(i)·b(i), added left to right from 0.0 — for
+    * kernels that score outside an expression. */
+  def fold(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
   /** Column-level entry point over two `array<double>` columns. */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.toColumn(

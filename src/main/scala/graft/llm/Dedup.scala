@@ -1,7 +1,18 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowsBridge
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.JobLabel
+import graft.functions.ShingleJaccard
+import graft.sources.Bucketing
 
 /** Deduplication operators for large-scale training-data pipelines —
   * the north-star extras of SURVEY.md §7.2.8, built on the reference's
@@ -15,12 +26,14 @@ import org.apache.spark.sql.functions._
   *    banding turns all-pairs into an equi-join on the band key — the
   *    classic shuffle-lean LSH join. [[minHashLshPairs]] verifies by
   *    signature overlap; every other MinHash path verifies candidates by
-  *    exact shingle Jaccard in ONE shared stage ([[verifiedPairs]]), fed
-  *    shingles of candidate documents only;
+  *    exact shingle Jaccard with ONE arithmetic
+  *    ([[graft.functions.ShingleJaccard]]) over per-doc sorted shingle
+  *    sets of candidate documents only;
   *  - cross admission ([[incrementalDedup]], [[graft.sources.DedupIndex]])
-  *    bands with the portable [[graft.functions.MinHashBands]] under one
-  *    fixed parameter set, so a stored index and its probe always agree
-  *    and a SQL oracle replays the exact candidate set;
+  *    is one kernel ([[admit]]) that bands with the portable
+  *    [[graft.functions.MinHashBands]] under one fixed parameter set, so
+  *    a stored index and its probe always agree and a SQL oracle replays
+  *    the exact candidate set;
   *  - SimHash: 64 codegen'd bit-sum aggregations → one long fingerprint;
   *    candidate pairs via 16-bit band buckets, verified with bit_count(xor);
   *  - exact n-gram Jaccard is the quadratic truth oracle — intended for
@@ -137,27 +150,27 @@ object Dedup {
     * near-duplicate (exact shingle Jaccard ≥ tau among banded MinHash
     * candidates) in the EXISTING corpus — the per-crawl-batch step of a
     * growing corpus, where re-deduplicating the whole corpus per batch
-    * is the scale anti-pattern. Cross-banding only: fresh×fresh and
-    * corpus×corpus pairs are never formed, the corpus side ships 16
-    * band keys per doc rather than text through the band join, and
-    * shingles are joined for candidate documents only
-    * ([[verifiedPairs]]). Banding is the portable
-    * [[graft.functions.MinHashBands]] under the fixed admission
-    * parameters ([[bandRows]]), so the DuckDB oracle replays the exact
-    * candidate set, recall misses included. [[graft.sources.DedupIndex]]
-    * answers the same admission from a stored corpus derivation.
-    * Returns the admitted fresh rows. */
+    * is the scale anti-pattern. The [[admit]] kernel over the corpus's
+    * derived band rows and shingles, routed by id into
+    * `spark.sql.shuffle.partitions` partitions in place of the stored
+    * buckets [[graft.sources.DedupIndex]] reads: cross-only, and the
+    * same answer as the stored index over the same corpus. Returns the
+    * admitted fresh rows, `idCol` first. */
   def incrementalDedup(fresh: DataFrame, corpus: DataFrame, textCol: String,
       idCol: String, tau: Double = 0.8): DataFrame = {
-    val cand = crossBandCandidates(bandRows(fresh, textCol, idCol),
-      bandRows(corpus, textCol, idCol)).localCheckpoint()
-    val fSh = shingles(fresh, textCol, idCol, AdmitK)
-      .join(cand.select(col("da").as("id")).distinct(), Seq("id"), "left_semi")
-    val cSh = shingles(corpus, textCol, idCol, AdmitK)
-      .join(cand.select(col("db").as("id")).distinct(), Seq("id"), "left_semi")
-    val dup = verifiedPairs(cand, fSh, cSh, shingleCounts(fSh),
-      shingleCounts(cSh), tau).select(col("da").as(idCol)).distinct()
-    fresh.join(dup, Seq(idCol), "left_anti")
+    val spark = fresh.sparkSession
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    admit(spark, "incrementalDedup", fresh, textCol, idCol, tau,
+      _ => bandRows(corpus, textCol, idCol)
+        .select(col("doc_id").cast("long"), col("bkh")).queryExecution.toRdd,
+      parts,
+      () => Bucketing.route(corpus.select(col(idCol).cast("long"),
+          explode(shingleArray(col(textCol), AdmitK)))
+        .queryExecution.toRdd.flatMap { r =>
+          if (r.isNullAt(0)) None
+          else Some((Bucketing.bucketOf(r.getLong(0), parts),
+            (r.getLong(0), r.getUTF8String(1).copy())))
+        }, parts))
   }
 
   /** Cross-admission index parameters: word 3-shingles, 64 MinHash
@@ -183,40 +196,149 @@ object Dedup {
       .select(col("doc_id"), explode(array((0 until AdmitBands).map(b =>
         element_at(col("sig"), b + 1) + lit(b * (1L << 40))): _*)).as("bkh"))
 
-  /** Cross candidates (da = fresh id, db = corpus id) from two
-    * [[bandRows]] frames, exposed so PlanShapeSpec can pin the
-    * load-bearing property: ONE equi-join on bkh between the fresh side
-    * and the corpus side — never a fresh×fresh or corpus×corpus branch
-    * (re-deduplicating the corpus per batch is exactly what the
-    * incremental shape exists to avoid). */
-  private[graft] def crossBandCandidates(freshBands: DataFrame,
-      corpusBands: DataFrame): DataFrame =
-    freshBands.select(col("doc_id").as("da"), col("bkh"))
-      .join(corpusBands.select(col("doc_id").as("db"), col("bkh")), "bkh")
-      .select(col("da"), col("db")).distinct()
-
   /** (id, n): distinct shingles per document. */
   private[graft] def shingleCounts(sh: DataFrame): DataFrame =
     sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
 
-  /** The exact-Jaccard verify stage of every candidate→verify near-dup
-    * path: candidate pairs (da, db), each side's shingles (id, shingle)
-    * already semi-filtered to candidate ids, and each side's sizes
-    * (id, n). Join order: cand ⋈ a-shingles ⋈ b-shingles on
-    * (db, shingle) → per-pair overlap c → ⋈ a-sizes ⋈ b-sizes. Returns
-    * (da, db, jaccard) with jaccard = round(c / (na + nb − c), 4) ≥ tau. */
-  private[graft] def verifiedPairs(cand: DataFrame, aSh: DataFrame,
-      bSh: DataFrame, aSize: DataFrame, bSize: DataFrame,
+  /** (id, sh): each document's distinct word k-shingles sorted in byte
+    * order — the set form [[graft.functions.ShingleJaccard]] reads. */
+  private[graft] def shingleSets(docs: DataFrame, textCol: String, idCol: String,
+      k: Int): DataFrame =
+    graft.core.Spread.acrossCores(docs, idCol).select(col(idCol).as("id"),
+      sort_array(shingleArray(col(textCol), k)).as("sh"))
+
+  /** The exact-Jaccard verify stage of the candidate→verify pair paths:
+    * candidate pairs (da, db) and the [[shingleSets]] of (at least) the
+    * candidate documents. Each pair meets both sets by id and scores
+    * [[graft.functions.ShingleJaccard]] — the arithmetic the [[admit]]
+    * kernel runs per task. Returns (da, db, jaccard) with jaccard =
+    * round(c / (na + nb − c), 4) ≥ tau over pairs sharing a shingle. */
+  private[graft] def verifiedPairs(cand: DataFrame, sets: DataFrame,
       tau: Double): DataFrame =
     cand
-      .join(aSh.select(col("id").as("da"), col("shingle")), "da")
-      .join(bSh.select(col("id").as("db"), col("shingle")), Seq("db", "shingle"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-      .join(aSize.select(col("id").as("da"), col("n").as("na")), "da")
-      .join(bSize.select(col("id").as("db"), col("n").as("nb")), "db")
+      .join(sets.select(col("id").as("da"), col("sh").as("sa")), "da")
+      .join(sets.select(col("id").as("db"), col("sh").as("sb")), "db")
       .select(col("da"), col("db"),
-        round(col("c") / (col("na") + col("nb") - col("c")), 4).as("jaccard"))
+        ShingleJaccard.jaccard(col("sa"), col("sb")).as("jaccard"))
       .where(col("jaccard") >= tau)
+
+  /** The fresh batch as the [[admit]] kernel holds it: per row, the id
+    * and the sorted shingle set, and each band key's rows (`byKey`).
+    * Rows with a null id or without band keys are in no `byKey` entry,
+    * so they are never candidates. */
+  private final case class FreshSide(ids: Array[Long], sets: Array[ArrayData],
+      byKey: Map[Long, Array[Int]])
+
+  /** The one admission kernel: the fresh rows with no near-duplicate
+    * (exact shingle Jaccard ≥ tau, [[graft.functions.ShingleJaccard]]) among
+    * their band-key candidates in a corpus. At most three Spark jobs,
+    * described `"<op> derive"`, `"<op> probe"` and `"<op> verify"`:
+    *
+    *   - derive: the fresh rows with their [[bandRows]] keys and sorted
+    *     shingle sets, collected once (no job for a local batch) and
+    *     broadcast;
+    *   - probe: `corpusBands(keys)` — corpus (doc_id, bkh) rows, in any
+    *     partitioning, holding at least those among the fresh `keys` —
+    *     hash-probed per task against the fresh keys; each task addresses
+    *     one block of (fresh row, corpus id) candidates to each
+    *     `corpusShingles` partition holding a candidate
+    *     ([[Bucketing.bucketOf]] of the corpus id), kept
+    *     local-checkpointed;
+    *   - verify (skipped with no candidate): the blocks routed by one
+    *     shuffle and zipped with `corpusShingles` — (id, shingle) rows
+    *     whose partition i holds exactly the ids of bucket i — over the
+    *     partitions that received one; each task gathers its candidate
+    *     ids' shingle sets and keeps the fresh ids that pass.
+    *
+    * The corpus side is read where it lies, never shuffled, and
+    * candidates never reach the driver. Returns the admitted rows, `idCol`
+    * first, as a local frame. */
+  private[graft] def admit(spark: SparkSession, op: String, fresh: DataFrame,
+      textCol: String, idCol: String, tau: Double,
+      corpusBands: Seq[Long] => RDD[InternalRow], parts: Int,
+      corpusShingles: () => RDD[(Long, UTF8String)]): DataFrame =
+    JobLabel.around(spark.sparkContext, op) { label =>
+      val sc = spark.sparkContext
+      label("derive")
+      val out = (idCol +: fresh.columns.filter(_ != idCol)).map(fresh.col)
+      val derived = fresh.select(out ++ Seq(col(idCol).cast("long"),
+        graft.functions.MinHashBands.minhashBands(split(col(textCol), "\\s+"),
+          AdmitK, AdmitHashes, AdmitBands),
+        sort_array(shingleArray(col(textCol), AdmitK))): _*)
+      val rows = RowsBridge.collect(derived)
+      val n = out.length
+      val byKey = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
+      for ((r, i) <- rows.zipWithIndex if !r.isNullAt(n) && !r.isNullAt(n + 1)) {
+        val sig = r.getArray(n + 1)
+        for (b <- 0 until AdmitBands)
+          byKey.getOrElseUpdate(sig.getLong(b) + b * (1L << 40),
+            mutable.ArrayBuffer.empty) += i
+      }
+      val side = FreshSide(rows.map(_.getLong(n)), rows.map(_.getArray(n + 2)),
+        byKey.map { case (key, is) => key -> is.toArray }.toMap)
+      val dups =
+        if (byKey.isEmpty) Set.empty[Long]
+        else refused(sc, label, side, tau, () => corpusBands(byKey.keys.toSeq),
+          parts, corpusShingles)
+      val schema = org.apache.spark.sql.types.StructType(derived.schema.take(n))
+      RowsBridge.local(spark, rows.iterator.filter(r => r.isNullAt(n) || !dups(r.getLong(n)))
+        .map(r => InternalRow.fromSeq(schema.fields.indices.map(i =>
+          r.get(i, schema(i).dataType)))).toSeq, schema)
+    }
+
+  /** The probe and verify jobs of [[admit]]: the ids of the fresh rows
+    * that near-duplicate a corpus document. */
+  private def refused(sc: org.apache.spark.SparkContext, label: JobLabel,
+      side: FreshSide, tau: Double, bands: () => RDD[InternalRow], parts: Int,
+      shingles: () => RDD[(Long, UTF8String)]): Set[Long] = {
+    val fresh = sc.broadcast(side)
+    try {
+      label("probe")
+      val cand = bands().mapPartitions { rows =>
+        val f = fresh.value
+        val to = mutable.HashMap.empty[Int,
+          (mutable.ArrayBuilder.ofInt, mutable.ArrayBuilder.ofLong)]
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) f.byKey.get(r.getLong(1)).foreach { is =>
+            val db = r.getLong(0)
+            val (a, b) = to.getOrElseUpdate(Bucketing.bucketOf(db, parts),
+              (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofLong))
+            is.foreach { i => a += i; b += db }
+          }
+        }
+        to.iterator.map { case (p, (a, b)) => (p, (a.result(), b.result())) }
+      }.localCheckpoint()
+      try {
+        val targets = sc.runJob(cand, (it: Iterator[(Int, _)]) => it.map(_._1).toArray)
+          .flatten.distinct.sorted
+        if (targets.isEmpty) Set.empty
+        else {
+          label("verify")
+          val verified = shingles().zipPartitions(Bucketing.route(cand, parts)) { (sh, blocks) =>
+            val f = fresh.value
+            val want = mutable.HashMap.empty[Long, mutable.Set[Int]]
+            blocks.foreach { case (is, dbs) =>
+              for (j <- is.indices) want.getOrElseUpdate(dbs(j), mutable.Set.empty) += is(j)
+            }
+            val got = mutable.HashMap.empty[Long, mutable.ArrayBuffer[UTF8String]]
+            sh.foreach { case (id, s) =>
+              if (s != null && want.contains(id))
+                got.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += s.copy()
+            }
+            want.iterator.flatMap { case (db, is) =>
+              val set = sortedSet(got.getOrElse(db, mutable.ArrayBuffer.empty))
+              is.iterator.filter(i => ShingleJaccard.jaccard(f.sets(i), set) >= tau).map(f.ids)
+            }
+          }
+          sc.runJob(verified, (it: Iterator[Long]) => it.toArray, targets.toSeq).flatten.toSet
+        }
+      } finally cand.unpersist(blocking = false)
+    } finally fresh.destroy()
+  }
+
+  /** `shingles` as a set: distinct, sorted in byte order. */
+  private def sortedSet(shingles: mutable.ArrayBuffer[UTF8String]): ArrayData =
+    new GenericArrayData(shingles.distinct.sortWith(_.binaryCompare(_) < 0).toArray[Any])
 
   /** EXACT incremental dedup with a Bloom pre-filter: admit fresh
     * documents whose normalized content fingerprint is not in the
@@ -355,11 +477,10 @@ object Dedup {
       .localCheckpoint()
     val candIds = cand.select(col("da").as("id"))
       .union(cand.select(col("db").as("id"))).distinct()
-    val sh = shingles(docs, textCol, idCol, k)
+    val sets = shingleSets(docs, textCol, idCol, k)
       .join(candIds, Seq("id"), "left_semi")
       .localCheckpoint()
-    val sizes = shingleCounts(sh)
-    verifiedPairs(cand, sh, sh, sizes, sizes, tau)
+    verifiedPairs(cand, sets, tau)
   }
 
   /** XXH64 self-banding of MinHash signatures (id, sig): `bands` keys

@@ -92,12 +92,12 @@ object DedupQueries {
     // the SAME incremental dedup answered from the PERSISTED band index
     // (graft.sources.DedupIndex — corpus band keys + shingles + sizes
     // stored once as bucketed tables; per batch only the FRESH side is
-    // derived and the candidate probe joins the stored postings on
-    // their bucket key, shuffle-free on the corpus side). Byte-identical
+    // derived and the admission kernel probes and verifies against the
+    // stored buckets, shuffle-free on the corpus side). Byte-identical
     // admission semantics to q_incremental_dedup — same split, same
     // portable hashes — so the oracle is the SAME full replay; the
     // index changes cost, never answers (DedupIndexSpec pins the
-    // row-for-row equivalence and the no-corpus-shuffle plan).
+    // row-for-row equivalence and the no-corpus-shuffle stages).
     Q("q_incremental_dedup_stored",
       (s, d) => {
         val name = graft.sources.DedupIndex.ensureBuilt(s, d)

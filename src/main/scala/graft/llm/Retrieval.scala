@@ -123,7 +123,7 @@ object Retrieval {
     * the whole query replays under q_hybrid_rrf_ann's oracle while
     * touching NOTHING corpus-sized at query time: per query batch the
     * engine reads the query terms' posting lists and the probed cells'
-    * vectors, both literal-pruned bucket subsets. This is the
+    * vectors, both pruned bucket subsets. This is the
     * retrieval-service shape: both arms' per-query cost depends on term
     * selectivity / probe fan-in, not corpus size.
     *
@@ -160,8 +160,8 @@ object Retrieval {
     * stored-corpus probe ids, so the one scan in the stored path that
     * bucket pruning could not help (the id lookup against the
     * cell-bucketed cells table) disappears entirely: the direct plan's
-    * ONLY cells read is the literal-pruned probed-bucket scan
-    * (RetrievalSpec pins exactly one cells scan, pruned).
+    * ONLY cells read is serve's probed-bucket scan (RetrievalSpec pins
+    * exactly one cells scan, pruned).
     *
     * `selfIds` replays the registry variant's self-exclusion exactly:
     * a query whose vector IS a stored corpus vector names that vec_id

@@ -462,8 +462,8 @@ object SimilarityQueries {
     // index (graft.sources.IvfIndex — cells table bucketed by cell id +
     // the stored quantizer) instead of re-assigning the corpus per run.
     // Query time routes |Q| probes over the stored 64-row quantizer and
-    // bucket-prunes the cells scan to the probed cells
-    // (SelectedBucketsCount pinned in IvfIndexSpec/PlanShapeSpec); the
+    // scans only the probed cells' buckets (one task per probed bucket,
+    // pinned in IvfIndexSpec); the
     // |corpus|·numCentroids assignment is paid once at build
     // (b_ivf_build times it; the memo rebuilds only when the data
     // fingerprint changes). The answer is byte-identical to the

@@ -1,7 +1,13 @@
 package graft.sources
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Bucketed-table layout: the persistent co-location contract that turns
   * repeated big joins/aggregations on the same key into zero-shuffle
@@ -51,6 +57,42 @@ object Bucketing {
       .find(b % _ == 0).get
     typed.repartition(n, spec.bucketColumnNames.map(typed.col): _*)
       .write.mode("append").insertInto(table)
+  }
+
+  /** The bucket of bigint bucket-column value `v` among `buckets`:
+    * pmod(murmur3(v, seed 42), buckets), the bucket the writer files it
+    * under and the partition `repartition(buckets, col)` sends it to. */
+  def bucketOf(v: Long, buckets: Int): Int = {
+    val h = Murmur3_x86_32.hashLong(v, 42) % buckets
+    if (h < 0) h + buckets else h
+  }
+
+  /** The stored rows of the bucketed `table`, `cols` projected, with
+    * partition i holding bucket i: a bucketed scan
+    * ([[TextIndex.forceBucketedScan]]), so pruning its partitions
+    * (`PartitionPruningRDD`) prunes the buckets read and the tasks run.
+    * The rows are reused between `next()` calls; copy what outlives
+    * one. */
+  def bucketRows(spark: SparkSession, table: String, cols: String*): RDD[InternalRow] = {
+    val rows = TextIndex.forceBucketedScan(spark)(
+      _.table(table).select(cols.map(col): _*).queryExecution.toRdd)
+    val buckets = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+    require(buckets.contains(rows.getNumPartitions),
+      s"$table: expected one partition per bucket ($buckets), read ${rows.getNumPartitions}")
+    rows
+  }
+
+  /** The values of `rdd` delivered by one shuffle to the partition their
+    * key names, among `buckets` partitions. */
+  def route[V: ClassTag](rdd: RDD[(Int, V)], buckets: Int): RDD[V] =
+    new ShuffledRDD[Int, V, V](rdd, new ToBucket(buckets)).values
+
+  /** Partitions an Int key as itself. */
+  private final class ToBucket(buckets: Int) extends Partitioner {
+    def numPartitions: Int = buckets
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
   /** Auto-scaled bucket count for the stored-index families (r14

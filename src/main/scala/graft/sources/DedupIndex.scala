@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,30 +16,32 @@ import graft.llm.Dedup
   *
   *   - `<name>_bands` (doc_id, bkh): one row per (doc, band) from
   *     [[Dedup.bandRows]] — the injective composite key bkh = band ·
-  *     2^40 + bandHash — bucketed by bkh. The banded candidate join is a
-  *     SINGLE-KEY equi-join whose stored side is already
-  *     hash-distributed — no corpus-side shuffle, ever.
+  *     2^40 + bandHash — bucketed by bkh, so the fresh keys prune the
+  *     probe to the buckets they hash to.
   *   - `<name>_shingles` (id, shingle), bucketed by id: the exact-
-  *     Jaccard verifier's corpus side, read only for candidate docs
-  *     (left-semi on the candidate ids) and joined shuffle-free on the
-  *     bucket key.
-  *   - `<name>_sizes` (id, n), bucketed by id: per-doc shingle counts
-  *     for the Jaccard denominator.
+  *     Jaccard verifier's corpus side, read bucket by bucket, each
+  *     bucket meeting the candidates routed to it.
+  *   - `<name>_sizes` (id, n), bucketed by id: per-doc shingle counts,
+  *     kept for maintenance and monitoring; the gate derives sizes from
+  *     the shingle sets.
   *
   * Build, [[append]] and [[dedupAgainst]] band and shingle under
   * Dedup's one fixed admission parameter set, so a probe always matches
   * the index it reads. Serving derives only the FRESH batch's bands and
-  * shingles (|fresh| work) and verifies candidates in the same stage as
-  * `incrementalDedup` ([[Dedup.verifiedPairs]]), so it admits exactly
-  * what `incrementalDedup` admits — the stored layout changes cost,
-  * never answers. [[append]] closes the ingest loop: admitted docs join
-  * the index (bands + shingles + sizes inserted with the tables' bucket
-  * specs), so the next batch dedups against corpus ∪ admitted with no
-  * rebuild.
+  * shingles (|fresh| work) and runs the one admission kernel
+  * ([[Dedup.admit]], also behind `incrementalDedup`) over the stored
+  * tables: a per-task hash probe of the stored band keys, then a
+  * per-bucket exact-Jaccard verify — at most three Spark jobs, no
+  * stored row shuffled. So it admits exactly what `incrementalDedup`
+  * admits — the stored layout changes cost, never answers. [[append]]
+  * closes the ingest loop: admitted docs join the index (bands +
+  * shingles + sizes inserted with the tables' bucket specs), so the
+  * next batch dedups against corpus ∪ admitted with no rebuild.
   *
   * 100 TB shape: the per-batch cost drops from O(|corpus| + |fresh|)
-  * signature derivation to O(|fresh|) + a bucket-aligned probe of the
-  * stored postings; the corpus's text is never read at all (bands and
+  * signature derivation to O(|fresh|) + a bucket-pruned probe of the
+  * stored band keys + one pass over the shingle buckets that hold a
+  * candidate; the corpus's text is never read at all (bands and
   * shingles are the only columns the verifier touches). The band keys
   * are PORTABLE mixer hashes, so the DuckDB oracle replays the stored
   * keys term for term. */
@@ -74,22 +77,26 @@ object DedupIndex {
   }
 
   /** Admit the fresh rows not near-duplicating the INDEXED corpus — the
-    * answer of `Dedup.incrementalDedup(fresh, corpus)`, with the corpus
-    * band keys, shingles and sizes read from the stored tables instead
-    * of recomputed. */
+    * answer of `Dedup.incrementalDedup(fresh, corpus)`, from the same
+    * kernel ([[Dedup.admit]]) reading the stored tables where they lie:
+    * the probe scans only the `_bands` buckets the fresh keys hash to,
+    * and the verify zips each `_shingles` bucket that holds a candidate
+    * with the candidates routed to it. At most three Spark jobs, described `"dedupAgainst derive"`,
+    * `"dedupAgainst probe"` and `"dedupAgainst verify"`; no stored row is
+    * shuffled, and `<name>_sizes` is not read (sizes come from the
+    * shingle sets). Returns the admitted rows, `idCol` first, as a local
+    * frame. */
   def dedupAgainst(spark: SparkSession, name: String, fresh: DataFrame,
       textCol: String, idCol: String, tau: Double = 0.8): DataFrame = {
-    val cand = Dedup.crossBandCandidates(Dedup.bandRows(fresh, textCol, idCol),
-      spark.table(s"${name}_bands")).localCheckpoint()
-    val fSh = Dedup.shingles(fresh, textCol, idCol, Dedup.AdmitK)
-      .join(cand.select(col("da").as("id")).distinct(), Seq("id"),
-        "left_semi")
-    val cSh = spark.table(s"${name}_shingles")
-      .join(cand.select(col("db").as("id")).distinct(), Seq("id"),
-        "left_semi")
-    val dup = Dedup.verifiedPairs(cand, fSh, cSh, Dedup.shingleCounts(fSh),
-      spark.table(s"${name}_sizes"), tau).select(col("da").as(idCol)).distinct()
-    fresh.join(dup, Seq(idCol), "left_anti")
+    val shingles = Bucketing.bucketRows(spark, s"${name}_shingles", "id", "shingle")
+    Dedup.admit(spark, "dedupAgainst", fresh, textCol, idCol, tau,
+      keys => {
+        val bands = Bucketing.bucketRows(spark, s"${name}_bands", "doc_id", "bkh")
+        PartitionPruningRDD.create(bands,
+          keys.map(Bucketing.bucketOf(_, bands.getNumPartitions)).toSet)
+      },
+      shingles.getNumPartitions,
+      () => shingles.map(r => (r.getLong(0), r.getUTF8String(1))))
   }
 
   /** Ingest ADMITTED docs into the index: bands, shingles, and sizes

@@ -1,9 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.core.TopK
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowsBridge
+import org.apache.spark.sql.types._
+
+import graft.core.{JobLabel, TopK}
+import graft.functions.DotProduct
 import graft.llm.Similarity
 
 /** PERSISTED IVF index: the ANN layout written to disk once at ingest and
@@ -21,15 +29,15 @@ import graft.llm.Similarity
   *     trained coarse quantizer rides with the index, so serving replays
   *     routing from STORED centroids, never from a fresh corpus sample.
   *
-  * Query-time cost after the build: route |Q| probe vectors over the
-  * k-row broadcast centroid table, COLLECT the ≤ |Q|·nProbe probed cell
-  * ids (driver-bounded by construction — online ANN queries are small),
-  * and push them into the cells scan as a LITERAL `cell IN (...)`
-  * predicate → Spark's bucket pruning reads ONLY the probed buckets
-  * (`SelectedBucketsCount` in the scan, pinned by PlanShapeSpec). Nothing
-  * corpus-sized is assigned, shuffled, or even scanned at query time —
-  * SCALE.md's crossover analysis measured the re-paid corpus assignment
-  * as the dominant ANN query cost; this is the artifact that removes it.
+  * Query-time cost after the build ([[serve]], a kernel of at most
+  * three Spark jobs): route |Q| probe vectors over the k stored
+  * centroids on the driver (online ANN queries are small by
+  * construction), then scan ONLY the buckets of the probed cells — one
+  * task per probed bucket, each keeping a bounded per-query top-k — and
+  * merge the tasks' buffers. Nothing corpus-sized is assigned, shuffled,
+  * or even scanned at query time — SCALE.md's crossover analysis
+  * measured the re-paid corpus assignment as the dominant ANN query
+  * cost; this is the artifact that removes it.
   *
   * 100 TB shape: the build is one broadcast-assign pass + one bucketed
   * write (the same work q_stream_embed_route does incrementally at
@@ -148,38 +156,191 @@ object IvfIndex {
   private def coarseCells(numCentroids: Int): Int =
     math.max(2, math.ceil(math.sqrt(numCentroids.toDouble)).toInt)
 
-  def defaultBase: String =
-    sys.props("java.io.tmpdir") + "/graft_ivf_index"
+  /** Where an index is written when the caller names no base: a fresh
+    * directory per JVM under `java.io.tmpdir`, deleted when the JVM
+    * exits. The fixture-index memo ([[Bucketing.memoBuilt]]) is per JVM,
+    * so two JVMs that build the same fixture index must not write the
+    * same files. */
+  lazy val defaultBase: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index_").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getPath
+  }
 
   /** Serve kNN from the STORED layout. `queries` is (qid, qv) — small by
-    * construction (online ANN). Routing runs over the stored quantizer
-    * (broadcast k rows); the probed cell ids collect to the driver
-    * (≤ |Q|·nProbe longs) and prune the cells scan to the probed buckets.
-    * Scoring/tiebreaks are byte-identical to [[Similarity.ivfKnn]] —
-    * rounded cosine desc, nid asc — so the stored-layout answer equals
-    * the recompute-everything answer whenever the stored assignment is
-    * current. */
+    * construction (online ANN). A kernel of at most three Spark jobs:
+    * "serve route" reads the stored quantizer and the queries to the
+    * driver (no job for a local query frame), where each query routes
+    * to its `nProbe` nearest cells ([[route]]); "serve score" scans only
+    * the probed cells' buckets, one task each, where each task keeps a
+    * bounded per-query top-k buffer ([[graft.core.TopK.keep]]), and the
+    * driver merges the buffers. Scoring and ties are those of
+    * [[Similarity.ivfKnn]] — round(cosine, 6) desc, nid asc, qid ≠ nid —
+    * so the stored-layout answer equals the recompute-everything answer
+    * whenever the stored assignment is current. Returns (qid, nid, cos,
+    * rn) as a local frame. */
   def serve(spark: SparkSession, name: String, queries: DataFrame,
-      k: Int = 5, nProbe: Int = 2): DataFrame = {
-    val cents = broadcast(spark.table(s"${name}_cents"))
-    val routed = Similarity.nearestCells(
-      queries.select(col("qid"), col("qv")), cents, "qid", "qv", nProbe)
-    // driver-bounded collect: |Q|·nProbe cell ids — the posting lists a
-    // vector store would fetch; as literals they enable bucket pruning,
-    // which a join key never would
-    val probedCells: Array[Long] = routed.select(col("cid")).distinct()
-      .collect().map(_.getLong(0))
-    val corpus = spark.table(s"${name}_cells")
-      .where(col("cell").isin(probedCells.map(Long.box): _*))
-      .select(col("vec_id").as("nid"), col("vec").as("nv"),
-        col("cell").as("cid"))
-    // no distinct: one cell per stored vector ⇒ (qid, nid) unique (the
-    // ivfKnn argument — a distinct would re-exchange the candidate set)
-    val scored = routed.join(corpus, "cid")
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        round(Similarity.cosine(col("qv"), col("nv")), 6).as("cos"))
-    TopK.perKey(scored, "qid", k, col("cos").desc, col("nid").asc)
+      k: Int = 5, nProbe: Int = 2): DataFrame =
+    JobLabel.around(spark.sparkContext, "serve") { label =>
+      val probes = route(spark, name, queries, nProbe, label)
+      label("score")
+      ranked(spark, probes, scored(spark, name, probes, k, withCodes = false))
+    }
+
+  /** A query routed to its probed `cells`: `qv` widened to doubles, null
+    * when the vector is null or holds a null. */
+  private final case class Probe(qid: Long, qv: Array[Double], cells: Array[Long])
+
+  /** A scored neighbour: `key` ranks it in its buffer, `cos` is the
+    * answer's score; None is SQL's null. */
+  private final case class Hit(key: Option[Double], nid: Long, cos: Option[Double])
+
+  /** Spark's order of doubles: NaN above every value, −0.0 = 0.0. */
+  private def sparkCompare(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** Descending, nulls last — `ORDER BY score DESC`. */
+  private def desc(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+    case (Some(x), Some(y)) => sparkCompare(y, x)
+    case (Some(_), None) => -1
+    case (None, Some(_)) => 1
+    case _ => 0
+  }
+
+  /** (key desc, nid asc) and (cos desc, nid asc). */
+  private val byKey: Ordering[Hit] = (a, b) => {
+    val c = desc(a.key, b.key)
+    if (c != 0) c else java.lang.Long.compare(a.nid, b.nid)
+  }
+  private val byCos: Ordering[Hit] = (a, b) => {
+    val c = desc(a.cos, b.cos)
+    if (c != 0) c else java.lang.Long.compare(a.nid, b.nid)
+  }
+
+  /** The elements of `a` as doubles, null when `a` is null or holds a
+    * null. */
+  private def doubles(a: ArrayData, dt: DataType): Array[Double] =
+    if (a == null) null
+    else {
+      val out = new Array[Double](a.numElements())
+      var i = 0
+      while (i < out.length) {
+        if (a.isNullAt(i)) return null
+        out(i) = dt match {
+          case FloatType => a.getFloat(i).toDouble
+          case ByteType => a.getByte(i).toDouble
+          case _ => a.getDouble(i)
+        }
+        i += 1
+      }
+      out
+    }
+
+  private def elementType(df: DataFrame, c: String): DataType =
+    df.schema(c).dataType.asInstanceOf[ArrayType].elementType
+
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** [[Similarity.cosine]] rounded to 6 places, as Spark evaluates
+    * `round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)`: None
+    * for a null vector or unequal lengths, and a zero divisor throws
+    * under ANSI mode and is None otherwise. */
+  private def cos6(a: Array[Double], b: Array[Double], ansi: Boolean): Option[Double] =
+    if (a == null || b == null || a.length != b.length) None
+    else {
+      val d = math.sqrt(DotProduct.fold(a, a)) * math.sqrt(DotProduct.fold(b, b))
+      if (d != 0) Some(round6(DotProduct.fold(a, b) / d))
+      else if (ansi) throw new ArithmeticException(
+        "[DIVIDE_BY_ZERO] Division by zero in the cosine of a zero-norm vector.")
+      else None
+    }
+
+  /** The "serve route" step of [[serve]] and [[serveInt8]]: the stored
+    * quantizer and the queries read to the driver, each query routed to
+    * its `nProbe` nearest cells by [[Similarity.nearestCells]]'
+    * arithmetic — round(cosine, 6), −2.0 where the cosine is null or NaN
+    * (a zero-norm, null or NaN vector ranks last), ties to the lower
+    * cid. Null qids are dropped: `qid ≠ nid` holds for none of them. */
+  private def route(spark: SparkSession, name: String, queries: DataFrame,
+      nProbe: Int, label: JobLabel): Array[Probe] = {
+    label("route")
+    val centsTab = spark.table(s"${name}_cents")
+    val cvType = elementType(centsTab, "cv")
+    val cents = RowsBridge.collect(centsTab.select(col("cid").cast("long"), col("cv")))
+      .map(r => (r.getLong(0), doubles(r.getArray(1), cvType)))
+    val qvType = elementType(queries, "qv")
+    RowsBridge.collect(queries.select(col("qid").cast("long"), col("qv")))
+      .filter(!_.isNullAt(0)).map { r =>
+        val qv = doubles(r.getArray(1), qvType)
+        val csims = cents.map { case (cid, cv) =>
+          (cos6(qv, cv, ansi = false).filterNot(_.isNaN).getOrElse(-2.0), cid)
+        }
+        val probed = csims.sortWith { case ((s1, c1), (s2, c2)) =>
+          s1 > s2 || (s1 == s2 && c1 < c2) }.take(nProbe).map(_._2)
+        Probe(r.getLong(0), qv, probed)
+      }
+  }
+
+  /** The "serve score" job: every stored vector of each probed cell
+    * scored against the queries probing it (qid ≠ nid), one task per
+    * probed bucket of `<name>_cells`, each keeping per query the best
+    * `keep` hits by `key`; returns each query's merged buffer. With
+    * `withCodes` the key is the cosine against the stored int8 codes and
+    * `cos` the exact one ([[serveInt8]]); otherwise both are the exact
+    * cosine. */
+  private def scored(spark: SparkSession, name: String, probes: Array[Probe],
+      keep: Int, withCodes: Boolean): Array[Seq[Hit]] = {
+    val sc = spark.sparkContext
+    val ansi = spark.sessionState.conf.ansiEnabled
+    val cols = Seq("vec_id", "cell", "vec") ++ (if (withCodes) Seq("codes") else Nil)
+    val vecType = elementType(spark.table(s"${name}_cells"), "vec")
+    val cells = Bucketing.bucketRows(spark, s"${name}_cells", cols: _*)
+    val parts = cells.getNumPartitions
+    val byCell = probes.indices.flatMap(q => probes(q).cells.map(_ -> q))
+      .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2).toArray }
+    val probed = PartitionPruningRDD.create(cells,
+      byCell.keys.map(Bucketing.bucketOf(_, parts)).toSet)
+    val bc = sc.broadcast((probes, byCell))
+    try {
+      val partial = sc.runJob(probed, (rows: Iterator[InternalRow]) => {
+        val (ps, routes) = bc.value
+        val bufs = mutable.HashMap.empty[Int, Seq[Hit]]
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) routes.get(r.getLong(1)).foreach { qs =>
+            val nid = r.getLong(0)
+            val v = doubles(r.getArray(2), vecType)
+            val codes = if (withCodes) doubles(r.getArray(3), ByteType) else null
+            qs.foreach { q =>
+              if (ps(q).qid != nid) {
+                val cos = cos6(ps(q).qv, v, ansi)
+                val hit = Hit(if (withCodes) cos6(ps(q).qv, codes, ansi) else cos, nid, cos)
+                bufs(q) = TopK.keep(bufs.getOrElse(q, Vector.empty), hit, keep)(byKey)
+              }
+            }
+          }
+        }
+        bufs.toArray
+      })
+      val merged = Array.fill[Seq[Hit]](probes.length)(Vector.empty)
+      for (part <- partial; (q, buf) <- part) merged(q) = TopK.best(merged(q), buf, keep)(byKey)
+      merged
+    } finally bc.destroy()
+  }
+
+  /** (qid, nid, cos, rn) rows of each query's ranked hits. */
+  private def ranked(spark: SparkSession, probes: Array[Probe],
+      hits: Array[Seq[Hit]]): DataFrame = {
+    val rows = probes.indices.flatMap { q =>
+      hits(q).zipWithIndex.map { case (h, i) =>
+        InternalRow(probes(q).qid, h.nid, h.cos.map(Double.box).orNull, i + 1L)
+      }
+    }
+    RowsBridge.local(spark, rows, StructType(Seq(StructField("qid", LongType),
+      StructField("nid", LongType), StructField("cos", DoubleType),
+      StructField("rn", LongType))))
   }
 
   /** INCREMENTAL ingest into the stored layout (the connection
@@ -190,8 +351,9 @@ object IvfIndex {
     * only on a rebuild) — pick up their SQ8 codes, and APPEND into the
     * bucketed cells table. Spark applies the table's bucket spec on
     * insert, so appended postings land bucket-aligned and [[serve]] /
-    * [[serveInt8]] keep their pruned-scan plans with zero reindexing:
-    * a crawl batch becomes searchable the moment its append commits.
+    * [[serveInt8]] keep reading only the probed buckets with zero
+    * reindexing: a crawl batch becomes searchable the moment its append
+    * commits.
     * Cost per batch: one broadcast-quantizer argmin over the fresh
     * rows + one bucketed write of |fresh| rows, at most one new file
     * per cell ([[Bucketing.appendAligned]]) — nothing touches the
@@ -483,41 +645,24 @@ object IvfIndex {
 
   /** Serve kNN from the stored layout scoring the STORED INT8 CODES
     * first — the composed FAISS IVF-SQ8 production shape: probes route
-    * over the stored quantizer, the cells scan bucket-prunes to the
-    * probed cells, candidates are scored by cosine against the int8
-    * codes (the per-vector scale cancels — [[Similarity.int8Knn]]'s
-    * argument, so the scoring join needs codes only, never vectors or
-    * scales), and the `shortlistK`-deep shortlist re-ranks with the
-    * stored exact vectors. At storage scale the code-space scan reads
-    * ~1/4 the bytes of [[serve]]'s float scan over the same probed
-    * cells; everything else is identical. */
+    * over the stored quantizer ([[serve]]'s "serve route"), and the
+    * "serve score" job scores each probed cell's candidates by cosine
+    * against the int8 codes (the per-vector scale cancels —
+    * [[Similarity.int8Knn]]'s argument), keeping per query the
+    * `shortlistK` best by (code cosine desc, nid asc) with each one's
+    * exact cosine against the stored vector; the merged shortlist then
+    * re-ranks by exact cosine. At storage scale the code-space ranking
+    * reads ~1/4 the bytes of [[serve]]'s float scoring; everything else
+    * is identical. */
   def serveInt8(spark: SparkSession, name: String, queries: DataFrame,
       k: Int = 5, nProbe: Int = 2, shortlistK: Int = 20): DataFrame = {
     require(shortlistK >= k, "the shortlist must be at least k deep")
-    val cents = broadcast(spark.table(s"${name}_cents"))
-    val routed = Similarity.nearestCells(
-      queries.select(col("qid"), col("qv")), cents, "qid", "qv", nProbe)
-    val probedCells: Array[Long] = routed.select(col("cid")).distinct()
-      .collect().map(_.getLong(0))
-    val stored = spark.table(s"${name}_cells")
-      .where(col("cell").isin(probedCells.map(Long.box): _*))
-    val codeSide = stored.select(col("vec_id").as("nid"),
-      transform(col("codes"), x => x.cast("double")).as("nc"),
-      col("cell").as("cid"))
-    val shortlist = TopK.perKey(
-        routed.join(codeSide, "cid")
-          .where(col("qid") =!= col("nid"))
-          .select(col("qid"), col("nid"),
-            round(Similarity.cosine(col("qv"), col("nc")), 6).as("acos")),
-        "qid", shortlistK, col("acos").desc, col("nid").asc)
-      .select(col("qid"), col("nid"))
-    val exact = broadcast(shortlist)
-      .join(stored.select(col("vec_id").as("nid"), col("vec").as("nv")),
-        "nid")
-      .join(broadcast(queries.select(col("qid"), col("qv"))), "qid")
-      .select(col("qid"), col("nid"),
-        round(Similarity.cosine(col("qv"), col("nv")), 6).as("cos"))
-    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
+    JobLabel.around(spark.sparkContext, "serveInt8") { label =>
+      val probes = route(spark, name, queries, nProbe, label)
+      label("score")
+      ranked(spark, probes, scored(spark, name, probes, shortlistK, withCodes = true)
+        .map(_.sorted(byCos).take(k)))
+    }
   }
 
   /** Memoized build keyed by (sfDir, data fingerprint): the registered

@@ -893,13 +893,10 @@ object Streams {
         val bs = batch.sparkSession
         Seq("bands", "shingles", "sizes").foreach(t =>
           bs.catalog.refreshTable(s"${indexName}_$t"))
-        // materialized BEFORE append: the gate's lineage reads the
-        // very tables append inserts into, so a lazy `admitted`
-        // re-evaluated for append's later writes would see the batch's
-        // own first insert and self-reject
+        // the gate returns its admitted rows materialized (a local
+        // frame), so append's writes cannot feed back into them
         val admitted = graft.sources.DedupIndex.dedupAgainst(
           bs, indexName, batch, "text", "doc_id", tau = tau)
-          .localCheckpoint()
         graft.sources.DedupIndex.append(bs, indexName, admitted,
           "text", "doc_id")
       }

@@ -55,11 +55,11 @@ class CompactSpec extends AnyFunSuite {
     assert(afterCensus.values.forall(_ == 1),
       s"every bucket must fold to one file: $afterCensus")
     assert(fa < fb && fa == afterCensus.size.toLong)
-    val served = IvfIndex.serve(spark, "graft_ivf_cmp", queries,
-      k = 5, nProbe = 4)
-    val p = served.queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount"),
-      s"compaction must keep the pruned serve plan:\n$p")
+    val q = queries
+    val (served, reads, buckets) = SparkJobs.tableReads("graft_ivf_cmp_cells",
+      "serve score")(IvfIndex.serve(spark, "graft_ivf_cmp", q, k = 5, nProbe = 4))
+    assert(reads.size == 1 && reads.head <= buckets,
+      s"compaction must keep the bucketed serve scan: $reads of $buckets buckets")
     assert(served.collect().map(_.toSeq).toSet == beforeAnswer,
       "served answers must be byte-identical across compaction")
   }

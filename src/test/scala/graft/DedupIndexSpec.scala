@@ -98,21 +98,19 @@ class DedupIndexSpec extends AnyFunSuite {
   }
 
   test("the candidate probe never shuffles the stored bands side") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val (_, fresh, corpus) = fixtureSplit()
     DedupIndex.build(spark, corpus, "text", "doc_id", "graft_dedup_spec2")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val df = DedupIndex.dedupAgainst(spark, "graft_dedup_spec2", fresh,
-        "text", "doc_id")
-      df.count()
-      val shuffledStored = df.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec
-            if e.child.toString.contains("graft_dedup_spec2_bands") => e
-      }
+      val (_, stages) = SparkJobs.stages(DedupIndex.dedupAgainst(spark,
+        "graft_dedup_spec2", fresh, "text", "doc_id").count())
+      val stored = Seq("graft_dedup_spec2_bands", "graft_dedup_spec2_shingles")
+      assert(stored.forall(t => stages.exists(_.scans(t))),
+        s"the gate must read both stored tables:\n${stages.mkString("\n")}")
+      val shuffledStored = stages.filter(st => st.shuffleMap && stored.exists(st.scans))
       assert(shuffledStored.isEmpty,
-        s"the stored band postings must join on their bucket key " +
-          s"without an Exchange:\n${df.queryExecution.executedPlan}")
+        s"no stage that scans the stored postings may write a shuffle:\n" +
+          shuffledStored.mkString("\n"))
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }

@@ -74,10 +74,11 @@ class IndexRemoveSpec extends AnyFunSuite {
     assert(after == fresh && after.nonEmpty,
       "full-probe serve after remove must equal a fresh build on the survivors")
     assert(before != after, "the removal must have changed something")
-    val p = IvfIndex.serve(spark, "graft_ivf_rm", queries, k = 5,
-      nProbe = 2).queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount"),
-      s"the rewritten cells scan must stay bucket-pruned:\n$p")
+    val q = queries
+    val (_, reads, buckets) = SparkJobs.tableReads("graft_ivf_rm_cells",
+      "serve score")(IvfIndex.serve(spark, "graft_ivf_rm", q, k = 5, nProbe = 2))
+    assert(reads.size == 1 && reads.head < buckets,
+      s"the rewritten cells scan must stay bucket-pruned: $reads of $buckets buckets")
   }
 
   test("IvfIndex.maintain and serve on an index whose every vector was removed") {

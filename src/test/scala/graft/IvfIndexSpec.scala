@@ -31,22 +31,20 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("serve plan bucket-prunes to the probed cells; no corpus assignment") {
     val name = IvfIndex.ensureBuilt(spark, sf0001, numCentroids = 16)
-    val df = IvfIndex.serve(spark, name, queries, k = 5, nProbe = 4)
-    val p = df.queryExecution.executedPlan.toString
-    // the cells scan must read ONLY the probed buckets — the literal
-    // cell IN (...) predicate enables Spark's bucket pruning
-    assert(p.contains("SelectedBucketsCount"),
-      s"the cells scan must be bucket-pruned:\n$p")
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(p)
-    assert(sel.isDefined && sel.get.group(1).toInt < sel.get.group(2).toInt,
-      s"expected a strict subset of buckets read:\n$p")
-    // and nothing in the serve plan scans the raw embeddings corpus
-    // except the |Q|-row query side (pushed filter) — the corpus rides
-    // in from the stored table only
-    val rawScans = p.split('\n').count(l =>
-      l.contains("embeddings.parquet") && l.contains("Scan"))
-    assert(rawScans <= 1, s"serve must not rescan the raw corpus:\n$p")
+    val cells = s"${name}_cells"
+    val q = queries
+    val (_, stages) = SparkJobs.stages(IvfIndex.serve(spark, name, q, k = 5, nProbe = 4))
+    // the cells scan must read ONLY the probed buckets: one task each
+    val reads = stages.filter(_.scans(cells)).map(_.tasks)
+    val buckets = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(cells)).bucketSpec.get.numBuckets
+    assert(reads.size == 1 && reads.head < buckets,
+      s"expected a strict subset of buckets read: $reads of $buckets buckets")
+    // and nothing the serve runs reads anything but the index's two
+    // tables, except the |Q|-row query side — the corpus rides in from
+    // the stored table only
+    val rawScans = stages.count(st => !st.scans(cells) && !st.scans(s"${name}_cents"))
+    assert(rawScans <= 1, s"serve must not rescan the raw corpus:\n${stages.mkString("\n")}")
   }
 
   test("SQ8 serve with a corpus-wide shortlist equals the float serve") {
@@ -87,11 +85,10 @@ class IvfIndexSpec extends AnyFunSuite {
       "appended postings must follow the stored quantizer exactly")
     // the appended table still serves with a bucket-pruned plan, and
     // the appended vectors are searchable (probe ids are all appended)
-    val served = IvfIndex.serve(spark, "graft_ivf_apptest", queries,
-      k = 5, nProbe = 2)
-    val p = served.queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount"),
-      s"append must preserve the bucketed layout:\n$p")
+    val (served, reads, buckets) = SparkJobs.tableReads("graft_ivf_apptest_cells", "serve score")(
+      IvfIndex.serve(spark, "graft_ivf_apptest", queries, k = 5, nProbe = 2))
+    assert(reads.size == 1 && reads.head <= buckets,
+      s"append must preserve the bucketed layout: $reads of $buckets buckets")
     assert(served.count() > 0)
   }
 

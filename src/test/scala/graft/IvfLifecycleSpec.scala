@@ -176,13 +176,10 @@ class IvfLifecycleSpec extends AnyFunSuite {
   test("serve keeps its bucket-pruned plan after refresh") {
     built
     IvfIndex.refresh(spark, name)
-    val p = IvfIndex.serve(spark, name, queries, k = 5, nProbe = 2)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount"),
-      s"the refreshed cells scan must stay bucket-pruned:\n$p")
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(p)
-    assert(sel.isDefined && sel.get.group(1).toInt < sel.get.group(2).toInt,
-      s"expected a strict subset of buckets read:\n$p")
+    // one scan of the cells table, one task per probed bucket
+    val (_, reads, buckets) = SparkJobs.tableReads(s"${name}_cells", "serve score")(
+      IvfIndex.serve(spark, name, queries, k = 5, nProbe = 2))
+    assert(reads.size == 1 && reads.head < buckets,
+      s"expected a strict subset of buckets read: $reads of $buckets buckets")
   }
 }

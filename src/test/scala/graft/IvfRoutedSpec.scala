@@ -56,12 +56,11 @@ class IvfRoutedSpec extends AnyFunSuite {
 
   test("serve bucket-prunes the routed layout at tight probes") {
     built
-    val p = IvfIndex.serve(spark, routedName, queries, k = 5, nProbe = 2)
-      .queryExecution.executedPlan.toString
-    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(p)
-    assert(sel.isDefined && sel.get.group(1).toInt < sel.get.group(2).toInt,
-      s"expected a strict bucket-pruned subset read:\n$p")
+    // one scan of the cells table, one task per probed bucket
+    val (_, reads, buckets) = SparkJobs.tableReads(s"${routedName}_cells", "serve score")(
+      IvfIndex.serve(spark, routedName, queries, k = 5, nProbe = 2))
+    assert(reads.size == 1 && reads.head < buckets,
+      s"expected a strict bucket-pruned subset read: $reads of $buckets buckets")
   }
 
   test("append routes fresh vectors through the STORED coarse grid into the build's cells") {

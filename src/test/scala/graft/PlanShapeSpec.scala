@@ -114,23 +114,10 @@ class PlanShapeSpec extends AnyFunSuite {
                           // those — pinned by its own test below)
       "q_hybrid_rrf_lsh", // bm25's 1-row totals broadcast (the LSH arm
                           // itself is a bucket equi-join, no crossJoin)
-      "q_embed_ivf_knn_stored", // the |Q|-row probe routing over the
-                                // STORED 64-row quantizer table; the
-                                // corpus side is the bucket-pruned index
-                                // scan (pinned in IvfIndexSpec)
-      "q_embed_ivf_sq8_stored", // same stored-quantizer probe routing;
-                                // scoring reads the stored int8 codes
-      "q_embed_ivf_knn_routed_stored", // identical serve shape to
-                                // q_embed_ivf_knn_stored (the routing
-                                // difference is build-time only)
-      "q_embed_ivf_knn_auto_stored", // same serve shape again (the auto
-                                // dial floors to the shared 64-cell
-                                // index at fixture scale)
-      "q_hybrid_rrf_stored", // bm25's 1-row stored-totals broadcast +
-                             // the |Q|-row probe routing over the
-                             // stored quantizer; both corpus sides are
-                             // bucket-pruned index scans (pinned in
-                             // RetrievalSpec/TextIndexSpec/IvfIndexSpec)
+      "q_hybrid_rrf_stored", // bm25's 1-row stored-totals broadcast;
+                             // the IVF arm is IvfIndex.serve's local
+                             // answer (its bucket-pruned score stage is
+                             // pinned in RetrievalSpec/IvfIndexSpec)
       "q_semantic_incremental") // k-row refreshed-centroid broadcast into
                                 // the fresh routing scan (the kmeans shape)
     val offenders = Registry.byName.keys.toSeq.sorted
@@ -305,29 +292,30 @@ class PlanShapeSpec extends AnyFunSuite {
       s"admitted rows must come from an anti-join on the dup set:\n$p")
   }
 
-  test("incremental dedup candidates: ONE cross-band join, no self-join branch") {
-    val docs = Tables.documents(spark, sf0001)
-    val fresh = graft.llm.Sampling.hashSample(docs, "doc_id", 0.2)
-    val corpus = docs.join(fresh.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    withoutAqe {
-      val cand = graft.llm.Dedup.crossBandCandidates(
-        graft.llm.Dedup.bandRows(fresh, "text", "doc_id"),
-        graft.llm.Dedup.bandRows(corpus, "text", "doc_id"))
-      // the corpus anti-join above contributes one Join; the candidate
-      // stage itself must add exactly ONE more — the fresh×corpus band
-      // join. A fresh×fresh or corpus×corpus branch would add a third.
-      val joins = cand.queryExecution.executedPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
-      }
-      val bandJoins = joins.filterNot(_.joinType.toString.contains("Anti"))
-      assert(bandJoins.size == 1,
-        s"expected exactly one band join, got ${joins.map(_.joinType)}:\n$cand")
-      assert(bandJoins.head.leftKeys.nonEmpty,
-        "the band join must be an equi-join on the band key")
-      val p = cand.queryExecution.executedPlan.toString
-      assert(p.contains("minhash_bands"),
-        s"both sides must band with the native portable band keys:\n$p")
-    }
+  test("incremental dedup candidates: ONE probe of the corpus band keys, no self-join branch") {
+    val s = spark
+    import s.implicits._
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    def text(w: String) = (1 to 40).map(i => s"$w$i").mkString(" ")
+    // fresh twins of each other, and a corpus holding twins of its own:
+    // a fresh×fresh or corpus×corpus branch would pair them
+    val fresh = Seq((9000001L, text("novel")), (9000002L, text("novel")),
+      (9000003L, text("stored"))).toDF("doc_id", "text")
+    val corpus = docs.union(Seq((8000001L, text("stored")),
+      (8000002L, text("stored"))).toDF("doc_id", "text"))
+    val (admitted, stages) = SparkJobs.stages(
+      graft.llm.Dedup.incrementalDedup(fresh, corpus, "text", "doc_id")
+        .select("doc_id").collect().map(_.getLong(0)).toSet)
+    assert(admitted == Set(9000001L, 9000002L),
+      s"fresh twins are no candidates of each other; the corpus copy refuses: $admitted")
+    // the candidates come from ONE pass of the derived corpus band rows,
+    // hash-probed against the fresh keys in the task — no join, so no
+    // shuffle ahead of it
+    val probe = stages.filter(_.description == "incrementalDedup probe")
+    assert(probe.size == 1 && !probe.head.shuffleMap,
+      s"expected one probe stage and no band join:\n${stages.mkString("\n")}")
+    assert(stages.map(_.description).distinct.forall(Set("incrementalDedup probe",
+      "incrementalDedup verify")), stages.map(_.description))
   }
 
   test("PQ scoring is broadcast-only: no shuffle join touches raw vectors") {

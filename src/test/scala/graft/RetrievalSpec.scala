@@ -104,17 +104,21 @@ class RetrievalSpec extends AnyFunSuite {
         "vec_id", "embedding", queries, kEach = 10, kOut = 5,
         semantic = Retrieval.IvfRetriever(numCentroids = 8, nProbe = 2))
       .collect().map(_.toSeq).toSet
-    val storedDf = Retrieval.hybridRrfStored(spark, "graft_text_hyb",
-      "graft_ivf_hyb", queries, kEach = 10, kOut = 5, nProbe = 2)
-    val stored = storedDf.collect().map(_.toSeq).toSet
+    val ((storedDf, stored), stages) = SparkJobs.stages {
+      val df = Retrieval.hybridRrfStored(spark, "graft_text_hyb",
+        "graft_ivf_hyb", queries, kEach = 10, kOut = 5, nProbe = 2)
+      (df, df.collect().map(_.toSeq).toSet)
+    }
     assert(stored == live,
       s"stored fusion must equal live fusion:\n$stored\nvs\n$live")
-    // the semantic arm's cells scan must be bucket-pruned in the final
-    // plan (the lex arm checkpoints its probe — its pruning is pinned
-    // by TextIndexSpec's forced-scan replication)
+    // the semantic arm's cells scan must be bucket-pruned: one task per
+    // probed bucket of the 8 (the lex arm checkpoints its probe — its
+    // pruning is pinned by TextIndexSpec's forced-scan replication)
+    val scored = stages.filter(st =>
+      st.description == "serve score" && st.scans("graft_ivf_hyb_cells"))
+    assert(scored.size == 1 && scored.head.tasks < 8,
+      s"the stored fusion must serve from a pruned cells scan:\n${stages.mkString("\n")}")
     val p = storedDf.queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount"),
-      s"the stored fusion must serve from a pruned cells scan:\n$p")
     // nothing in the fused plan rescans raw corpus parquet: the only
     // sources are the index tables and the tiny probe lookup
     assert(!p.contains("documents.parquet") && !p.contains("embeddings.parquet"),
@@ -147,31 +151,29 @@ class RetrievalSpec extends AnyFunSuite {
       .join(emb.select(col("vec_id").as("probe_id"),
         col("embedding").as("qv")), "probe_id")
       .select(col("qid"), col("qv")).localCheckpoint()
-    val directDf = Retrieval.hybridRrfStoredDirect(spark,
+    // one "Scan parquet …_cells" stage = one read of the cells table
+    def cellScans(run: => Set[Seq[Any]]): (Set[Seq[Any]], Seq[SparkJobs.Stage]) = {
+      val (out, stages) = SparkJobs.stages(run)
+      (out, stages.filter(_.scans("graft_ivf_hyb2_cells")))
+    }
+    val (direct, directScans) = cellScans(Retrieval.hybridRrfStoredDirect(spark,
       "graft_text_hyb2", "graft_ivf_hyb2", queries.map(q => (q._1, q._2)),
       qvecs, selfIds = idOf.toMap, kEach = 10, kOut = 5, nProbe = 2)
-    assert(directDf.collect().map(_.toSeq).toSet == viaId,
+      .collect().map(_.toSeq).toSet)
+    assert(direct == viaId,
       "direct-vector entry must be row-identical to the id-lookup entry")
-    // final AQE plan only (toString appends the initial plan too, which
-    // would double-count); one "Scan parquet …_cells" line = one scan
-    val p = directDf.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val cellScans = p.linesIterator.count(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivf_hyb2_cells"))
-    assert(p.contains("SelectedBucketsCount"),
-      s"the direct path's cells scan must be bucket-pruned:\n$p")
-    assert(cellScans == 1,
+    assert(directScans.forall(_.tasks < 8),
+      s"the direct path's cells scan must be bucket-pruned: $directScans")
+    assert(directScans.size == 1,
       s"the direct path must read the cells table exactly once " +
-        s"(no id-lookup point scan), found $cellScans:\n$p")
-    // and the id-lookup entry's plan, for contrast, carries the extra
+        s"(no id-lookup point scan), found ${directScans.size}: $directScans")
+    // and the id-lookup entry, for contrast, carries the extra
     // point-lookup scan the direct entry exists to remove
-    val pId = Retrieval.hybridRrfStored(spark, "graft_text_hyb2",
+    val (_, idScans) = cellScans(Retrieval.hybridRrfStored(spark, "graft_text_hyb2",
       "graft_ivf_hyb2", queries, kEach = 10, kOut = 5, nProbe = 2)
-      .queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(pId.linesIterator.count(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivf_hyb2_cells")) == 2,
-      s"the id-lookup entry scans cells twice (probe lookup + serve):\n$pId")
+      .collect().map(_.toSeq).toSet)
+    assert(idScans.size == 2,
+      s"the id-lookup entry scans cells twice (probe lookup + serve): $idScans")
     // a genuinely novel query (no selfIds entry) must not lose any
     // neighbor to the synthetic qid: its own exact twin ranks first
     val novel = Retrieval.hybridRrfStoredDirect(spark,
