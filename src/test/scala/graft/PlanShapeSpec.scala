@@ -292,7 +292,7 @@ class PlanShapeSpec extends AnyFunSuite {
       s"admitted rows must come from an anti-join on the dup set:\n$p")
   }
 
-  test("incremental dedup candidates: ONE probe of the corpus band keys, no self-join branch") {
+  test("incremental dedup candidates: ONE cross-band join, no self-join branch") {
     val s = spark
     import s.implicits._
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
@@ -308,12 +308,12 @@ class PlanShapeSpec extends AnyFunSuite {
         .select("doc_id").collect().map(_.getLong(0)).toSet)
     assert(admitted == Set(9000001L, 9000002L),
       s"fresh twins are no candidates of each other; the corpus copy refuses: $admitted")
-    // the candidates come from ONE pass of the derived corpus band rows,
-    // hash-probed against the fresh keys in the task — no join, so no
-    // shuffle ahead of it
+    // the fresh×corpus band join is ONE pass of the derived corpus band
+    // rows, hash-probed against the broadcast fresh keys in the task, so
+    // no shuffle runs ahead of it
     val probe = stages.filter(_.description == "incrementalDedup probe")
     assert(probe.size == 1 && !probe.head.shuffleMap,
-      s"expected one probe stage and no band join:\n${stages.mkString("\n")}")
+      s"expected the cross-band join as one probe stage:\n${stages.mkString("\n")}")
     assert(stages.map(_.description).distinct.forall(Set("incrementalDedup probe",
       "incrementalDedup verify")), stages.map(_.description))
   }
