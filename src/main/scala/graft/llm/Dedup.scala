@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.RowsBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.JobLabel
@@ -161,8 +162,7 @@ object Dedup {
     val spark = fresh.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     admit(spark, "incrementalDedup", fresh, textCol, idCol, tau,
-      _ => bandRows(corpus, textCol, idCol)
-        .select(col("doc_id").cast("long"), col("bkh")).queryExecution.toRdd,
+      _ => bandRows(corpus, textCol, idCol).queryExecution.toRdd,
       parts,
       () => Bucketing.route(corpus.select(col(idCol).cast("long"),
           explode(shingleArray(col(textCol), AdmitK)))
@@ -182,19 +182,40 @@ object Dedup {
   private val AdmitHashes = 64
   private val AdmitBands = 16
 
-  /** (doc_id, bkh) cross-admission band-key rows via the portable
-    * [[graft.functions.MinHashBands]]: bkh = band · 2^40 + bandHash. The
-    * band hash is < 1e9+7 < 2^30, so bkh is injective and one-key
-    * equality ≡ (band, bandHash) equality. Docs with fewer than
+  /** The derive step of cross admission: `docs`' `out` columns, then per
+    * row the id as a bigint (`id`), the [[graft.functions.MinHashBands]]
+    * band hashes (`sig`, null under [[AdmitK]] words) and the sorted set
+    * of distinct word [[AdmitK]]-shingles (`sh`). [[admit]] reads the
+    * fresh batch through it, `DedupIndex.append` the admitted one, and
+    * [[bandRows]] a corpus. */
+  private[graft] def derive(docs: DataFrame, textCol: String, idCol: String,
+      out: Seq[Column] = Nil): DataFrame =
+    docs.select(out ++ Seq(col(idCol).cast("long").as("id"),
+      graft.functions.MinHashBands.minhashBands(split(col(textCol), "\\s+"),
+        AdmitK, AdmitHashes, AdmitBands).as("sig"),
+      sort_array(shingleArray(col(textCol), AdmitK)).as("sh")): _*)
+
+  /** The band keys of band hashes `sig`: band b's key is sig(b) + b·2^40.
+    * The band hash is < 1e9+7 < 2^30, so the key is injective and
+    * one-key equality ≡ (band, bandHash) equality. */
+  private[graft] def bandKeys(sig: ArrayData): Array[Long] =
+    Array.tabulate(AdmitBands)(b => sig.getLong(b) + b * (1L << 40))
+
+  /** (doc_id bigint, bkh) cross-admission band-key rows of `docs`: the
+    * [[bandKeys]] of each [[derive]]d signature. Docs with fewer than
     * [[AdmitK]] words have no band rows. */
   private[graft] def bandRows(docs: DataFrame, textCol: String,
       idCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        graft.functions.MinHashBands.minhashBands(split(col(textCol), "\\s+"),
-          AdmitK, AdmitHashes, AdmitBands).as("sig"))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id"), explode(array((0 until AdmitBands).map(b =>
-        element_at(col("sig"), b + 1) + lit(b * (1L << 40))): _*)).as("bkh"))
+    RowsBridge.frame(docs.sparkSession,
+      derive(docs, textCol, idCol).select(col("id"), col("sig")).queryExecution.toRdd
+        .flatMap { r =>
+          if (r.isNullAt(1)) Iterator.empty
+          else {
+            val id = if (r.isNullAt(0)) null else r.getLong(0)
+            bandKeys(r.getArray(1)).iterator.map(k => InternalRow(id, k))
+          }
+        },
+      StructType(Seq(StructField("doc_id", LongType), StructField("bkh", LongType))))
 
   /** (id, n): distinct shingles per document. */
   private[graft] def shingleCounts(sh: DataFrame): DataFrame =
@@ -234,9 +255,9 @@ object Dedup {
     * their band-key candidates in a corpus. At most three Spark jobs,
     * described `"<op> derive"`, `"<op> probe"` and `"<op> verify"`:
     *
-    *   - derive: the fresh rows with their [[bandRows]] keys and sorted
-    *     shingle sets, collected once (no job for a local batch) and
-    *     broadcast;
+    *   - derive: the fresh rows with their [[bandKeys]] and sorted
+    *     shingle sets ([[derive]]), collected once (no job for a local
+    *     batch) and broadcast;
     *   - probe: `corpusBands(keys)` — corpus (doc_id, bkh) rows, in any
     *     partitioning, holding at least those among the fresh `keys` —
     *     hash-probed per task against the fresh keys; each task addresses
@@ -261,26 +282,20 @@ object Dedup {
       val sc = spark.sparkContext
       label("derive")
       val out = (idCol +: fresh.columns.filter(_ != idCol)).map(fresh.col)
-      val derived = fresh.select(out ++ Seq(col(idCol).cast("long"),
-        graft.functions.MinHashBands.minhashBands(split(col(textCol), "\\s+"),
-          AdmitK, AdmitHashes, AdmitBands),
-        sort_array(shingleArray(col(textCol), AdmitK))): _*)
+      val derived = derive(fresh, textCol, idCol, out)
       val rows = RowsBridge.collect(derived)
       val n = out.length
       val byKey = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
-      for ((r, i) <- rows.zipWithIndex if !r.isNullAt(n) && !r.isNullAt(n + 1)) {
-        val sig = r.getArray(n + 1)
-        for (b <- 0 until AdmitBands)
-          byKey.getOrElseUpdate(sig.getLong(b) + b * (1L << 40),
-            mutable.ArrayBuffer.empty) += i
-      }
+      for ((r, i) <- rows.zipWithIndex if !r.isNullAt(n) && !r.isNullAt(n + 1);
+          key <- bandKeys(r.getArray(n + 1)))
+        byKey.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += i
       val side = FreshSide(rows.map(_.getLong(n)), rows.map(_.getArray(n + 2)),
         byKey.map { case (key, is) => key -> is.toArray }.toMap)
       val dups =
         if (byKey.isEmpty) Set.empty[Long]
         else refused(sc, label, side, tau, () => corpusBands(byKey.keys.toSeq),
           parts, corpusShingles)
-      val schema = org.apache.spark.sql.types.StructType(derived.schema.take(n))
+      val schema = StructType(derived.schema.take(n))
       RowsBridge.local(spark, rows.iterator.filter(r => r.isNullAt(n) || !dups(r.getLong(n)))
         .map(r => InternalRow.fromSeq(schema.fields.indices.map(i =>
           r.get(i, schema(i).dataType)))).toSeq, schema)

@@ -1040,20 +1040,23 @@ object Multimodal {
     * aggregates/joins, so results cannot depend on the partitioning. */
   private[graft] def checkpointFrames(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
-    val sc = cp.sparkSession.sparkContext
     val info = cp.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
-    coalesceTarget(info, sc.defaultParallelism).fold(cp)(cp.coalesce)
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          org.apache.spark.sql.graftbridge.StorageBridge.report(l.rdd)
+      }
+    coalesceTarget(info, cp.sparkSession.sparkContext.defaultParallelism)
+      .fold(cp)(cp.coalesce)
   }
 
   /** The partition count [[checkpointFrames]] coalesces a checkpoint with
     * storage report `info` to: max(`par`, materialized bytes / 64 MB), or
     * None to keep the checkpoint as it is — when that is no fewer
-    * partitions, or when the report is missing or incomplete. The async
-    * listener bus fills the report in, so right after the checkpoint the
-    * RDD can be absent or only partly reported, and a partial byte count
-    * would silently collapse the target to `par`. */
+    * partitions, or when the report is missing or incomplete (a partial
+    * byte count would silently collapse the target to `par`). The report
+    * comes from the block-manager master
+    * ([[org.apache.spark.sql.graftbridge.StorageBridge]]), complete once
+    * the checkpoint job has returned, so one query plans the same
+    * partition count on every run. */
   private[graft] def coalesceTarget(info: Option[org.apache.spark.storage.RDDInfo],
       par: Int): Option[Int] =
     info.flatMap { i =>

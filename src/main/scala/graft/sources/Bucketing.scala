@@ -1,12 +1,16 @@
 package graft.sources
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowsBridge
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Bucketed-table layout: the persistent co-location contract that turns
@@ -32,32 +36,36 @@ object Bucketing {
       .sortBy(key)
       .saveAsTable(table)
 
-  /** Append `df` to the bucketed table `table` with at most one new file
-    * per bucket. The writer computes bucket = pmod(murmur3(cols), B) per
-    * row and every task writes its own file to every bucket it holds,
-    * so an unaligned append adds tasks × buckets files. Rows are first
-    * hash-partitioned on the bucket columns into n partitions, n the
-    * largest divisor of B not above `spark.sql.shuffle.partitions`:
-    * pmod(h, B) then fixes pmod(h, n), so each bucket's rows sit in one
-    * task. Columns are cast to the table's types (insertInto matches by
-    * position) so the partitioning hashes the values the writer
-    * buckets. */
-  def appendAligned(spark: SparkSession, df: DataFrame, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"$table is not bucketed"))
-    require(df.columns.length == meta.schema.length,
-      s"$table has ${meta.schema.length} columns, the appended frame ${df.columns.length}")
-    val typed = df.select(df.columns.zip(meta.schema.fields).map {
-      case (c, f) => df.col(c).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val b = spec.numBuckets
-    val n = (math.min(b, spark.sessionState.conf.numShufflePartitions) to 1 by -1)
-      .find(b % _ == 0).get
-    typed.repartition(n, spec.bucketColumnNames.map(typed.col): _*)
-      .write.mode("append").insertInto(table)
-  }
+  /** Append `rows`, Catalyst rows in `table`'s schema, to the bucketed
+    * `table` with at most one new file per bucket, in one `insertInto`
+    * job with no exchange. The writer files a row under bucket
+    * pmod(murmur3(bucket columns, seed 42), B) ([[bucketOf]] for a
+    * bigint key; a null key hashes to the seed), and every task writes
+    * its own file to every bucket it holds. So each row is placed on the
+    * driver, by the writer's own bucket expression, into partition
+    * bucket mod n of n, n the largest divisor of B not above
+    * `spark.sql.shuffle.partitions`: each bucket's rows sit in one task.
+    * The batch is on the driver already (the appends derive it there, as
+    * the gate and serve read theirs); a bulk load is a table's `build`.
+    * An empty batch writes nothing. */
+  def appendAligned(spark: SparkSession, rows: Seq[InternalRow], table: String): Unit =
+    if (rows.nonEmpty) {
+      val meta = entry(spark, table)
+      val spec = meta.bucketSpec.getOrElse(
+        throw new IllegalArgumentException(s"$table is not bucketed"))
+      val b = spec.numBuckets
+      val n = (math.min(b, spark.sessionState.conf.numShufflePartitions) to 1 by -1)
+        .find(b % _ == 0).get
+      val bucket = HashPartitioning(spec.bucketColumnNames.map { c =>
+        val i = meta.schema.fieldIndex(c)
+        BoundReference(i, meta.schema(i).dataType, nullable = true)
+      }, b).partitionIdExpression
+      val placed = Array.fill(n)(mutable.ArrayBuffer.empty[InternalRow])
+      rows.foreach(r => placed(bucket.eval(r).asInstanceOf[Int] % n) += r)
+      RowsBridge.frame(spark,
+          spark.sparkContext.parallelize(placed.toSeq, n).flatMap(_.iterator), meta.schema)
+        .write.mode("append").insertInto(table)
+    }
 
   /** The bucket of bigint bucket-column value `v` among `buckets`:
     * pmod(murmur3(v, seed 42), buckets), the bucket the writer files it
@@ -76,13 +84,16 @@ object Bucketing {
   def bucketRows(spark: SparkSession, table: String, cols: String*): RDD[InternalRow] = {
     val rows = TextIndex.forceBucketedScan(spark)(
       _.table(table).select(cols.map(col): _*).queryExecution.toRdd)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
+    val buckets = entry(spark, table).bucketSpec.map(_.numBuckets)
     require(buckets.contains(rows.getNumPartitions),
       s"$table: expected one partition per bucket ($buckets), read ${rows.getNumPartitions}")
     rows
   }
+
+  /** `table`'s catalog entry. */
+  private def entry(spark: SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
 
   /** The values of `rdd` delivered by one shuffle to the partition their
     * key names, among `buckets` partitions. */

@@ -2,8 +2,11 @@ package graft.sources
 
 import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RowsBridge
 
+import graft.core.JobLabel
 import graft.llm.Dedup
 
 /** PERSISTED near-dup index — the dedup-family twin of [[IvfIndex]]
@@ -14,9 +17,9 @@ import graft.llm.Dedup
   * signature work re-paid for an identical answer. This index writes
   * that derivation to disk once, as three bucketed tables:
   *
-  *   - `<name>_bands` (doc_id, bkh): one row per (doc, band) from
-  *     [[Dedup.bandRows]] — the injective composite key bkh = band ·
-  *     2^40 + bandHash — bucketed by bkh, so the fresh keys prune the
+  *   - `<name>_bands` (doc_id, bkh): one row per (doc, band) —
+  *     [[Dedup.bandKeys]]' injective composite key bkh = bandHash +
+  *     band · 2^40 — bucketed by bkh, so the fresh keys prune the
   *     probe to the buckets they hash to.
   *   - `<name>_shingles` (id, shingle), bucketed by id: the exact-
   *     Jaccard verifier's corpus side, read bucket by bucket, each
@@ -34,9 +37,12 @@ import graft.llm.Dedup
   * per-bucket exact-Jaccard verify — at most three Spark jobs, no
   * stored row shuffled. So it admits exactly what `incrementalDedup`
   * admits — the stored layout changes cost, never answers. [[append]]
-  * closes the ingest loop: admitted docs join the index (bands +
-  * shingles + sizes inserted with the tables' bucket specs), so the
-  * next batch dedups against corpus ∪ admitted with no rebuild.
+  * closes the ingest loop: the admitted batch is derived once on the
+  * driver by the gate's own derive step ([[Dedup.derive]]) and each
+  * row is placed in the bucket the writer files it under
+  * ([[Bucketing.appendAligned]]) — three write jobs, no shuffle — so
+  * the next batch dedups against corpus ∪ admitted with no rebuild.
+  * Ids are stored as bigint. [[build]] stays the bulk path.
   *
   * 100 TB shape: the per-batch cost drops from O(|corpus| + |fresh|)
   * signature derivation to O(|fresh|) + a bucket-pruned probe of the
@@ -53,27 +59,21 @@ object DedupIndex {
   def build(spark: SparkSession, corpus: DataFrame, textCol: String,
       idCol: String, name: String,
       basePath: String = IvfIndex.defaultBase): Unit = {
+    // ids stored as bigint, the type the gate reads and append writes;
     // each table hash-partitioned by its bucket column before the
     // bucketed write: one file per bucket, not tasks × buckets (the
     // IvfIndex.build recipe)
-    Dedup.bandRows(corpus, textCol, idCol)
-      .repartition(col("bkh"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_bands")
-      .bucketBy(Buckets, "bkh").sortBy("bkh")
-      .saveAsTable(s"${name}_bands")
-    val sh = Dedup.shingles(corpus, textCol, idCol, Dedup.AdmitK)
-    sh.repartition(col("id"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_shingles")
-      .bucketBy(Buckets, "id").sortBy("id")
-      .saveAsTable(s"${name}_shingles")
-    Dedup.shingleCounts(sh)
-      .repartition(col("id"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_sizes")
-      .bucketBy(Buckets, "id").sortBy("id")
-      .saveAsTable(s"${name}_sizes")
+    val docs = corpus.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    def write(rows: DataFrame, key: String, table: String): Unit =
+      rows.repartition(col(key))
+        .write.mode("overwrite").format("parquet")
+        .option("path", s"$basePath/${name}_$table")
+        .bucketBy(Buckets, key).sortBy(key)
+        .saveAsTable(s"${name}_$table")
+    write(Dedup.bandRows(docs, "text", "id"), "bkh", "bands")
+    val sh = Dedup.shingles(docs, "text", "id", Dedup.AdmitK)
+    write(sh, "id", "shingles")
+    write(Dedup.shingleCounts(sh), "id", "sizes")
   }
 
   /** Admit the fresh rows not near-duplicating the INDEXED corpus — the
@@ -99,22 +99,35 @@ object DedupIndex {
       () => shingles.map(r => (r.getLong(0), r.getUTF8String(1))))
   }
 
-  /** Ingest ADMITTED docs into the index: bands, shingles, and sizes
-    * insert with the tables' bucket specs, at most one file per bucket
-    * each ([[Bucketing.appendAligned]]), so the next batch dedups
-    * against corpus ∪ admitted with no rebuild. The caller owns id
-    * freshness (the [[IvfIndex.append]] contract) — admitted rows come
-    * out of [[dedupAgainst]], which guarantees they are not near-dups
-    * of anything already indexed. */
+  /** Ingest ADMITTED docs into the index, so the next batch dedups
+    * against corpus ∪ admitted with no rebuild. The batch is derived
+    * once, on the driver, by the gate's derive step ([[Dedup.derive]]:
+    * no Spark job for a local frame, such as [[dedupAgainst]] returns),
+    * and its band keys, shingles and per-doc shingle counts go to the
+    * three tables by [[Bucketing.appendAligned]]: one write job each,
+    * at most one file per bucket. Jobs are described `"dedupAppend
+    * derive"` and `"dedupAppend write"`. The caller owns id freshness
+    * (the [[IvfIndex.append]] contract) — admitted rows come out of
+    * [[dedupAgainst]], which guarantees they are not near-dups of
+    * anything already indexed. */
   def append(spark: SparkSession, name: String, admitted: DataFrame,
-      textCol: String, idCol: String): Unit = {
-    Bucketing.appendAligned(spark, Dedup.bandRows(admitted, textCol, idCol),
-      s"${name}_bands")
-    val sh = Dedup.shingles(admitted, textCol, idCol, Dedup.AdmitK)
-      .localCheckpoint()
-    Bucketing.appendAligned(spark, sh, s"${name}_shingles")
-    Bucketing.appendAligned(spark, Dedup.shingleCounts(sh), s"${name}_sizes")
-  }
+      textCol: String, idCol: String): Unit =
+    JobLabel.around(spark.sparkContext, "dedupAppend") { label =>
+      label("derive")
+      val docs = RowsBridge.collect(Dedup.derive(admitted, textCol, idCol)).toSeq
+      def id(r: InternalRow): Any = if (r.isNullAt(0)) null else r.getLong(0)
+      val sets = docs.filter(r => !r.isNullAt(2) && r.getArray(2).numElements() > 0)
+      label("write")
+      Bucketing.appendAligned(spark, docs.filter(!_.isNullAt(1)).flatMap(r =>
+        Dedup.bandKeys(r.getArray(1)).map(k => InternalRow(id(r), k))), s"${name}_bands")
+      Bucketing.appendAligned(spark, sets.flatMap { r =>
+        val set = r.getArray(2)
+        (0 until set.numElements()).map(i => InternalRow(id(r), set.getUTF8String(i)))
+      }, s"${name}_shingles")
+      val sizes = sets.groupMapReduce(id)(_.getArray(2).numElements().toLong)(_ + _)
+      Bucketing.appendAligned(spark, sizes.map { case (i, n) => InternalRow(i, n) }.toSeq,
+        s"${name}_sizes")
+    }
 
   /** Scheduled maintenance: compact exactly the fragmented tables,
     * else no-op ([[Compact.maintainTables]], r13 verdict #3). */

@@ -260,29 +260,38 @@ object IvfIndex {
 
   /** The "serve route" step of [[serve]] and [[serveInt8]]: the stored
     * quantizer and the queries read to the driver, each query routed to
-    * its `nProbe` nearest cells by [[Similarity.nearestCells]]'
-    * arithmetic — round(cosine, 6), −2.0 where the cosine is null or NaN
-    * (a zero-norm, null or NaN vector ranks last), ties to the lower
-    * cid. Null qids are dropped: `qid ≠ nid` holds for none of them. */
+    * its `nProbe` [[nearest]] cells. Null qids are dropped: `qid ≠ nid`
+    * holds for none of them. */
   private def route(spark: SparkSession, name: String, queries: DataFrame,
       nProbe: Int, label: JobLabel): Array[Probe] = {
     label("route")
-    val centsTab = spark.table(s"${name}_cents")
-    val cvType = elementType(centsTab, "cv")
-    val cents = RowsBridge.collect(centsTab.select(col("cid").cast("long"), col("cv")))
-      .map(r => (r.getLong(0), doubles(r.getArray(1), cvType)))
+    val cents = centroids(spark, name)
     val qvType = elementType(queries, "qv")
     RowsBridge.collect(queries.select(col("qid").cast("long"), col("qv")))
       .filter(!_.isNullAt(0)).map { r =>
         val qv = doubles(r.getArray(1), qvType)
-        val csims = cents.map { case (cid, cv) =>
-          (cos6(qv, cv, ansi = false).filterNot(_.isNaN).getOrElse(-2.0), cid)
-        }
-        val probed = csims.sortWith { case ((s1, c1), (s2, c2)) =>
-          s1 > s2 || (s1 == s2 && c1 < c2) }.take(nProbe).map(_._2)
-        Probe(r.getLong(0), qv, probed)
+        Probe(r.getLong(0), qv, nearest(qv, cents, nProbe))
       }
   }
+
+  /** The stored quantizer `<name>_cents` read to the driver: (cid, cv). */
+  private def centroids(spark: SparkSession, name: String): Array[(Long, Array[Double])] = {
+    val centsTab = spark.table(s"${name}_cents")
+    val cvType = elementType(centsTab, "cv")
+    RowsBridge.collect(centsTab.select(col("cid").cast("long"), col("cv")))
+      .map(r => (r.getLong(0), doubles(r.getArray(1), cvType)))
+  }
+
+  /** The `nProbe` cells of `cents` nearest vector `v` by
+    * [[Similarity.nearestCells]]' arithmetic: round(cosine, 6), −2.0
+    * where the cosine is null or NaN (a zero-norm, null or NaN vector
+    * ranks last), ties to the lower cid. */
+  private def nearest(v: Array[Double], cents: Array[(Long, Array[Double])],
+      nProbe: Int): Array[Long] =
+    cents.map { case (cid, cv) =>
+      (cos6(v, cv, ansi = false).filterNot(_.isNaN).getOrElse(-2.0), cid)
+    }.sortWith { case ((s1, c1), (s2, c2)) => s1 > s2 || (s1 == s2 && c1 < c2) }
+      .take(nProbe).map(_._2)
 
   /** The "serve score" job: every stored vector of each probed cell
     * scored against the queries probing it (qid ≠ nid), one task per
@@ -349,48 +358,57 @@ object IvfIndex {
     * cell semantics match the existing postings exactly; the quantizer
     * is NOT retrained, the standard IVF ingest contract (cells drift
     * only on a rebuild) — pick up their SQ8 codes, and APPEND into the
-    * bucketed cells table. Spark applies the table's bucket spec on
-    * insert, so appended postings land bucket-aligned and [[serve]] /
-    * [[serveInt8]] keep reading only the probed buckets with zero
-    * reindexing: a crawl batch becomes searchable the moment its append
-    * commits.
-    * Cost per batch: one broadcast-quantizer argmin over the fresh
-    * rows + one bucketed write of |fresh| rows, at most one new file
-    * per cell ([[Bucketing.appendAligned]]) — nothing touches the
-    * existing corpus. The CALLER owns id freshness (the incremental-
-    * dedup admission contract): appending an id that already has a
-    * posting duplicates it — run the engine's dedup/admission gate
-    * first, exactly as [[graft.llm.Dedup.incrementalDedup]] does for
-    * documents. */
+    * bucketed cells table, where [[serve]] / [[serveInt8]] read only the
+    * probed buckets with zero reindexing: a crawl batch becomes
+    * searchable the moment its append commits.
+    * Cost per batch, at most two Spark jobs: "ivfAppend route" reads the
+    * stored quantizer and the batch to the driver (no job for a local
+    * batch) and routes each vector to its [[nearest]] cell, serve's
+    * routing at nProbe = 1; the one [[sq8]] expression runs over the
+    * routed batch as a local frame; "ivfAppend write" is one bucketed
+    * insert of |fresh| rows with no exchange, at most one new file per
+    * cell ([[Bucketing.appendAligned]]) — nothing touches the existing
+    * corpus. A routed index (`<name>_coarse`) keeps its two-level
+    * assignment plan, under "ivfAppend route". The CALLER owns id
+    * freshness (the incremental-dedup admission contract): appending an
+    * id that already has a posting duplicates it — run the engine's
+    * dedup/admission gate first, exactly as
+    * [[graft.llm.Dedup.incrementalDedup]] does for documents. */
   def append(spark: SparkSession, name: String, fresh: DataFrame,
       idCol: String, vecCol: String,
-      maxBroadcastCentroids: Int = 100000): Unit = {
-    val vecs = fresh.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
-    val rows =
-      if (spark.catalog.tableExists(s"${name}_coarse")) {
-        // a routed index: fresh batches route through the STORED coarse
-        // grid + stored quantizer — the same ~|fresh|·2√k assignment the
-        // build paid, and cell semantics provably identical to it
-        val hintFine =
-          spark.table(s"${name}_cents").count() <= maxBroadcastCentroids
-        val cents =
-          if (hintFine) broadcast(spark.table(s"${name}_cents"))
-          else spark.table(s"${name}_cents")
-        postingRowsRouted(vecs, cents,
-          broadcast(spark.table(s"${name}_coarse")), hintFine)
-      } else {
-        // the flat branch honors the same broadcast ceiling as the
-        // routed one (r13 ADVICE): a flat index built with a raised
-        // routeAbove and a huge quantizer must not force-broadcast it
-        // on every append — unhinted, AQE still broadcasts when small
-        val centsTab = spark.table(s"${name}_cents")
-        val cents =
-          if (centsTab.count() <= maxBroadcastCentroids) broadcast(centsTab)
-          else centsTab
-        postingRows(vecs, cents)
-      }
-    Bucketing.appendAligned(spark, rows, s"${name}_cells")
-  }
+      maxBroadcastCentroids: Int = 100000): Unit =
+    JobLabel.around(spark.sparkContext, "ivfAppend") { label =>
+      label("route")
+      val vecs = fresh.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
+      val posting =
+        if (spark.catalog.tableExists(s"${name}_coarse")) {
+          // a routed index: fresh batches route through the STORED coarse
+          // grid + stored quantizer — the same ~|fresh|·2√k assignment the
+          // build paid, and cell semantics provably identical to it
+          val hintFine =
+            spark.table(s"${name}_cents").count() <= maxBroadcastCentroids
+          val cents =
+            if (hintFine) broadcast(spark.table(s"${name}_cents"))
+            else spark.table(s"${name}_cents")
+          postingRowsRouted(vecs, cents,
+            broadcast(spark.table(s"${name}_coarse")), hintFine)
+        } else {
+          val cents = centroids(spark, name)
+          val vecType = elementType(vecs, "vec")
+          val routed = RowsBridge.collect(vecs).map { r =>
+            InternalRow(r.get(0, vecs.schema(0).dataType),
+              nearest(doubles(r.getArray(1), vecType), cents, 1).head, r.getArray(1))
+          }
+          sq8(RowsBridge.local(spark, routed.toSeq, StructType(Seq(vecs.schema(0),
+            StructField("cell", LongType), vecs.schema(1)))))
+        }
+      val table = spark.table(s"${name}_cells").schema
+      val rows = RowsBridge.collect(posting.select(posting.columns.zip(table.fields).map {
+        case (c, f) => posting.col(c).cast(f.dataType).as(f.name)
+      }.toIndexedSeq: _*))
+      label("write")
+      Bucketing.appendAligned(spark, rows.toSeq, s"${name}_cells")
+    }
 
   /** Maintenance: rewrite the appended cells table one-file-per-bucket
     * under its own bucket spec ([[Compact.compactTable]] — r12 verdict
@@ -431,15 +449,19 @@ object IvfIndex {
     * mass while recall holds (0.98 @ nProbe=16 even at 100 % drifted
     * append), so recall monitoring never fires; the observable that
     * moves is this skew (14.5× at 100 % drifted vs ≤ ~7 balanced), and
-    * serve cost is the size of the probed cells. One column-pruned
-    * groupBy over `cell` — no vector bytes read. An index with no
-    * postings has skew 1.0. */
-  def occupancySkew(spark: SparkSession, name: String): Double = {
-    val r = spark.table(s"${name}_cells").groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"))
-      .agg(max(col("n")).cast("double"), avg(col("n"))).head()
-    if (r.isNullAt(0)) 1.0 else r.getDouble(0) / r.getDouble(1)
-  }
+    * serve cost is the size of the probed cells. One Spark job,
+    * "occupancySkew count": a per-cell count over the bucketed scan of
+    * the `cell` column (no vector bytes read; a cell's rows all sit in
+    * its bucket, so the aggregate needs no exchange), with max and mean
+    * taken on the driver. An index with no postings has skew 1.0. */
+  def occupancySkew(spark: SparkSession, name: String): Double =
+    JobLabel.around(spark.sparkContext, "occupancySkew") { label =>
+      label("count")
+      val counts = spark.table(s"${name}_cells").groupBy(col("cell")).count()
+        .collect().map(_.getLong(1))
+      if (counts.isEmpty) 1.0
+      else counts.max.toDouble / (counts.sum.toDouble / counts.length)
+    }
 
   /** The rebuild policy as a callable: true when [[occupancySkew]]
     * crosses `maxOverMean`. The default is the measured number —

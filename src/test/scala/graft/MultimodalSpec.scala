@@ -46,6 +46,16 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.coalesceTarget(None, 4) == None)
   }
 
+  test("checkpointFrames plans the same partition count on every run") {
+    // 64 small partitions: a complete report coalesces them to the
+    // default parallelism; a report read before the listener bus caught
+    // up would keep 64 on some runs
+    val frames = spark.range(0, 20000, 1, 64).select(col("id").as("media_id"),
+      (col("id") % 97).as("fm"))
+    val counts = Seq.fill(3)(Multimodal.checkpointFrames(frames).rdd.getNumPartitions)
+    assert(counts == Seq.fill(3)(spark.sparkContext.defaultParallelism), counts)
+  }
+
   test("PNG round-trip is lossless: decoded raster = payload + zero pad") {
     val cases = Seq(
       Array.empty[Byte],
