@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+
+import graft.core.{Checkpoints, JobLabel}
 
 /** Output-file sizing: repartition a frame so the files it writes land
   * near a target size, using Catalyst's own size estimate.
@@ -11,7 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shuffle task produces millions of KB-sized files and a metadata-bound
   * downstream scan. Shrinking uses `coalesce` (no shuffle — folds
   * existing partitions in place); growing uses a round-robin
-  * `repartition` (one shuffle, only when asked to split). */
+  * `repartition` (one shuffle, only when asked to split).
+  *
+  * It also holds the lifecycle passes the five stored index families
+  * share: the fragmentation census ([[filesPerBucket]] →
+  * [[maintainTables]]), the bucket-preserving rewrite
+  * ([[compactTable]]) and the one removal pass ([[removeIds]]). */
 object Compact {
 
   /** Partition count targeting ~targetBytes per output file. */
@@ -138,79 +146,102 @@ object Compact {
     *
     * `transform` (default identity) is applied between the scan and the
     * bucketed write — the hook row-level DELETION rides through
-    * ([[IvfIndex.remove]]/[[TextIndex.remove]]/[[DedupIndex.remove]]
-    * pass a broadcast anti-join): a narrow per-partition filter keeps
-    * the one-bucket-per-task discipline (a BroadcastHashJoin never
-    * exchanges the scan side), so removal costs exactly one compaction
-    * pass and inherits its crash contract and plan invariance. The
-    * transform must be row-dropping/narrow only — anything that
-    * repartitions would re-fragment the buckets (the repartition
-    * elision trap in the scaladoc above). */
+    * ([[removeIds]] passes a broadcast anti-join): a narrow
+    * per-partition filter keeps the one-bucket-per-task discipline (a
+    * BroadcastHashJoin never exchanges the scan side), so removal costs
+    * exactly one compaction pass and inherits its crash contract and
+    * plan invariance. The transform must be row-dropping/narrow only —
+    * anything that repartitions would re-fragment the buckets (the
+    * repartition elision trap in the scaladoc above).
+    *
+    * Every Spark job of the pass is described `"compact <table>"`
+    * ([[JobLabel]]); the caller's description comes back on every exit
+    * path. */
   def compactTable(spark: SparkSession, table: String,
       targetBytes: Long = 128L << 20,
-      transform: DataFrame => DataFrame = identity): (Long, Long) = {
-    val catalog = spark.sessionState.catalog
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val tmpName = s"${table}__compacting"
-    val tmpIdent = spark.sessionState.sqlParser.parseTableIdentifier(tmpName)
-    // Crash recovery (r13 ADVICE, shared helper since r14 ADVICE so the
-    // maintenance path heals too — see [[healInterruptedSwap]]).
-    healInterruptedSwap(spark, table)
-    val meta = catalog.getTableMetadata(ident)
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.toLong
-    val before = dataFiles(loc)
-    // sweep a leftover from a crashed prior attempt (table still exists
-    // here, so the leftover is a stale partial copy, not the live data)
-    if (catalog.tableExists(tmpIdent))
-      spark.sql(s"DROP TABLE $tmpName")
-    // generations alternate between two sibling paths (…__c0 / …__c1)
-    // so repeated compactions never grow the path
-    val baseName = loc.getName.stripSuffix("__c0").stripSuffix("__c1")
-    val tmpLoc = new org.apache.hadoop.fs.Path(loc.getParent,
-      if (loc.getName == s"${baseName}__c0") s"${baseName}__c1"
-      else s"${baseName}__c0")
-    if (fs.exists(tmpLoc)) fs.delete(tmpLoc, true)
-    meta.bucketSpec match {
-      case Some(spec) =>
-        // the forced-bucketed-scan window must cover the WRITE (the
-        // scan plans when the job runs): one-bucket-per-task in, one
-        // file per bucket out, no exchange anywhere. The window runs
-        // on an isolated session, so concurrent planning on the
-        // caller's session keeps its pruning (CompactSpec pins it);
-        // the write lands in the SHARED external catalog either way.
-        TextIndex.forceBucketedScan(spark) { iso =>
-          val w = transform(iso.table(table)).write.format("parquet")
+      transform: DataFrame => DataFrame = identity): (Long, Long) =
+    JobLabel.around(spark.sparkContext, "compact") { label =>
+      label(table)
+      val catalog = spark.sessionState.catalog
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      val tmpName = s"${table}__compacting"
+      val tmpIdent = spark.sessionState.sqlParser.parseTableIdentifier(tmpName)
+      // Crash recovery (r13 ADVICE, shared helper since r14 ADVICE so the
+      // maintenance path heals too — see [[healInterruptedSwap]]).
+      healInterruptedSwap(spark, table)
+      val meta = catalog.getTableMetadata(ident)
+      val loc = new org.apache.hadoop.fs.Path(meta.location)
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def dataFiles(p: org.apache.hadoop.fs.Path): Long =
+        if (!fs.exists(p)) 0L
+        else fs.listStatus(p).count { s =>
+          val n = s.getPath.getName
+          s.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.toLong
+      val before = dataFiles(loc)
+      // sweep a leftover from a crashed prior attempt (table still exists
+      // here, so the leftover is a stale partial copy, not the live data)
+      if (catalog.tableExists(tmpIdent))
+        spark.sql(s"DROP TABLE $tmpName")
+      // generations alternate between two sibling paths (…__c0 / …__c1)
+      // so repeated compactions never grow the path
+      val baseName = loc.getName.stripSuffix("__c0").stripSuffix("__c1")
+      val tmpLoc = new org.apache.hadoop.fs.Path(loc.getParent,
+        if (loc.getName == s"${baseName}__c0") s"${baseName}__c1"
+        else s"${baseName}__c0")
+      if (fs.exists(tmpLoc)) fs.delete(tmpLoc, true)
+      meta.bucketSpec match {
+        case Some(spec) =>
+          // the forced-bucketed-scan window must cover the WRITE (the
+          // scan plans when the job runs): one-bucket-per-task in, one
+          // file per bucket out, no exchange anywhere. The window runs
+          // on an isolated session, so concurrent planning on the
+          // caller's session keeps its pruning (CompactSpec pins it);
+          // the write lands in the SHARED external catalog either way.
+          TextIndex.forceBucketedScan(spark) { iso =>
+            val w = transform(iso.table(table)).write.format("parquet")
+              .option("path", tmpLoc.toString)
+              .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+                spec.bucketColumnNames.tail: _*)
+            (if (spec.sortColumnNames.nonEmpty)
+              w.sortBy(spec.sortColumnNames.head,
+                spec.sortColumnNames.tail: _*)
+            else w).saveAsTable(tmpName) // eager: copy complete after this
+          }
+        case None =>
+          forWrite(transform(spark.table(table)), targetBytes)
+            .write.format("parquet")
             .option("path", tmpLoc.toString)
-            .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-              spec.bucketColumnNames.tail: _*)
-          (if (spec.sortColumnNames.nonEmpty)
-            w.sortBy(spec.sortColumnNames.head,
-              spec.sortColumnNames.tail: _*)
-          else w).saveAsTable(tmpName) // eager: copy complete after this
-        }
-      case None =>
-        forWrite(transform(spark.table(table)), targetBytes)
-          .write.format("parquet")
-          .option("path", tmpLoc.toString)
-          .saveAsTable(tmpName)
+            .saveAsTable(tmpName)
+      }
+      spark.sql(s"DROP TABLE $table") // external: files stay until deleted
+      spark.sql(s"ALTER TABLE $tmpName RENAME TO $table")
+      // the rewrite is a FRESH saveAsTable, which drops user-set table
+      // properties — re-apply the engine's own (`graft.*`) so persisted
+      // dials (e.g. VideoIndex's maxDf, r14 ADVICE) survive compaction
+      val dials = meta.properties.filter { case (k, _) => k.startsWith("graft.") }
+      if (dials.nonEmpty)
+        spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
+          dials.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
+      fs.delete(loc, true)
+      (before, dataFiles(tmpLoc))
     }
-    spark.sql(s"DROP TABLE $table") // external: files stay until deleted
-    spark.sql(s"ALTER TABLE $tmpName RENAME TO $table")
-    // the rewrite is a FRESH saveAsTable, which drops user-set table
-    // properties — re-apply the engine's own (`graft.*`) so persisted
-    // dials (e.g. VideoIndex's maxDf, r14 ADVICE) survive compaction
-    val dials = meta.properties.filter { case (k, _) => k.startsWith("graft.") }
-    if (dials.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-        dials.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
-    fs.delete(loc, true)
-    (before, dataFiles(tmpLoc))
+
+  /** Row-level DELETION across an index family's tables — the one
+    * removal pass behind every family's `remove`: the id set (`idCol`
+    * of `ids`, as bigint) is materialized once and broadcast, and each
+    * (table, key column) pair is one [[compactTable]] pass with a
+    * left anti-join on the key riding the scan. The id set is released
+    * on every exit path. Returns per-table (filesBefore, filesAfter),
+    * in `keyed` order. Maintenance window only. */
+  def removeIds(spark: SparkSession, ids: DataFrame, idCol: String,
+      keyed: Seq[(String, String)]): Map[String, (Long, Long)] = {
+    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
+      .distinct().localCheckpoint())
+    try keyed.map { case (table, key) =>
+      table -> compactTable(spark, table,
+        transform = df => df.join(rid, df(key) === rid("__rid"), "left_anti"))
+    }.toMap
+    finally Checkpoints.release(rid)
   }
 }

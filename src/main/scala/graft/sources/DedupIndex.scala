@@ -56,6 +56,14 @@ object DedupIndex {
   /** Bucket count shared by all three tables. */
   private val Buckets = 16
 
+  /** The three tables by suffix, each with its document-id column. */
+  private val Keyed = Seq("_bands" -> "doc_id", "_shingles" -> "id", "_sizes" -> "id")
+
+  /** The index's tables, in a fixed order: `<name>_bands`,
+    * `<name>_shingles`, `<name>_sizes` — the list its maintenance and
+    * removal passes and every stream-ingest refresh read. */
+  def tables(spark: SparkSession, name: String): Seq[String] = Keyed.map(name + _._1)
+
   def build(spark: SparkSession, corpus: DataFrame, textCol: String,
       idCol: String, name: String,
       basePath: String = IvfIndex.defaultBase): Unit = {
@@ -129,37 +137,23 @@ object DedupIndex {
         s"${name}_sizes")
     }
 
-  /** Scheduled maintenance: compact exactly the fragmented tables,
+  /** Scheduled maintenance: compact exactly the fragmented [[tables]],
     * else no-op ([[Compact.maintainTables]], r13 verdict #3). */
   def maintain(spark: SparkSession, name: String,
       maxFilesPerBucket: Double = 4.0): Map[String, (Long, Long)] =
-    Compact.maintainTables(spark,
-      Seq(s"${name}_bands", s"${name}_shingles", s"${name}_sizes"),
-      maxFilesPerBucket)
+    Compact.maintainTables(spark, tables(spark, name), maxFilesPerBucket)
 
   /** Maintenance: DELETE documents from the admission index (takedowns,
     * privacy erasure — and the semantic consequence matters here: a
     * removed document stops VETOING future near-copies, so a re-crawled
     * twin of an erased page is admitted again, exactly the erasure
-    * contract). One bucket-preserving rewrite per table with a
-    * broadcast anti-join riding the compaction scan
-    * ([[Compact.compactTable]]'s transform hook) — bands by doc_id,
-    * shingles/sizes by id; serve plans and the dedupAgainst probe shape
-    * untouched (IndexRemoveSpec). Maintenance window only. */
+    * contract). One [[Compact.removeIds]] pass over the three tables —
+    * bands by doc_id, shingles/sizes by id; serve plans and the
+    * dedupAgainst probe shape untouched (IndexRemoveSpec). Maintenance
+    * window only. */
   def remove(spark: SparkSession, name: String, ids: DataFrame,
-      idCol: String = "doc_id"): Map[String, (Long, Long)] = {
-    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
-      .distinct().localCheckpoint())
-    def anti(c: String)(df: DataFrame): DataFrame =
-      df.join(rid, df(c) === rid("__rid"), "left_anti")
-    Map(
-      s"${name}_bands" -> Compact.compactTable(spark, s"${name}_bands",
-        transform = anti("doc_id")),
-      s"${name}_shingles" -> Compact.compactTable(spark,
-        s"${name}_shingles", transform = anti("id")),
-      s"${name}_sizes" -> Compact.compactTable(spark, s"${name}_sizes",
-        transform = anti("id")))
-  }
+      idCol: String = "doc_id"): Map[String, (Long, Long)] =
+    Compact.removeIds(spark, ids, idCol, Keyed.map { case (t, k) => (name + t, k) })
 
   /** Memoized build over the fixture's standard corpus split (the
     * q_incremental_dedup mixer gate: fresh = hashSample 0.2, corpus =

@@ -410,6 +410,14 @@ object IvfIndex {
       Bucketing.appendAligned(spark, rows.toSeq, s"${name}_cells")
     }
 
+  /** The index's tables, in a fixed order: `<name>_cells`,
+    * `<name>_cents`, plus `<name>_coarse` for a routed index — the list
+    * every stream-ingest refresh reads. Only `_cells` takes appends, so
+    * it is the one table [[compact]] and [[remove]] rewrite. */
+  def tables(spark: SparkSession, name: String): Seq[String] =
+    Seq(s"${name}_cells", s"${name}_cents") ++
+      Some(s"${name}_coarse").filter(spark.catalog.tableExists)
+
   /** Maintenance: rewrite the appended cells table one-file-per-bucket
     * under its own bucket spec ([[Compact.compactTable]] — r12 verdict
     * #2: thousands of `append` batches otherwise leave thousands of
@@ -423,25 +431,19 @@ object IvfIndex {
 
   /** Maintenance: DELETE vectors from the stored postings (takedowns,
     * re-crawl invalidation, privacy erasure — the lifecycle op between
-    * `append` and `refresh`). One bucket-preserving rewrite of the
-    * cells table with a broadcast anti-join riding the compaction scan
-    * ([[Compact.compactTable]]'s transform hook), so removal costs
-    * exactly one compaction pass, de-fragments as a side effect, and
-    * leaves every serve plan untouched. The quantizer (and coarse grid)
-    * deliberately stay: cells are an approximation structure over
-    * whatever vectors remain, and [[serve]] is exact over the stored
-    * rows at full probe regardless — retrain via [[refresh]] when
+    * `append` and `refresh`). One [[Compact.removeIds]] pass over the
+    * cells table, so removal costs exactly one compaction pass,
+    * de-fragments as a side effect, and leaves every serve plan
+    * untouched. The quantizer (and coarse grid) deliberately stay:
+    * cells are an approximation structure over whatever vectors remain,
+    * and [[serve]] is exact over the stored rows at full probe
+    * regardless — retrain via [[refresh]] when
     * [[occupancySkew]] says the partition has degraded. Caller owns id
     * membership (the `append` contract's mirror): removing an absent id
     * is a no-op row-wise. Run from the maintenance window. */
   def remove(spark: SparkSession, name: String, ids: DataFrame,
-      idCol: String = "vec_id"): Map[String, (Long, Long)] = {
-    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
-      .distinct().localCheckpoint())
-    Map(s"${name}_cells" -> Compact.compactTable(spark, s"${name}_cells",
-      transform = df => df.join(rid, df("vec_id") === rid("__rid"),
-        "left_anti")))
-  }
+      idCol: String = "vec_id"): Map[String, (Long, Long)] =
+    Compact.removeIds(spark, ids, idCol, Seq(s"${name}_cells" -> "vec_id"))
 
   /** Occupancy skew (max cell size / mean over occupied cells) of the
     * stored postings — the MEASURED refresh trigger (SCALE.md round

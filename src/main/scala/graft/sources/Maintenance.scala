@@ -17,6 +17,12 @@ import org.apache.spark.sql.SparkSession
   *   - `video`: the same, plus df-log collapse + stop/band-stop
   *     re-derivation.
   *
+  * Each family lists its tables once (`tables(spark, name)`, a fixed
+  * order); its `maintain`/`compact` and every stream-ingest refresh
+  * read that list, and every family's `remove` is one
+  * [[Compact.removeIds]] pass plus the family's own after-step. Every
+  * compaction job is described `"compact <table>"`.
+  *
   * Every per-family call is idempotent and answer-preserving (their
   * specs pin it), so the composed walk is too. A healthy family costs
   * one directory listing (+ one occupancy census for ivf) — the cheap

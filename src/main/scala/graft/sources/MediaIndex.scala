@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.multimodal.Multimodal
 
 /** PERSISTED media fingerprint index — the multimodal member of the
@@ -40,6 +41,13 @@ import graft.multimodal.Multimodal
   * computed in the micro-batch that crawled the payload). The caller
   * owns id freshness, exactly the [[IvfIndex.append]] contract. */
 object MediaIndex {
+
+  /** The index's tables, in a fixed order: `<name>_fp` and its
+    * band-stop sidecar `<name>_bstop` — the list every stream-ingest
+    * refresh reads. Only `_fp` takes appends; the sidecar is re-derived
+    * from it. */
+  def tables(spark: SparkSession, name: String): Seq[String] =
+    Seq(s"${name}_fp", s"${name}_bstop")
 
   /** Write the fingerprint table. `fingerprints` is (media_id, h_lo,
     * h_hi) from [[Multimodal.imageDHash]] / [[Multimodal.audioDHash]] —
@@ -104,9 +112,10 @@ object MediaIndex {
       .groupBy(col("bi"), col("bv")).agg(count(lit(1)).as("df"))
       .where(col("df") > maxBandDf).select(col("bi"), col("bv"))
       .localCheckpoint()
-    bstop.coalesce(1).write.mode("overwrite").format("parquet")
+    try bstop.coalesce(1).write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_bstop")
       .saveAsTable(s"${name}_bstop")
+    finally Checkpoints.release(bstop)
     // invalidate the cached file listing of the overwritten sidecar
     // (relation caches are per session; see VideoIndex.refreshStop)
     spark.catalog.refreshTable(s"${name}_bstop")
@@ -226,15 +235,11 @@ object MediaIndex {
 
   /** Maintenance: DELETE media from the index (takedowns, erasure). A
     * removed item stops pairing with future re-crawled copies — the
-    * [[DedupIndex.remove]] semantic, one compaction pass, serve plans
-    * untouched. */
+    * [[DedupIndex.remove]] semantic, one [[Compact.removeIds]] pass,
+    * serve plans untouched — and the band stop re-derives. */
   def remove(spark: SparkSession, name: String, ids: DataFrame,
       idCol: String = "media_id"): Map[String, (Long, Long)] = {
-    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
-      .distinct().localCheckpoint())
-    val r = Map(s"${name}_fp" -> Compact.compactTable(spark, s"${name}_fp",
-      transform = df => df.join(rid, df("media_id") === rid("__rid"),
-        "left_anti")))
+    val r = Compact.removeIds(spark, ids, idCol, Seq(s"${name}_fp" -> "media_id"))
     refreshBandStop(spark, name)
     r
   }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.TopK
+import graft.core.{Checkpoints, TopK}
 import graft.text.TextOps
 
 /** PERSISTED lexical (BM25) index — the retrieval-family member of the
@@ -68,6 +68,12 @@ object TextIndex {
       sum(col("dl")).as("sum_dl"))
     (postings, totals)
   }
+
+  /** The index's tables, in a fixed order: `<name>_postings`,
+    * `<name>_totals` — the list its maintenance passes and every
+    * stream-ingest refresh read. */
+  def tables(spark: SparkSession, name: String): Seq[String] =
+    Seq(s"${name}_postings", s"${name}_totals")
 
   def build(spark: SparkSession, docs: DataFrame, textCol: String,
       docCol: String, name: String, buckets: Int = 64,
@@ -179,30 +185,31 @@ object TextIndex {
     * reindex), and one (n_docs, sum_dl) delta row into the running
     * totals — idf and avgdl stay exact for the grown corpus. The caller
     * owns id freshness (the [[IvfIndex.append]] / [[DedupIndex.append]]
-    * contract): route admissions through the dedup gate first. */
+    * contract): route admissions through the dedup gate first. The
+    * batch's tf/dl checkpoints are released once both inserts ran. */
   def append(spark: SparkSession, name: String, fresh: DataFrame,
       textCol: String, docCol: String): Unit = {
     val (postings, totals) = postingAndTotals(fresh, textCol, docCol)
-    postings.write.mode("append").insertInto(s"${name}_postings")
-    totals.write.mode("append").insertInto(s"${name}_totals")
+    try {
+      postings.write.mode("append").insertInto(s"${name}_postings")
+      totals.write.mode("append").insertInto(s"${name}_totals")
+    } finally Checkpoints.release(postings, totals)
   }
 
   /** Maintenance: rewrite the appended postings one-file-per-bucket and
-    * fold the per-batch totals rows back to one file
-    * ([[Compact.compactTable]] handles both through the catalog's own
-    * bucket spec; the [[IvfIndex.compact]] contract — answers and
-    * pruned plans unchanged, run from the maintenance window that owns
-    * `append`). */
+    * fold the per-batch totals rows back to one file — every one of
+    * [[tables]] ([[Compact.compactTable]] handles both through the
+    * catalog's own bucket spec; the [[IvfIndex.compact]] contract —
+    * answers and pruned plans unchanged, run from the maintenance
+    * window that owns `append`). */
   def compact(spark: SparkSession, name: String): Map[String, (Long, Long)] =
-    Seq(s"${name}_postings", s"${name}_totals")
-      .map(t => t -> Compact.compactTable(spark, t)).toMap
+    tables(spark, name).map(t => t -> Compact.compactTable(spark, t)).toMap
 
-  /** Scheduled maintenance: compact exactly the fragmented tables,
+  /** Scheduled maintenance: compact exactly the fragmented [[tables]],
     * else no-op ([[Compact.maintainTables]], r13 verdict #3). */
   def maintain(spark: SparkSession, name: String,
       maxFilesPerBucket: Double = 4.0): Map[String, (Long, Long)] =
-    Compact.maintainTables(spark,
-      Seq(s"${name}_postings", s"${name}_totals"), maxFilesPerBucket)
+    Compact.maintainTables(spark, tables(spark, name), maxFilesPerBucket)
 
   /** Maintenance: DELETE documents from the index (takedowns, re-crawl
     * invalidation, privacy erasure). Two steps, BOTH exact:
@@ -213,28 +220,26 @@ object TextIndex {
     *      the same bookkeeping [[append]] does with positive deltas.
     *      n counts removed docs PRESENT in the postings — build's own
     *      n_docs convention (a token-less doc never had a dl row).
-    *   2. the postings rewrite with a broadcast anti-join riding the
-    *      compaction scan ([[Compact.compactTable]]'s transform hook) —
-    *      one bucket-preserving pass, de-fragments as a side effect,
-    *      serve plans untouched.
+    *   2. the postings rewrite, one [[Compact.removeIds]] pass —
+    *      bucket-preserving, de-fragments as a side effect, serve plans
+    *      untouched.
     * The delta is materialized BEFORE the rewrite (its lineage reads
-    * the files the rewrite replaces). [[serve]] after remove ranks
-    * exactly like a fresh build on the shrunk corpus
-    * (IndexRemoveSpec pins it row-for-row). Maintenance window only. */
+    * the files the rewrite replaces) and released once appended.
+    * [[serve]] after remove ranks exactly like a fresh build on the
+    * shrunk corpus (IndexRemoveSpec pins it row-for-row). Maintenance
+    * window only. */
   def remove(spark: SparkSession, name: String, ids: DataFrame,
       idCol: String = "doc_id"): Map[String, (Long, Long)] = {
-    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
-      .distinct().localCheckpoint())
     val delta = spark.table(s"${name}_postings")
-      .join(rid, col("doc_id") === col("__rid"), "left_semi")
+      .join(ids.select(col(idCol).cast("long").as("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
       .agg((-count(lit(1))).as("n_docs"), (-sum(col("dl"))).as("sum_dl"))
       .localCheckpoint()
-    val res = Compact.compactTable(spark, s"${name}_postings",
-      transform = df => df.join(rid, df("doc_id") === rid("__rid"),
-        "left_anti"))
-    delta.write.mode("append").insertInto(s"${name}_totals")
-    Map(s"${name}_postings" -> res)
+    try {
+      val res = Compact.removeIds(spark, ids, idCol, Seq(s"${name}_postings" -> "doc_id"))
+      delta.write.mode("append").insertInto(s"${name}_totals")
+      res
+    } finally Checkpoints.release(delta)
   }
 
   /** Memoized build over the fixture's documents table, keyed by

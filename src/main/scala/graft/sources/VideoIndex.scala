@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.multimodal.Multimodal
 
 /** PERSISTED video frame-digest index — the fifth stored family
@@ -38,6 +39,19 @@ import graft.multimodal.Multimodal
   * is a PCM segment, the clip stages and gates never know the
   * difference. */
 object VideoIndex {
+
+  /** The index's tables, in a fixed order: `<name>_vf`, its digest-df
+    * log `<name>_dfs` and stop sidecar `<name>_stop`, plus the band-df
+    * log `<name>_bdfs` and band stop `<name>_bstop` of a perceptual
+    * (5-column) index — the list every stream-ingest refresh reads.
+    * Only `_vf` is compacted; the others are re-derived from it. */
+  def tables(spark: SparkSession, name: String): Seq[String] =
+    Seq(s"${name}_vf", s"${name}_dfs", s"${name}_stop") ++
+      Seq(s"${name}_bdfs", s"${name}_bstop").filter(spark.catalog.tableExists)
+
+  /** The two stop sidecars a gate may read ([[stopTable]]), the tables
+    * an admission loop's [[StopCache]] holds. */
+  def stopTables(name: String): Seq[String] = Seq(s"${name}_stop", s"${name}_bstop")
 
   /** Write the frame-digest table. `frames` is (media_id, frame_idx,
     * fm) from [[Multimodal.videoFrames]] — or the 5-column
@@ -180,9 +194,10 @@ object VideoIndex {
     val dfs = vf.groupBy(col("fm"))
       .agg(countDistinct(col("media_id")).as("df"))
       .localCheckpoint() // lineage reads the table the write replaces
-    Compact.forWrite(dfs).write.mode("overwrite").format("parquet")
+    try Compact.forWrite(dfs).write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_dfs")
       .saveAsTable(s"${name}_dfs")
+    finally Checkpoints.release(dfs)
     // the perceptual leg's band-df log (see [[Multimodal.videoBandStop]]
     // — video-df per band value is SUM-decomposable under fresh ids,
     // exactly like the md5 log, so appends stay exact here too); the
@@ -192,9 +207,10 @@ object VideoIndex {
         .groupBy(col("bi"), col("bv"))
         .agg(countDistinct(col("media_id")).as("df"))
         .localCheckpoint()
-      Compact.forWrite(bdfs).write.mode("overwrite").format("parquet")
+      try Compact.forWrite(bdfs).write.mode("overwrite").format("parquet")
         .option("path", s"$basePath/${name}_bdfs")
         .saveAsTable(s"${name}_bdfs")
+      finally Checkpoints.release(bdfs)
     }
   }
 
@@ -212,9 +228,10 @@ object VideoIndex {
       .groupBy(col("fm")).agg(sum(col("df")).as("df"))
       .where(col("df") > maxDf).select(col("fm"))
       .localCheckpoint()
-    stop.coalesce(1).write.mode("overwrite").format("parquet")
+    try stop.coalesce(1).write.mode("overwrite").format("parquet")
       .option("path", s"$basePath/${name}_stop")
       .saveAsTable(s"${name}_stop")
+    finally Checkpoints.release(stop)
     // invalidate any cached file listing of the overwritten sidecar —
     // sibling sessions (streaming micro-batches) share the relation
     // cache, and a stale FileIndex reads deleted part files
@@ -230,9 +247,10 @@ object VideoIndex {
         .groupBy(col("bi"), col("bv")).agg(sum(col("df")).as("df"))
         .where(col("df") > maxBandDf).select(col("bi"), col("bv"))
         .localCheckpoint()
-      bstop.coalesce(1).write.mode("overwrite").format("parquet")
+      try bstop.coalesce(1).write.mode("overwrite").format("parquet")
         .option("path", s"$basePath/${name}_bstop")
         .saveAsTable(s"${name}_bstop")
+      finally Checkpoints.release(bstop)
       spark.catalog.refreshTable(s"${name}_bstop")
     }
     spark.table(s"${name}_stop").count()
@@ -260,7 +278,7 @@ object VideoIndex {
     // empty checkpoint is released on the way out — a long admission
     // loop hits this path every nothing-admitted batch.
     if (f.isEmpty) {
-      graft.core.Checkpoints.release(f)
+      Checkpoints.release(f)
       return false
     }
     f.write.mode("append").insertInto(s"${name}_vf")
@@ -272,7 +290,7 @@ object VideoIndex {
         .agg(countDistinct(col("media_id")).as("df"))
         .coalesce(1).write.mode("append").insertInto(s"${name}_bdfs")
     refreshStop(spark, name)
-    graft.core.Checkpoints.release(f) // all consumers (insert + df partials) ran
+    Checkpoints.release(f) // all consumers (insert + df partials) ran
     true
   }
 
@@ -360,7 +378,7 @@ object VideoIndex {
     /** Number of sidecar parquet reads so far (test observability). */
     @volatile var reads: Int = 0
     private def release(df: DataFrame): Unit =
-      try graft.core.Checkpoints.release(df)
+      try Checkpoints.release(df)
       catch { case _: Throwable => () }
     /** The sidecar's current on-disk generation: part-file names carry
       * fresh UUIDs on every overwrite, so an unchanged signature IS an
@@ -397,7 +415,7 @@ object VideoIndex {
       * its prior gate output was executed (the append that triggers it
       * consumed the flags), so both generations release here. */
     def invalidate(name: String): Unit = synchronized {
-      Seq(s"${name}_stop", s"${name}_bstop").foreach { t =>
+      stopTables(name).foreach { t =>
         m.remove(t).foreach { case (df, _, parked) =>
           release(df); parked.foreach(release)
         }
@@ -429,15 +447,19 @@ object VideoIndex {
         .select(col("fid").as("media_id")).distinct(),
       Seq("media_id"), "left_anti")
 
-  /** Maintenance: one-file-per-bucket rewrite ([[Compact.compactTable]]
-    * contract) + df-log collapse + stop re-derivation (all from the
-    * persisted maxDf dial). */
-  def compact(spark: SparkSession, name: String): Map[String, (Long, Long)] = {
-    val r = Map(s"${name}_vf" -> Compact.compactTable(spark, s"${name}_vf"))
+  /** The after-step of every `_vf` rewrite: df-log collapse + stop
+    * re-derivation (all from the persisted dials). Returns `r`. */
+  private def rederived[T](spark: SparkSession, name: String)(r: T): T = {
     rebuildDfs(spark, name)
     refreshStop(spark, name)
     r
   }
+
+  /** Maintenance: one-file-per-bucket rewrite ([[Compact.compactTable]]
+    * contract) + df-log collapse + stop re-derivation (all from the
+    * persisted maxDf dial). */
+  def compact(spark: SparkSession, name: String): Map[String, (Long, Long)] =
+    rederived(spark, name)(Map(s"${name}_vf" -> Compact.compactTable(spark, s"${name}_vf")))
 
   /** Scheduled maintenance: compact when fragmented, else no-op; the
     * df log collapses and the stop sidecar re-derives whenever the
@@ -446,27 +468,17 @@ object VideoIndex {
       maxFilesPerBucket: Double = 4.0): Map[String, (Long, Long)] = {
     val r = Compact.maintainTables(spark, Seq(s"${name}_vf"),
       maxFilesPerBucket)
-    if (r.exists { case (_, (b, a)) => a < b }) {
-      rebuildDfs(spark, name)
-      refreshStop(spark, name)
-    }
-    r
+    if (r.exists { case (_, (b, a)) => a < b }) rederived(spark, name)(r) else r
   }
 
   /** DELETE videos from the index (takedowns, erasure): removed items
-    * stop pairing with future re-crawls. The df log re-derives (removed
-    * videos must stop counting toward stop-frame dfs). */
+    * stop pairing with future re-crawls ([[Compact.removeIds]]). The df
+    * log re-derives (removed videos must stop counting toward
+    * stop-frame dfs). */
   def remove(spark: SparkSession, name: String, ids: DataFrame,
-      idCol: String = "media_id"): Map[String, (Long, Long)] = {
-    val rid = broadcast(ids.select(col(idCol).cast("long").as("__rid"))
-      .distinct().localCheckpoint())
-    val r = Map(s"${name}_vf" -> Compact.compactTable(spark, s"${name}_vf",
-      transform = df => df.join(rid, df("media_id") === rid("__rid"),
-        "left_anti")))
-    rebuildDfs(spark, name)
-    refreshStop(spark, name)
-    r
-  }
+      idCol: String = "media_id"): Map[String, (Long, Long)] =
+    rederived(spark, name)(
+      Compact.removeIds(spark, ids, idCol, Seq(s"${name}_vf" -> "media_id")))
 
   /** Memoized builds over the fixture corpora ([[MediaIndex]]'s memo
     * discipline): full = corpus ∪ the three-regime twin table (matching

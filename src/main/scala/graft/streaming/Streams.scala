@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.Tables
+import graft.core.Checkpoints
+import graft.multimodal.{CrawlAdmit, Multimodal}
+import graft.sources.{DedupIndex, IvfIndex, MediaIndex, TextIndex, VideoIndex}
 
 /** Structured Streaming surface. The reference is batch-only (SURVEY.md
   * §2.7) — this is the Spark-native bonus capability: the same event
@@ -120,7 +123,8 @@ object Streams {
     * local disk), but the WAL/offset-log fsyncs were charging every
     * micro-batch ~120 ms of local-disk latency. Long-lived INGEST loops
     * (streamIvfIngest and siblings) keep their caller-owned checkpoint
-    * contract; only their default-temp fallback shares this root. A
+    * contract; only their default-temp fallback shares this root, and
+    * the ingest driver deletes it when the drain ends. A
     * production deployment overrides with graft.stream.checkpointRoot
     * (durable storage) and passes stable paths to the ingest loops. */
   private[graft] def checkpointRoot(spark: SparkSession): String =
@@ -536,6 +540,61 @@ object Streams {
     drain(routed, OutputMode.Append(), "stream_embed_route")
   }
 
+  /** The one driver behind the nine stored-index ingests below — the
+    * stream-time form of an OINK command's input → run → output →
+    * cleanup shell. It drains `source` (built on a [[tuned]] session)
+    * with AvailableNow into one `foreachBatch` sink. Before each
+    * micro-batch it refreshes `tables` in the batch session, except
+    * `cached` (tables the body reads through a cache of its own): the
+    * previous batch's appends ran on a sibling micro-batch session, so
+    * without the refresh a gate would read a stale file listing and
+    * race its own appends. Then `body` runs on the batch. After the
+    * drain it refreshes every table in the CALLER session too (relation
+    * caches are per session), so the caller's next read lists the new
+    * files.
+    *
+    * `checkpoint` is the stream's exactly-once ledger, and its lifetime
+    * must match the INDEX's: a production ingest passes a stable path,
+    * so a restart resumes where the last commit left off (never
+    * re-appending a batch — the ledger, not the caller, owns batch
+    * freshness across restarts); that path is the caller's and stays.
+    * The default is a FRESH directory under [[checkpointRoot]], which
+    * reprocesses the whole source — correct only when the index was
+    * just (re)built, as in tests — and is deleted when the drain ends,
+    * on every exit path. A stable checkpoint pointed at a REBUILT index
+    * would silently skip everything: rebuild ⇒ new checkpoint, always.
+    * Blocks until the drain completes. */
+  private def ingest(spark: SparkSession, source: SparkSession => DataFrame,
+      tables: Seq[String], prefix: String, checkpoint: Option[String],
+      cached: Set[String] = Set.empty)(
+      body: (SparkSession, DataFrame) => Unit): Unit = {
+    val ckpt = checkpoint.getOrElse(freshCheckpoint(spark, prefix))
+    try {
+      source(tuned(spark)).writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          val bs = batch.sparkSession
+          tables.filterNot(cached).foreach(bs.catalog.refreshTable)
+          body(bs, batch)
+        }
+        .option("checkpointLocation", ckpt)
+        .start()
+        .awaitTermination()
+      tables.foreach(spark.catalog.refreshTable)
+    } finally if (checkpoint.isEmpty) deleteRecursively(ckpt)
+  }
+
+  /** A gated ingest's append: the gate's admitted rows materialize
+    * BEFORE the append (their lineage reads the tables the append
+    * inserts into — lazy, a batch would reject itself), and once it ran
+    * the materialized rows and every checkpoint in the gate's plan are
+    * released, so a long-running loop holds nothing per batch. */
+  private def appendGated(gated: DataFrame)(append: DataFrame => Unit): Unit = {
+    val admitted = gated.localCheckpoint()
+    try append(admitted) finally Checkpoints.release(admitted, gated)
+  }
+
   /** Streaming IVF INGEST — the closed loop [[streamEmbedRoute]] only
     * pointed at (r12 verdict #5): the embedding stream's sink is
     * [[graft.sources.IvfIndex.append]] per micro-batch, so each
@@ -546,38 +605,15 @@ object Streams {
     * the moment its batch's append commits — the "searchable when the
     * commit lands" contract, exercised end-to-end in StreamSmokeSpec.
     * `pred` selects the stream's slice of the table (the caller owns id
-    * freshness, the append contract). Blocks until the AvailableNow
-    * drain completes.
-    *
-    * `checkpoint` is the stream's exactly-once ledger and its lifetime
-    * must match the INDEX's: a production ingest passes a stable path
-    * so a restart resumes where the last commit left off (never
-    * re-appending a batch — the ledger, not the caller, owns batch
-    * freshness across restarts); the default is a FRESH temp dir,
-    * which reprocesses the whole source — correct only when the index
-    * was just (re)built, as in tests. A stable checkpoint pointed at a
-    * REBUILT index would silently skip everything: rebuild ⇒ new
-    * checkpoint, always. */
+    * freshness, the append contract). Runs on the shared [[ingest]]
+    * driver, which owns the refresh and the `checkpoint` contract. */
   def streamIvfIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = tableStream(s, sfDir, "embeddings").where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.sources.IvfIndex.append(batch.sparkSession, indexName,
-          batch, "vec_id", "embedding")
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_ivf_ingest_ckpt")))
-      .start()
-    q.awaitTermination()
-    // the appends ran on the micro-batch sessions; drop the CALLER
-    // session's cached relation so its next serve lists the new files
-    spark.catalog.refreshTable(s"${indexName}_cells")
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => tableStream(s, sfDir, "embeddings").where(pred),
+        IvfIndex.tables(spark, indexName), "graft_ivf_ingest_ckpt", checkpoint) {
+      (bs, batch) => IvfIndex.append(bs, indexName, batch, "vec_id", "embedding")
+    }
 
   /** Streaming TEXT ingest — the [[streamIvfIngest]] loop for the
     * lexical index family: each arriving documents micro-batch pays
@@ -586,27 +622,14 @@ object Streams {
     * [[graft.sources.TextIndex.append]], so a crawled page is
     * BM25-searchable ([[graft.sources.TextIndex.serve]] — idf/avgdl
     * exact for the grown corpus) the moment its batch's append
-    * commits. Same checkpoint contract as [[streamIvfIngest]]: the
-    * ledger's lifetime must match the index's. */
+    * commits. */
   def streamTextIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.sources.TextIndex.append(batch.sparkSession, indexName,
-          batch, "text", "doc_id")
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_text_ingest_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq("postings", "totals").foreach(t =>
-      spark.catalog.refreshTable(s"${indexName}_$t"))
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        TextIndex.tables(spark, indexName), "graft_text_ingest_ckpt", checkpoint) {
+      (bs, batch) => TextIndex.append(bs, indexName, batch, "text", "doc_id")
+    }
 
   /** Streaming MEDIA ingest — the [[streamIvfIngest]] loop for the
     * persisted fingerprint family ([[graft.sources.MediaIndex]]): each
@@ -617,145 +640,75 @@ object Streams {
     * [[graft.sources.MediaIndex.append]]. A crawled image joins the
     * near-dup pair surface ([[graft.sources.MediaIndex.pairs]]) the
     * moment its batch's append commits; the stored corpus is never
-    * re-decoded. Same checkpoint contract as [[streamIvfIngest]]. */
+    * re-decoded. */
   def streamMediaIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.sources.MediaIndex.append(batch.sparkSession, indexName,
-          graft.multimodal.Multimodal.imageDHash(
-            graft.multimodal.Multimodal.imageTableOf(batch)))
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_media_ingest_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq(s"${indexName}_fp", s"${indexName}_bstop")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        MediaIndex.tables(spark, indexName), "graft_media_ingest_ckpt", checkpoint) {
+      (bs, batch) => MediaIndex.append(bs, indexName,
+        Multimodal.imageDHash(Multimodal.imageTableOf(batch)))
+    }
 
   /** [[streamMediaIngest]]'s DEDUP-GATED twin — the media
     * crawl-admission loop at stream time ([[streamDedupIngest]]'s
     * discipline for the fingerprint family): each micro-batch encodes,
     * fingerprints, gates through [[graft.sources.MediaIndex
     * .dedupAgainst]] (cross-only against the STORED fingerprints — the
-    * corpus is never re-decoded), and appends ONLY the admitted rows,
-    * so batch N+1 gates against corpus ∪ batch N with no rebuild. The
-    * stored relation refreshes per batch (the prior batch's insert
-    * happened on a sibling micro-batch session) and the admitted frame
-    * materializes BEFORE append (its lineage reads the table append
-    * inserts into — lazy, it would self-reject). */
+    * corpus is never re-decoded), and appends ONLY the admitted rows
+    * ([[appendGated]]), so batch N+1 gates against corpus ∪ batch N
+    * with no rebuild. */
   def streamMediaDedupIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column, maxDist: Int = 6,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        Seq(s"${indexName}_fp", s"${indexName}_bstop")
-          .foreach(bs.catalog.refreshTable)
-        val fp = graft.multimodal.Multimodal.imageDHash(
-          graft.multimodal.Multimodal.imageTableOf(batch))
-        val admitted = graft.sources.MediaIndex.dedupAgainst(
-          bs, indexName, fp, maxDist).localCheckpoint()
-        graft.sources.MediaIndex.append(bs, indexName, admitted)
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_mediadedup_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq(s"${indexName}_fp", s"${indexName}_bstop")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        MediaIndex.tables(spark, indexName), "graft_mediadedup_ckpt", checkpoint) {
+      (bs, batch) =>
+        val fp = Multimodal.imageDHash(Multimodal.imageTableOf(batch))
+        appendGated(MediaIndex.dedupAgainst(bs, indexName, fp, maxDist))(
+          MediaIndex.append(bs, indexName, _))
+    }
 
   /** [[streamMediaDedupIngest]]'s VIDEO twin — the crawl-admission
     * loop for the frame-digest family: each micro-batch derives its
     * sampled frame digests, gates through [[graft.sources.VideoIndex
     * .dedupAgainst]] byte-exactly (aligned cross match against the STORED
     * frames — the corpus is never re-read), and appends ONLY the
-    * admitted rows. Same per-batch refresh + materialize-before-append
-    * discipline as the siblings. */
+    * admitted rows ([[appendGated]]). */
   def streamVideoDedupIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop")
-          .foreach(bs.catalog.refreshTable)
-        val frames = graft.multimodal.Multimodal.videoFrames(
-          graft.multimodal.Multimodal.videoTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
-          frames, graft.multimodal.Multimodal.Exact).localCheckpoint()
-        graft.sources.VideoIndex.append(bs, indexName, admitted)
-        ()
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_videodedup_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop",
-      s"${indexName}_bdfs", s"${indexName}_bstop")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        VideoIndex.tables(spark, indexName), "graft_videodedup_ckpt", checkpoint) {
+      (bs, batch) =>
+        val frames = Multimodal.videoFrames(Multimodal.videoTableOf(batch))
+        appendGated(VideoIndex.dedupAgainst(bs, indexName, frames, Multimodal.Exact))(
+          VideoIndex.append(bs, indexName, _))
+    }
 
   /** [[streamVideoDedupIngest]] for REAL-CODEC keyframe containers —
     * each micro-batch encodes its payloads as keyframe containers,
     * parses + `javax.imageio`-decodes them ONCE
     * ([[graft.multimodal.Multimodal.videoKeyframesFp]] — the decode is
-    * the batch's one-time ingest cost), gates the decoded-keyframe
-    * digests against the STORED index (containers are never re-opened
-    * corpus-side) and appends only the admitted rows. A cross-codec
-    * re-wrap of material admitted in an earlier batch refuses here —
-    * the decoded-bytes invariant at stream time. */
+    * the batch's one-time ingest cost) AT the index's persisted sampling
+    * stride ([[graft.sources.VideoIndex.keyframesFor]] — a mismatched
+    * stride would silently change match density against the stored
+    * rows), gates the decoded-keyframe digests against the STORED index
+    * (containers are never re-opened corpus-side) and appends only the
+    * admitted rows. A cross-codec re-wrap of material admitted in an
+    * earlier batch refuses here — the decoded-bytes invariant at stream
+    * time. */
   def streamVideoKeyframeIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop",
-          s"${indexName}_bdfs", s"${indexName}_bstop")
-          .filter(bs.catalog.tableExists)
-          .foreach(bs.catalog.refreshTable)
-        // decode AT the index's persisted sampling stride (graft.every
-        // — the segmentsFor discipline): a mismatched stride would
-        // silently change match density against the stored rows
-        val frames = graft.sources.VideoIndex.keyframesFor(bs, indexName,
-          graft.multimodal.Multimodal.videoKeyframeTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
-          frames, graft.multimodal.Multimodal.Exact).localCheckpoint()
-        graft.sources.VideoIndex.append(bs, indexName, admitted)
-        ()
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_videokf_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop",
-      s"${indexName}_bdfs", s"${indexName}_bstop")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        VideoIndex.tables(spark, indexName), "graft_videokf_ckpt", checkpoint) {
+      (bs, batch) =>
+        val frames = VideoIndex.keyframesFor(bs, indexName,
+          Multimodal.videoKeyframeTableOf(batch))
+        appendGated(VideoIndex.dedupAgainst(bs, indexName, frames, Multimodal.Exact))(
+          VideoIndex.append(bs, indexName, _))
+    }
 
   /** [[streamVideoDedupIngest]]'s PERCEPTUAL twin — the ingest loop
     * that refuses TRANSCODED copies of stored material, not just
@@ -763,43 +716,20 @@ object Streams {
     * fingerprints once ([[graft.multimodal.Multimodal.videoFramesFp]]),
     * gates through [[graft.sources.VideoIndex.dedupAgainst]] perceptually
     * (frame-level banding + Hamming against the stored corpus, the
-    * `_bstop` sidecar anti-joined), and appends only the admitted
+    * band-stop sidecar anti-joined), and appends only the admitted
     * rows — md5, fp, df-log and band-log all land in the same insert,
     * so the next batch gates against corpus ∪ batch with every
     * discipline current. */
   def streamVideoPerceptualIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column, maxDist: Int = 6,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop",
-          s"${indexName}_bdfs", s"${indexName}_bstop")
-          .foreach(bs.catalog.refreshTable)
-        val frames = graft.multimodal.Multimodal.videoFramesFp(
-          graft.multimodal.Multimodal.videoTableOf(batch))
-        val admitted = graft.sources.VideoIndex.dedupAgainst(bs, indexName,
-          frames, graft.multimodal.Multimodal.Perceptual(maxDist))
-          .localCheckpoint()
-        graft.sources.VideoIndex.append(bs, indexName, admitted)
-        ()
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_videoperc_ckpt")))
-      .start()
-    q.awaitTermination()
-    // relation caches are PER SESSION: the micro-batch sessions
-    // refreshed their own view of the rewritten sidecars, but the
-    // caller's cached file listings still point at deleted generations
-    Seq(s"${indexName}_vf", s"${indexName}_dfs", s"${indexName}_stop",
-      s"${indexName}_bdfs", s"${indexName}_bstop")
-      .filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
-  }
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        VideoIndex.tables(spark, indexName), "graft_videoperc_ckpt", checkpoint) {
+      (bs, batch) =>
+        val frames = Multimodal.videoFramesFp(Multimodal.videoTableOf(batch))
+        appendGated(VideoIndex.dedupAgainst(bs, indexName, frames,
+          Multimodal.Perceptual(maxDist)))(VideoIndex.append(bs, indexName, _))
+    }
 
   /** The COMPOSED multimodal crawl-admission loop at stream time — one
     * sink drives every micro-batch through ALL FOUR modality gates
@@ -807,62 +737,41 @@ object Streams {
     * image + audio fingerprints, video frame digests, each against its
     * own stored corpus-only index, each family appending its OWN
     * admitted rows — so batch N+1 gates against corpus ∪ batch N in
-    * every modality with no rebuild anywhere. Per-batch refresh of the
-    * stored relations (prior inserts happened on a sibling micro-batch
-    * session) + the materialize-before-append discipline live inside
-    * admitBatch. The video-family `_stop`/`_bstop` sidecars are NOT in
-    * the per-batch refresh set: they ride a
+    * every modality with no rebuild anywhere. The materialize-before-
+    * append discipline lives inside admitBatch. The video family's
+    * stop sidecars ([[graft.sources.VideoIndex.stopTables]]) are NOT in
+    * the per-batch refresh: they ride a
     * [[graft.sources.VideoIndex.StopCache]] held across micro-batches
     * (r15 verdict "what's missing" #5 — the sidecars change only when
     * this loop's own appends land rows, and admitBatch invalidates the
     * cache exactly then), so a long admission run reads each sidecar
-    * once per change instead of once per batch. */
+    * once per change instead of once per batch. The cache's frames are
+    * released when the drain ends. */
   def streamCrawlAdmitIngest(spark: SparkSession, sfDir: String,
       textIdx: String, imageIdx: String, audioIdx: String,
       videoIdx: String, pred: Column,
       checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val allTables = Seq(s"${textIdx}_bands", s"${textIdx}_shingles",
-      s"${textIdx}_sizes", s"${imageIdx}_fp", s"${imageIdx}_bstop",
-      s"${audioIdx}_fp", s"${audioIdx}_bstop", s"${videoIdx}_vf",
-      s"${videoIdx}_dfs", s"${videoIdx}_stop", s"${videoIdx}_bdfs",
-      s"${videoIdx}_bstop")
-    val cachedSidecars = Set(s"${videoIdx}_stop", s"${videoIdx}_bstop")
     // one cache per micro-batch SESSION (foreachBatch reuses its cloned
     // session across batches of one query; guard by identity in case a
     // restart hands us a different clone — a fresh cache is merely cold)
-    var cacheFor: Option[(SparkSession, graft.sources.VideoIndex.StopCache)] =
-      None
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        val cache = cacheFor match {
-          case Some((s0, c)) if s0 eq bs => c
-          case stale =>
-            // a replaced cache must not abandon its checkpointed frames
-            stale.foreach(_._2.releaseAll())
-            val c = new graft.sources.VideoIndex.StopCache(bs)
-            cacheFor = Some((bs, c))
-            c
-        }
-        allTables.filterNot(cachedSidecars)
-          .filter(bs.catalog.tableExists)
-          .foreach(bs.catalog.refreshTable)
-        graft.multimodal.CrawlAdmit.admitBatch(bs,
-          batch.select(col("doc_id"), col("text")),
-          textIdx, imageIdx, audioIdx, videoIdx,
-          stopCache = Some(cache))
-        ()
+    var cacheFor: Option[(SparkSession, VideoIndex.StopCache)] = None
+    try ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        DedupIndex.tables(spark, textIdx) ++ MediaIndex.tables(spark, imageIdx) ++
+          MediaIndex.tables(spark, audioIdx) ++ VideoIndex.tables(spark, videoIdx),
+        "graft_crawladmit_ckpt", checkpoint,
+        cached = VideoIndex.stopTables(videoIdx).toSet) { (bs, batch) =>
+      val cache = cacheFor match {
+        case Some((s0, c)) if s0 eq bs => c
+        case stale =>
+          // a replaced cache must not abandon its checkpointed frames
+          stale.foreach(_._2.releaseAll())
+          val c = new VideoIndex.StopCache(bs)
+          cacheFor = Some((bs, c))
+          c
       }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_crawladmit_ckpt")))
-      .start()
-    q.awaitTermination()
-    allTables.filter(spark.catalog.tableExists)
-      .foreach(spark.catalog.refreshTable)
+      CrawlAdmit.admitBatch(bs, batch.select(col("doc_id"), col("text")),
+        textIdx, imageIdx, audioIdx, videoIdx, stopCache = Some(cache))
+    } finally cacheFor.foreach(_._2.releaseAll())
   }
 
   /** Streaming DEDUP-GATED ingest — the full crawl-admission loop at
@@ -876,37 +785,18 @@ object Streams {
     * pollutes the index. Near-dup pairs WITHIN one micro-batch follow
     * the batch API's cross-only contract (both admitted; run the
     * self-dedup chain upstream when intra-batch dups matter — a
-    * production crawl's frontier dedup makes them rare). The
-    * stored-table relations are refreshed per batch because the
-    * PREVIOUS batch's inserts happened on a sibling micro-batch
-    * session — without it the gate would race its own appends. Same
-    * checkpoint contract as [[streamIvfIngest]]. */
+    * production crawl's frontier dedup makes them rare). */
   def streamDedupIngest(spark: SparkSession, sfDir: String,
       indexName: String, pred: Column, tau: Double = 0.8,
-      checkpoint: Option[String] = None): Unit = {
-    val s = tuned(spark)
-    val fresh = documentsStream(s, sfDir).where(pred)
-    val q = fresh.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val bs = batch.sparkSession
-        Seq("bands", "shingles", "sizes").foreach(t =>
-          bs.catalog.refreshTable(s"${indexName}_$t"))
+      checkpoint: Option[String] = None): Unit =
+    ingest(spark, s => documentsStream(s, sfDir).where(pred),
+        DedupIndex.tables(spark, indexName), "graft_dedup_ingest_ckpt", checkpoint) {
+      (bs, batch) =>
         // the gate returns its admitted rows materialized (a local
         // frame), so append's writes cannot feed back into them
-        val admitted = graft.sources.DedupIndex.dedupAgainst(
-          bs, indexName, batch, "text", "doc_id", tau = tau)
-        graft.sources.DedupIndex.append(bs, indexName, admitted,
-          "text", "doc_id")
-      }
-      .option("checkpointLocation", checkpoint.getOrElse(
-        freshCheckpoint(s, "graft_dedup_ingest_ckpt")))
-      .start()
-    q.awaitTermination()
-    Seq("bands", "shingles", "sizes").foreach(t =>
-      spark.catalog.refreshTable(s"${indexName}_$t"))
-  }
+        val admitted = DedupIndex.dedupAgainst(bs, indexName, batch, "text", "doc_id", tau = tau)
+        DedupIndex.append(bs, indexName, admitted, "text", "doc_id")
+    }
 
   /** Streaming domain classification:
     * [[graft.llm.TextAnalysis.domainClassify]] per micro-batch — the

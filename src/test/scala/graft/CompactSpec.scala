@@ -316,4 +316,42 @@ class CompactSpec extends AnyFunSuite {
       s"concurrent planning must keep bucket pruning:\n$planMidWindow")
     assert(filesPerBucket("graft_ivf_cmp5_cells").values.forall(_ == 1))
   }
+
+  test("every job of a compacting maintain names its operator; a failed compaction restores the caller's description") {
+    val docs = Tables.documents(spark, sf0001).where(col("doc_id") < 60)
+    DedupIndex.build(spark, docs.where(col("doc_id") >= 30), "text", "doc_id",
+      "graft_dedup_label")
+    DedupIndex.append(spark, "graft_dedup_label", docs.where(col("doc_id") < 30),
+      "text", "doc_id")
+    val emb = Tables.embeddings(spark, sf0001)
+    IvfIndex.build(spark, emb.where(col("vec_id") >= 100), "vec_id",
+      "embedding", "graft_ivf_label", numCentroids = 8)
+    IvfIndex.append(spark, "graft_ivf_label", emb.where(col("vec_id") < 100),
+      "vec_id", "embedding")
+    // a threshold of 0 files per bucket compacts every table; no refresh
+    val (dedup, dedupJobs) = SparkJobs.describe(
+      DedupIndex.maintain(spark, "graft_dedup_label", maxFilesPerBucket = 0.0))
+    val (ivf, ivfJobs) = SparkJobs.describe(IvfIndex.maintain(spark,
+      "graft_ivf_label", maxOverMean = 1e9, maxFilesPerBucket = 0.0))
+    assert(dedup.keySet == Set("graft_dedup_label_bands",
+      "graft_dedup_label_shingles", "graft_dedup_label_sizes"), dedup)
+    assert(ivf.compacted && !ivf.refreshed, ivf)
+    val compactJobs = dedup.keySet.map(t => s"compact $t") + "compact graft_ivf_label_cells"
+    assert(dedupJobs.nonEmpty && dedupJobs.forall(d => compactJobs(d)), dedupJobs)
+    assert(ivfJobs.nonEmpty &&
+      ivfJobs.forall(d => d == "occupancySkew count" || compactJobs(d)), ivfJobs)
+    assert(compactJobs.forall((dedupJobs ++ ivfJobs).contains),
+      s"every compacted table must run a labelled job: $dedupJobs $ivfJobs")
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      DedupIndex.maintain(spark, "graft_dedup_label", maxFilesPerBucket = 0.0)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      intercept[Exception](Compact.compactTable(spark, "graft_compact_label_absent"))
+      intercept[Exception](Compact.compactTable(spark, "graft_dedup_label_bands",
+        transform = df => df.select(col("no_such_column"))))
+      assert(sc.getLocalProperty("spark.job.description") == "caller",
+        "a failed compaction must restore the caller's description too")
+    } finally sc.setJobDescription(null)
+  }
 }

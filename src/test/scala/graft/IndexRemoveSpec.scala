@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DedupIndex, IvfIndex, TextIndex}
+import graft.multimodal.Multimodal
+import graft.sources.{DedupIndex, IvfIndex, MediaIndex, TextIndex, VideoIndex}
 
 /** Index DELETION — the lifecycle op between append and refresh
   * (takedowns, re-crawl invalidation, privacy erasure): one
@@ -15,6 +16,37 @@ import graft.sources.{DedupIndex, IvfIndex, TextIndex}
   * bucket-pruned, and the rewrite leaves one file per bucket. */
 class IndexRemoveSpec extends AnyFunSuite {
   import TestSession._
+
+  // > 64 bytes each, so a video payload has >= 2 sampled frames to align on
+  private val tGone = "alpha beta gamma delta epsilon zeta eta theta iota " +
+    "kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi"
+  private val tStay = "one two three four five six seven eight nine ten " +
+    "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen"
+
+  private def docsOf(rows: Seq[(Long, String)]) = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  private def idsOf(c: String, ids: Long*) = {
+    val s = spark
+    import s.implicits._
+    ids.toDF(c)
+  }
+
+  /** Filler items `lo until lo + 4`, each its own text. */
+  private def fillers(lo: Long): Seq[(Long, String)] =
+    (lo until lo + 4L).map(i => i -> (s"filler $i " +
+      Seq.tabulate(12)(j => s"w${(i * 31 + j * 7) % 97}").mkString(" ")))
+
+  private def sorted(table: String): Seq[String] =
+    spark.table(table).collect().map(_.toSeq.mkString(",")).toSeq.sorted
+
+  /** Distinct buckets the rows of `table` hash to: the bucketed writer's
+    * pmod(murmur3(key), buckets), recomputed here. */
+  private def nonEmptyBuckets(table: String, key: String, buckets: Int): Long =
+    spark.table(table).select(pmod(hash(col(key)), lit(buckets))).distinct().count()
 
   test("TextIndex.remove: stored BM25 after removal ranks exactly like a fresh build on the shrunk corpus") {
     val docs = Tables.documents(spark, sf0001)
@@ -136,5 +168,104 @@ class IndexRemoveSpec extends AnyFunSuite {
     assert(before > after && after > 0,
       s"the anti-join rewrite must also fold the appended fragments " +
         s"($before -> $after files)")
+  }
+
+  test("MediaIndex.remove: an erased item stops vetoing its re-crawled twin; one file per non-empty bucket; _bstop re-derived") {
+    def fp(rows: Seq[(Long, String)]) =
+      Multimodal.imageDHash(Multimodal.imageTableOf(docsOf(rows)))
+    MediaIndex.build(spark, fp(Seq(1L -> tGone, 2L -> tStay)), "graft_media_rm")
+    // three appends fragment the buckets the removal then folds
+    Seq(10L, 20L, 30L).foreach(lo =>
+      MediaIndex.append(spark, "graft_media_rm", fp(fillers(lo))))
+    val twins = fp(Seq(901L -> tGone, 902L -> tStay))
+    def admitted = MediaIndex.dedupAgainst(spark, "graft_media_rm", twins)
+      .select(col("media_id")).collect().map(_.getLong(0)).toSet
+    assert(admitted.isEmpty, "both twins must be refused pre-removal")
+    val (before, after) = MediaIndex.remove(spark, "graft_media_rm",
+      idsOf("media_id", 1L))(
+      "graft_media_rm_fp")
+    assert(admitted == Set(901L),
+      s"the erased item's twin must be admitted, the survivor's still refused: $admitted")
+    val buckets = nonEmptyBuckets("graft_media_rm_fp", "media_id", 16)
+    assert(before > after && after == buckets,
+      s"remove must fold the appended fragments to one file per non-empty " +
+        s"bucket ($before -> $after files, $buckets buckets)")
+    // maxBandDf = 0 stops every stored band value, so the sidecar
+    // follows the removed item's bands exactly
+    val all = Seq(1L -> tGone, 2L -> tStay) ++ fillers(10L)
+    MediaIndex.build(spark, fp(all), "graft_media_rm_stop", maxBandDf = 0)
+    val stopBefore = sorted("graft_media_rm_stop_bstop")
+    MediaIndex.remove(spark, "graft_media_rm_stop",
+      idsOf("media_id", 1L))
+    MediaIndex.build(spark, fp(all.filter(_._1 != 1L)), "graft_media_rm_ref",
+      maxBandDf = 0)
+    val stopAfter = sorted("graft_media_rm_stop_bstop")
+    assert(stopAfter == sorted("graft_media_rm_ref_bstop") && stopAfter != stopBefore,
+      "_bstop after remove must equal a fresh build's over the survivors")
+  }
+
+  test("VideoIndex.remove: an erased video stops vetoing its re-crawled twin; one file per non-empty bucket; _dfs/_stop and _bdfs/_bstop re-derived") {
+    def frames(rows: Seq[(Long, String)]) =
+      Multimodal.videoFramesFp(Multimodal.videoTableOf(docsOf(rows)))
+    VideoIndex.build(spark, frames(Seq(1L -> tGone, 2L -> tStay)), "graft_video_rm")
+    Seq(10L, 20L, 30L).foreach(lo =>
+      VideoIndex.append(spark, "graft_video_rm", frames(fillers(lo))))
+    val twins = frames(Seq(901L -> tGone, 902L -> tStay))
+    def admitted = VideoIndex.dedupAgainst(spark, "graft_video_rm", twins,
+      Multimodal.Exact).select(col("media_id")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(admitted.isEmpty, "both twins must be refused pre-removal")
+    val (before, after) = VideoIndex.remove(spark, "graft_video_rm",
+      idsOf("media_id", 1L))(
+      "graft_video_rm_vf")
+    assert(admitted == Set(901L),
+      s"the erased video's twin must be admitted, the survivor's still refused: $admitted")
+    val buckets = nonEmptyBuckets("graft_video_rm_vf", "media_id", 16)
+    assert(before > after && after == buckets,
+      s"remove must fold the appended fragments to one file per non-empty " +
+        s"bucket ($before -> $after files, $buckets buckets)")
+    // a verbatim copy (id 3) puts every digest and band value of tGone
+    // in two videos: over the dials at 1, removing the copy empties them
+    // from both stop sidecars
+    val all = Seq(1L -> tGone, 2L -> tStay, 3L -> tGone)
+    VideoIndex.build(spark, frames(all), "graft_video_rm_stop", maxDf = 1,
+      maxBandDf = 1)
+    val sidecars = Seq("_dfs", "_stop", "_bdfs", "_bstop")
+    val beforeRm = sidecars.map(t => sorted(s"graft_video_rm_stop$t"))
+    VideoIndex.remove(spark, "graft_video_rm_stop",
+      idsOf("media_id", 3L))
+    VideoIndex.build(spark, frames(all.filter(_._1 != 3L)), "graft_video_rm_ref",
+      maxDf = 1, maxBandDf = 1)
+    sidecars.zip(beforeRm).foreach { case (t, b) =>
+      val got = sorted(s"graft_video_rm_stop$t")
+      assert(got == sorted(s"graft_video_rm_ref$t"),
+        s"$t after remove must equal a fresh build's over the survivors")
+      if (t.endsWith("stop")) assert(got != b, s"$t must have changed")
+    }
+  }
+
+  test("every family's remove releases what it checkpoints") {
+    val sc = spark.sparkContext
+    def check(family: String)(remove: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      remove
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"$family.remove left RDDs $left persisted")
+    }
+    val docs = docsOf(Seq(1L -> tGone, 2L -> tStay) ++ fillers(10L))
+    def ids(c: String) = idsOf(c, 1L)
+    DedupIndex.build(spark, docs, "text", "doc_id", "graft_dedup_rmfree")
+    check("DedupIndex")(DedupIndex.remove(spark, "graft_dedup_rmfree", ids("doc_id")))
+    TextIndex.build(spark, docs, "text", "doc_id", "graft_text_rmfree")
+    check("TextIndex")(TextIndex.remove(spark, "graft_text_rmfree", ids("doc_id")))
+    IvfIndex.build(spark, Tables.embeddings(spark, sf0001).where(col("vec_id") < 40),
+      "vec_id", "embedding", "graft_ivf_rmfree", numCentroids = 4)
+    check("IvfIndex")(IvfIndex.remove(spark, "graft_ivf_rmfree", ids("vec_id")))
+    MediaIndex.build(spark, Multimodal.imageDHash(Multimodal.imageTableOf(docs)),
+      "graft_media_rmfree")
+    check("MediaIndex")(MediaIndex.remove(spark, "graft_media_rmfree", ids("media_id")))
+    VideoIndex.build(spark, Multimodal.videoFramesFp(Multimodal.videoTableOf(docs)),
+      "graft_video_rmfree")
+    check("VideoIndex")(VideoIndex.remove(spark, "graft_video_rmfree", ids("media_id")))
   }
 }

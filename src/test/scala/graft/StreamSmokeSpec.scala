@@ -505,4 +505,114 @@ class StreamSmokeSpec extends AnyFunSuite {
     assert(alignedMatches.count() == 0L,
       "md5 equality must not see the transcode")
   }
+
+  /** Runs `ingest` (default checkpoint) under a fresh
+    * `graft.stream.checkpointRoot`, one file per micro-batch, after the
+    * caller session has read every table in `tables`, then checks what
+    * it leaves behind: an empty checkpoint root, no RDD left persisted
+    * (when `leakFree`), and a caller session that reads every table with
+    * the row count a new session reads. */
+  private def ingestLifecycle(name: String, tables: Seq[String],
+      leakFree: Boolean = true)(ingest: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root")
+    tables.foreach(t => spark.table(t).count())
+    val before = sc.getPersistentRDDs.keySet.toSet
+    spark.conf.set("graft.stream.checkpointRoot", root.toString)
+    spark.conf.set("graft.stream.maxFilesPerTrigger", "1")
+    try ingest
+    finally {
+      spark.conf.unset("graft.stream.checkpointRoot")
+      spark.conf.unset("graft.stream.maxFilesPerTrigger")
+    }
+    val left = java.nio.file.Files.list(root)
+    try assert(!left.iterator().hasNext, s"$name left its checkpoint under $root")
+    finally left.close()
+    if (leakFree) {
+      val rdds = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(rdds.isEmpty, s"$name left RDDs $rdds persisted")
+    }
+    val other = spark.newSession()
+    tables.foreach { t =>
+      assert(spark.table(t).count() == other.table(t).count(),
+        s"$name: the caller session reads a stale $t")
+    }
+  }
+
+  test("every stored-index ingest deletes its default checkpoint, frees " +
+      "its per-batch checkpoints and leaves the caller session current") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.multimodal.Multimodal
+    import graft.sources.{DedupIndex, IvfIndex, MediaIndex, TextIndex, VideoIndex}
+    import graft.streaming.Streams
+    // 480 bytes: >= 2 sampled frames and >= 2 sampled keyframes to align on
+    def long(t: String) = (t + " ") * 24 take 480
+    val tA = long("alpha beta gamma delta epsilon zeta eta theta iota kappa")
+    val tB = long("one two three four five six seven eight nine ten eleven")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lifecycle_src").toString
+    Seq(Seq(990001L -> tA), Seq(990002L -> tA, 990003L -> tB)).foreach { rows =>
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append")
+        .parquet(s"$dir/documents.parquet")
+      Thread.sleep(1100)
+    }
+    val corpus = Seq(1L -> long("lorem ipsum dolor sit amet consectetur"))
+      .toDF("doc_id", "text")
+    def img = Multimodal.imageDHash(Multimodal.imageTableOf(corpus))
+    def vid = Multimodal.videoFramesFp(Multimodal.videoTableOf(corpus))
+
+    val emb = Tables.embeddings(spark, sf0001)
+    IvfIndex.build(spark, emb.where(col("vec_id") >= 100), "vec_id",
+      "embedding", "graft_lc_ivf", numCentroids = 8)
+    ingestLifecycle("streamIvfIngest", IvfIndex.tables(spark, "graft_lc_ivf"))(
+      Streams.streamIvfIngest(spark, sf0001, "graft_lc_ivf", col("vec_id") < 100))
+
+    TextIndex.build(spark, Tables.documents(spark, sf0001).where(col("doc_id") >= 100),
+      "text", "doc_id", "graft_lc_text")
+    ingestLifecycle("streamTextIngest", TextIndex.tables(spark, "graft_lc_text"))(
+      Streams.streamTextIngest(spark, sf0001, "graft_lc_text", col("doc_id") < 100))
+
+    MediaIndex.build(spark, img, "graft_lc_img")
+    ingestLifecycle("streamMediaIngest", MediaIndex.tables(spark, "graft_lc_img"))(
+      Streams.streamMediaIngest(spark, dir, "graft_lc_img", lit(true)))
+
+    MediaIndex.build(spark, img, "graft_lc_imgg")
+    ingestLifecycle("streamMediaDedupIngest", MediaIndex.tables(spark, "graft_lc_imgg"))(
+      Streams.streamMediaDedupIngest(spark, dir, "graft_lc_imgg", lit(true)))
+
+    DedupIndex.build(spark, corpus, "text", "doc_id", "graft_lc_dedup")
+    ingestLifecycle("streamDedupIngest",
+        DedupIndex.tables(spark, "graft_lc_dedup"))(
+      Streams.streamDedupIngest(spark, dir, "graft_lc_dedup", lit(true)))
+
+    VideoIndex.build(spark, Multimodal.videoFrames(Multimodal.videoTableOf(corpus)),
+      "graft_lc_vid")
+    ingestLifecycle("streamVideoDedupIngest", VideoIndex.tables(spark, "graft_lc_vid"))(
+      Streams.streamVideoDedupIngest(spark, dir, "graft_lc_vid", lit(true)))
+
+    VideoIndex.build(spark, vid, "graft_lc_vidp")
+    ingestLifecycle("streamVideoPerceptualIngest", VideoIndex.tables(spark, "graft_lc_vidp"))(
+      Streams.streamVideoPerceptualIngest(spark, dir, "graft_lc_vidp", lit(true)))
+
+    VideoIndex.build(spark, Multimodal.videoKeyframesFp(
+      Multimodal.videoKeyframeTableOf(corpus)), "graft_lc_vkf")
+    ingestLifecycle("streamVideoKeyframeIngest", VideoIndex.tables(spark, "graft_lc_vkf"))(
+      Streams.streamVideoKeyframeIngest(spark, dir, "graft_lc_vkf", lit(true)))
+
+    DedupIndex.build(spark, corpus, "text", "doc_id", "graft_lc_ca_text")
+    MediaIndex.build(spark, img, "graft_lc_ca_img")
+    MediaIndex.build(spark, Multimodal.audioDHash(Multimodal.audioTableOf(corpus)),
+      "graft_lc_ca_aud")
+    VideoIndex.build(spark, vid, "graft_lc_ca_vid")
+    // admitBatch keeps its own per-batch inputs checkpointed, so only
+    // the checkpoint and refresh halves are checked for the composed gate
+    ingestLifecycle("streamCrawlAdmitIngest",
+        DedupIndex.tables(spark, "graft_lc_ca_text") ++
+          MediaIndex.tables(spark, "graft_lc_ca_img") ++
+          MediaIndex.tables(spark, "graft_lc_ca_aud") ++
+          VideoIndex.tables(spark, "graft_lc_ca_vid"), leakFree = false)(
+      Streams.streamCrawlAdmitIngest(spark, dir, "graft_lc_ca_text",
+        "graft_lc_ca_img", "graft_lc_ca_aud", "graft_lc_ca_vid", lit(true)))
+  }
 }
