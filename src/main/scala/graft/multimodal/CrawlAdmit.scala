@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.sources.{DedupIndex, MediaIndex, VideoIndex}
 
 /** COMPOSED multimodal crawl admission (r14 verdict "what's missing"
@@ -82,7 +83,10 @@ object CrawlAdmit {
   private final case class BatchInputs(b: DataFrame, imgFp: DataFrame,
       audFp: DataFrame, vFrames: DataFrame, audSeg: Option[DataFrame],
       imgRows: Option[DataFrame], imgBlocks: Option[DataFrame],
-      kfFrames: Option[DataFrame])
+      kfFrames: Option[DataFrame]) {
+    def all: Seq[DataFrame] =
+      Seq(b, imgFp, audFp, vFrames) ++ audSeg ++ imgRows ++ imgBlocks ++ kfFrames
+  }
 
   private def deriveInputs(spark: SparkSession, batch: DataFrame,
       audioClipIdx: Option[String], imageCropIdx: Option[String],
@@ -129,6 +133,10 @@ object CrawlAdmit {
       () => videoKeyframeIdx.map(idx =>
         cp(VideoIndex.keyframesFor(spark, idx,
           Multimodal.videoKeyframeTableOf(b))))))
+    // materialized fingerprints no longer read the encode checkpoints
+    if (checkpointFps)
+      Checkpoints.release(Seq(imgTbl).filter(_ => imageTwoPasses) ++
+        Seq(audTbl).filter(_ => audioClipIdx.isDefined): _*)
     BatchInputs(b,
       imgFp = fps(0).get,
       audFp = fps(1).get,
@@ -285,7 +293,9 @@ object CrawlAdmit {
     * discipline: the flags frame is checkpointed before any append so
     * a gate never reads its own inserts). The batch's fingerprints are
     * derived ONCE and shared between gating and appending — no payload
-    * is encoded or decoded twice. Returns the flags. */
+    * is encoded or decoded twice. Once the appends ran, every
+    * checkpoint of the batch's inputs and gates is released. Returns
+    * the flags, materialized: the caller releases them. */
   def admitBatch(spark: SparkSession, batch: DataFrame, textIdx: String,
       imageIdx: String, audioIdx: String, videoIdx: String,
       maxDist: Int = 6, tau: Double = 0.8,
@@ -299,11 +309,11 @@ object CrawlAdmit {
       stopCache: Option[VideoIndex.StopCache] = None): DataFrame = {
     val in = deriveInputs(spark, batch, audioClipIdx, imageCropIdx,
       imageCrop2dIdx, videoKeyframeIdx, checkpointFps = true)
-    val flags = flagsFrom(spark, in, textIdx,
+    val gated = flagsFrom(spark, in, textIdx,
       imageIdx, audioIdx, videoIdx, maxDist, tau,
       videoPerceptual, audioClipIdx, imageCropIdx, audioClipPerceptual,
       imageCropPerceptual, imageCrop2dIdx, videoKeyframeIdx, stopCache)
-      .localCheckpoint()
+    val flags = gated.localCheckpoint()
     def adm(c: String): DataFrame =
       flags.where(col(c) === 1L).select(col("doc_id"))
     DedupIndex.append(spark, textIdx,
@@ -346,6 +356,12 @@ object CrawlAdmit {
         adm("admit_video").withColumnRenamed("doc_id", "media_id"),
         Seq("media_id")))
     }
+    // every append ran: the inputs and every checkpoint in the gate's
+    // plan are dead (the Streams.appendGated discipline). The temporal
+    // gates read their fresh frames only behind their own checkpoints,
+    // so the inputs are released by name; the StopCache frames sit
+    // behind those checkpoints too, out of reach.
+    Checkpoints.release(gated +: in.all: _*)
     flags
   }
 }

@@ -19,7 +19,11 @@ import graft.core.{Checkpoints, JobLabel}
   * It also holds the lifecycle passes the five stored index families
   * share: the fragmentation census ([[filesPerBucket]] →
   * [[maintainTables]]), the bucket-preserving rewrite
-  * ([[compactTable]]) and the one removal pass ([[removeIds]]). */
+  * ([[compactTable]]) and the one removal pass ([[removeIds]]). They
+  * locate, list and re-dial a table through [[Bucketing]] (its catalog
+  * entry, its data files, its `graft.*` properties set through the
+  * catalog); none takes a base path — a table stays under the base its
+  * family's `build` was given. */
 object Compact {
 
   /** Partition count targeting ~targetBytes per output file. */
@@ -30,14 +34,20 @@ object Compact {
   }
 
   /** Repartition for writing: coalesce down (shuffle-free), split up only
-    * when `allowGrow` (costs a shuffle). */
+    * when `allowGrow` (costs a shuffle). A frame that fits one file is
+    * coalesced to one without planning it: reading its partition count
+    * would run its shuffle stages once before the write runs them
+    * again. */
   def forWrite(df: DataFrame, targetBytes: Long = 128L << 20,
       allowGrow: Boolean = false): DataFrame = {
     val want = plannedPartitions(df, targetBytes)
-    val have = df.rdd.getNumPartitions
-    if (want < have) df.coalesce(want)
-    else if (want > have && allowGrow) df.repartition(want)
-    else df
+    if (want == 1) df.coalesce(1)
+    else {
+      val have = df.rdd.getNumPartitions
+      if (want < have) df.coalesce(want)
+      else if (want > have && allowGrow) df.repartition(want)
+      else df
+    }
   }
 
   /** Complete a swap interrupted inside [[compactTable]]'s drop→rename
@@ -47,7 +57,7 @@ object Compact {
     * `__compacting` copy — renaming the finished copy into place IS the
     * finished compaction. Without this, the scheduled maintenance path
     * ([[filesPerBucket]] → [[maintainTables]]) would throw on
-    * getTableMetadata instead of recovering. */
+    * the catalog lookup instead of recovering. */
   private[sources] def healInterruptedSwap(spark: SparkSession,
       table: String): Unit = {
     val catalog = spark.sessionState.catalog
@@ -65,17 +75,8 @@ object Compact {
     * deciding to pay a [[compactTable]] pass. */
   def filesPerBucket(spark: SparkSession, table: String): Double = {
     healInterruptedSwap(spark, table)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(loc)) 0L
-      else fs.listStatus(loc).count { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.toLong
-    files.toDouble / meta.bucketSpec.map(_.numBuckets).getOrElse(1).max(1)
+    Bucketing.dataFiles(spark, table).size.toDouble /
+      Bucketing.entry(spark, table).bucketSpec.map(_.numBuckets).getOrElse(1).max(1)
   }
 
   /** Fragmentation-gated maintenance across an index family's tables:
@@ -100,9 +101,9 @@ object Compact {
     * serve-side scan — still bucket-PRUNED — goes metadata/open-bound.
     *
     * This rewrites the table under ITS OWN bucket spec (read from the
-    * catalog) and swaps it in place:
+    * catalog, [[Bucketing.entry]]) and swaps it in place:
     *   1. the copy runs under a FORCED bucketed scan
-    *      ([[TextIndex.forceBucketedScan]]): each scan partition is
+    *      ([[Bucketing.forceBucketedScan]]): each scan partition is
     *      then exactly one bucket's file set, so the bucketed writer —
     *      which computes bucket ids per row — emits ONE file per
     *      non-empty bucket with ZERO shuffle; the rewrite moves each
@@ -116,14 +117,20 @@ object Compact {
     *   2. the compacted copy is written under the catalog name
     *      `<table>__compacting` to the alternate of two generation
     *      paths (…__c0/…__c1, so repeated compactions never grow the
-    *      path) with the identical bucketBy/sortBy — the catalog
-    *      metadata, and with it every pruned serve plan, is unchanged
-    *      by the swap;
+    *      path) through the same writer as [[Bucketing.create]]
+    *      ([[Bucketing.writer]]), with the identical bucketBy/sortBy —
+    *      the catalog metadata, and with it every pruned serve plan, is
+    *      unchanged by the swap;
     *   3. the old table is dropped (external: catalog entry only), the
-    *      compacted one renamed over it, and the old files deleted.
+    *      compacted one renamed over it, its `graft.*` dials re-applied
+    *      through the catalog ([[Bucketing.setDials]] — the copy is a
+    *      fresh table, so persisted dials such as VideoIndex's maxDf
+    *      would otherwise be lost), and the old files deleted.
     *
     * Non-bucketed tables (the quantizer/totals sidecars the indexes
     * append to) compact through the same entry point via [[forWrite]].
+    * The copy stays under the table's base: the generation paths are
+    * siblings of its current location, which its `build` chose.
     *
     * Crash contract (documented, not transactional — a catalog-level
     * atomic swap needs a snapshot table format, e.g. Iceberg/Delta):
@@ -136,10 +143,11 @@ object Compact {
     * swap by renaming the finished copy into place — whereas a crash
     * BEFORE the drop (partial copy, target intact) is healed by
     * sweeping the stale `__compacting` sibling. Like
-    * [[TextIndex.forceBucketedScan]] this assumes the sequential
+    * [[Bucketing.forceBucketedScan]] this assumes the sequential
     * maintenance window — don't serve from a table mid-swap.
     *
-    * Returns (dataFilesBefore, dataFilesAfter). Answers served from the
+    * Returns (dataFilesBefore, dataFilesAfter), counted by
+    * [[Bucketing.dataFiles]]. Answers served from the
     * table are byte-identical before and after (pinned by CompactSpec):
     * only the file layout moves, never a row, and within-file order is
     * re-established by the declared sortBy.
@@ -158,27 +166,19 @@ object Compact {
     * ([[JobLabel]]); the caller's description comes back on every exit
     * path. */
   def compactTable(spark: SparkSession, table: String,
-      targetBytes: Long = 128L << 20,
       transform: DataFrame => DataFrame = identity): (Long, Long) =
     JobLabel.around(spark.sparkContext, "compact") { label =>
       label(table)
       val catalog = spark.sessionState.catalog
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
       val tmpName = s"${table}__compacting"
       val tmpIdent = spark.sessionState.sqlParser.parseTableIdentifier(tmpName)
       // Crash recovery (r13 ADVICE, shared helper since r14 ADVICE so the
       // maintenance path heals too — see [[healInterruptedSwap]]).
       healInterruptedSwap(spark, table)
-      val meta = catalog.getTableMetadata(ident)
+      val meta = Bucketing.entry(spark, table)
       val loc = new org.apache.hadoop.fs.Path(meta.location)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def dataFiles(p: org.apache.hadoop.fs.Path): Long =
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).count { s =>
-          val n = s.getPath.getName
-          s.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.toLong
-      val before = dataFiles(loc)
+      val before = Bucketing.dataFiles(spark, table).size.toLong
       // sweep a leftover from a crashed prior attempt (table still exists
       // here, so the leftover is a stale partial copy, not the live data)
       if (catalog.tableExists(tmpIdent))
@@ -190,41 +190,25 @@ object Compact {
         if (loc.getName == s"${baseName}__c0") s"${baseName}__c1"
         else s"${baseName}__c0")
       if (fs.exists(tmpLoc)) fs.delete(tmpLoc, true)
-      meta.bucketSpec match {
-        case Some(spec) =>
-          // the forced-bucketed-scan window must cover the WRITE (the
-          // scan plans when the job runs): one-bucket-per-task in, one
-          // file per bucket out, no exchange anywhere. The window runs
-          // on an isolated session, so concurrent planning on the
-          // caller's session keeps its pruning (CompactSpec pins it);
-          // the write lands in the SHARED external catalog either way.
-          TextIndex.forceBucketedScan(spark) { iso =>
-            val w = transform(iso.table(table)).write.format("parquet")
-              .option("path", tmpLoc.toString)
-              .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-                spec.bucketColumnNames.tail: _*)
-            (if (spec.sortColumnNames.nonEmpty)
-              w.sortBy(spec.sortColumnNames.head,
-                spec.sortColumnNames.tail: _*)
-            else w).saveAsTable(tmpName) // eager: copy complete after this
-          }
-        case None =>
-          forWrite(transform(spark.table(table)), targetBytes)
-            .write.format("parquet")
-            .option("path", tmpLoc.toString)
-            .saveAsTable(tmpName)
+      // the forced-bucketed-scan window must cover the WRITE (the scan
+      // plans when the job runs): one-bucket-per-task in, one file per
+      // bucket out, no exchange anywhere. The window runs on an isolated
+      // session, so concurrent planning on the caller's session keeps
+      // its pruning (CompactSpec pins it); the write lands in the SHARED
+      // external catalog either way. An unbucketed table folds through
+      // [[forWrite]] instead.
+      Bucketing.forceBucketedScan(spark) { iso =>
+        val rows = transform(iso.table(table))
+        Bucketing.writer(if (meta.bucketSpec.isEmpty) forWrite(rows) else rows,
+            meta.bucketSpec)
+          .option("path", tmpLoc.toString)
+          .saveAsTable(tmpName) // eager: copy complete after this
       }
       spark.sql(s"DROP TABLE $table") // external: files stay until deleted
       spark.sql(s"ALTER TABLE $tmpName RENAME TO $table")
-      // the rewrite is a FRESH saveAsTable, which drops user-set table
-      // properties — re-apply the engine's own (`graft.*`) so persisted
-      // dials (e.g. VideoIndex's maxDf, r14 ADVICE) survive compaction
-      val dials = meta.properties.filter { case (k, _) => k.startsWith("graft.") }
-      if (dials.nonEmpty)
-        spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-          dials.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
+      Bucketing.setDials(spark, table, Bucketing.dialsOf(meta))
       fs.delete(loc, true)
-      (before, dataFiles(tmpLoc))
+      (before, Bucketing.dataFiles(spark, table).size.toLong)
     }
 
   /** Row-level DELETION across an index family's tables — the one

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.RowsBridge
 
@@ -64,20 +65,17 @@ object DedupIndex {
     * removal passes and every stream-ingest refresh read. */
   def tables(spark: SparkSession, name: String): Seq[String] = Keyed.map(name + _._1)
 
+  /** Build the three tables under `basePath`, each created by
+    * [[Bucketing.create]] bucketed and sorted by its key (one file per
+    * bucket); appends, compactions and removals keep them there. Ids
+    * are stored as bigint, the type the gate reads and append writes. */
   def build(spark: SparkSession, corpus: DataFrame, textCol: String,
       idCol: String, name: String,
-      basePath: String = IvfIndex.defaultBase): Unit = {
-    // ids stored as bigint, the type the gate reads and append writes;
-    // each table hash-partitioned by its bucket column before the
-    // bucketed write: one file per bucket, not tasks × buckets (the
-    // IvfIndex.build recipe)
+      basePath: String = Bucketing.defaultBase): Unit = {
     val docs = corpus.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     def write(rows: DataFrame, key: String, table: String): Unit =
-      rows.repartition(col(key))
-        .write.mode("overwrite").format("parquet")
-        .option("path", s"$basePath/${name}_$table")
-        .bucketBy(Buckets, key).sortBy(key)
-        .saveAsTable(s"${name}_$table")
+      Bucketing.create(spark, rows, s"${name}_$table", s"$basePath/${name}_$table",
+        Some(BucketSpec(Buckets, Seq(key), Seq(key))))
     write(Dedup.bandRows(docs, "text", "id"), "bkh", "bands")
     val sh = Dedup.shingles(docs, "text", "id", Dedup.AdmitK)
     write(sh, "id", "shingles")

@@ -5,12 +5,13 @@ import scala.collection.mutable
 import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.RowsBridge
 import org.apache.spark.sql.types._
 
-import graft.core.{JobLabel, TopK}
+import graft.core.{Checkpoints, JobLabel, TopK}
 import graft.functions.DotProduct
 import graft.llm.Similarity
 
@@ -48,10 +49,6 @@ import graft.llm.Similarity
   */
 object IvfIndex {
 
-  /** Build + persist the index as two external parquet tables under
-    * `basePath`. Deterministic end to end: the quantizer is the
-    * portable-mixer sample [[Similarity.ivfCentroids]] replays, the
-    * assignment the 6dp-pinned argmin every IVF oracle unrolls. */
   /** Route (vec_id, vec) rows over a quantizer and attach the SQ8
     * layout ([[Similarity.quantizeInt8]]'s code rule: int8 codes as a
     * TINYINT array + one scale per vector) — the full posting-list row
@@ -93,7 +90,14 @@ object IvfIndex {
         "vec_id", "vec", broadcastFine)
       .select(col("vec_id"), col("cid").as("cell"), col("vec")))
 
-  /** Above `routeAbove` cells the build-time corpus assignment goes
+  /** Build + persist the index as external parquet tables under
+    * `basePath`, created through [[Bucketing.create]]; every later
+    * append, compaction, removal and refresh keeps them where they are.
+    * Deterministic end to end: the quantizer is the portable-mixer
+    * sample [[Similarity.ivfCentroids]] replays, the assignment the
+    * 6dp-pinned argmin every IVF oracle unrolls.
+    *
+    * Above `routeAbove` cells the build-time corpus assignment goes
     * two-level routed (N·2√k candidates, not N·k — the recurring
     * flat-assignment cliff, measured at ratio 32× on the first
     * auto-scaled ×100 mutual-kNN rehearsal) and the √k coarse grid is
@@ -106,7 +110,7 @@ object IvfIndex {
     * flat exact argmin their oracles replay. */
   def build(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, name: String, numCentroids: Int = 64,
-      basePath: String = defaultBase, routeAbove: Int = 64,
+      basePath: String = Bucketing.defaultBase, routeAbove: Int = 64,
       maxBroadcastCentroids: Int = 100000): Unit = {
     val vecs = emb.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
     val routed = numCentroids > routeAbove
@@ -121,30 +125,15 @@ object IvfIndex {
     val cells =
       if (routed) postingRowsRouted(vecs, cents, coarseTab, hintFine)
       else postingRows(vecs, cents)
-    // hash-partition by the bucket column BEFORE the bucketed write:
-    // every cell lands in exactly one task, so the writer emits ONE
-    // file per bucket instead of (tasks × buckets) fragments — at
-    // auto-scaled k that difference is ~500k tiny files vs 15625, and
-    // the ×1000 auto-k serve row moved 7.4 s → 5.6 s on this change
-    // alone (SCALE.md round 14); the fresh source frame is not a
-    // bucketed table, so the planner's repartition elision (the
-    // compactTable trap) does not apply. Cell occupancy keeps the
-    // per-task write balanced.
-    cells.repartition(col("cell")).write.mode("overwrite")
-      .format("parquet")
-      .option("path", s"$basePath/${name}_cells")
-      .bucketBy(numCentroids, "cell")
-      .sortBy("cell")
-      .saveAsTable(s"${name}_cells")
-    cents.write.mode("overwrite")
-      .format("parquet")
-      .option("path", s"$basePath/${name}_cents")
-      .saveAsTable(s"${name}_cents")
+    // one file per bucket (Bucketing.create): at auto-scaled k that is
+    // 15625 files instead of ~500k tiny ones, and the ×1000 auto-k serve
+    // row moved 7.4 s → 5.6 s on it alone (SCALE.md round 14). Cell
+    // occupancy keeps the per-task write balanced.
+    Bucketing.create(spark, cells, s"${name}_cells", s"$basePath/${name}_cells",
+      Some(BucketSpec(numCentroids, Seq("cell"), Seq("cell"))))
+    Bucketing.create(spark, cents, s"${name}_cents", s"$basePath/${name}_cents")
     if (routed)
-      coarseTab.write.mode("overwrite")
-        .format("parquet")
-        .option("path", s"$basePath/${name}_coarse")
-        .saveAsTable(s"${name}_coarse")
+      Bucketing.create(spark, coarseTab, s"${name}_coarse", s"$basePath/${name}_coarse")
     else
       // a rebuild that switches a routed index back to flat must not
       // leave a stale coarse grid for append/refresh to route through
@@ -155,17 +144,6 @@ object IvfIndex {
     * minimizer of the two-level argmin (coarse + k/coarse ≈ 2√k). */
   private def coarseCells(numCentroids: Int): Int =
     math.max(2, math.ceil(math.sqrt(numCentroids.toDouble)).toInt)
-
-  /** Where an index is written when the caller names no base: a fresh
-    * directory per JVM under `java.io.tmpdir`, deleted when the JVM
-    * exits. The fixture-index memo ([[Bucketing.memoBuilt]]) is per JVM,
-    * so two JVMs that build the same fixture index must not write the
-    * same files. */
-  lazy val defaultBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index_").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
-    dir.getPath
-  }
 
   /** Serve kNN from the STORED layout. `queries` is (qid, qv) — small by
     * construction (online ANN). A kernel of at most three Spark jobs:
@@ -596,9 +574,11 @@ object IvfIndex {
     * plain per-cell mean routes identically to its normalized form —
     * the refinement moves centroids INTO appended mass the r12 sample
     * quantizer provably never picked, SCALE.md round 13, finding #3),
-    * reassigns every stored vector, and overwrites both tables under
-    * their catalog locations. Nothing external is read: the index owns
-    * its vectors, so refresh needs no access to the original corpus.
+    * reassigns every stored vector, and re-derives every table where
+    * it lies ([[Bucketing.rederive]]: `_cells` at k buckets), releasing
+    * each materialization and the stored-vector checkpoint. Nothing
+    * external is read: the index owns its vectors, so refresh needs no
+    * access to the original corpus.
     *
     * Cost: `lloydIters`+1 broadcast-argmin passes over the postings —
     * the same N·k shape [[build]] pays once; a deployment whose cell
@@ -621,50 +601,35 @@ object IvfIndex {
     val hintFine = k <= maxBroadcastCentroids
     def fineHint(df: DataFrame): DataFrame =
       if (hintFine) broadcast(df) else df
-    // checkpointed: the rewrite overwrites the very files this lineage
-    // would otherwise re-list mid-write
+    // checkpointed: the cells table is re-derived from these rows
     val vecs = spark.table(s"${name}_cells")
       .select(col("vec_id"), col("vec")).localCheckpoint()
-    val dim = vecs.select(size(col("vec"))).head().getInt(0)
-    val coarseTab = if (!routed) null else broadcast(
-      Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", coarseCells(k))
-        .select(col("cid").as("ccid"), col("cv").as("ccv")))
-    def assign(cs: DataFrame): DataFrame =
-      if (routed) Similarity.routedAssignCos(vecs, cs, coarseTab,
-        "vec_id", "vec", hintFine)
-      else Similarity.nearestCells(vecs, cs, "vec_id", "vec", 1)
-    var cents = fineHint(
-      Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", k))
-    for (_ <- 1 to lloydIters) {
-      cents = fineHint(assign(cents).groupBy(col("cid"))
-        .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("vec"))
-          .as("cm"))
-        .select(col("cid"),
-          transform(col("cm"), x => round(x, 6).cast("float")).as("cv")))
-    }
-    val newCents = cents.localCheckpoint()
-    val newCells = sq8(assign(fineHint(newCents))
-      .select(col("vec_id"), col("cid").as("cell"), col("vec")))
-      .localCheckpoint()
-    def tableLoc(t: String): String =
-      spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(t)).location.toString
-    val (cellsLoc, centsLoc) =
-      (tableLoc(s"${name}_cells"), tableLoc(s"${name}_cents"))
-    newCells.repartition(col("cell")) // 1 file/bucket (the build recipe)
-      .write.mode("overwrite").format("parquet")
-      .option("path", cellsLoc)
-      .bucketBy(k, "cell").sortBy("cell")
-      .saveAsTable(s"${name}_cells")
-    newCents.write.mode("overwrite").format("parquet")
-      .option("path", centsLoc)
-      .saveAsTable(s"${name}_cents")
-    if (routed) {
-      val coarseLoc = tableLoc(s"${name}_coarse")
-      coarseTab.write.mode("overwrite").format("parquet")
-        .option("path", coarseLoc)
-        .saveAsTable(s"${name}_coarse")
-    }
+    try {
+      val dim = vecs.select(size(col("vec"))).head().getInt(0)
+      val coarseTab = if (!routed) null else broadcast(
+        Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", coarseCells(k))
+          .select(col("cid").as("ccid"), col("cv").as("ccv")))
+      def assign(cs: DataFrame): DataFrame =
+        if (routed) Similarity.routedAssignCos(vecs, cs, coarseTab,
+          "vec_id", "vec", hintFine)
+        else Similarity.nearestCells(vecs, cs, "vec_id", "vec", 1)
+      var cents = fineHint(
+        Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", k))
+      for (_ <- 1 to lloydIters) {
+        cents = fineHint(assign(cents).groupBy(col("cid"))
+          .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("vec"))
+            .as("cm"))
+          .select(col("cid"),
+            transform(col("cm"), x => round(x, 6).cast("float")).as("cv")))
+      }
+      // each table is re-derived where it lies; the cells reassign over
+      // the centroids just stored
+      Bucketing.rederive(spark, s"${name}_cents", cents)
+      Bucketing.rederive(spark, s"${name}_cells",
+        sq8(assign(fineHint(spark.table(s"${name}_cents")))
+          .select(col("vec_id"), col("cid").as("cell"), col("vec"))), buckets = k)
+      if (routed) Bucketing.rederive(spark, s"${name}_coarse", coarseTab)
+    } finally Checkpoints.release(vecs)
   }
 
   /** Serve kNN from the stored layout scoring the STORED INT8 CODES

@@ -1,9 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpoints
 import graft.multimodal.Multimodal
 
 /** PERSISTED media fingerprint index — the multimodal member of the
@@ -53,74 +53,48 @@ object MediaIndex {
     * h_hi) from [[Multimodal.imageDHash]] / [[Multimodal.audioDHash]] —
     * the decode+hash pass runs HERE, once, which is the entire point:
     * build cost is the linear ingest work the live queries were
-    * re-paying per run. */
+    * re-paying per run. Both tables are created under `basePath`
+    * ([[Bucketing.create]]: `_fp` bucketed and sorted by media_id, one
+    * file per bucket, carrying the `graft.maxBandDf` dial; `_bstop` one
+    * small file), and every later append, compaction and removal keeps
+    * them there. */
   def build(spark: SparkSession, fingerprints: DataFrame, name: String,
       buckets: Int = 16, maxBandDf: Int = 10000,
-      basePath: String = IvfIndex.defaultBase): Unit = {
-    fingerprints.select(col("media_id"), col("h_lo"), col("h_hi"))
-      .repartition(col("media_id")) // 1 file/bucket (IvfIndex recipe)
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_fp")
-      .bucketBy(buckets, "media_id").sortBy("media_id")
-      .saveAsTable(s"${name}_fp")
-    spark.sql(s"ALTER TABLE ${name}_fp SET TBLPROPERTIES " +
-      s"('graft.maxBandDf'='$maxBandDf')")
-    refreshBandStop(spark, name, basePath)
-  }
-
-  /** [[build]] at the [[Bucketing.autoBuckets]] dial: the fingerprint
-    * frame is checkpointed (the decode+hash pass must not run twice),
-    * counted, and written with bytes-per-bucket-targeted buckets — the
-    * bucket-count analog of [[IvfIndex.ensureBuiltAuto]], calibrated by
-    * the round-15 ×1000 measurement (see [[Bucketing.autoBuckets]]).
-    * Returns the chosen bucket count; fixture AND rehearsal scales stay
-    * at the measured-optimal 16-bucket floor. */
-  def buildAuto(spark: SparkSession, fingerprints: DataFrame,
-      name: String, maxBandDf: Int = 10000,
-      basePath: String = IvfIndex.defaultBase): Int = {
-    val f = fingerprints.localCheckpoint()
-    val k = Bucketing.autoBuckets(f.count())
-    build(spark, f, name, buckets = k, maxBandDf = maxBandDf,
-      basePath = basePath)
-    k
+      basePath: String = Bucketing.defaultBase): Unit = {
+    Bucketing.create(spark, fingerprints.select(col("media_id"), col("h_lo"), col("h_hi")),
+      s"${name}_fp", s"$basePath/${name}_fp",
+      Some(BucketSpec(buckets, Seq("media_id"), Seq("media_id"))),
+      Map("graft.maxBandDf" -> maxBandDf.toString))
+    Bucketing.create(spark, bandStop(spark, name), s"${name}_bstop", s"$basePath/${name}_bstop")
   }
 
   /** The build-time band-df dial, read back from the `_fp` table
     * property (survives [[Compact.compactTable]]'s swap — it re-applies
-    * `graft.*` properties). */
+    * `graft.*` properties through the catalog). */
   def storedMaxBandDf(spark: SparkSession, name: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_fp"))
+    Bucketing.entry(spark, s"${name}_fp")
       .properties.get("graft.maxBandDf").map(_.toInt).getOrElse(10000)
 
-  /** (Re)derive the band-value stop sidecar — `_bstop` = (bi, bv) pairs
-    * carried by more than `maxBandDf` DISTINCT fingerprints (see
+  /** The band-value stop rows — (bi, bv) pairs carried by more than
+    * [[storedMaxBandDf]] DISTINCT fingerprints (see
     * [[Multimodal.dhashPairs]]'s discipline scaladoc for why distinct
     * fingerprints, not media: identical-fp floods are collapsed, and a
     * media count would stop a popular item's bands and wrongly admit
     * its re-fetches). Distinct-fp counts are NOT sum-decomposable
     * across appends (the same fingerprint can recur in later batches),
-    * so unlike [[VideoIndex]]'s media-count logs this re-derives from
-    * the `_fp` table — a 16-byte-row scan, no payload, no decode: the
+    * so unlike [[VideoIndex]]'s media-count logs this derives from the
+    * `_fp` table — a 16-byte-row scan, no payload, no decode: the
     * cheap-by-construction pass [[append]] can afford per batch, which
     * keeps the gate's stop set EXACT between maintenance windows. */
-  def refreshBandStop(spark: SparkSession, name: String,
-      basePath: String = IvfIndex.defaultBase): Long = {
-    val maxBandDf = storedMaxBandDf(spark, name)
-    val bstop = Multimodal.fpBands(spark.table(s"${name}_fp")
+  private def bandStop(spark: SparkSession, name: String): DataFrame =
+    Multimodal.fpBands(spark.table(s"${name}_fp")
         .select(col("h_lo"), col("h_hi")).distinct(), "h_lo", "h_hi")
       .groupBy(col("bi"), col("bv")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxBandDf).select(col("bi"), col("bv"))
-      .localCheckpoint()
-    try bstop.coalesce(1).write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_bstop")
-      .saveAsTable(s"${name}_bstop")
-    finally Checkpoints.release(bstop)
-    // invalidate the cached file listing of the overwritten sidecar
-    // (relation caches are per session; see VideoIndex.refreshStop)
-    spark.catalog.refreshTable(s"${name}_bstop")
-    spark.table(s"${name}_bstop").count()
-  }
+      .where(col("df") > storedMaxBandDf(spark, name)).select(col("bi"), col("bv"))
+
+  /** Re-derive the `_bstop` sidecar in place ([[Bucketing.rederive]]). */
+  def refreshBandStop(spark: SparkSession, name: String): Unit =
+    Bucketing.rederive(spark, s"${name}_bstop", bandStop(spark, name))
 
   /** Ingest a fresh batch's fingerprints: |batch| decode+hash upstream,
     * one bucket-aligned insert here — the stored corpus's payloads are

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 import graft.core.{Checkpoints, TopK}
@@ -75,39 +76,19 @@ object TextIndex {
   def tables(spark: SparkSession, name: String): Seq[String] =
     Seq(s"${name}_postings", s"${name}_totals")
 
+  /** Build the index under `basePath`: `_postings` created by
+    * [[Bucketing.create]] bucketed and sorted by `word` (one file per
+    * bucket), `_totals` as one small file; appends, compactions and
+    * removals keep both there. */
   def build(spark: SparkSession, docs: DataFrame, textCol: String,
       docCol: String, name: String, buckets: Int = 64,
-      basePath: String = IvfIndex.defaultBase): Unit = {
+      basePath: String = Bucketing.defaultBase): Unit = {
     val (postings, totals) = postingAndTotals(docs, textCol, docCol)
-    writeTables(postings, totals, name, buckets, basePath)
-  }
-
-  /** [[build]] at the [[Bucketing.autoBuckets]] dial: postings counted
-    * (cheap — they derive from the checkpointed tf frame), buckets
-    * √-scaled. Returns the chosen bucket count. */
-  def buildAuto(spark: SparkSession, docs: DataFrame, textCol: String,
-      docCol: String, name: String,
-      basePath: String = IvfIndex.defaultBase): Int = {
-    val (postings, totals) = postingAndTotals(docs, textCol, docCol)
-    val p = postings.localCheckpoint()
-    val k = Bucketing.autoBuckets(p.count())
-    writeTables(p, totals, name, k, basePath)
-    k
-  }
-
-  private def writeTables(postings: DataFrame, totals: DataFrame,
-      name: String, buckets: Int, basePath: String): Unit = {
-    // hash-partition by the bucket column before the bucketed write:
-    // one file per bucket instead of tasks × buckets fragments (the
-    // IvfIndex.build recipe — fresh frame, so no repartition elision)
-    postings.repartition(col("word"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_postings")
-      .bucketBy(buckets, "word").sortBy("word")
-      .saveAsTable(s"${name}_postings")
-    totals.write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_totals")
-      .saveAsTable(s"${name}_totals")
+    try {
+      Bucketing.create(spark, postings, s"${name}_postings", s"$basePath/${name}_postings",
+        Some(BucketSpec(buckets, Seq("word"), Seq("word"))))
+      Bucketing.create(spark, totals, s"${name}_totals", s"$basePath/${name}_totals")
+    } finally Checkpoints.release(postings, totals)
   }
 
   /** BM25 top-k from the STORED posting lists: identical ranking to
@@ -135,7 +116,7 @@ object TextIndex {
     // materialized in the isolated window, then re-based into the
     // caller's session (the checkpointed rows are session-free RDDs;
     // the re-wrap keeps the downstream plan single-session)
-    val probe = forceBucketedScan(spark) { iso =>
+    val probe = Bucketing.forceBucketedScan(spark) { iso =>
       val p = iso.table(s"${name}_postings")
         .where(col("word").isin(terms: _*))
         .localCheckpoint()
@@ -151,33 +132,6 @@ object TextIndex {
       .groupBy(col("qid"), col("doc_id"))
       .agg(round(sum(TextOps.bm25Term(k1, b)), 6).as("score"))
     TopK.perKey(scored, "qid", k, col("score").desc, col("doc_id").asc)
-  }
-
-  /** Run `body` (which must EXECUTE its scan — e.g. an eager
-    * checkpoint) with auto-bucketed-scan disabled, so the bucketed
-    * layout — and with it the literal-predicate bucket pruning — is
-    * kept even when no downstream operator consumes the bucketing's
-    * partitioning.
-    *
-    * SESSION-ISOLATED (r13 verdict #6, upgrading the r12-documented
-    * single-threaded assumption into an enforced property): the body
-    * receives a `spark.newSession()` with the conf flipped — same
-    * SparkContext, same shared external catalog (tables written/read
-    * through it are visible to every session), but its OWN SQLConf —
-    * so a query planned CONCURRENTLY on the caller's session keeps
-    * auto-bucketed-scan untouched (CompactSpec pins a concurrent
-    * pruned plan mid-window), nested uses can't restore a stale
-    * value, and nothing needs restoring: the session is discarded.
-    * The body must build its frames FROM the passed session; a frame
-    * that must outlive the window gets re-based into the caller's
-    * session via `createDataFrame(df.rdd, df.schema)` after an eager
-    * materialization (the [[serve]] probe does exactly that). */
-  private[graft] def forceBucketedScan[T](spark: SparkSession)(
-      body: SparkSession => T): T = {
-    val iso = spark.newSession()
-    iso.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    body(iso)
   }
 
   /** Ingest a crawl batch: tokenization over |fresh| docs only, posting

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 import graft.core.Checkpoints
@@ -58,22 +59,21 @@ object VideoIndex {
     * (…, f_lo, f_hi) shape from [[Multimodal.videoFramesFp]], which
     * additionally persists the per-frame PERCEPTUAL fingerprint so one
     * artifact serves aligned dedup, clip detection AND transcode-
-    * tolerant dedup. The payload pass runs HERE, once. `maxDf` is
-    * PERSISTED as a table property (r14 ADVICE: every later stop
-    * re-derivation — compact, maintain, remove, append — reads the
-    * build-time dial instead of a hardcoded default). */
+    * tolerant dedup. The payload pass runs HERE, once. Every table is
+    * created under `basePath` ([[Bucketing.create]]: `_vf` bucketed by
+    * media_id and sorted by (media_id, frame_idx), one file per bucket;
+    * the df logs and stop sidecars derived from it), and every later
+    * append, compaction and removal keeps them there. `maxDf` is
+    * PERSISTED as a `_vf` table property, set through the catalog (r14
+    * ADVICE: every later stop re-derivation — compact, maintain,
+    * remove, append — reads the build-time dial instead of a hardcoded
+    * default). */
   def build(spark: SparkSession, frames: DataFrame, name: String,
       buckets: Int = 16, maxDf: Int = 10000,
-      basePath: String = IvfIndex.defaultBase, maxBandDf: Int = -1,
+      basePath: String = Bucketing.defaultBase, maxBandDf: Int = -1,
       gridHop: Int = 0, kfEvery: Int = 0): Unit = {
     val cols = Seq("media_id", "frame_idx", "fm") ++
       (if (frames.columns.contains("f_lo")) Seq("f_lo", "f_hi") else Nil)
-    frames.select(cols.map(col): _*)
-      .repartition(col("media_id")) // 1 file/bucket (IvfIndex recipe)
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_vf")
-      .bucketBy(buckets, "media_id").sortBy("media_id", "frame_idx")
-      .saveAsTable(s"${name}_vf")
     // `maxBandDf` (r15 verdict "what's missing" #4 — the MediaIndex
     // sibling's dial, unified here): the band stop's own threshold,
     // defaulting to the digest maxDf (band df ≥ digest df, so one dial
@@ -92,11 +92,14 @@ object VideoIndex {
     // every=2 index silently changes match density and MinFrames
     // semantics.
     val bdf = if (maxBandDf > 0) maxBandDf else maxDf
-    spark.sql(s"ALTER TABLE ${name}_vf SET TBLPROPERTIES " +
-      s"('graft.maxDf'='$maxDf','graft.maxBandDf'='$bdf'," +
-      s"'graft.hop'='$gridHop','graft.every'='$kfEvery')")
-    rebuildDfs(spark, name, basePath)
-    refreshStop(spark, name, basePath)
+    Bucketing.create(spark, frames.select(cols.map(col): _*), s"${name}_vf",
+      s"$basePath/${name}_vf",
+      Some(BucketSpec(buckets, Seq("media_id"), Seq("media_id", "frame_idx"))),
+      Map("graft.maxDf" -> maxDf.toString, "graft.maxBandDf" -> bdf.toString,
+        "graft.hop" -> gridHop.toString, "graft.every" -> kfEvery.toString))
+    (logs(spark, name) ++ stops(spark, name)).foreach { case (t, rows) =>
+      Bucketing.create(spark, rows(), t, s"$basePath/$t")
+    }
   }
 
   /** [[build]] at the [[Bucketing.autoBuckets]] dial (frames
@@ -106,7 +109,7 @@ object VideoIndex {
     * the 16-bucket floor (see [[Bucketing.autoBuckets]]). */
   def buildAuto(spark: SparkSession, frames: DataFrame, name: String,
       maxDf: Int = 10000,
-      basePath: String = IvfIndex.defaultBase): Int = {
+      basePath: String = Bucketing.defaultBase): Int = {
     val f = frames.localCheckpoint()
     val k = Bucketing.autoBuckets(f.count())
     build(spark, f, name, buckets = k, maxDf = maxDf, basePath = basePath)
@@ -114,8 +117,9 @@ object VideoIndex {
   }
 
   /** The build-time stop dial, read back from the `_vf` table property
-    * ([[Compact.compactTable]] re-applies `graft.*` properties across
-    * its swap, so the dial survives maintenance). */
+    * through the catalog entry ([[Bucketing.entry]]).
+    * [[Compact.compactTable]] re-applies `graft.*` properties through
+    * the catalog across its swap, so the dial survives maintenance. */
   def storedMaxDf(spark: SparkSession, name: String): Int =
     storedProp(spark, name, "graft.maxDf").map(_.toInt).getOrElse(10000)
 
@@ -141,9 +145,7 @@ object VideoIndex {
 
   private def storedProp(spark: SparkSession, name: String,
       key: String): Option[String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_vf"))
-      .properties.get(key)
+    Bucketing.entry(spark, s"${name}_vf").properties.get(key)
 
   /** Derive a fresh audio batch's segment fingerprints AT THE INDEX'S
     * persisted hop — the only coherent grid for gating or appending
@@ -178,83 +180,63 @@ object VideoIndex {
       media: DataFrame): DataFrame =
     Multimodal.videoKeyframesFp(media, every = storedEvery(spark, name))
 
-  /** (Re)derive the digest-frequency LOG from the stored frames — one
-    * (fm, df) partial per distinct digest. [[append]] INSERTS a
-    * batch-only partial instead of recomputing this (media ids are
-    * fresh per batch — the [[IvfIndex.append]] contract — so partials
-    * SUM exactly to the true distinct-video df); maintenance windows
-    * ([[compact]]/[[maintain]]/[[remove]]) collapse the log by calling
-    * this again. The log is what makes the stop set EXACT between
-    * windows (r14 verdict "what's wrong" #1: a digest going viral
-    * between maintenance windows used to fan out in every gate join
-    * until the next compact). */
-  def rebuildDfs(spark: SparkSession, name: String,
-      basePath: String = IvfIndex.defaultBase): Unit = {
-    val vf = spark.table(s"${name}_vf")
-    val dfs = vf.groupBy(col("fm"))
-      .agg(countDistinct(col("media_id")).as("df"))
-      .localCheckpoint() // lineage reads the table the write replaces
-    try Compact.forWrite(dfs).write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_dfs")
-      .saveAsTable(s"${name}_dfs")
-    finally Checkpoints.release(dfs)
-    // the perceptual leg's band-df log (see [[Multimodal.videoBandStop]]
-    // — video-df per band value is SUM-decomposable under fresh ids,
-    // exactly like the md5 log, so appends stay exact here too); the
-    // value space is 4 × 2^16, so the log is tiny by construction
-    if (vf.columns.contains("f_lo")) {
-      val bdfs = Multimodal.fpBands(vf)
-        .groupBy(col("bi"), col("bv"))
-        .agg(countDistinct(col("media_id")).as("df"))
-        .localCheckpoint()
-      try Compact.forWrite(bdfs).write.mode("overwrite").format("parquet")
-        .option("path", s"$basePath/${name}_bdfs")
-        .saveAsTable(s"${name}_bdfs")
-      finally Checkpoints.release(bdfs)
-    }
+  /** The df logs with their rows: the digest-frequency LOG `_dfs` from
+    * the stored frames — one (fm, df) partial per distinct digest —
+    * plus, for a perceptual (5-column) index, the band-df log `_bdfs`;
+    * [[stops]] derive the stop sidecars `_stop` and `_bstop` from them.
+    *
+    * [[append]] INSERTS a batch-only log partial instead of recomputing
+    * a log (media ids are fresh per batch — the [[IvfIndex.append]]
+    * contract — so partials SUM exactly to the true distinct-video df);
+    * maintenance windows ([[compact]]/[[maintain]]/[[remove]]) collapse
+    * the logs by re-deriving them ([[rebuildDfs]]). The logs are what
+    * make the stop sets EXACT between windows (r14 verdict "what's
+    * wrong" #1: a digest going viral between maintenance windows used
+    * to fan out in every gate join until the next compact). Video-df
+    * per band value is sum-decomposable under fresh ids exactly like
+    * the md5 log (see [[Multimodal.videoBandStop]]), and its value
+    * space is 4 × 2^16, so the band log is tiny by construction.
+    *
+    * The stop sidecars are what the GATES anti-join so a crawl batch's
+    * stop frames (black frames, silence, standard intros) never fan out
+    * across the corpus: digests in more than [[storedMaxDf]] distinct
+    * videos, band values in more than [[storedMaxBandDf]]. They read
+    * the logs (never the frame table, never a payload), so [[append]]
+    * can afford to refresh them per batch ([[refreshStop]]): a digest
+    * crossing the dial is capped at APPEND time, with no compact in
+    * between. */
+  private def logs(spark: SparkSession, name: String): Seq[(String, () => DataFrame)] = {
+    def vf = spark.table(s"${name}_vf")
+    Seq(s"${name}_dfs" -> (() => vf.groupBy(col("fm"))
+        .agg(countDistinct(col("media_id")).as("df")))) ++
+      (if (!perceptual(spark, name)) Nil
+      else Seq(s"${name}_bdfs" -> (() => Multimodal.fpBands(vf)
+        .groupBy(col("bi"), col("bv")).agg(countDistinct(col("media_id")).as("df")))))
   }
 
-  /** (Re)derive the stop-frame sidecar — digests in more than `maxDf`
-    * distinct videos (black frames, silence, standard intros), the set
-    * the GATES anti-join so a crawl batch's stop frames never fan out
-    * across the corpus. Reads the `_dfs` log (distinct digests, 24-byte
-    * rows — never the frame table, never a payload), so [[append]] can
-    * afford to refresh it per batch: a digest crossing `maxDf` is
-    * capped at APPEND time, with no compact in between. */
-  def refreshStop(spark: SparkSession, name: String,
-      basePath: String = IvfIndex.defaultBase): Long = {
-    val maxDf = storedMaxDf(spark, name)
-    val stop = spark.table(s"${name}_dfs")
-      .groupBy(col("fm")).agg(sum(col("df")).as("df"))
-      .where(col("df") > maxDf).select(col("fm"))
-      .localCheckpoint()
-    try stop.coalesce(1).write.mode("overwrite").format("parquet")
-      .option("path", s"$basePath/${name}_stop")
-      .saveAsTable(s"${name}_stop")
-    finally Checkpoints.release(stop)
-    // invalidate any cached file listing of the overwritten sidecar —
-    // sibling sessions (streaming micro-batches) share the relation
-    // cache, and a stale FileIndex reads deleted part files
-    spark.catalog.refreshTable(s"${name}_stop")
-    // the perceptual band stop rides the same refresh: collapse the
-    // band-df log at ITS OWN persisted threshold (graft.maxBandDf,
-    // defaulting to the digest dial — the MediaIndex sibling's split,
-    // unified in r16; the sidecar the perceptual GATE anti-joins,
-    // serve-side pair stages derive theirs inline)
-    if (spark.catalog.tableExists(s"${name}_bdfs")) {
-      val maxBandDf = storedMaxBandDf(spark, name)
-      val bstop = spark.table(s"${name}_bdfs")
-        .groupBy(col("bi"), col("bv")).agg(sum(col("df")).as("df"))
-        .where(col("df") > maxBandDf).select(col("bi"), col("bv"))
-        .localCheckpoint()
-      try bstop.coalesce(1).write.mode("overwrite").format("parquet")
-        .option("path", s"$basePath/${name}_bstop")
-        .saveAsTable(s"${name}_bstop")
-      finally Checkpoints.release(bstop)
-      spark.catalog.refreshTable(s"${name}_bstop")
-    }
-    spark.table(s"${name}_stop").count()
+  /** The stop sidecars with their rows, read from [[logs]] (see there). */
+  private def stops(spark: SparkSession, name: String): Seq[(String, () => DataFrame)] = {
+    def stop(log: String, keys: Seq[String], maxDf: => Int): () => DataFrame = () =>
+      spark.table(s"${name}_$log").groupBy(keys.map(col): _*).agg(sum(col("df")).as("df"))
+        .where(col("df") > maxDf).select(keys.map(col): _*)
+    Seq(s"${name}_stop" -> stop("dfs", Seq("fm"), storedMaxDf(spark, name))) ++
+      (if (!perceptual(spark, name)) Nil
+      else Seq(s"${name}_bstop" -> stop("bdfs", Seq("bi", "bv"), storedMaxBandDf(spark, name))))
   }
+
+  /** Whether the stored frames carry the perceptual fingerprint. */
+  private def perceptual(spark: SparkSession, name: String): Boolean =
+    spark.table(s"${name}_vf").columns.contains("f_lo")
+
+  /** Collapse the df logs: re-derive `_dfs` (and `_bdfs`) in place from
+    * the stored frames ([[Bucketing.rederive]]). */
+  def rebuildDfs(spark: SparkSession, name: String): Unit =
+    logs(spark, name).foreach { case (t, rows) => Bucketing.rederive(spark, t, rows()) }
+
+  /** Re-derive the stop sidecars `_stop` (and `_bstop`) in place from
+    * the df logs at the persisted dials ([[Bucketing.rederive]]). */
+  def refreshStop(spark: SparkSession, name: String): Unit =
+    stops(spark, name).foreach { case (t, rows) => Bucketing.rederive(spark, t, rows()) }
 
   /** Ingest a fresh batch's frame digests: |batch| payload reads
     * upstream, one bucket-aligned insert here, plus the batch's OWN
@@ -350,8 +332,8 @@ object VideoIndex {
     *
     * Staleness is detected structurally, not by trusting the loop to be
     * the only writer (r16 ADVICE): every [[get]] lists the sidecar's
-    * physical directory (names + sizes + mtimes — one FS listing, no
-    * parquet read, no checkpoint) and re-reads only when the listing
+    * data files ([[Bucketing.dataFiles]]: names + sizes + mtimes — one
+    * FS listing, no parquet read, no checkpoint) and re-reads only when the listing
     * signature moved. An EXTERNAL maintain/compact that rewrites the
     * sidecars is therefore picked up on the next get; [[invalidate]]
     * remains the cheap fast path for the loop's own appends (skips even
@@ -383,16 +365,10 @@ object VideoIndex {
     /** The sidecar's current on-disk generation: part-file names carry
       * fresh UUIDs on every overwrite, so an unchanged signature IS an
       * unchanged sidecar. */
-    private def sig(table: String): String = {
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).location
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).iterator
-        .filterNot(_.getPath.getName.startsWith("_"))
+    private def sig(table: String): String =
+      Bucketing.dataFiles(spark, table)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .toSeq.sorted.mkString(",")
-    }
+        .sorted.mkString(",")
     def get(table: String): DataFrame = synchronized {
       val now = sig(table)
       m.get(table) match {

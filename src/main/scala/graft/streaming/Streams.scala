@@ -745,8 +745,9 @@ object Streams {
     * (r15 verdict "what's missing" #5 — the sidecars change only when
     * this loop's own appends land rows, and admitBatch invalidates the
     * cache exactly then), so a long admission run reads each sidecar
-    * once per change instead of once per batch. The cache's frames are
-    * released when the drain ends. */
+    * once per change instead of once per batch. Each batch's flags are
+    * released once admitted, and the cache's frames when the drain
+    * ends. */
   def streamCrawlAdmitIngest(spark: SparkSession, sfDir: String,
       textIdx: String, imageIdx: String, audioIdx: String,
       videoIdx: String, pred: Column,
@@ -769,8 +770,8 @@ object Streams {
           cacheFor = Some((bs, c))
           c
       }
-      CrawlAdmit.admitBatch(bs, batch.select(col("doc_id"), col("text")),
-        textIdx, imageIdx, audioIdx, videoIdx, stopCache = Some(cache))
+      Checkpoints.release(CrawlAdmit.admitBatch(bs, batch.select(col("doc_id"), col("text")),
+        textIdx, imageIdx, audioIdx, videoIdx, stopCache = Some(cache)))
     } finally cacheFor.foreach(_._2.releaseAll())
   }
 

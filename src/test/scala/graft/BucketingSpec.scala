@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 import graft.sources.Bucketing
@@ -18,10 +19,12 @@ class BucketingSpec extends AnyFunSuite {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       val li = Tables.lineitem(spark, sf0001)
         .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-      Bucketing.writeBucketed(ord, "b_orders", "o_orderkey", 8)
-      Bucketing.writeBucketed(li, "b_lineitem", "o_orderkey", 8)
+      Bucketing.create(spark, ord, "b_orders", s"${Bucketing.defaultBase}/b_orders",
+        Some(BucketSpec(8, Seq("o_orderkey"), Seq("o_orderkey"))))
+      Bucketing.create(spark, li, "b_lineitem", s"${Bucketing.defaultBase}/b_lineitem",
+        Some(BucketSpec(8, Seq("o_orderkey"), Seq("o_orderkey"))))
 
-      val j = Bucketing.bucketedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
+      val j = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
       val jPlan = j.queryExecution.executedPlan.toString
       assert(!jPlan.contains("Exchange"),
         s"bucketed join must not shuffle:\n$jPlan")
@@ -47,9 +50,11 @@ class BucketingSpec extends AnyFunSuite {
     try {
       val ord = Tables.orders(spark, sf0001)
         .select(col("o_orderkey"), col("o_totalprice"))
-      Bucketing.writeBucketed(ord, "b8", "o_orderkey", 8)
-      Bucketing.writeBucketed(ord, "b3", "o_orderkey", 3)
-      val j = Bucketing.bucketedJoin(spark, "b8", "b3", "o_orderkey")
+      Bucketing.create(spark, ord, "b8", s"${Bucketing.defaultBase}/b8",
+        Some(BucketSpec(8, Seq("o_orderkey"), Seq("o_orderkey"))))
+      Bucketing.create(spark, ord, "b3", s"${Bucketing.defaultBase}/b3",
+        Some(BucketSpec(3, Seq("o_orderkey"), Seq("o_orderkey"))))
+      val j = spark.table("b8").join(spark.table("b3"), "o_orderkey")
       assert(j.count() == ord.count())
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")

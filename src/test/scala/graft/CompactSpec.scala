@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Compact, DedupIndex, IvfIndex, TextIndex}
+import graft.sources.{Bucketing, Compact, DedupIndex, IvfIndex, TextIndex}
 
 /** Bucket-preserving compaction contract (r12 verdict #2): after
   * thousands of `append` batches a bucketed index is thousands of small
@@ -146,7 +146,7 @@ class CompactSpec extends AnyFunSuite {
     // itself (the TextIndexSpec pattern) — it must still read a strict
     // subset of buckets from the compacted table
     val terms = q.flatMap(_._2.split("\\s+")).distinct
-    val p = TextIndex.forceBucketedScan(spark) { iso =>
+    val p = Bucketing.forceBucketedScan(spark) { iso =>
       val probe = iso.table("graft_text_cmp_postings")
         .where(col("word").isin(terms: _*))
       probe.count()
@@ -167,7 +167,7 @@ class CompactSpec extends AnyFunSuite {
     // simulate a crash between copy-write and swap: a fully-written
     // __compacting table exists alongside the live one
     val stale = new org.apache.hadoop.fs.Path(
-      IvfIndex.defaultBase + "/stale_leftover")
+      Bucketing.defaultBase + "/stale_leftover")
     stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(stale, true) // previous suite run's copy
     spark.table("graft_ivf_cmp3_cells").write.format("parquet")
@@ -342,6 +342,33 @@ class CompactSpec extends AnyFunSuite {
       ivfJobs.forall(d => d == "occupancySkew count" || compactJobs(d)), ivfJobs)
     assert(compactJobs.forall((dedupJobs ++ ivfJobs).contains),
       s"every compacted table must run a labelled job: $dedupJobs $ivfJobs")
+    // the media and video sidecars re-derive after the compaction
+    import graft.multimodal.Multimodal
+    import graft.sources.{MediaIndex, VideoIndex}
+    def img(d: org.apache.spark.sql.DataFrame) =
+      Multimodal.imageDHash(Multimodal.imageTableOf(d))
+    MediaIndex.build(spark, img(docs.where(col("doc_id") >= 30)), "graft_media_label")
+    MediaIndex.append(spark, "graft_media_label", img(docs.where(col("doc_id") < 30)))
+    def vid(d: org.apache.spark.sql.DataFrame) =
+      Multimodal.videoFramesFp(Multimodal.videoTableOf(d))
+    VideoIndex.build(spark, vid(docs.where(col("doc_id") >= 30)), "graft_video_label")
+    VideoIndex.append(spark, "graft_video_label", vid(docs.where(col("doc_id") < 30)))
+    val (media, mediaJobs) = SparkJobs.describe(
+      MediaIndex.maintain(spark, "graft_media_label", maxFilesPerBucket = 0.0))
+    val (video, videoJobs) = SparkJobs.describe(
+      VideoIndex.maintain(spark, "graft_video_label", maxFilesPerBucket = 0.0))
+    assert(media.values.exists { case (b, a) => a < b }, media)
+    assert(video.values.exists { case (b, a) => a < b }, video)
+    def sidecarJobs(compacted: String, sidecars: Seq[String]): Set[String] =
+      sidecars.flatMap(t => Seq(s"rederive $t", s"create $t")).toSet + s"compact $compacted"
+    val mediaLabels = sidecarJobs("graft_media_label_fp", Seq("graft_media_label_bstop"))
+    val videoLabels = sidecarJobs("graft_video_label_vf",
+      Seq("_dfs", "_bdfs", "_stop", "_bstop").map("graft_video_label" + _))
+    assert(mediaJobs.nonEmpty && mediaJobs.forall(mediaLabels), mediaJobs)
+    assert(videoJobs.nonEmpty && videoJobs.forall(videoLabels), videoJobs)
+    assert(mediaLabels.forall(mediaJobs.contains) && videoLabels.forall(videoJobs.contains),
+      s"every compacted table and re-derived sidecar must run labelled jobs: " +
+        s"$mediaJobs $videoJobs")
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     try {

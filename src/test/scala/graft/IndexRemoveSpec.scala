@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
-import graft.sources.{DedupIndex, IvfIndex, MediaIndex, TextIndex, VideoIndex}
+import graft.sources.{Bucketing, DedupIndex, IvfIndex, MediaIndex, TextIndex, VideoIndex}
 
 /** Index DELETION — the lifecycle op between append and refresh
   * (takedowns, re-crawl invalidation, privacy erasure): one
@@ -67,7 +67,7 @@ class IndexRemoveSpec extends AnyFunSuite {
     // (the TextIndexSpec pattern) — replicate that exact scan against
     // the REWRITTEN postings table
     val terms = qs.flatMap(_._2.split("\\s+")).distinct
-    val p = TextIndex.forceBucketedScan(spark) { iso =>
+    val p = Bucketing.forceBucketedScan(spark) { iso =>
       val probe = iso.table("graft_text_rm_postings")
         .where(col("word").isin(terms: _*))
       probe.count()
@@ -242,6 +242,47 @@ class IndexRemoveSpec extends AnyFunSuite {
         s"$t after remove must equal a fresh build's over the survivors")
       if (t.endsWith("stop")) assert(got != b, s"$t must have changed")
     }
+  }
+
+  test("every table of an index stays under the base it was built at, through append, compact, remove and refresh") {
+    val base = java.nio.file.Files.createTempDirectory("graft_base").toFile.getCanonicalPath
+    def under(tables: Seq[String]): Unit = tables.foreach { t =>
+      val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(t)).location).getCanonicalPath
+      assert(loc.startsWith(base + "/"), s"$t lives at $loc, not under $base")
+    }
+    val docs = docsOf(Seq(1L -> tGone, 2L -> tStay) ++ fillers(10L))
+    val batch = docsOf(fillers(20L))
+    val emb = Tables.embeddings(spark, sf0001)
+    IvfIndex.build(spark, emb.where(col("vec_id") >= 40 && col("vec_id") < 120),
+      "vec_id", "embedding", "graft_ivf_base", numCentroids = 4, basePath = base)
+    IvfIndex.append(spark, "graft_ivf_base", emb.where(col("vec_id") < 40),
+      "vec_id", "embedding")
+    IvfIndex.compact(spark, "graft_ivf_base")
+    IvfIndex.remove(spark, "graft_ivf_base", idsOf("vec_id", 1L))
+    IvfIndex.refresh(spark, "graft_ivf_base")
+    under(IvfIndex.tables(spark, "graft_ivf_base"))
+    TextIndex.build(spark, docs, "text", "doc_id", "graft_text_base", basePath = base)
+    TextIndex.append(spark, "graft_text_base", batch, "text", "doc_id")
+    TextIndex.compact(spark, "graft_text_base")
+    TextIndex.remove(spark, "graft_text_base", idsOf("doc_id", 1L))
+    under(TextIndex.tables(spark, "graft_text_base"))
+    def img(d: org.apache.spark.sql.DataFrame) =
+      Multimodal.imageDHash(Multimodal.imageTableOf(d))
+    MediaIndex.build(spark, img(docs), "graft_media_base", basePath = base)
+    MediaIndex.append(spark, "graft_media_base", img(batch))
+    MediaIndex.compact(spark, "graft_media_base")
+    MediaIndex.remove(spark, "graft_media_base", idsOf("media_id", 1L))
+    under(MediaIndex.tables(spark, "graft_media_base"))
+    def vid(d: org.apache.spark.sql.DataFrame) =
+      Multimodal.videoFramesFp(Multimodal.videoTableOf(d))
+    VideoIndex.build(spark, vid(docs), "graft_video_base", basePath = base)
+    VideoIndex.append(spark, "graft_video_base", vid(batch))
+    VideoIndex.compact(spark, "graft_video_base")
+    VideoIndex.remove(spark, "graft_video_base", idsOf("media_id", 1L))
+    val videoTables = VideoIndex.tables(spark, "graft_video_base")
+    assert(videoTables.size == 5, s"a perceptual index has five tables: $videoTables")
+    under(videoTables)
   }
 
   test("every family's remove releases what it checkpoints") {

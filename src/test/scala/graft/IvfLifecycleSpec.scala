@@ -119,6 +119,30 @@ class IvfLifecycleSpec extends AnyFunSuite {
       s"the healthy pass must write nothing: $m2")
   }
 
+  test("a refreshing maintain and a direct refresh release what they checkpoint") {
+    val sc = spark.sparkContext
+    def leftover(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    val rname = "graft_ivf_refresh_free"
+    val emb = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding"))
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    IvfIndex.build(spark, emb.where(col("vec_id") % 2 === 0),
+      "vec_id", "embedding", rname, numCentroids = 16)
+    IvfIndex.append(spark, rname, emb.where(col("vec_id") % 2 === 1).select(
+      (col("vec_id") + lit(10000000L)).as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)), i =>
+        (element_at(col("embedding"), ((i + lit(7)) % lit(dim)) + 1)
+          + lit(2.0)).cast("float")).as("embedding")), "vec_id", "embedding")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val m = IvfIndex.maintain(spark, rname, maxOverMean = 4.0)
+    assert(m.refreshed, s"the drifted pass must refresh: $m")
+    assert(leftover(before).isEmpty,
+      s"a refreshing maintain left RDDs ${leftover(before)} persisted")
+    val again = sc.getPersistentRDDs.keySet.toSet
+    IvfIndex.refresh(spark, rname)
+    assert(leftover(again).isEmpty, s"refresh left RDDs ${leftover(again)} persisted")
+  }
+
   /** Scans of `table` by the queries `body` runs. */
   private def tableScans[T](table: String)(body: => T): (T, Int) = {
     import org.apache.spark.sql.execution.QueryExecution

@@ -510,10 +510,10 @@ class StreamSmokeSpec extends AnyFunSuite {
     * `graft.stream.checkpointRoot`, one file per micro-batch, after the
     * caller session has read every table in `tables`, then checks what
     * it leaves behind: an empty checkpoint root, no RDD left persisted
-    * (when `leakFree`), and a caller session that reads every table with
-    * the row count a new session reads. */
-  private def ingestLifecycle(name: String, tables: Seq[String],
-      leakFree: Boolean = true)(ingest: => Unit): Unit = {
+    * and a caller session that reads every table with the row count a
+    * new session reads. */
+  private def ingestLifecycle(name: String, tables: Seq[String])(
+      ingest: => Unit): Unit = {
     val sc = spark.sparkContext
     val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root")
     tables.foreach(t => spark.table(t).count())
@@ -528,10 +528,8 @@ class StreamSmokeSpec extends AnyFunSuite {
     val left = java.nio.file.Files.list(root)
     try assert(!left.iterator().hasNext, s"$name left its checkpoint under $root")
     finally left.close()
-    if (leakFree) {
-      val rdds = sc.getPersistentRDDs.keySet.toSet -- before
-      assert(rdds.isEmpty, s"$name left RDDs $rdds persisted")
-    }
+    val rdds = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(rdds.isEmpty, s"$name left RDDs $rdds persisted")
     val other = spark.newSession()
     tables.foreach { t =>
       assert(spark.table(t).count() == other.table(t).count(),
@@ -605,13 +603,11 @@ class StreamSmokeSpec extends AnyFunSuite {
     MediaIndex.build(spark, Multimodal.audioDHash(Multimodal.audioTableOf(corpus)),
       "graft_lc_ca_aud")
     VideoIndex.build(spark, vid, "graft_lc_ca_vid")
-    // admitBatch keeps its own per-batch inputs checkpointed, so only
-    // the checkpoint and refresh halves are checked for the composed gate
     ingestLifecycle("streamCrawlAdmitIngest",
         DedupIndex.tables(spark, "graft_lc_ca_text") ++
           MediaIndex.tables(spark, "graft_lc_ca_img") ++
           MediaIndex.tables(spark, "graft_lc_ca_aud") ++
-          VideoIndex.tables(spark, "graft_lc_ca_vid"), leakFree = false)(
+          VideoIndex.tables(spark, "graft_lc_ca_vid"))(
       Streams.streamCrawlAdmitIngest(spark, dir, "graft_lc_ca_text",
         "graft_lc_ca_img", "graft_lc_ca_aud", "graft_lc_ca_vid", lit(true)))
   }

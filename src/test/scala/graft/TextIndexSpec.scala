@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.sources.TextIndex
+import graft.sources.{Bucketing, TextIndex}
 import graft.text.TextOps
 
 /** The persisted BM25 index must rank exactly what the live corpus
@@ -32,7 +32,7 @@ class TextIndexSpec extends AnyFunSuite {
     // the pruning happens in the probe's own (checkpointed) execution
     // under serve's forced bucketed scan; replicate that exact scan
     val terms = qs.flatMap(_._2.split("\\s+")).distinct
-    val p = TextIndex.forceBucketedScan(spark) { iso =>
+    val p = Bucketing.forceBucketedScan(spark) { iso =>
       val probe = iso.table("graft_text_spec2_postings")
         .where(col("word").isin(terms: _*))
       probe.count()

@@ -36,4 +36,18 @@ class ToolsSpec extends AnyFunSuite {
     assert(unrun.isEmpty,
       s"${unrun.size} tools have no caller: ${unrun.mkString(", ")}")
   }
+
+  test("stored tables are written, looked up and given properties only in Bucketing and Compact") {
+    val owners = Set("src/main/scala/graft/sources/Bucketing.scala",
+      "src/main/scala/graft/sources/Compact.scala")
+    val spellings = Seq("saveAsTable", "getTableMetadata", "SET TBLPROPERTIES")
+    val sources = files("src/main").filter(_.toString.endsWith(".scala"))
+    assert(sources.nonEmpty, "tests run from the repository root")
+    val strays = for {
+      f <- sources if !owners(f.toString)
+      text = Files.readString(f)
+      s <- spellings if text.contains(s)
+    } yield s"$f: $s"
+    assert(strays.isEmpty, s"stored-table spellings outside Bucketing/Compact: ${strays.mkString("; ")}")
+  }
 }
