@@ -2,8 +2,10 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.core.TopK
+import graft.functions.VectorMeanAggregator
 
 /** Similarity search over embedding columns (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and random-hyperplane
@@ -16,6 +18,14 @@ import graft.core.TopK
   * codegen. At 100 TB the brute-force path is a crossJoin-shaped scan
   * (only for small query sets against a broadcast query side); the LSH
   * path shuffles once on bucket id.
+  *
+  * Every centroid structure here — k-means, the IVF quantizers and
+  * their routed grids, the PQ codebooks — is built from one
+  * nearest-centroid toolkit, [[Nearest]]: the mixer sample, the scores,
+  * the argmin, the routed two-level assignment and the Lloyd update are
+  * each written once there ([[graft.sources.IvfIndex]] composes the same
+  * toolkit). The SQ8 code rule ([[withSq8]]) and the exact re-rank of a
+  * shortlist are likewise written once.
   */
 object Similarity {
 
@@ -34,6 +44,126 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+
+  /** The nearest-centroid toolkit: the one centroid sample, scores,
+    * argmin, routed two-level assignment and Lloyd update that k-means,
+    * the IVF quantizers and the PQ codebooks compose — a Lloyd round is
+    * one map (assign every point to its nearest centroid) plus one
+    * reduce (re-center every cell on its members' mean). Everything is
+    * 6dp-pinned with centroid-id tiebreaks, so each step replays term
+    * for term in the DuckDB oracles. */
+  private[graft] object Nearest {
+
+    /** The `n` rows of `df` with the smallest portable-mixer key
+      * pmod(pmod(id, 1e9+7)·2654435761 + seed, 9973), ties to the lower
+      * id: a TakeOrderedAndProject, corpus-size-independent, replayable
+      * on any engine (products stay below 2^63). Each sample has its
+      * own seed so the samples are independent. */
+    def sample(df: DataFrame, id: String, seed: Long, n: Int): DataFrame =
+      df.orderBy(pmod(pmod(col(id), lit(1000000007L)) * lit(2654435761L)
+          + lit(seed), lit(9973L)).asc, col(id).asc)
+        .limit(n)
+
+    /** Squared L2 as a·a − 2·a·b + b·b from three codegen'd
+      * [[graft.functions.DotProduct]] evaluations, the oracle's term
+      * order. */
+    def sq(a: Column, b: Column): Column =
+      dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
+
+    /** The k-means and PQ score: squared distance pinned at 6dp. */
+    def l2(a: Column, b: Column): Column = round(sq(a, b), 6)
+
+    /** Cosine pinned at 6dp, with a −2.0 sentinel below any real cosine
+      * for a zero norm or a NaN. [[cosine]] has no zero-norm guard, and
+      * its formulations DISAGREE on NaN: Spark/DuckDB sort NaN greatest,
+      * so `csim DESC` (or `greatest`) ranks a NaN centroid FIRST while
+      * min(−csim) ranks it LAST. Under ANSI mode (the Spark 4 default,
+      * never overridden here) a zero-norm vector makes the plain `/`
+      * THROW DIVIDE_BY_ZERO before any NaN exists, so the division goes
+      * through try_divide (→ NULL on a zero divisor) and coalesce+nanvl
+      * pin both the NULL and the NaN to −2.0. A zero-norm or NaN vector
+      * therefore ranks LAST under every formulation, and a vector whose
+      * scores are all −2.0 lands in the lowest cid. */
+    def csim(a: Column, b: Column): Column =
+      coalesce(
+        nanvl(round(try_divide(dot(a, b),
+          sqrt(dot(a, a)) * sqrt(dot(b, b))), 6), lit(-2.0)),
+        lit(-2.0))
+
+    /** The IVF cell score: −[[csim]], so the argmin keeps (cos desc,
+      * cid asc). */
+    def negCos(a: Column, b: Column): Column = -csim(a, b)
+
+    /** Per `keys` group of `cands`, the candidate minimizing (score,
+      * cid), with the `carry` columns of that row: one map-side
+      * min(struct) aggregate, so the shuffle carries ONE candidate per
+      * (partition, group) instead of every scored row, which a window
+      * would exchange wholesale (measured 45× on the first auto-scaled
+      * mutual-kNN ×100 rehearsal, where N·k hit 3e8 rows). A group's
+      * centroid ids are distinct, so (score, cid) never ties and the
+      * carried columns — constant per group, like a point's vector —
+      * cannot decide. Returns (keys…, carry…, cid). */
+    def argmin(cands: DataFrame, keys: Seq[String], score: Column, cid: String,
+        carry: String*): DataFrame =
+      cands.groupBy(keys.map(col): _*)
+        .agg(min(struct(score.as("score") +:
+          (cid +: carry).map(c => col(c).as(c)): _*)).as("m"))
+        .select(keys.map(col) ++
+          (carry :+ cid).map(c => col(s"m.$c").as(c)): _*)
+
+    /** Two-level ROUTED assignment of `pts` (id, v) over the centroids
+      * `cents` (cid, cv) through the coarse grid `coarse` (ccid, ccv),
+      * each step an [[argmin]] of `score(assigned, centroid)`: (1) each
+      * centroid maps to its nearest coarse cell (k·coarse rows —
+      * driver-scale), (2) each point routes to its nearest ACTIVE coarse
+      * cell (one owning ≥ 1 centroid — a point routed to an empty cell
+      * would have no candidates), (3) the argmin runs over only that
+      * cell's centroids. Candidates per point: coarse + k/coarse ≈ 2√k
+      * at coarse = ⌈√k⌉, versus flat's k. The routed cell APPROXIMATES
+      * the global nearest (a point near a coarse boundary can miss a
+      * centroid parked next door — the IVF nProbe=1 contract).
+      *
+      * `hintFine = false` drops the broadcast HINT on the centroid →
+      * cell map: with auto-scaled k the centroid table grows linearly
+      * with the corpus (≈ 4N bytes at 64 double dims), so above a
+      * caller's row ceiling the in-cell argmin becomes a shuffle
+      * equi-join on the coarse cell id — identical results, bounded
+      * build sides (SCALE.md "Fine-centroid broadcast ceiling"); AQE may
+      * still broadcast a table that turns out small. The coarse grid
+      * always broadcasts. Returns (id, v, cid). */
+    def routed(pts: DataFrame, cents: DataFrame, coarse: DataFrame,
+        id: String, v: String, score: (Column, Column) => Column,
+        hintFine: Boolean): DataFrame = {
+      val f2cBase = argmin(cents.crossJoin(coarse), Seq("cid"),
+        score(col("cv"), col("ccv")), "ccid", "cv")
+      val f2c = if (hintFine) broadcast(f2cBase) else f2cBase
+      val active = broadcast(f2c.select(col("ccid")).distinct()
+        .join(coarse, "ccid"))
+      val p2c = argmin(pts.crossJoin(active), Seq(id),
+        score(col(v), col("ccv")), "ccid", v)
+      argmin(p2c.join(f2c, "ccid"), Seq(id), score(col(v), col("cv")),
+        "cid", v)
+    }
+
+    /** The Lloyd update: per `keys` group of `assigned`, the mean of
+      * `vec` ([[graft.functions.VectorMeanAggregator]] — map-side partial
+      * buffers, never an exploded (row, dim) shuffle; the double
+      * aggregator for `array<double>`, so residual vectors are never
+      * narrowed to float), each component rounded to 6dp so both engines
+      * feed bitwise-equal centroids into the next round. Returns
+      * (keys…, cv). */
+    def lloyd(assigned: DataFrame, keys: Seq[String], vec: String,
+        dim: Int): DataFrame = {
+      val mean = assigned.schema(vec).dataType match {
+        case ArrayType(DoubleType, _) => VectorMeanAggregator.vecMeanDouble(dim)
+        case _ => VectorMeanAggregator.vecMean(dim)
+      }
+      assigned.groupBy(keys.map(col): _*)
+        .agg(mean(col(vec)).as("cm"))
+        .select(keys.map(col) :+
+          transform(col("cm"), x => round(x, 6)).as("cv"): _*)
+    }
+  }
 
   /** Exact top-k cosine neighbors for each query vector (query side kept
     * small and broadcast; ranking on the ROUNDED similarity with id
@@ -160,24 +290,16 @@ object Similarity {
   def semanticIncremental(fresh: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int = 16, iters: Int = 2,
       tau: Double = 0.45): DataFrame = {
-    def sq(a: Column, b: Column): Column =
-      dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
     val assign = kmeans(corpus, idCol, vecCol, dim, k, iters).localCheckpoint()
     val pts = corpus.select(col(idCol).as("vid"), col(vecCol).as("pv"))
-    val cents = broadcast(assign.select(col(idCol).as("vid"), col("cluster"))
-      .join(pts, "vid")
-      .groupBy(col("cluster"))
-      .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("pv"))
-        .as("cm"))
-      .select(col("cluster").as("cid"),
-        transform(col("cm"), x => round(x, 6)).as("cv")))
-    val fa = fresh.select(col(idCol).as("fid"), col(vecCol).as("fv"))
-      .crossJoin(cents)
-      .select(col("fid"), col("fv"), col("cid"),
-        round(sq(col("fv"), col("cv")), 6).as("d"))
-      .groupBy(col("fid"))
-      .agg(min(struct(col("d"), col("cid"), col("fv"))).as("s"))
-      .select(col("fid"), col("s.fv").as("fv"), col("s.cid").as("cell"))
+    val cents = broadcast(Nearest.lloyd(
+      assign.select(col(idCol).as("vid"), col("cluster").as("cid"))
+        .join(pts, "vid"),
+      Seq("cid"), "pv", dim))
+    val fa = Nearest.argmin(
+        fresh.select(col(idCol).as("fid"), col(vecCol).as("fv")).crossJoin(cents),
+        Seq("fid"), Nearest.l2(col("fv"), col("cv")), "cid", "fv")
+      .select(col("fid"), col("fv"), col("cid").as("cell"))
     val corpusSide = corpus.select(col(idCol).as("cpid"), col(vecCol).as("cpv"))
       .withColumn("nc", sqrt(dot(col("cpv"), col("cpv"))))
       .join(assign.select(col(idCol).as("cpid"), col("cluster").as("cell")),
@@ -238,11 +360,8 @@ object Similarity {
     * maxBroadcastCentroids). */
   private[graft] def ivfCentroidsRaw(emb: DataFrame, idCol: String,
       vecCol: String, numCentroids: Int): DataFrame =
-    emb.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-      .orderBy(pmod(pmod(col("cid"), lit(1000000007L)) * lit(2654435761L)
-          + lit(283521L), lit(9973L)).asc,
-        col("cid").asc)
-      .limit(numCentroids)
+    Nearest.sample(emb.select(col(idCol).as("cid"), col(vecCol).as("cv")), "cid",
+      283521L, numCentroids)
 
   /** The IVF coarse quantizer: `numCentroids` corpus vectors picked by
     * portable mixer key (seed offset 7·40503) — constant-size, broadcast. */
@@ -250,50 +369,21 @@ object Similarity {
       numCentroids: Int): DataFrame =
     broadcast(ivfCentroidsRaw(emb, idCol, vecCol, numCentroids))
 
-  /** Route rows to their `n` nearest coarse cells (cosine, 6dp + cid
-    * tiebreak) — broadcast centroid join. n = 1 (every corpus
-    * assignment) runs as a map-side min(struct) argmin — the kmeans
-    * assignment shape: the shuffle carries ONE candidate row per
-    * (partition, point) instead of all N·numCentroids scored rows,
-    * which a window would exchange wholesale (measured 45× on the
-    * first auto-scaled mutual-kNN ×100 rehearsal, where N·k hit 3e8
-    * rows). The lexicographic (−csim, cid) struct order replays the
-    * window's (csim desc, cid asc) tiebreak; the point vector rides
-    * through the struct (constant per group). n > 1 (query-side
-    * multi-probe, small by construction) keeps the window.
-    *
-    * Corrupt-data guard: [[cosine]] has no zero-norm protection, and
-    * the two formulations DISAGREE on NaN — Spark/DuckDB sort NaN
-    * greatest, so `csim DESC` ranks a NaN centroid FIRST while
-    * min(−csim) ranks it LAST. Under ANSI mode (Spark 4 default, never
-    * overridden here) a zero-norm vector makes the plain `/` THROW
-    * DIVIDE_BY_ZERO before any NaN exists (r12 ADVICE), so the
-    * division itself goes through try_divide (→ NULL on zero divisor);
-    * coalesce+nanvl then pin BOTH the NULL (zero-norm) and the NaN
-    * (NaN-element legacy-mode) outcomes to a −2.0 sentinel below any
-    * real cosine. A zero-norm or NaN vector/centroid therefore ranks
-    * LAST under either formulation and the argmin/window paths stay
-    * interchangeable on corrupt data (r11+r12 ADVICE). */
-  private def safeCsim(a: Column, b: Column): Column =
-    coalesce(
-      nanvl(round(try_divide(dot(a, b),
-        sqrt(dot(a, a)) * sqrt(dot(b, b))), 6), lit(-2.0)),
-      lit(-2.0))
-
+  /** Route rows to their `n` nearest coarse cells by
+    * [[Nearest.csim]] (cos desc, cid asc) — broadcast centroid join.
+    * n = 1 (every corpus assignment) is the toolkit's [[Nearest.argmin]]
+    * of −csim; n > 1 (query-side multi-probe, small by construction)
+    * keeps the window. The sentinel makes the two interchangeable on
+    * corrupt data. Returns (id, v, cid). */
   private[graft] def nearestCells(df: DataFrame, cents: DataFrame, id: String,
       v: String, n: Int): DataFrame =
-    if (n == 1) {
-      df.crossJoin(cents)
-        .select(col(id), col(v), col("cid"),
-          safeCsim(col(v), col("cv")).as("csim"))
-        .groupBy(col(id))
-        .agg(min(struct((-col("csim")).as("neg"), col("cid").as("cid"),
-          col(v).as("vv"))).as("s"))
-        .select(col(id), col("s.vv").as(v), col("s.cid").as("cid"))
-    } else {
+    if (n == 1)
+      Nearest.argmin(df.crossJoin(cents), Seq(id),
+        Nearest.negCos(col(v), col("cv")), "cid", v)
+    else {
       val scored = df.crossJoin(cents)
         .select(col(id), col(v), col("cid"),
-          safeCsim(col(v), col("cv")).as("csim"))
+          Nearest.csim(col(v), col("cv")).as("csim"))
       TopK.perKey(scored, id, n, col("csim").desc, col("cid").asc)
         .select(col(id), col(v), col("cid"))
     }
@@ -434,63 +524,48 @@ object Similarity {
   /** Lloyd's k-means over an embedding column, `iters` FIXED rounds (the
     * oracle unrolls the same rounds as CTEs) — the clustering step an
     * embedding pipeline runs between centroid training and IVF layout.
-    * Deterministic end to end: init picks the `k` corpus vectors with
-    * the smallest portable-mixer key (same TakeOrderedAndProject shape
-    * as [[ivfKnn]]'s quantizer — corpus-size-independent broadcast),
-    * assignment is argmin squared-L2 rounded to 6dp with centroid-id
-    * tiebreak, and recomputed centroids ([[graft.functions.VectorMeanAggregator]]
-    * — map-side partial buffers, never an exploded (row, dim) shuffle)
-    * are rounded to 6dp per component so both engines feed bitwise-equal
-    * centroids into the next round. Rounding-boundary caveat: the 6dp
-    * pin makes cross-engine agreement overwhelmingly likely, not
-    * certain — a distance or centroid component landing EXACTLY on a
-    * half-ulp rounding boundary could round differently in an engine
-    * whose intermediate fold order differs, flipping an argmin whose
+    * Deterministic end to end, every step from the [[Nearest]] toolkit:
+    * init is the `k`-row mixer [[Nearest.sample]] (seed offset
+    * 11·40503, independent of the IVF quantizer's 7·40503 — the same
+    * TakeOrderedAndProject shape as [[ivfKnn]]'s quantizer), assignment
+    * the [[Nearest.argmin]] of the 6dp squared distance [[Nearest.l2]]
+    * with the point vector carried through, and the centroids the 6dp
+    * [[Nearest.lloyd]] means. Rounding-boundary caveat: the 6dp pin
+    * makes cross-engine agreement overwhelmingly likely, not certain —
+    * a distance or centroid component landing EXACTLY on a half-ulp
+    * rounding boundary could round differently in an engine whose
+    * intermediate fold order differs, flipping an argmin whose
     * runner-up is within 1e-6. No fixture hits this (the oracle replays
     * the same fold order), but on adversarial inputs the pin is
-    * probabilistic in the same sense as the banding-recall notes.
-    * Squared L2 is composed as
-    * a·a − 2·a·b + b·b from three codegen'd [[graft.functions.DotProduct]]
-    * evaluations, mirrored term for term in the oracle SQL. Per round:
-    * one k-row broadcast join + one map-side min(struct) argmin + one
-    * centroid aggregation — all linear in the corpus, and the shuffle
-    * carries ONE candidate row per (partition, point), not k (r10: the
-    * PQ codebooks' argmin shape, replacing a window whose exchange
-    * carried all N·k distance rows — at auto-scaled SemDeDup k that
-    * window was the dominant cost; the point vector rides through the
-    * argmin struct exactly like PQ's sv carry, so no join-back pass).
-    * The (d, cid) ordering of the struct replays the oracle's
-    * row_number tiebreak verbatim. Returns (idCol, cluster).
-    */
+    * probabilistic in the same sense as the banding-recall notes. Per
+    * round: one k-row broadcast join + one map-side argmin + one
+    * centroid aggregation — all linear in the corpus. Returns
+    * (idCol, cluster). */
   def kmeans(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       k: Int = 16, iters: Int = 2): DataFrame = {
     require(iters >= 1, "kmeans needs at least one assignment round")
-    def sq(a: Column, b: Column): Column =
-      dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
     val pts = emb.select(col(idCol).as("vid"), col(vecCol).as("pv"))
-    // seed offset 11*40503: distinct from the IVF quantizer's 7*40503 so
-    // the two samples are independent
-    var cents = broadcast(pts
-      .select(col("vid").as("cid"), col("pv").as("cv"))
-      .orderBy(pmod(pmod(col("cid"), lit(1000000007L)) * lit(2654435761L)
-          + lit(445533L), lit(9973L)).asc, col("cid").asc)
-      .limit(k))
-    var assigned: DataFrame = null
-    for (i <- 1 to iters) {
-      assigned = pts.crossJoin(cents)
-        .select(col("vid"), col("pv"), col("cid"),
-          round(sq(col("pv"), col("cv")), 6).as("d"))
-        .groupBy(col("vid"))
-        .agg(min(struct(col("d"), col("cid"), col("pv"))).as("s"))
-        .select(col("vid"), col("s.pv").as("pv"), col("s.cid").as("cid"))
-      if (i < iters)
-        cents = broadcast(assigned.groupBy(col("cid"))
-          .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("pv"))
-            .as("cm"))
-          .select(col("cid"), transform(col("cm"), x => round(x, 6)).as("cv")))
-    }
-    assigned.select(col("vid").as(idCol), col("cid").as("cluster"))
+    lloydRounds(dim, iters, broadcast(kmeansInit(pts, k)), broadcast)(cents =>
+      Nearest.argmin(pts.crossJoin(cents), Seq("vid"),
+        Nearest.l2(col("pv"), col("cv")), "cid", "pv"))
+      .select(col("vid").as(idCol), col("cid").as("cluster"))
   }
+
+  /** The first `n` points (vid, pv) of the k-means mixer order as
+    * (cid, cv). */
+  private def kmeansInit(pts: DataFrame, n: Int): DataFrame =
+    Nearest.sample(pts.select(col("vid").as("cid"), col("pv").as("cv")), "cid",
+      445533L, n)
+
+  /** `iters` Lloyd rounds from the centroids `init`: each round assigns
+    * the points, (vid, pv, cid), and, but for the last, re-centers
+    * through [[Nearest.lloyd]], delivered by `hint`. Returns the last
+    * assignment. */
+  private def lloydRounds(dim: Int, iters: Int, init: DataFrame,
+      hint: DataFrame => DataFrame)(assign: DataFrame => DataFrame): DataFrame =
+    (2 to iters).foldLeft(assign(init)) { (assigned, _) =>
+      assign(hint(Nearest.lloyd(assigned, Seq("cid"), "pv", dim)))
+    }
 
   /** Two-level ROUTED Lloyd assignment — [[kmeans]] with the N·k
     * flat-assignment term replaced by coarse→fine routing (the r9→r10
@@ -502,78 +577,88 @@ object Similarity {
     * A STATIC routing grid of `coarse` mixer-picked corpus vectors (the
     * first `coarse` of the SAME ordering that seeds the fine init —
     * nested sampling, one ordering to replay) partitions the space
-    * once; per Lloyd round, (1) each fine centroid maps to its nearest
-    * coarse cell (k·coarse rows — driver-scale, broadcast), (2) each
-    * point routes to its nearest ACTIVE coarse cell (one owning ≥ 1
-    * fine centroid — a point routed to an empty cell would otherwise
-    * have no candidates), (3) the argmin runs over only the fine
-    * centroids in that cell. Candidate rows per round: N·(coarse +
+    * once; each Lloyd round assigns through [[Nearest.routed]] with the
+    * [[Nearest.l2]] score (candidate rows per round: N·(coarse +
     * k/coarse avg) versus flat's N·k — at coarse ≈ √k the quadratic
-    * assignment term drops to N·2√k. Same determinism discipline as
-    * [[kmeans]] (6dp distance pins, id tiebreaks, 6dp centroid
-    * components), and every level is replayed in the oracle.
+    * assignment term drops to N·2√k). Same determinism discipline as
+    * [[kmeans]], and every level is replayed in the oracle.
     *
-    * The routed argmin is an APPROXIMATION of the global argmin (a
-    * point near a coarse boundary can miss a fine centroid parked in
-    * the neighboring cell — the IVF nProbe=1 recall contract); SemDeDup
-    * is itself a cell-bounded approximation, so the contract
-    * composes. */
+    * The routed argmin is an APPROXIMATION of the global argmin (the
+    * IVF nProbe=1 recall contract); SemDeDup is itself a cell-bounded
+    * approximation, so the contract composes. With auto-scaled k the
+    * fine-centroid table grows linearly with the corpus; above
+    * `maxBroadcastCentroids` rows its broadcast hints drop and the
+    * in-cell argmin joins on the coarse cell id instead — same results,
+    * shuffle-joined delivery (SCALE.md "Fine-centroid broadcast
+    * ceiling"). The √k coarse grid always broadcasts. */
   def kmeansRouted(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       k: Int, iters: Int, coarse: Int,
       maxBroadcastCentroids: Int = 100000): DataFrame = {
     require(iters >= 1, "kmeans needs at least one assignment round")
     require(coarse >= 1, "need at least one routing cell")
-    def sq(a: Column, b: Column): Column =
-      dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
-    // with auto-scaled k the fine-centroid table grows linearly with
-    // the corpus; above the row ceiling its broadcast hints drop and
-    // the in-cell argmin joins on the coarse cell id instead — same
-    // results, shuffle-joined delivery (SCALE.md "Fine-centroid
-    // broadcast ceiling"). The √k coarse grid always broadcasts.
     val hintFine = k <= maxBroadcastCentroids
     def fineHint(df: DataFrame): DataFrame =
       if (hintFine) broadcast(df) else df
     val pts = emb.select(col(idCol).as("vid"), col(vecCol).as("pv"))
-    val mixerKey = pmod(pmod(col("cid"), lit(1000000007L)) * lit(2654435761L)
-      + lit(445533L), lit(9973L))
-    val ordered = pts.select(col("vid").as("cid"), col("pv").as("cv"))
-      .orderBy(mixerKey.asc, col("cid").asc)
-    val coarseTab = broadcast(ordered.limit(coarse)
+    val coarseTab = broadcast(kmeansInit(pts, coarse)
       .select(col("cid").as("ccid"), col("cv").as("ccv")))
-    var cents = fineHint(ordered.limit(k))
-    var assigned: DataFrame = null
-    for (i <- 1 to iters) {
-      // fine centroid → nearest coarse cell (k·coarse rows)
-      val f2c = fineHint(cents.crossJoin(coarseTab)
-        .select(col("cid"), col("cv"), col("ccid"),
-          round(sq(col("cv"), col("ccv")), 6).as("d"))
-        .groupBy(col("cid"))
-        .agg(min(struct(col("d"), col("ccid"), col("cv"))).as("s"))
-        .select(col("s.ccid").as("ccid"), col("cid"), col("s.cv").as("cv")))
-      // coarse cells owning at least one fine centroid
-      val active = broadcast(f2c.select(col("ccid")).distinct()
-        .join(coarseTab, "ccid"))
-      // point → nearest active coarse cell (N·coarse candidate rows)
-      val p2c = pts.crossJoin(active)
-        .select(col("vid"), col("pv"), col("ccid"),
-          round(sq(col("pv"), col("ccv")), 6).as("d"))
-        .groupBy(col("vid"))
-        .agg(min(struct(col("d"), col("ccid"), col("pv"))).as("s"))
-        .select(col("vid"), col("s.pv").as("pv"), col("s.ccid").as("ccid"))
-      // point → nearest fine centroid WITHIN the cell (N·occupancy rows)
-      assigned = p2c.join(f2c, "ccid")
-        .select(col("vid"), col("pv"), col("cid"),
-          round(sq(col("pv"), col("cv")), 6).as("d"))
-        .groupBy(col("vid"))
-        .agg(min(struct(col("d"), col("cid"), col("pv"))).as("s"))
-        .select(col("vid"), col("s.pv").as("pv"), col("s.cid").as("cid"))
-      if (i < iters)
-        cents = fineHint(assigned.groupBy(col("cid"))
-          .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("pv"))
-            .as("cm"))
-          .select(col("cid"), transform(col("cm"), x => round(x, 6)).as("cv")))
-    }
-    assigned.select(col("vid").as(idCol), col("cid").as("cluster"))
+    lloydRounds(dim, iters, fineHint(kmeansInit(pts, k)), fineHint)(cents =>
+      Nearest.routed(pts, cents, coarseTab, "vid", "pv", Nearest.l2, hintFine))
+      .select(col("vid").as(idCol), col("cid").as("cluster"))
+  }
+
+  /** (id, j, sv): the m subvector slices of each row. */
+  private def pqSubspaces(df: DataFrame, idCol: String, vecCol: String,
+      id: String, m: Int, sd: Int): DataFrame =
+    df.select(col(idCol).as(id),
+        explode(array((0 until m).map { j =>
+          struct(lit(j).as("j"),
+            slice(col(vecCol), j * sd + 1, sd).as("sv"))
+        }: _*)).as("s"))
+      .select(col(id), col("s.j").as("j"), col("s.sv").as("sv"))
+
+  /** Train the per-subspace codebooks and encode the corpus:
+    * returns (codes (vid, j, cid), codebooks cb1 (j, cid, cv) —
+    * broadcast). Init: the ksub-row mixer [[Nearest.sample]] (seed
+    * offset 13·40503 — distinct from the IVF/kmeans samples); one
+    * [[Nearest.lloyd]] recompute; codes are the [[Nearest.argmin]] of
+    * [[Nearest.l2]] per (vid, j). */
+  private def pqTrainEncode(emb: DataFrame, idCol: String, vecCol: String,
+      dim: Int, m: Int, ksub: Int): (DataFrame, DataFrame) = {
+    require(dim % m == 0, "m must divide dim")
+    val sd = dim / m
+    val sub = pqSubspaces(emb, idCol, vecCol, "vid", m, sd)
+    val init = Nearest.sample(emb.select(col(idCol).as("cid")), "cid",
+      526539L, ksub)
+    val cb0 = broadcast(sub.join(init, sub("vid") === init("cid"))
+      .select(col("j"), col("cid"), col("sv").as("cv")))
+    def assign(cb: DataFrame, carry: String*): DataFrame =
+      Nearest.argmin(sub.join(cb, "j"), Seq("vid", "j"),
+        Nearest.l2(col("sv"), col("cv")), "cid", carry: _*)
+    // the training pass carries sv THROUGH the argmin aggregate instead
+    // of re-joining assignments back onto sub — the re-join was a second
+    // corpus-sized shuffle of subvector payloads on (vid, j), and the
+    // one shuffle join in an otherwise broadcast-only pipeline
+    val cb1 = broadcast(Nearest.lloyd(assign(cb0, "sv"), Seq("j", "cid"), "sv", sd))
+    (assign(cb1), cb1)
+  }
+
+  /** The broadcast ADC lookup: (qid, j, cid, d) for every query ×
+    * codeword pair. */
+  private def pqQueryDists(queries: DataFrame, idCol: String, vecCol: String,
+      cb1: DataFrame, m: Int, sd: Int): DataFrame =
+    broadcast(pqSubspaces(queries, idCol, vecCol, "qid", m, sd)
+      .join(cb1, "j")
+      .select(col("qid"), col("j"), col("cid"),
+        Nearest.l2(col("sv"), col("cv")).as("d")))
+
+  /** ADC-sum the (qid, vid) pairs present in `pairs` and rank top-k. */
+  private def adcTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs
+      .groupBy(col("qid"), col("vid"))
+      .agg(round(sum(col("d")), 6).as("dist"))
+    TopK.perKey(scored, "qid", k, col("dist").asc, col("vid").asc)
+      .select(col("qid"), col("vid").as("nid"), col("dist"), col("rn"))
   }
 
   /** Product-quantization ANN (the PQ half of the billion-scale IVF-PQ
@@ -603,90 +688,6 @@ object Similarity {
     * terms, associativity-exposed by the aggregate) is re-rounded at
     * 6dp — the kmeans rounding-boundary caveat applies verbatim.
     * Returns (qid, nid, dist, rn), rn ≤ k. */
-  private def pqSq(a: Column, b: Column): Column =
-    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
-
-  /** (id, j, sv): the m subvector slices of each row. */
-  private def pqSubspaces(df: DataFrame, idCol: String, vecCol: String,
-      id: String, m: Int, sd: Int): DataFrame =
-    df.select(col(idCol).as(id),
-        explode(array((0 until m).map { j =>
-          struct(lit(j).as("j"),
-            slice(col(vecCol), j * sd + 1, sd).as("sv"))
-        }: _*)).as("s"))
-      .select(col(id), col("s.j").as("j"), col("s.sv").as("sv"))
-
-  /** Train the per-subspace codebooks and encode the corpus:
-    * returns (codes (vid, j, cid), codebooks cb1 (j, cid, cv) —
-    * broadcast). Init: ksub corpus vectors by portable mixer key (seed
-    * offset 13·40503 — distinct from the IVF/kmeans samples); one
-    * 6dp-pinned Lloyd recompute; argmin assignment via map-side
-    * min(struct). */
-  private def pqTrainEncode(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, ksub: Int): (DataFrame, DataFrame) = {
-    require(dim % m == 0, "m must divide dim")
-    val sd = dim / m
-    val sub = pqSubspaces(emb, idCol, vecCol, "vid", m, sd)
-    val init = emb.select(col(idCol).as("cid"))
-      .orderBy(pmod(pmod(col("cid"), lit(1000000007L)) * lit(2654435761L)
-          + lit(526539L), lit(9973L)).asc, col("cid").asc)
-      .limit(ksub)
-    val cb0 = broadcast(sub.join(init, sub("vid") === init("cid"))
-      .select(col("j"), col("cid"), col("sv").as("cv")))
-    def assign(cb: DataFrame): DataFrame =
-      sub.join(cb, "j")
-        .groupBy(col("vid"), col("j"))
-        .agg(min(struct(round(pqSq(col("sv"), col("cv")), 6).as("d"),
-          col("cid").as("c"))).as("a"))
-        .select(col("vid"), col("j"), col("a.c").as("cid"))
-    // mean aggregator picked by the vector column's ELEMENT type: raw
-    // embeddings are array<float>, residual vectors array<double> (the
-    // float encoder would silently narrow residual elements and break
-    // the oracle's double-arithmetic replay)
-    val isDouble = emb.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) => true
-      case _ => false
-    }
-    val vecMean =
-      if (isDouble) graft.functions.VectorMeanAggregator.vecMeanDouble(sd)
-      else graft.functions.VectorMeanAggregator.vecMean(sd)
-    // the training pass carries sv THROUGH the argmin aggregate (sv is
-    // constant per (vid, j) group, so first() is deterministic in
-    // value) instead of re-joining assignments back onto sub — the
-    // re-join was a second corpus-sized shuffle of subvector payloads
-    // on (vid, j), and the one shuffle join in an otherwise
-    // broadcast-only pipeline
-    val cb1 = broadcast(sub.join(cb0, "j")
-      .groupBy(col("vid"), col("j"))
-      .agg(min(struct(round(pqSq(col("sv"), col("cv")), 6).as("d"),
-        col("cid").as("c"))).as("a"), first(col("sv")).as("sv"))
-      .select(col("j"), col("a.c").as("cid"), col("sv"))
-      .groupBy(col("j"), col("cid"))
-      .agg(vecMean(col("sv")).as("cm"))
-      .select(col("j"), col("cid"),
-        transform(col("cm"), x => round(x, 6)).as("cv")))
-    (assign(cb1), cb1)
-  }
-
-  /** The broadcast ADC lookup: (qid, j, cid, d) for every query ×
-    * codeword pair. */
-  private def pqQueryDists(queries: DataFrame, idCol: String, vecCol: String,
-      cb1: DataFrame, m: Int, sd: Int): DataFrame =
-    broadcast(pqSubspaces(queries, idCol, vecCol, "qid", m, sd)
-      .join(cb1, "j")
-      .select(col("qid"), col("j"), col("cid"),
-        round(pqSq(col("sv"), col("cv")), 6).as("d")))
-
-  /** ADC-sum the (qid, vid) pairs present in `pairs` and rank top-k. */
-  private def adcTopK(pairs: DataFrame, k: Int): DataFrame = {
-    val scored = pairs
-      .groupBy(col("qid"), col("vid"))
-      .agg(round(sum(col("d")), 6).as("dist"))
-    TopK.perKey(scored, "qid", k, col("dist").asc, col("vid").asc)
-      .select(col("qid"), col("vid").as("nid"), col("dist"), col("rn"))
-  }
-
   def pqKnn(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
       queryPred: Column, m: Int = 4, ksub: Int = 8, k: Int = 5): DataFrame = {
     val (codes, cb1) = pqTrainEncode(emb, idCol, vecCol, dim, m, ksub)
@@ -717,14 +718,27 @@ object Similarity {
     require(shortlistK >= k, "the shortlist must be at least k deep")
     val shortlist = pqKnn(emb, idCol, vecCol, dim, queryPred, m, ksub,
       shortlistK).select(col("qid"), col("nid"))
+    rerank(shortlist, emb, idCol, vecCol, queryPred, k, "dist",
+      desc = false)(Nearest.sq)
+  }
+
+  /** The exact re-rank of a (qid, nid) shortlist: the shortlist and the
+    * queries broadcast into one scan of the corpus, each pair re-scored
+    * on the full vectors as round(`score`(qv, nv), 6) into column
+    * `name`, and the top `k` per query kept by `name` (descending when
+    * `desc`), nid asc. Returns (qid, nid, name, rn). */
+  private def rerank(shortlist: DataFrame, emb: DataFrame, idCol: String,
+      vecCol: String, queryPred: Column, k: Int, name: String, desc: Boolean)(
+      score: (Column, Column) => Column): DataFrame = {
     val corpus = emb.select(col(idCol).as("nid"), col(vecCol).as("nv"))
     val queries = emb.where(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("qv"))
     val exact = broadcast(shortlist).join(corpus, "nid")
       .join(broadcast(queries), "qid")
       .select(col("qid"), col("nid"),
-        round(pqSq(col("qv"), col("nv")), 6).as("dist"))
-    TopK.perKey(exact, "qid", k, col("dist").asc, col("nid").asc)
+        round(score(col("qv"), col("nv")), 6).as(name))
+    TopK.perKey(exact, "qid", k, if (desc) col(name).desc else col(name).asc,
+      col("nid").asc)
   }
 
   /** IVF-PQ: the composed billion-scale ANN layout — IVF's coarse cells
@@ -785,16 +799,10 @@ object Similarity {
   def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int = 64): DataFrame = {
     val e = transform(col(vecCol), x => x.cast("double"))
-    val base = emb.select(col(idCol), e.as("e"))
-      .withColumn("amax", array_max(transform(col("e"), x => abs(x))))
-      .withColumn("scale", round(col("amax") / lit(127.0), 9))
-      .withColumn("q", transform(col("e"), x =>
-        when(col("scale") === 0.0, lit(0L)).otherwise(
-          greatest(lit(-127L), least(lit(127L),
-            round(x / col("scale"), 0).cast("long"))))))
-    val terms = zip_with(col("q"),
+    val base = withSq8(emb.select(col(idCol), e.as("e")), col("e"), "long")
+    val terms = zip_with(col("codes"),
       sequence(lit(1L), lit(dim.toLong)), (qi, i) => i * (qi + lit(128L)))
-    val err = zip_with(col("e"), col("q"),
+    val err = zip_with(col("e"), col("codes"),
       (x, qi) => x - qi.cast("double") * col("scale"))
     base.select(col(idCol), col("scale"),
       pmod(aggregate(terms, lit(0L), (acc, x) => acc + x), lit(1000000007L))
@@ -833,16 +841,11 @@ object Similarity {
       queryPred: Column, shortlistK: Int = 20, k: Int = 5): DataFrame = {
     require(shortlistK >= k, "the shortlist must be at least k deep")
     val e = transform(col(vecCol), x => x.cast("double"))
-    // the quantizeInt8 code rule verbatim (scale = round(amax/127, 9),
-    // clamp(round(e/scale))), kept as doubles for the codegen'd dot —
-    // codes are integers in [-127, 127], exactly representable
-    val corpus = emb.select(col(idCol).as("nid"), e.as("ne"))
-      .withColumn("amax", array_max(transform(col("ne"), x => abs(x))))
-      .withColumn("scale", round(col("amax") / lit(127.0), 9))
-      .select(col("nid"), transform(col("ne"), x =>
-        when(col("scale") === 0.0, lit(0.0)).otherwise(
-          greatest(lit(-127.0), least(lit(127.0),
-            round(x / col("scale"), 0))))).as("nc"))
+    // the SQ8 code rule kept as doubles for the codegen'd dot — codes
+    // are integers in [-127, 127], exactly representable
+    val corpus = withSq8(emb.select(col(idCol).as("nid"), e.as("ne")),
+        col("ne"), "double")
+      .select(col("nid"), col("codes").as("nc"))
     val queries = broadcast(emb.where(queryPred)
       .select(col(idCol).as("qid"), col(vecCol).as("qv")))
     val shortlist = TopK.perKey(
@@ -852,13 +855,23 @@ object Similarity {
             round(cosine(col("qv"), col("nc")), 6).as("acos")),
         "qid", shortlistK, col("acos").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
-    val full = emb.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val exact = broadcast(shortlist).join(full, "nid")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
+    rerank(shortlist, emb, idCol, vecCol, queryPred, k, "cos", desc = true)(cosine)
   }
+
+  /** The SQ8 code rule, written once for [[quantizeInt8]], [[int8Knn]]
+    * and [[graft.sources.IvfIndex]]'s postings: `df` plus
+    * `scale` = round(max|e_i| / 127, 9) and `codes` = clamp(round(e_i /
+    * scale), ±127) of the `array<double>` column `e` (all zeros for a
+    * zero scale), the codes computed and clamped in `codeType`
+    * ("long" or "double"). */
+  private[graft] def withSq8(df: DataFrame, e: Column,
+      codeType: String): DataFrame =
+    df.withColumn("scale",
+        round(array_max(transform(e, x => abs(x))) / lit(127.0), 9))
+      .withColumn("codes", transform(e, x =>
+        when(col("scale") === 0.0, lit(0).cast(codeType)).otherwise(
+          greatest(lit(-127).cast(codeType), least(lit(127).cast(codeType),
+            round(x / col("scale"), 0).cast(codeType))))))
 
   /** Matryoshka-style (MRL, Kusupati et al. 2022) dimension-ladder KNN:
     * shortlist by cosine over the first `truncDim` components only, then
@@ -889,14 +902,7 @@ object Similarity {
             round(cosine(col("qt"), col("nt")), 6).as("tcos")),
         "qid", shortlistK, col("tcos").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
-    val corpus = emb.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val queries = emb.where(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val exact = broadcast(shortlist).join(corpus, "nid")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    TopK.perKey(exact, "qid", k, col("cos").desc, col("nid").asc)
+    rerank(shortlist, emb, idCol, vecCol, queryPred, k, "cos", desc = true)(cosine)
   }
 
   /** Mutual-kNN graph, cell-bounded: edges (a, b) where each vector is
@@ -918,26 +924,20 @@ object Similarity {
     * FLAT assignment does N·numCentroids cosine evaluations, and the
     * ×100 rehearsal measured THAT term dominating at ratio 32×
     * (3.1e8 scored rows), so above `routeAbove` cells the assignment
-    * goes two-level ([[routedAssignCos]] — the q_semantic_dedup_routed
-    * discipline): a static ⌈√k⌉ coarse grid (the first rows of the SAME
-    * mixer ordering — nested sampling) routes each point, the argmin
-    * runs over that cell's fine centroids, ~N·2√k candidates instead
-    * of N·k. Routed assignment approximates the global nearest cell
-    * (the IVF nProbe=1 contract at the coarse level) — candidate
-    * bounding, not scoring, so returned cosines stay exact; both paths
-    * are registered with full replays (q_embed_mutual_knn flat at
-    * fixture scale, q_embed_mutual_knn_routed forced).
+    * goes two-level ([[routedAssignCos]], the toolkit's
+    * [[Nearest.routed]] over a static ⌈√k⌉ coarse grid — the first rows
+    * of the SAME mixer ordering, nested sampling): ~N·2√k candidates
+    * instead of N·k. Routed assignment approximates the global nearest
+    * cell — candidate bounding, not scoring, so returned cosines stay
+    * exact; both paths are registered with full replays
+    * (q_embed_mutual_knn flat at fixture scale, q_embed_mutual_knn_routed
+    * forced).
     *
     * 100 TB shape: broadcast centroid join → ONE hash exchange on the
     * cell id → per-vector window over cell-bounded candidates → an
-    * edge-list self-join on (a, b): k·N rows, fixed-width keys.
-    * Broadcast ceiling: with cells ∝ N the fine-centroid table itself
-    * grows linearly with the corpus (≈ 4N bytes at 64 double dims — the
-    * delivery vehicle stops scaling before the routing design does), so
-    * above `maxBroadcastCentroids` rows the quantizer/fine-map
-    * broadcast hints drop and the in-cell argmin becomes a shuffle
-    * equi-join partitioned by coarse cell — identical results, bounded
-    * build sides (SCALE.md "Fine-centroid broadcast ceiling"). */
+    * edge-list self-join on (a, b): k·N rows, fixed-width keys. Above
+    * `maxBroadcastCentroids` cells the quantizer and fine-map broadcast
+    * hints drop ([[Nearest.routed]]'s `hintFine`). */
   def mutualKnn(emb: DataFrame, idCol: String, vecCol: String, k: Int = 10,
       targetOccupancy: Int = 128, minCentroids: Int = 16,
       routeAbove: Int = 64, maxBroadcastCentroids: Int = 100000): DataFrame = {
@@ -981,69 +981,22 @@ object Similarity {
       .where(col("a") < col("b"))
   }
 
-  /** One-shot two-level ROUTED nearest-cell assignment by cosine — the
-    * [[kmeansRouted]] round body as a standalone (static cells instead
-    * of Lloyd updates): (1) each fine cell maps to its nearest coarse
-    * cell (k·coarse rows — driver-scale, broadcast), (2) each point
-    * routes to its nearest ACTIVE coarse cell, (3) the argmin runs over
-    * that cell's fine centroids. Candidates per point: coarse + k/coarse
-    * avg ≈ 2√k at coarse = ⌈√k⌉, versus flat's k. All three argmins are
-    * map-side min(struct) with the (−cos, cid) lexicographic tiebreak
-    * (= cos desc, cid asc). The routed cell is an APPROXIMATION of the
-    * global nearest (a point near a coarse boundary can miss a fine
-    * centroid parked next door — the IVF nProbe=1 contract); every
-    * level replays in the oracle.
+  /** One-shot two-level ROUTED nearest-cell assignment by cosine:
+    * [[Nearest.routed]] with the [[Nearest.negCos]] score over static
+    * cells (the [[kmeansRouted]] round body without the Lloyd update).
+    * `broadcastFine = false` drops the fine-map broadcast hint (the
+    * caller passes an unhinted `cents` too).
     *
-    * `broadcastFine = false` drops the broadcast HINT on the fine-
-    * centroid map (and the caller passes an unhinted `cents`): with
-    * auto-scaled k = ⌈N/128⌉ the fine table's bytes grow LINEARLY with
-    * the corpus (≈ 4N bytes at 64 double dims — ~4 GB at 1e9 vectors,
-    * past any sane broadcast), so above the caller's row ceiling the
-    * in-cell argmin becomes a shuffle equi-join on the coarse cell id —
-    * fine centroids partition by ccid exactly like the points they
-    * serve. Identical results (join STRATEGY only); AQE may still
-    * broadcast at runtime when the table turns out small, which is the
-    * desired adaptive behavior — the contract is only that nothing
-    * FORCES an unbounded build side. The coarse grid (√k rows) always
-    * broadcasts.
-    *
-    * Corrupt-data contract (r13 ADVICE): all three scoring steps go
-    * through [[safeCsim]], not the raw division — corpus INGEST routes
-    * through here ([[graft.sources.IvfIndex]] build/append/refresh above
-    * `routeAbove`), and under ANSI mode a single zero-norm vector would
-    * otherwise throw DIVIDE_BY_ZERO and kill the whole build job while
-    * the flat path tolerates the same row via the −2.0 sentinel. With
-    * the sentinel, a zero-norm point still lands in SOME cell (ranked by
-    * cid tiebreak among all-sentinel scores) exactly like the flat
-    * assignment — consistent behavior between the two build modes. */
+    * Corpus INGEST routes through here ([[graft.sources.IvfIndex]]
+    * build/append/refresh above `routeAbove`), so every step scores
+    * through the −2.0 sentinel of [[Nearest.csim]]: a zero-norm vector
+    * lands in SOME cell exactly like the flat assignment instead of
+    * throwing DIVIDE_BY_ZERO under ANSI mode and killing the build.
+    * Returns (id, v, cid). */
   private[graft] def routedAssignCos(pts: DataFrame, cents: DataFrame,
       coarseTab: DataFrame, id: String, v: String,
-      broadcastFine: Boolean = true): DataFrame = {
-    val f2cBase = cents.crossJoin(coarseTab)
-      .select(col("cid"), col("cv"), col("ccid"),
-        safeCsim(col("cv"), col("ccv")).as("cs"))
-      .groupBy(col("cid"))
-      .agg(min(struct((-col("cs")).as("neg"), col("ccid").as("ccid"),
-        col("cv").as("cv"))).as("s"))
-      .select(col("s.ccid").as("ccid"), col("cid"), col("s.cv").as("cv"))
-    val f2c = if (broadcastFine) broadcast(f2cBase) else f2cBase
-    val active = broadcast(f2c.select(col("ccid")).distinct()
-      .join(coarseTab, "ccid"))
-    val p2c = pts.crossJoin(active)
-      .select(col(id), col(v), col("ccid"),
-        safeCsim(col(v), col("ccv")).as("cs"))
-      .groupBy(col(id))
-      .agg(min(struct((-col("cs")).as("neg"), col("ccid").as("ccid"),
-        col(v).as("vv"))).as("s"))
-      .select(col(id), col("s.vv").as(v), col("s.ccid").as("ccid"))
-    p2c.join(f2c, "ccid")
-      .select(col(id), col(v), col("cid"),
-        safeCsim(col(v), col("cv")).as("cs"))
-      .groupBy(col(id))
-      .agg(min(struct((-col("cs")).as("neg"), col("cid").as("cid"),
-        col(v).as("vv"))).as("s"))
-      .select(col(id), col("s.vv").as(v), col("s.cid").as("cid"))
-  }
+      broadcastFine: Boolean = true): DataFrame =
+    Nearest.routed(pts, cents, coarseTab, id, v, Nearest.negCos, broadcastFine)
 
   /** Elementwise a − b over two vector columns, each element widened to
     * double BEFORE subtracting (float-subtract-then-widen rounds to
@@ -1092,7 +1045,7 @@ object Similarity {
       .select(col("qid"), col("cell"), col("s.j").as("j"), col("s.sv").as("sv"))
       .join(cb1, "j")
       .select(col("qid"), col("cell"), col("j"), col("cid"),
-        round(pqSq(col("sv"), col("cv")), 6).as("d")))
+        Nearest.l2(col("sv"), col("cv")).as("d")))
     // (qid, vid, cell) triples: a corpus vector has exactly ONE cell, so
     // each admitted pair appears once; the query side is small by
     // construction — broadcast so the codes frame never shuffles

@@ -50,24 +50,16 @@ import graft.llm.Similarity
 object IvfIndex {
 
   /** Route (vec_id, vec) rows over a quantizer and attach the SQ8
-    * layout ([[Similarity.quantizeInt8]]'s code rule: int8 codes as a
+    * layout ([[Similarity.withSq8]]'s code rule: int8 codes as a
     * TINYINT array + one scale per vector) — the full posting-list row
     * `(vec_id, cell, vec, codes, scale)` both [[build]] and [[append]]
     * write. A deployment that serves [[serveInt8]] only can drop `vec`
     * for the 4× byte shrink; keeping both lets the exact re-rank read
     * the same stored table. */
-  private def sq8(assigned: DataFrame): DataFrame = {
-    val e = transform(col("vec"), x => x.cast("double"))
-    assigned
-      .withColumn("scale",
-        round(array_max(transform(e, x => abs(x))) / lit(127.0), 9))
-      .withColumn("codes", transform(e, x =>
-        when(col("scale") === 0.0, lit(0L)).otherwise(
-          greatest(lit(-127L), least(lit(127L),
-            round(x / col("scale"), 0).cast("long")))).cast("tinyint")))
-      .select(col("vec_id"), col("cell"), col("vec"), col("codes"),
-        col("scale"))
-  }
+  private def sq8(assigned: DataFrame): DataFrame =
+    Similarity.withSq8(assigned, transform(col("vec"), x => x.cast("double")), "long")
+      .select(col("vec_id"), col("cell"), col("vec"),
+        col("codes").cast("array<tinyint>").as("codes"), col("scale"))
 
   private def postingRows(vecs: DataFrame, cents: DataFrame): DataFrame =
     sq8(Similarity.nearestCells(vecs, cents, "vec_id", "vec", 1)
@@ -75,14 +67,11 @@ object IvfIndex {
 
   /** [[postingRows]] through the two-level ROUTED assignment
     * ([[Similarity.routedAssignCos]] — the q_embed_mutual_knn_routed
-    * discipline): each vector routes to its nearest ACTIVE coarse cell
-    * (the √k grid is the first rows of the SAME mixer ordering as the
-    * fine quantizer — nested sampling), then the argmin runs over that
-    * coarse cell's fine centroids, ~N·2√k candidates instead of flat's
-    * N·k. The routed cell approximates the global argmin (the IVF
-    * nProbe=1 contract at the coarse level) — a partition-quality dial,
-    * not a result surface: [[serve]] at full probe depth is exact over
-    * the stored corpus regardless of which cell a vector landed in
+    * discipline; the √k grid is the first rows of the SAME mixer
+    * ordering as the fine quantizer — nested sampling). The routed cell
+    * approximates the global argmin — a partition-quality dial, not a
+    * result surface: [[serve]] at full probe depth is exact over the
+    * stored corpus regardless of which cell a vector landed in
     * (IvfRoutedSpec pins flat-built ≡ routed-built there). */
   private def postingRowsRouted(vecs: DataFrame, cents: DataFrame,
       coarseTab: DataFrame, broadcastFine: Boolean): DataFrame =
@@ -94,20 +83,20 @@ object IvfIndex {
     * `basePath`, created through [[Bucketing.create]]; every later
     * append, compaction, removal and refresh keeps them where they are.
     * Deterministic end to end: the quantizer is the portable-mixer
-    * sample [[Similarity.ivfCentroids]] replays, the assignment the
-    * 6dp-pinned argmin every IVF oracle unrolls.
+    * sample [[Similarity.ivfCentroids]] replays, the assignment
+    * [[Similarity.nearestCells]] — the nearest-centroid toolkit
+    * (`Similarity.Nearest`) every IVF oracle unrolls.
     *
     * Above `routeAbove` cells the build-time corpus assignment goes
-    * two-level routed (N·2√k candidates, not N·k — the recurring
-    * flat-assignment cliff, measured at ratio 32× on the first
-    * auto-scaled ×100 mutual-kNN rehearsal) and the √k coarse grid is
-    * PERSISTED as `<name>_coarse` so [[append]] and [[refresh]] route
-    * later batches through the identical structure. Above
-    * `maxBroadcastCentroids` the fine-centroid broadcast hints drop and
-    * the in-cell argmin shuffle-joins on the coarse cell id (the
-    * SemDeDup "fine-centroid broadcast ceiling" — same results,
-    * bounded build sides). The registered 64-cell indexes stay on the
-    * flat exact argmin their oracles replay. */
+    * two-level routed ([[Similarity.routedAssignCos]]: N·2√k
+    * candidates, not N·k — the recurring flat-assignment cliff,
+    * measured at ratio 32× on the first auto-scaled ×100 mutual-kNN
+    * rehearsal) and the √k coarse grid is PERSISTED as `<name>_coarse`
+    * so [[append]] and [[refresh]] route later batches through the
+    * identical structure. Above `maxBroadcastCentroids` the
+    * fine-centroid broadcast hints drop (same results, bounded build
+    * sides). The registered 64-cell indexes stay on the flat exact
+    * argmin their oracles replay. */
   def build(spark: SparkSession, emb: DataFrame, idCol: String,
       vecCol: String, name: String, numCentroids: Int = 64,
       basePath: String = Bucketing.defaultBase, routeAbove: Int = 64,
@@ -571,14 +560,17 @@ object IvfIndex {
     * corpus (mixer-sample seeds, then `lloydIters` rounds of
     * spherical-k-means refinement: assignment is the same 6dp cosine
     * argmin [[serve]] routes by, and because cosine cancels scale the
-    * plain per-cell mean routes identically to its normalized form —
-    * the refinement moves centroids INTO appended mass the r12 sample
-    * quantizer provably never picked, SCALE.md round 13, finding #3),
-    * reassigns every stored vector, and re-derives every table where
-    * it lies ([[Bucketing.rederive]]: `_cells` at k buckets), releasing
-    * each materialization and the stored-vector checkpoint. Nothing
-    * external is read: the index owns its vectors, so refresh needs no
-    * access to the original corpus.
+    * plain per-cell mean — the toolkit's Lloyd update, stored as floats
+    * — routes identically to its normalized form; the refinement moves
+    * centroids INTO appended mass the r12 sample quantizer provably
+    * never picked, SCALE.md round 13, finding #3), reassigns every
+    * stored vector, and re-derives every table where it lies
+    * ([[Bucketing.rederive]]: `_cells` at k buckets), releasing each
+    * materialization and the stored-vector checkpoint. Nothing external
+    * is read: the index owns its vectors, so refresh needs no access to
+    * the original corpus. Its own jobs (the centroid count, the
+    * stored-vector checkpoint, the dimension read) are described
+    * `"refresh <name>"`; each re-derivation keeps its own label.
     *
     * Cost: `lloydIters`+1 broadcast-argmin passes over the postings —
     * the same N·k shape [[build]] pays once; a deployment whose cell
@@ -590,47 +582,46 @@ object IvfIndex {
     * with the partition. Like [[compact]], run from the maintenance
     * window that owns `append` — not concurrently with serving. */
   def refresh(spark: SparkSession, name: String, numCentroids: Int = 0,
-      lloydIters: Int = 2, maxBroadcastCentroids: Int = 100000): Unit = {
-    val k = if (numCentroids > 0) numCentroids
-      else spark.table(s"${name}_cents").count().toInt
-    // a routed index refreshes through a REGENERATED √k coarse grid
-    // (first rows of the retrained sample's own mixer ordering — the
-    // build's nested-sampling discipline over the CURRENT corpus), so
-    // every Lloyd round and the final reassignment stay ~N·2√k
-    val routed = spark.catalog.tableExists(s"${name}_coarse")
-    val hintFine = k <= maxBroadcastCentroids
-    def fineHint(df: DataFrame): DataFrame =
-      if (hintFine) broadcast(df) else df
-    // checkpointed: the cells table is re-derived from these rows
-    val vecs = spark.table(s"${name}_cells")
-      .select(col("vec_id"), col("vec")).localCheckpoint()
-    try {
-      val dim = vecs.select(size(col("vec"))).head().getInt(0)
-      val coarseTab = if (!routed) null else broadcast(
-        Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", coarseCells(k))
-          .select(col("cid").as("ccid"), col("cv").as("ccv")))
-      def assign(cs: DataFrame): DataFrame =
-        if (routed) Similarity.routedAssignCos(vecs, cs, coarseTab,
-          "vec_id", "vec", hintFine)
-        else Similarity.nearestCells(vecs, cs, "vec_id", "vec", 1)
-      var cents = fineHint(
-        Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", k))
-      for (_ <- 1 to lloydIters) {
-        cents = fineHint(assign(cents).groupBy(col("cid"))
-          .agg(graft.functions.VectorMeanAggregator.vecMean(dim)(col("vec"))
-            .as("cm"))
-          .select(col("cid"),
-            transform(col("cm"), x => round(x, 6).cast("float")).as("cv")))
-      }
-      // each table is re-derived where it lies; the cells reassign over
-      // the centroids just stored
-      Bucketing.rederive(spark, s"${name}_cents", cents)
-      Bucketing.rederive(spark, s"${name}_cells",
-        sq8(assign(fineHint(spark.table(s"${name}_cents")))
-          .select(col("vec_id"), col("cid").as("cell"), col("vec"))), buckets = k)
-      if (routed) Bucketing.rederive(spark, s"${name}_coarse", coarseTab)
-    } finally Checkpoints.release(vecs)
-  }
+      lloydIters: Int = 2, maxBroadcastCentroids: Int = 100000): Unit =
+    JobLabel.around(spark.sparkContext, "refresh") { label =>
+      label(name)
+      val k = if (numCentroids > 0) numCentroids
+        else spark.table(s"${name}_cents").count().toInt
+      // a routed index refreshes through a REGENERATED √k coarse grid
+      // (first rows of the retrained sample's own mixer ordering — the
+      // build's nested-sampling discipline over the CURRENT corpus), so
+      // every Lloyd round and the final reassignment stay ~N·2√k
+      val routed = spark.catalog.tableExists(s"${name}_coarse")
+      val hintFine = k <= maxBroadcastCentroids
+      def fineHint(df: DataFrame): DataFrame =
+        if (hintFine) broadcast(df) else df
+      // checkpointed: the cells table is re-derived from these rows
+      val vecs = spark.table(s"${name}_cells")
+        .select(col("vec_id"), col("vec")).localCheckpoint()
+      try {
+        val dim = vecs.select(size(col("vec"))).head().getInt(0)
+        val coarseTab = if (!routed) null else broadcast(
+          Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", coarseCells(k))
+            .select(col("cid").as("ccid"), col("cv").as("ccv")))
+        def assign(cs: DataFrame): DataFrame =
+          if (routed) Similarity.routedAssignCos(vecs, cs, coarseTab,
+            "vec_id", "vec", hintFine)
+          else Similarity.nearestCells(vecs, cs, "vec_id", "vec", 1)
+        var cents = fineHint(
+          Similarity.ivfCentroidsRaw(vecs, "vec_id", "vec", k))
+        for (_ <- 1 to lloydIters) {
+          cents = fineHint(Similarity.Nearest.lloyd(assign(cents), Seq("cid"), "vec", dim)
+            .select(col("cid"), transform(col("cv"), x => x.cast("float")).as("cv")))
+        }
+        // each table is re-derived where it lies; the cells reassign over
+        // the centroids just stored
+        Bucketing.rederive(spark, s"${name}_cents", cents)
+        Bucketing.rederive(spark, s"${name}_cells",
+          sq8(assign(fineHint(spark.table(s"${name}_cents")))
+            .select(col("vec_id"), col("cid").as("cell"), col("vec"))), buckets = k)
+        if (routed) Bucketing.rederive(spark, s"${name}_coarse", coarseTab)
+      } finally Checkpoints.release(vecs)
+    }
 
   /** Serve kNN from the stored layout scoring the STORED INT8 CODES
     * first — the composed FAISS IVF-SQ8 production shape: probes route

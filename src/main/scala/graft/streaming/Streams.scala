@@ -513,9 +513,13 @@ object Streams {
     * constant-size sample) and its k rows COLLECT to the driver, because
     * the batch formulation's per-row window/argmin aggregate is illegal
     * on an append stream — instead the argmax over k cells runs as a
-    * pure PROJECTION: greatest() over k (cos, −cid) structs, which
-    * replays the batch (csim desc, cid asc) tiebreak exactly. Stateless,
-    * Append mode, row-for-row equal to the batch assignment.
+    * pure PROJECTION: greatest() over k (csim, −cid) structs, which
+    * replays the batch (csim desc, cid asc) tiebreak exactly. The score
+    * is the batch's own sentinel cosine (`Similarity.Nearest.csim`), so a
+    * zero-norm vector lands in the lowest cid instead of stopping the
+    * stream with DIVIDE_BY_ZERO, and a NaN centroid ranks last as it does
+    * in the batch. Stateless, Append mode, row-for-row equal to the
+    * batch assignment.
     *
     * Scale: k literal centroid vectors ride in the plan (k ≤ hundreds —
     * the IVF quantizer is corpus-size-independent by construction);
@@ -530,7 +534,7 @@ object Streams {
         r.getSeq[Float](1).map(_.toDouble).toArray))
     val v = col("embedding")
     val cands = cents.map { case (cid, cv) =>
-      struct(round(Similarity.cosine(v, lit(cv)), 6).as("cos"),
+      struct(Similarity.Nearest.csim(v, lit(cv)).as("cos"),
         lit(-cid).as("negCid"))
     }
     val routed = tableStream(s, sfDir, "embeddings")

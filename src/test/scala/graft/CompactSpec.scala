@@ -342,6 +342,16 @@ class CompactSpec extends AnyFunSuite {
       ivfJobs.forall(d => d == "occupancySkew count" || compactJobs(d)), ivfJobs)
     assert(compactJobs.forall((dedupJobs ++ ivfJobs).contains),
       s"every compacted table must run a labelled job: $dedupJobs $ivfJobs")
+    // a refreshing maintain: the refresh's own jobs name it, and its
+    // re-derivations and the compaction that follows keep their labels
+    val (refreshed, refreshJobs) = SparkJobs.describe(
+      IvfIndex.maintain(spark, "graft_ivf_label", maxOverMean = 0.0))
+    assert(refreshed.refreshed && refreshed.compacted, refreshed)
+    val refreshLabels = Set("occupancySkew count", "refresh graft_ivf_label",
+      "compact graft_ivf_label_cells") ++ Seq("_cents", "_cells").flatMap(t =>
+        Seq(s"rederive graft_ivf_label$t", s"create graft_ivf_label$t"))
+    assert(refreshJobs.forall(refreshLabels), refreshJobs)
+    assert(refreshJobs.contains("refresh graft_ivf_label"), refreshJobs)
     // the media and video sidecars re-derive after the compaction
     import graft.multimodal.Multimodal
     import graft.sources.{MediaIndex, VideoIndex}

@@ -611,4 +611,30 @@ class StreamSmokeSpec extends AnyFunSuite {
       Streams.streamCrawlAdmitIngest(spark, dir, "graft_lc_ca_text",
         "graft_lc_ca_img", "graft_lc_ca_aud", "graft_lc_ca_vid", lit(true)))
   }
+
+  test("streamEmbedRoute routes a zero-norm and a NaN embedding as nearestCells does") {
+    // a zero vector scores −2.0 against every cell and takes the lowest
+    // cid; a NaN vector opening the quantizer sample (mixer key 0) ranks
+    // last for every point, as it does in the batch assignment
+    import org.apache.spark.sql.functions._
+    import graft.llm.Similarity
+    import graft.streaming.Streams
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_embed_route_")
+    try {
+      val odd = Seq((999L, Array.fill(64)(0f), 0), (7911L, Array.fill(64)(Float.NaN), 0))
+        .toDF("vec_id", "embedding", "label")
+      Tables.embeddings(spark, sf0001).select("vec_id", "embedding", "label").union(odd)
+        .write.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.embeddings(spark, dir.toString)
+      val streamed = Streams.streamEmbedRoute(spark, dir.toString, numCentroids = 16)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val batch = Similarity.nearestCells(emb.select(col("vec_id"), col("embedding")),
+          Similarity.ivfCentroids(emb, "vec_id", "embedding", 16), "vec_id", "embedding", 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(streamed.size == 502 && streamed == batch)
+      assert(batch.values.toSet.size > 1, "the NaN centroid must not take every vector")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -50,4 +50,31 @@ class ToolsSpec extends AnyFunSuite {
     } yield s"$f: $s"
     assert(strays.isEmpty, s"stored-table spellings outside Bucketing/Compact: ${strays.mkString("; ")}")
   }
+
+  /** `text` without the body of `object <name> {`, matched by braces. */
+  private def withoutObject(text: String, name: String): Option[String] = {
+    val start = text.indexOf(s"object $name {")
+    if (start < 0) None
+    else {
+      var depth = 0
+      var i = text.indexOf('{', start)
+      do {
+        if (text(i) == '{') depth += 1 else if (text(i) == '}') depth -= 1
+        i += 1
+      } while (depth > 0)
+      Some(text.take(start) + text.drop(i))
+    }
+  }
+
+  test("the nearest-centroid step is spelled only in Similarity's Nearest toolkit") {
+    val similarity = Files.readString(Paths.get("src/main/scala/graft/llm/Similarity.scala"))
+    val rest = withoutObject(similarity, "Nearest")
+    assert(rest.isDefined, "Similarity.scala must hold the Nearest toolkit")
+    val sources = Seq("src/main/scala/graft/llm/Similarity.scala" -> rest.get,
+      "src/main/scala/graft/sources/IvfIndex.scala" ->
+        Files.readString(Paths.get("src/main/scala/graft/sources/IvfIndex.scala")))
+    val spellings = Seq("min(struct(", "def sq(", "pqSq", "VectorMeanAggregator.vecMean")
+    val strays = for ((f, text) <- sources; s <- spellings if text.contains(s)) yield s"$f: $s"
+    assert(strays.isEmpty, s"nearest-centroid spellings outside the toolkit: ${strays.mkString("; ")}")
+  }
 }
