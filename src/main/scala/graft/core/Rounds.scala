@@ -6,44 +6,63 @@ import scala.reflect.ClassTag
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
-/** Pregel-style rounds over co-partitioned, cached per-partition state:
-  * the round discipline of `RMat.generate`, `Iterative.ccFind`,
-  * `Iterative.pagerank` and `Triangles.triangleCount` — one collate per
-  * round, as in the reference's `oink/rmat.cpp:50-70` generate→cull loop
-  * and `oink/cc_find.cpp`.
+/** The round discipline of every iterative loop, the analog of the
+  * reference's round → `MPI_Allreduce` stop flag → in-place KV swap
+  * (`oink/cc_find.cpp:84-86`): one lifecycle — job labels, a live set of
+  * held state, [[close]] — with two kinds of step.
   *
-  * State is an RDD holding exactly ONE block per partition of
-  * `spark.sql.shuffle.partitions` partitions, vertex or key v living in
-  * partition [[Rounds.partOf]]: the loop-invariant data (an adjacency, an
-  * edge set), built once, plus primitive arrays aligned to it.
+  * Block steps: Pregel-style rounds over co-partitioned, cached
+  * per-partition state, the discipline of `RMat.generate`,
+  * `Iterative.ccFind`, `Iterative.pagerank` and `Triangles.triangleCount`
+  * — one collate per round, as in the reference's `oink/rmat.cpp:50-70`
+  * generate→cull loop and `oink/cc_find.cpp`. State is an RDD holding
+  * exactly ONE block per partition of `spark.sql.shuffle.partitions`
+  * partitions, vertex or key v living in partition [[Rounds.partOf]]: the
+  * loop-invariant data (an adjacency, an edge set), built once, plus
+  * primitive arrays aligned to it. Data moves as blocks, the shape of the
+  * reference's `aggregate()` over `Irregular::exchange`
+  * (`src/mapreduce.cpp:385-563`): each sending partition addresses at
+  * most one message block — a few primitive arrays it has already
+  * combined — to each receiving partition, one shuffle carries the
+  * blocks, and each receiver gets its blocks sorted by sender partition.
+  * Folding them in that order makes floating-point sums reproducible for
+  * a given layout. [[init]] builds the state from routed blocks; a round
+  * ([[step]]) exchanges the state's blocks, folds them into the state of
+  * the same partition — a narrow zip, no join to plan — and submits ONE
+  * action, `runJob`, whose per-partition summaries come back in partition
+  * order.
   *
-  * Data moves as blocks, the shape of the reference's `aggregate()` over
-  * `Irregular::exchange` (`src/mapreduce.cpp:385-563`): each sending
-  * partition addresses at most one message block — a few primitive
-  * arrays it has already combined — to each receiving partition, one
-  * shuffle carries the blocks, and each receiver gets its blocks sorted
-  * by sender partition. Folding them in that order makes floating-point
-  * sums reproducible for a given layout. [[init]] builds the state from
-  * routed blocks; a round ([[step]]) exchanges the state's blocks, folds
-  * them into the state of the same partition — a narrow zip, no join to
-  * plan — and submits ONE action, `runJob`, whose per-partition summaries
-  * come back in partition order.
+  * Frame steps: [[iterate]] runs a loop whose state is a DataFrame
+  * planned anew each round (`Iterative.ccFindStar`, `lubyMis`, `kCore`,
+  * `Triangles.kTruss`, `Anf`, ...). Each round's frame is
+  * local-checkpointed lazily — the analog of the reference's in-place KV
+  * replacement — and the loop's one measuring action materializes it
+  * (usually [[rows]]); the round before is released once it has.
+  * Loop-invariant inputs are [[hold]]: persisted for the loop
+  * (`oink/sssp.cpp:75-76` idiom); frames a round keeps beyond its own
+  * state are [[keep]]: checkpointed until [[close]].
   *
   * Every job a `Rounds` submits is described as `"<op> init"`,
-  * `"<op> round <k>"` or `"<op> frame"`; [[close]] restores the caller's
-  * description. The job group is left alone.
+  * `"<op> round <k>"` or `"<op> frame"` (a frame round may run several
+  * jobs); [[close]] restores the caller's description. The job group is
+  * left alone.
   *
-  * Every block RDD is local-checkpointed: cached, with its lineage cut
-  * once a job materializes it, so a long loop does not drag a growing
-  * chain of zipped parents into every task. [[close]] unpersists whatever
-  * is still live; loops call it from `finally`, so the failure paths free
-  * their rounds too.
+  * Every block RDD and frame is local-checkpointed: cached, with its
+  * lineage cut once a job materializes it, so a long loop does not drag a
+  * growing chain of parents into every task. [[close]] frees whatever is
+  * still live or held, except what the loop returns ([[frame]],
+  * [[result]]); loops call it from `finally`, so the failure paths free
+  * their rounds too, and the caller's `Checkpoints.release` of the
+  * returned frame frees the rest.
   */
 final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
   private val sc = spark.sparkContext
   private val live = mutable.LinkedHashSet.empty[RDD[_]]
+  private val held = mutable.ArrayBuffer.empty[DataFrame]
   private val label = new JobLabel(sc, op)
   private var round = 0
 
@@ -89,10 +108,76 @@ final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
     spark.createDataFrame(state.flatMap(rows), schema).localCheckpoint()
   }
 
+  /** Frame rounds: round k makes the next state from the last with
+    * `round`; each state — `init` too — is local-checkpointed lazily and
+    * `more`, the state's measuring action, materializes it and says
+    * whether to go on. The state before is released once the next is
+    * measured. A frame `round` returns already [[keep]]-ed is the loop's
+    * own and stays until [[close]]. Stops after `maxIter` rounds; returns
+    * the last state and the rounds run. */
+  def iterate(init: DataFrame, maxIter: Int)(round: DataFrame => DataFrame)(
+      more: DataFrame => Boolean): (DataFrame, Int) = {
+    def adopt(df: DataFrame): (DataFrame, Boolean) =
+      if (checkpointOf(df).exists(live)) (df, false) else (keep(df), true)
+    var (state, owned) = adopt(init)
+    var go = more(state)
+    var k = 0
+    while (go && k < maxIter) {
+      k += 1
+      describe(s"round $k")
+      val (next, nextOwned) = adopt(round(state))
+      go = more(next)
+      if (owned) checkpointOf(state).foreach { rdd => live -= rdd; rdd.unpersist(blocking = false) }
+      state = next
+      owned = nextOwned
+    }
+    (state, k)
+  }
+
+  /** `df` local-checkpointed (and materialized now if `eager`), held until
+    * [[close]]. */
+  def keep(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val kept = df.localCheckpoint(eager = false)
+    live ++= checkpointOf(kept)
+    if (eager) rows(kept)
+    kept
+  }
+
+  /** A loop-invariant input, persisted until [[close]]. */
+  def hold(df: DataFrame): DataFrame = {
+    held += df.persist(StorageLevel.MEMORY_AND_DISK)
+    df
+  }
+
+  /** The row count of a [[keep]]-ed frame: one job, which materializes
+    * its checkpoint — the job of an eager `localCheckpoint`. */
+  def rows(kept: DataFrame): Long = checkpointOf(kept).get.count()
+
+  /** `df` checkpointed as the loop's frame (one job); it outlives
+    * [[close]]. */
+  def frame(df: DataFrame): DataFrame = {
+    describe("frame")
+    result(keep(df, eager = true))
+  }
+
+  /** `df`, which the loop returns: [[close]] leaves the checkpoints it
+    * reads, for the caller's `Checkpoints.release`. */
+  def result(df: DataFrame): DataFrame = {
+    live --= df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+    df
+  }
+
   def close(): Unit = {
     live.foreach(_.unpersist(blocking = false))
     live.clear()
+    held.foreach(_.unpersist(blocking = false))
+    held.clear()
     label.close()
+  }
+
+  private def checkpointOf(df: DataFrame): Option[RDD[_]] = df.queryExecution.analyzed match {
+    case l: LogicalRDD => Some(l.rdd)
+    case _ => None
   }
 
   /** The (receiver, block) pairs of `blocks` delivered: partition p holds
@@ -116,6 +201,12 @@ final class Rounds(spark: SparkSession, op: String) extends AutoCloseable {
 }
 
 object Rounds {
+
+  /** `body` on a fresh `Rounds` for `op`, closed on every exit path. */
+  def around[T](spark: SparkSession, op: String)(body: Rounds => T): T = {
+    val rounds = new Rounds(spark, op)
+    try body(rounds) finally rounds.close()
+  }
 
   /** The state partition of key `v` among `parts`: `HashPartitioner`'s
     * placement of a boxed Long. */

@@ -96,8 +96,7 @@ object RMat {
       maxRounds: Int = 20): DataFrame = {
     require(p.nlevels <= 31, s"nlevels ${p.nlevels} > 31: an edge packs into one Long")
     val target = p.nnonzero.toLong * (1L << p.nlevels)
-    val rounds = new Rounds(spark, "rmat")
-    try {
+    Rounds.around(spark, "rmat") { rounds =>
       val parts = rounds.parts
       var edges = rounds.init[Unit, Unit, EdgeSet](spark.sparkContext.emptyRDD)(
         _ => Iterator.empty)((part, _) => new EdgeSet(part, Array.emptyLongArray))
@@ -120,7 +119,7 @@ object RMat {
         s"rmat under-delivered $have/$target edges after $round rounds")
       val (shift, mask) = (p.nlevels, (1L << p.nlevels) - 1)
       rounds.frame(edges, Schema)(_.edges.iterator.map(e => Row(e >>> shift, e & mask)))
-    } finally rounds.close()
+    }
   }
 
   /** State partition `part`'s sorted edge set. */

@@ -1,7 +1,11 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.core.Rounds
 
 /** Approximate neighborhood function (the ANF / HyperBall family:
   * Palmer et al. 2002 "ANF: a fast and scalable tool for data mining in
@@ -27,9 +31,10 @@ import org.apache.spark.sql.functions._
   * (KmvSketchAggregator: map-side partials, the shuffle carries ≤ k
   * hashes per (partition, vertex); hub vertices cost O(k) memory like
   * every bounded aggregator in this repo). Rounds are fixed and small
-  * (2–6 for diameter probes); each round localCheckpoints to cut
-  * lineage, the iterative-driver discipline. Vertices touching no
-  * non-loop edge are excluded (their neighborhood is trivially {v}).
+  * (2–6 for diameter probes) and run on [[graft.core.Rounds]]: each
+  * round's sketch frame is checkpointed to cut lineage, and the frames
+  * a result does not read are freed when it is built. Vertices touching
+  * no non-loop edge are excluded (their neighborhood is trivially {v}).
   *
   * Estimate: exact when the sketch saw fewer than k distinct hashes,
   * else (k−1)·(M+1) div (h_k + 1) — KmvDistinct's estimator verbatim,
@@ -44,51 +49,40 @@ object Anf {
         s"(${k - 1}L * ${KmvDistinct.M + 1}L) div (element_at(hs, $k) + 1L)"))
   }
 
-  /** The per-round sketch frames (v, hs) for r = 1..rounds, computed
-    * INCREMENTALLY — round r's sketches build on r−1's, so the whole
-    * curve costs `rounds` expansion joins, not rounds·(rounds+1)/2. */
+  /** `use` of the per-round sketch frames (v, hs) for r = 1..rounds,
+    * computed INCREMENTALLY — round r's sketches build on r−1's, so the
+    * whole curve costs `rounds` expansion joins, not rounds·(rounds+1)/2.
+    * Every round's frame is checkpointed; the ones `use`'s frame does not
+    * read are released when it returns. */
   private def sketchRounds(edges: DataFrame, rounds: Int, k: Int,
-      seed: Long): Seq[DataFrame] = {
+      seed: Long)(use: Seq[DataFrame] => DataFrame): DataFrame = {
     import graft.operators.KmvDistinct
     require(rounds >= 1, "need at least one expansion round")
     require(k >= 2, "a 1-value sketch cannot estimate")
-    val sym = edges.where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
-    val kmv = udaf(new KmvDistinct.KmvSketchAggregator(k), Encoders.scalaLong)
-    var sk: DataFrame = sym.select(col("src").as("v")).distinct()
-      .select(col("v"), KmvDistinct.hashed(col("v"), seed).as("h"))
-    val rs = (1 to rounds).map { _ =>
-      val contrib = sym.join(sk.withColumnRenamed("v", "dst"), "dst")
-        .select(col("src").as("v"), col("h"))
-      val skArr = sk.unionByName(contrib)
-        .groupBy(col("v")).agg(kmv(col("h")).as("hs"))
-        .localCheckpoint()
-      sk = skArr.select(col("v"), explode(col("hs")).as("h"))
-      skArr
+    Rounds.around(edges.sparkSession, "anf") { loop =>
+      val sym = loop.keep(GraphOps.symmetric(edges), eager = true)
+      val kmv = udaf(new KmvDistinct.KmvSketchAggregator(k), Encoders.scalaLong)
+      val frames = mutable.ArrayBuffer.empty[DataFrame]
+      val init = sym.select(col("v")).distinct()
+        .select(col("v"), array(KmvDistinct.hashed(col("v"), seed)).as("hs"))
+      loop.iterate(init, rounds) { last =>
+        val sk = last.select(col("v"), explode(col("hs")).as("h"))
+        val contrib = sym.join(sk.withColumnRenamed("v", "nbr"), "nbr")
+          .select(col("v"), col("h"))
+        val skArr = loop.keep(sk.unionByName(contrib)
+          .groupBy(col("v")).agg(kmv(col("h")).as("hs")), eager = true)
+        frames += skArr
+        skArr
+      }(_ => true)
+      loop.result(use(frames.toSeq))
     }
-    // Every round above checkpointed EAGERLY, so the symmetric edge list
-    // is dead here — but it is not in any returned frame's lineage, so
-    // the harness's terminal Checkpoints.release can never find it and
-    // its blocks outlive the query. Across repeated bench samples the
-    // leaked edge lists accumulated into the GC pressure behind r9's
-    // 39.8 s q_anf_profile outlier; release it at the source instead.
-    graft.core.Checkpoints.release(sym)
-    rs
   }
 
   /** (v, est_reach): estimated |N(v, rounds)| per vertex, self
     * included. */
   def neighborhoodEstimate(edges: DataFrame, rounds: Int = 2,
       k: Int = 32, seed: Long = 7L): DataFrame = {
-    val rs = sketchRounds(edges, rounds, k, seed)
-    // only the final round's sketches reach the result; earlier rounds'
-    // checkpoint blocks are dead and invisible to the terminal release
-    graft.core.Checkpoints.release(rs.init: _*)
-    rs.last.select(col("v"), estimate(k).as("est_reach"))
+    sketchRounds(edges, rounds, k, seed)(_.last.select(col("v"), estimate(k).as("est_reach")))
   }
 
   /** (r, total_reach) for r = 1..rounds — the neighborhood function
@@ -96,12 +90,12 @@ object Anf {
     * diameter. One incremental sketch pass serves every radius. */
   def neighborhoodProfile(edges: DataFrame, rounds: Int = 3,
       k: Int = 32, seed: Long = 7L): DataFrame =
-    sketchRounds(edges, rounds, k, seed).zipWithIndex.map {
+    sketchRounds(edges, rounds, k, seed)(_.zipWithIndex.map {
       case (skArr, i) =>
         skArr.select(estimate(k).as("est_reach"))
           .agg(sum(col("est_reach")).as("total_reach"))
           .select(lit((i + 1).toLong).as("r"), col("total_reach"))
-    }.reduce(_ unionByName _)
+    }.reduce(_ unionByName _))
 
   /** One-row (r_eff, coverage): the EFFECTIVE DIAMETER read off the
     * neighborhood function — the smallest probed radius whose total
@@ -144,14 +138,12 @@ object Anf {
     * the repo's double-parity discipline). */
   def harmonicCentrality(edges: DataFrame, rounds: Int = 3,
       k: Int = 32, seed: Long = 7L): DataFrame = {
-    val ests = sketchRounds(edges, rounds, k, seed).zipWithIndex.map {
-      case (skArr, i) => skArr.select(col("v"), estimate(k).as(s"est${i + 1}"))
-    }
-    val joined = ests.reduce((a, b) => a.join(b, "v"))
     val h = (1 to rounds).map { r =>
       val prev = if (r == 1) lit(1L) else col(s"est${r - 1}")
       (col(s"est$r") - prev) / lit(r.toDouble)
     }.reduce(_ + _)
-    joined.select(col("v"), round(h, 6).as("harmonic"))
+    sketchRounds(edges, rounds, k, seed)(_.zipWithIndex.map {
+      case (skArr, i) => skArr.select(col("v"), estimate(k).as(s"est${i + 1}"))
+    }.reduce((a, b) => a.join(b, "v")).select(col("v"), round(h, 6).as("harmonic")))
   }
 }

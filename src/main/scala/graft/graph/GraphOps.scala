@@ -71,6 +71,14 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .distinct()
 
+  /** Symmetric adjacency (v, nbr): both orientations of every
+    * [[edgeUpper]] edge — self-loops dropped, deduplicated. */
+  def symmetric(edges: DataFrame): DataFrame = {
+    val u = edgeUpper(edges)
+    u.select(col("src").as("v"), col("dst").as("nbr"))
+      .union(u.select(col("dst").as("v"), col("src").as("nbr")))
+  }
+
   /** vertex_extract (`oink/vertex_extract.cpp:48-50`): distinct vertices. */
   def vertexExtract(edges: DataFrame): DataFrame =
     edges.select(explode(array(col("src"), col("dst"))).as("v")).distinct()
@@ -102,8 +110,7 @@ object GraphOps {
       maxDegree: Option[Long] = None): DataFrame = {
     val u = edgeUpper(edges)
     val deg = degree(u)
-    val adj = u.select(col("src").as("z"), col("dst").as("n"))
-      .union(u.select(col("dst").as("z"), col("src").as("n")))
+    val adj = symmetric(edges).select(col("v").as("z"), col("nbr").as("n"))
     val centers = maxDegree match {
       case Some(cap) => adj.join(
         deg.where(col("degree") <= cap).select(col("v").as("z")), "z")

@@ -1,9 +1,10 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Rounds
 
@@ -26,25 +27,19 @@ import graft.core.Rounds
   * arrays, and ONE Spark job (`runJob`) returns the per-partition
   * summaries — the changed-label count, Σcontrib and Σ|Δrank| — that
   * decide convergence on the driver (the analog of the reference's
-  * terminal `MPI_Allreduce` flag, `oink/cc_find.cpp:84-86`). They return
-  * a `localCheckpoint()`ed frame and unpersist every round's RDDs on all
-  * exit paths.
+  * terminal `MPI_Allreduce` flag, `oink/cc_find.cpp:84-86`).
   *
   * The other loops here ([[ccFindStar]], [[lubyMis]], [[ssspMulti]],
-  * [[kCore]], ...) still plan a DataFrame per round: every round ends in
-  * `localCheckpoint()` to cut lineage (the analog of the reference's
-  * in-place KV replacement), convergence is a driver-side count, and
-  * loop-invariant inputs are partitioned by their join key once and
-  * persisted (`oink/sssp.cpp:75-76` idiom).
+  * [[kCore]], ...) rewrite a DataFrame per round, on the same
+  * [[graft.core.Rounds]] lifecycle ([[graft.core.Rounds.iterate]]): each
+  * keeps only its round body and its stop test, a driver-side count;
+  * `Rounds` checkpoints each round's frame, releases the round before,
+  * holds the loop-invariant inputs — partitioned by their join key once
+  * (`oink/sssp.cpp:75-76` idiom) — and labels every job. Every loop frees
+  * what it held on all exit paths, and the caller's
+  * `Checkpoints.release` of the returned frame frees the rest.
   */
 object Iterative {
-
-  /** Symmetric adjacency (v, nbr), self-loops dropped, deduped. */
-  private def symmetric(edges: DataFrame): DataFrame = {
-    val u = GraphOps.edgeUpper(edges)
-    u.select(col("src").as("v"), col("dst").as("nbr"))
-      .union(u.select(col("dst").as("v"), col("src").as("nbr")))
-  }
 
   /** cc_find (`oink/cc_find.cpp:38-109`): connected components by min-label
     * propagation to fixpoint; label = min vertex id in the component
@@ -56,9 +51,8 @@ object Iterative {
     * component never concentrates on one task — the skew the reference
     * had to hand-salt doesn't arise.
     */
-  def ccFind(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val rounds = new Rounds(edges.sparkSession, "ccFind")
-    try {
+  def ccFind(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    Rounds.around(edges.sparkSession, "ccFind") { rounds =>
       val parts = rounds.parts
       var state = rounds.init(Csr.edgePairs(edges))(Csr.route(parts, directed = false)) {
         (_, pairs) =>
@@ -81,8 +75,7 @@ object Iterative {
       }
       rounds.frame(state, CcSchema)(b =>
         Iterator.range(0, b.adj.size).map(i => Row(b.adj.vs(i), b.label(i))))
-    } finally rounds.close()
-  }
+    }
 
   /** A [[ccFind]] state block: each vertex's label and whether the last
     * round lowered it. */
@@ -144,73 +137,62 @@ object Iterative {
     * neighbors. At fixpoint every component is a star rooted at its
     * minimum vertex.
     */
-  def ccFindStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val vertices = GraphOps.vertexExtract(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // canonical orientation big→small, matching the per-round output so
-    // the convergence set-difference compares like with like
-    var e = GraphOps.edgeUpper(edges)
-      .select(col("dst").as("u"), col("src").as("v"))
-      .localCheckpoint()
-    var eCount = -1L
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // large-star: over symmetric neighborhoods, attach big neighbors to
-      // the neighborhood minimum
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy(col("u"))
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      // no distinct here: sym is a distinct set and mins is 1-row-per-u,
-      // so duplicates arise only when two neighborhoods share a minimum —
-      // bounded volume the small-star groupBy and the final distinct
-      // absorb anyway, whereas the distinct was a full extra shuffle
-      // every round
-      val large = sym.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      // small-star: orient edges large→small, re-hang small neighbors on
-      // the minimum (plus the center itself)
-      val down = large
-        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      val smallMins = down.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val rehung = down.join(smallMins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(down.join(smallMins, "u").select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("nu"), greatest(col("u"), col("v")).as("nv"))
-        .select(col("nv").as("u"), col("nu").as("v"))
-        .distinct()
-        .localCheckpoint(eager = false) // the count below materializes
-      // convergence: both sides are distinct canonical edge sets, so
-      // unequal COUNTS prove the sets differ — a scan-only job on the
-      // fresh checkpoint, no join. Only when counts match (typically the
-      // final round, and rarely a mid-run coincidence) is the exact
-      // symmetric difference computed, as one full-outer join with
-      // null-side markers. Saves the per-round diff-join shuffle for
-      // every converging round.
-      val rehungCount = rehung.count()
-      changed =
-        if (rehungCount != eCount) 1L
-        else rehung.withColumn("l", lit(1))
-          .join(e.withColumn("r", lit(1)), Seq("u", "v"), "full")
+  def ccFindStar(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    Rounds.around(edges.sparkSession, "ccFindStar") { loop =>
+      val vertices = loop.hold(GraphOps.vertexExtract(edges))
+      var (last, lastN) = (null: DataFrame, -1L) // the state before, and its count
+      // canonical orientation big→small, matching the per-round output so
+      // the convergence set-difference compares like with like
+      val init = GraphOps.edgeUpper(edges).select(col("dst").as("u"), col("src").as("v"))
+      val (e, _) = loop.iterate(init, maxIter) { e =>
+        // large-star: over symmetric neighborhoods, attach big neighbors to
+        // the neighborhood minimum
+        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = sym.groupBy(col("u"))
+          .agg(least(min(col("v")), first(col("u"))).as("m"))
+        // no distinct here: sym is a distinct set and mins is 1-row-per-u,
+        // so duplicates arise only when two neighborhoods share a minimum —
+        // bounded volume the small-star groupBy and the final distinct
+        // absorb anyway, whereas the distinct was a full extra shuffle
+        // every round
+        val large = sym.join(mins, "u")
+          .where(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .where(col("u") =!= col("v"))
+        // small-star: orient edges large→small, re-hang small neighbors on
+        // the minimum (plus the center itself)
+        val down = large
+          .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+        val smallMins = down.groupBy(col("u")).agg(min(col("v")).as("m"))
+        down.join(smallMins, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(down.join(smallMins, "u").select(col("u"), col("m").as("v")))
+          .where(col("u") =!= col("v"))
+          .select(least(col("u"), col("v")).as("nu"), greatest(col("u"), col("v")).as("nv"))
+          .select(col("nv").as("u"), col("nu").as("v"))
+          .distinct()
+      } { e =>
+        // convergence: both sides are distinct canonical edge sets, so
+        // unequal COUNTS prove the sets differ — the count is the job that
+        // materializes the fresh checkpoint, no join. Only when counts
+        // match (typically the final round, and rarely a mid-run
+        // coincidence) is the exact symmetric difference computed, as one
+        // full-outer join with null-side markers.
+        val n = loop.rows(e)
+        val changed = n != lastN || e.withColumn("l", lit(1))
+          .join(last.withColumn("r", lit(1)), Seq("u", "v"), "full")
           .where(col("l").isNull || col("r").isNull)
-          .count()
-      eCount = rehungCount
-      graft.core.Checkpoints.release(e) // after the diff-join consumed it
-      e = rehung
-      iter += 1
+          .count() > 0
+        last = e
+        lastN = n
+        changed
+      }
+      // at fixpoint components are stars rooted at their minimum: each
+      // non-root points at the root; roots label themselves
+      val labels = e.select(col("u").as("v"), col("v").as("label"))
+      loop.frame(vertices.join(labels, Seq("v"), "left")
+        .select(col("v"), coalesce(col("label"), col("v")).as("label")))
     }
-    // at fixpoint components are stars rooted at their minimum: each
-    // non-root points at the root; roots label themselves
-    val labels = e.select(col("u").as("v"), col("v").as("label"))
-    val out = vertices.join(labels, Seq("v"), "left")
-      .select(col("v"), coalesce(col("label"), col("v")).as("label"))
-      .localCheckpoint()
-    vertices.unpersist()
-    graft.core.Checkpoints.release(e) // final star set folded into out
-    out
-  }
 
   /** cc_stats (`oink/cc_stats.cpp:47-56`): #components per size. */
   def ccStats(labels: DataFrame): DataFrame =
@@ -260,97 +242,75 @@ object Iterative {
     * depth grows with graph size (O(log n)), so the registered query
     * asserts rounds ≤ the unrolled constant for a clear margin-breach
     * message instead of an opaque hash diff (r10 ADVICE). */
-  def maximalMatchingWithRounds(edges: DataFrame): (DataFrame, Int) = {
-    val eprio = lubyPriority(
-      pmod(col("src"), lit(1000000007L)) * lit(100003L) + col("dst"),
-      MatchingSeed)
-    var u = GraphOps.edgeUpper(edges).withColumn("prio", eprio)
-      .localCheckpoint()
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var m = u.count()
-    var iter = 0
-    val empty = u.select(col("src"), col("dst")).limit(0).localCheckpoint()
-    while (m > 0 && iter < MatchingMaxIter) {
-      val e = struct(col("prio"), col("src"), col("dst"))
-      val best = u
-        .select(explode(array(col("src"), col("dst"))).as("v"), e.as("e"))
-        .groupBy(col("v")).agg(min(col("e")).as("b"))
-      val matched = u
-        .join(best.select(col("v").as("src"), col("b").as("bs")), "src")
-        .join(best.select(col("v").as("dst"), col("b").as("bd")), "dst")
-        .where(e === col("bs") && e === col("bd"))
-        .select(col("src"), col("dst"))
-        .localCheckpoint()
-      rounds += matched
-      val mv = matched
-        .select(explode(array(col("src"), col("dst"))).as("v")).distinct()
-      val u2 = u
-        .join(mv.select(col("v").as("src")), Seq("src"), "left_anti")
-        .join(mv.select(col("v").as("dst")), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst"), col("prio"))
-        .localCheckpoint(eager = false) // the count below materializes
-      m = u2.count()
-      graft.core.Checkpoints.release(u)
-      u = u2
-      iter += 1
+  def maximalMatchingWithRounds(edges: DataFrame): (DataFrame, Int) =
+    Rounds.around(edges.sparkSession, "maximalMatching") { loop =>
+      val eprio = lubyPriority(
+        pmod(col("src"), lit(1000000007L)) * lit(100003L) + col("dst"),
+        MatchingSeed)
+      val init = GraphOps.edgeUpper(edges).withColumn("prio", eprio)
+      val matched = mutable.ArrayBuffer.empty[DataFrame]
+      val (_, iter) = loop.iterate(init, MatchingMaxIter) { u =>
+        val e = struct(col("prio"), col("src"), col("dst"))
+        val best = u
+          .select(explode(array(col("src"), col("dst"))).as("v"), e.as("e"))
+          .groupBy(col("v")).agg(min(col("e")).as("b"))
+        val m = loop.keep(u
+          .join(best.select(col("v").as("src"), col("b").as("bs")), "src")
+          .join(best.select(col("v").as("dst"), col("b").as("bd")), "dst")
+          .where(e === col("bs") && e === col("bd"))
+          .select(col("src"), col("dst")), eager = true)
+        matched += m
+        val mv = m.select(explode(array(col("src"), col("dst"))).as("v")).distinct()
+        u.join(mv.select(col("v").as("src")), Seq("src"), "left_anti")
+          .join(mv.select(col("v").as("dst")), Seq("dst"), "left_anti")
+          .select(col("src"), col("dst"), col("prio"))
+      }(loop.rows(_) > 0)
+      (loop.result(unionOf(matched.toSeq, init.select(col("src"), col("dst")))), iter)
     }
-    graft.core.Checkpoints.release(u)
-    ((empty +: rounds.toSeq).reduce(_ unionByName _), iter)
-  }
+
+  /** The union of a loop's per-round frames, or no rows of `like`'s
+    * schema. */
+  private def unionOf(frames: Seq[DataFrame], like: DataFrame): DataFrame =
+    frames.reduceOption(_ union _).getOrElse(like.sparkSession.createDataFrame(
+      like.sparkSession.sparkContext.emptyRDD[Row], like.schema))
 
   /** luby_find (`oink/luby_find.cpp:60-90`): maximal independent set.
     * The reference draws per-vertex random priorities from a seeded RNG
     * (`oink/cc_find.cpp:45-46` pattern); we use the replayable
     * [[lubyPriority]] mixer — same role, deterministic on any cluster
     * layout AND on the oracle engine. Returns (v) ∈ MIS. */
-  def lubyMis(edges: DataFrame, seed: Long = 12345L, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    // the adjacency never changes — checkpoint ONCE; each round filters
-    // it against the shrinking active set at use time (the nbr-side prio
-    // join only keeps active neighbors, and inactive centers fall out of
-    // the left join from `active`). Round 4 change: the previous version
-    // re-checkpointed a shrinking adj copy every round — one more
-    // materialization per round for no change in the winner rule.
-    val adj = symmetric(edges).localCheckpoint()
-    var active = adj.select(col("v")).distinct()
-      .withColumn("prio", lubyPriority(col("v"), seed))
-      .localCheckpoint()
-    // winners per round are each checkpointed; the MIS union is assembled
-    // once at the end instead of re-checkpointing an ever-growing
-    // accumulator every round (one fewer job per round, same result)
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var activeN = active.count()
-    var iter = 0
-    while (activeN > 0 && iter < maxIter) {
-      // winner: priority strictly below every active neighbor's
-      val nbrPrio = adj
-        .join(active.select(col("v").as("nbr"), col("prio").as("nprio")), "nbr")
-        .groupBy(col("v")).agg(min(struct(col("nprio"), col("nbr"))).as("minNbr"))
-      val winners = active.join(nbrPrio, Seq("v"), "left")
-        .where(col("minNbr").isNull ||
-          struct(col("prio"), col("v")) < col("minNbr"))
-        .select(col("v"))
-        .localCheckpoint()
-      rounds += winners
-      // remove winners and their neighborhoods (inactive neighbors are
-      // harmless in `removed` — the anti-join ignores them)
-      val removed = winners
-        .union(adj.join(winners, "v").select(col("nbr").as("v")))
-        .distinct()
-      val nextActive = active.join(removed, Seq("v"), "left_anti")
-        .localCheckpoint(eager = false) // the count below materializes
-      activeN = nextActive.count()
-      graft.core.Checkpoints.release(active) // winners are separately checkpointed
-      active = nextActive
-      iter += 1
+  def lubyMis(edges: DataFrame, seed: Long = 12345L, maxIter: Int = 50): DataFrame =
+    Rounds.around(edges.sparkSession, "lubyMis") { loop =>
+      // the adjacency never changes — checkpoint ONCE; each round filters
+      // it against the shrinking active set at use time (the nbr-side prio
+      // join only keeps active neighbors, and inactive centers fall out of
+      // the left join from `active`)
+      val adj = loop.keep(GraphOps.symmetric(edges), eager = true)
+      // winners per round are each checkpointed; the MIS union is assembled
+      // once at the end instead of re-checkpointing an ever-growing
+      // accumulator every round (one fewer job per round, same result)
+      val winners = mutable.ArrayBuffer.empty[DataFrame]
+      val init = adj.select(col("v")).distinct()
+        .withColumn("prio", lubyPriority(col("v"), seed))
+      loop.iterate(init, maxIter) { active =>
+        // winner: priority strictly below every active neighbor's
+        val nbrPrio = adj
+          .join(active.select(col("v").as("nbr"), col("prio").as("nprio")), "nbr")
+          .groupBy(col("v")).agg(min(struct(col("nprio"), col("nbr"))).as("minNbr"))
+        val won = loop.keep(active.join(nbrPrio, Seq("v"), "left")
+          .where(col("minNbr").isNull ||
+            struct(col("prio"), col("v")) < col("minNbr"))
+          .select(col("v")), eager = true)
+        winners += won
+        // remove winners and their neighborhoods (inactive neighbors are
+        // harmless in `removed` — the anti-join ignores them)
+        val removed = won
+          .union(adj.join(won, "v").select(col("nbr").as("v")))
+          .distinct()
+        active.join(removed, Seq("v"), "left_anti")
+      }(loop.rows(_) > 0)
+      loop.result(unionOf(winners.toSeq, init.select(col("v"))))
     }
-    val out = rounds.reduceOption(_ union _).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        active.select("v").schema))
-    graft.core.Checkpoints.release(active, adj)
-    out
-  }
 
   /** Label propagation communities: every vertex starts as its own label
     * and each synchronous round adopts the most frequent label among its
@@ -360,29 +320,18 @@ object Iterative {
     * rounds. Deterministic end to end. Per round: one adjacency join +
     * two partial-aggregated shuffles ((v, label) counts, then argmax per
     * v via min(struct(-cnt, label)) — never a per-vertex collect). */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
-    val adj = symmetric(edges)
-      .repartition(col("nbr"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = adj.select(col("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
-    var i = 0
-    while (i < rounds) {
-      val next = adj
-        .join(labels.select(col("v").as("nbr"), col("label")), "nbr")
-        .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("m"))
-        .select(col("v"), col("m.l").as("label"))
-        .localCheckpoint()
-      graft.core.Checkpoints.release(labels)
-      labels = next
-      i += 1
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame =
+    Rounds.around(edges.sparkSession, "labelPropagation") { loop =>
+      val adj = loop.hold(GraphOps.symmetric(edges).repartition(col("nbr")))
+      val init = adj.select(col("v")).distinct().withColumn("label", col("v"))
+      loop.result(loop.iterate(init, rounds) { labels =>
+        adj.join(labels.select(col("v").as("nbr"), col("label")), "nbr")
+          .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("v"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("m"))
+          .select(col("v"), col("m.l").as("label"))
+      } { labels => loop.rows(labels); true }._1)
     }
-    adj.unpersist()
-    labels
-  }
 
   /** k-core: iteratively peel vertices of (undirected) degree < k until
     * fixpoint; returns each surviving vertex with its degree inside the
@@ -393,26 +342,18 @@ object Iterative {
     * rounds at fixpoint are no-ops, which is what lets the oracle unroll
     * a fixed round budget). Per round: one degree aggregation + two
     * semi-join-shaped filters, all partial-aggregated and skew-free. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    var g = symmetric(edges).localCheckpoint()
-    var m = g.count()
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      val keep = g.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("v"))
-      val g2 = g.join(keep, "v")
-        .join(keep.withColumnRenamed("v", "nbr"), "nbr")
-        .select(col("v"), col("nbr"))
-        .localCheckpoint(eager = false) // the count below materializes
-      val m2 = g2.count()
-      changed = m2 != m
-      graft.core.Checkpoints.release(g)
-      g = g2; m = m2
-      iter += 1
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame =
+    Rounds.around(edges.sparkSession, "kCore") { loop =>
+      var m = -1L // the edge count before
+      val (g, _) = loop.iterate(GraphOps.symmetric(edges), maxIter) { g =>
+        val keep = g.groupBy(col("v")).agg(count(lit(1)).as("deg"))
+          .where(col("deg") >= k).select(col("v"))
+        g.join(keep, "v")
+          .join(keep.withColumnRenamed("v", "nbr"), "nbr")
+          .select(col("v"), col("nbr"))
+      } { g => val before = m; m = loop.rows(g); m != before }
+      loop.result(g.groupBy(col("v")).agg(count(lit(1)).as("deg")))
     }
-    g.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-  }
 
   /** sssp (`oink/sssp.cpp:49-160`): Bellman-Ford frontier relaxation from
     * one source over weighted directed edges (src, dst, w) — [[ssspMulti]]
@@ -446,34 +387,31 @@ object Iterative {
     require(sources.nonEmpty, "ssspMulti needs at least one source")
     val spark = weighted.sparkSession
     import spark.implicits._
-    val edges = weighted.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.map(s => (s, s, 0.0)).toDF("source", "v", "dist")
-      .localCheckpoint()
-    var frontier = dist
-    var frontierN = frontier.count()
-    var iter = 0
-    while (frontierN > 0 && iter < maxIter) {
-      val relaxed = frontier
-        .join(edges, frontier("v") === edges("src"))
-        .select(col("source"), col("dst").as("v"),
-          (col("dist") + col("w")).as("cand"))
-        .groupBy(col("source"), col("v")).agg(min(col("cand")).as("cand"))
-      val merged = dist.join(relaxed, Seq("source", "v"), "full")
-        .select(col("source"), col("v"), col("dist"), col("cand"),
-          least(coalesce(col("dist"), lit(Double.MaxValue)), col("cand")).as("newDist"))
-        .localCheckpoint(eager = false) // the frontier count materializes
-      frontier = merged
+    Rounds.around(spark, "ssspMulti") { loop =>
+      val edges = loop.hold(weighted.repartition(col("src")))
+      // the state is a round's merge (source, v, dist, cand, newDist):
+      // each vertex's distance before the round, its best candidate and
+      // the distance after; round 0 reaches each source at 0.0
+      def dist(s: DataFrame) =
+        s.select(col("source"), col("v"), coalesce(col("newDist"), col("dist")).as("dist"))
+      def frontier(s: DataFrame) = s
         .where(col("dist").isNull || (col("cand").isNotNull && col("cand") < col("dist")))
         .select(col("source"), col("v"), col("newDist").as("dist"))
-      frontierN = frontier.count()
-      graft.core.Checkpoints.release(dist)
-      dist = merged
-        .select(col("source"), col("v"), coalesce(col("newDist"), col("dist")).as("dist"))
-      iter += 1
+      val init = sources.map(s => (s, s, Option.empty[Double], Option.empty[Double], 0.0))
+        .toDF("source", "v", "dist", "cand", "newDist")
+      val (last, _) = loop.iterate(init, maxIter) { s =>
+        val f = frontier(s)
+        val relaxed = f
+          .join(edges, f("v") === edges("src"))
+          .select(col("source"), col("dst").as("v"),
+            (col("dist") + col("w")).as("cand"))
+          .groupBy(col("source"), col("v")).agg(min(col("cand")).as("cand"))
+        dist(s).join(relaxed, Seq("source", "v"), "full")
+          .select(col("source"), col("v"), col("dist"), col("cand"),
+            least(coalesce(col("dist"), lit(Double.MaxValue)), col("cand")).as("newDist"))
+      }(frontier(_).count() > 0) // the frontier count materializes the merge
+      loop.result(dist(last))
     }
-    edges.unpersist()
-    dist
   }
 
   /** pagerank — the reference parses args and extracts vertices but left the
@@ -505,10 +443,9 @@ object Iterative {
   /** The rounds of [[pagerank]] (no `sources`) and [[personalizedPagerank]]
     * (the sorted source set). */
   private def rankRounds(edges: DataFrame, sources: Option[Array[Long]],
-      alpha: Double, tol: Double, maxIter: Int): DataFrame = {
-    val rounds = new Rounds(edges.sparkSession,
-      if (sources.isEmpty) "pagerank" else "personalizedPagerank")
-    try {
+      alpha: Double, tol: Double, maxIter: Int): DataFrame =
+    Rounds.around(edges.sparkSession,
+        if (sources.isEmpty) "pagerank" else "personalizedPagerank") { rounds =>
       val parts = rounds.parts
       // the distinct directed edges, each vertex holding its out- and
       // in-neighbours; the in-neighbours register the sinks as vertices
@@ -547,8 +484,7 @@ object Iterative {
         val r = if (done) b.rank else prRanks(b, alpha, n, dmK, sources)
         Iterator.range(0, b.adj.size).map(i => Row(b.adj.vs(i), r(i)))
       }
-    } finally rounds.close()
-  }
+    }
 
   /** A [[pagerank]] state block: the ranks `rank` that sent the round's
     * contributions (null before the first round), the contributions

@@ -80,14 +80,13 @@ object Triangles {
     * [[triangles]]. Returns one row (n_triangles). */
   def triangleCount(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val rounds = new Rounds(spark, "triangleCount")
-    val n = try {
+    val n = Rounds.around(spark, "triangleCount") { rounds =>
       val parts = rounds.parts
       val adj = rounds.init(Csr.edgePairs(edges))(Csr.route(parts, directed = false))(
         (_, pairs) => new TriBlock(Csr(parts, pairs), null, null, null, 0L))
       val (up, _) = rounds.step(adj)(degrees)(orient)(_ => ())
       rounds.step(up)(upLists)(closeWedges)(_.count)._2.sum
-    } finally rounds.close()
+    }
     spark.createDataFrame(java.util.List.of(Row(n)), CountSchema)
   }
 
@@ -226,25 +225,18 @@ object Triangles {
     * (r10 ADVICE). */
   def kTrussWithRounds(edges: DataFrame, k: Int): (DataFrame, Int) = {
     require(k >= 2, "k must be >= 2")
-    var u = GraphOps.edgeUpper(edges).localCheckpoint()
-    var m = u.count()
-    var changed = m > 0
-    var iter = 0
-    while (changed && iter < TrussMaxIter) {
-      val keep = edgeSupport(u)
-        .where(col("support") >= (k - 2).toLong)
-        .select(col("src"), col("dst"))
-      val u2 = u.join(keep, Seq("src", "dst"), "left_semi")
-        .localCheckpoint(eager = false) // the count below materializes
-      val m2 = u2.count()
-      changed = m2 != m
-      graft.core.Checkpoints.release(u)
-      u = u2; m = m2
-      iter += 1
+    Rounds.around(edges.sparkSession, "kTruss") { loop =>
+      var m = 0L // the edge count before: an empty graph runs no round
+      val (u, iter) = loop.iterate(GraphOps.edgeUpper(edges), TrussMaxIter) { u =>
+        val keep = edgeSupport(u)
+          .where(col("support") >= (k - 2).toLong)
+          .select(col("src"), col("dst"))
+        u.join(keep, Seq("src", "dst"), "left_semi")
+      } { u => val before = m; m = loop.rows(u); m != before }
+      (loop.result(u.join(edgeSupport(u), Seq("src", "dst"), "left")
+        .select(col("src"), col("dst"),
+          coalesce(col("support"), lit(0L)).as("support"))), iter)
     }
-    (u.join(edgeSupport(u), Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"),
-        coalesce(col("support"), lit(0L)).as("support")), iter)
   }
 
   /** neigh_tri (`oink/neigh_tri.cpp:52+`): per-vertex neighbor count +

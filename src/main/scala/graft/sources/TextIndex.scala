@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
-import graft.core.{Checkpoints, TopK}
+import graft.core.{Checkpoints, JobLabel, TopK}
 import graft.text.TextOps
 
 /** PERSISTED lexical (BM25) index — the retrieval-family member of the
@@ -79,17 +79,21 @@ object TextIndex {
   /** Build the index under `basePath`: `_postings` created by
     * [[Bucketing.create]] bucketed and sorted by `word` (one file per
     * bucket), `_totals` as one small file; appends, compactions and
-    * removals keep both there. */
+    * removals keep both there. The tf/dl checkpoints' jobs are described
+    * `"textBuild derive"`, and the caller's description comes back on
+    * every exit path. */
   def build(spark: SparkSession, docs: DataFrame, textCol: String,
       docCol: String, name: String, buckets: Int = 64,
-      basePath: String = Bucketing.defaultBase): Unit = {
-    val (postings, totals) = postingAndTotals(docs, textCol, docCol)
-    try {
-      Bucketing.create(spark, postings, s"${name}_postings", s"$basePath/${name}_postings",
-        Some(BucketSpec(buckets, Seq("word"), Seq("word"))))
-      Bucketing.create(spark, totals, s"${name}_totals", s"$basePath/${name}_totals")
-    } finally Checkpoints.release(postings, totals)
-  }
+      basePath: String = Bucketing.defaultBase): Unit =
+    JobLabel.around(spark.sparkContext, "textBuild") { label =>
+      label("derive")
+      val (postings, totals) = postingAndTotals(docs, textCol, docCol)
+      try {
+        Bucketing.create(spark, postings, s"${name}_postings", s"$basePath/${name}_postings",
+          Some(BucketSpec(buckets, Seq("word"), Seq("word"))))
+        Bucketing.create(spark, totals, s"${name}_totals", s"$basePath/${name}_totals")
+      } finally Checkpoints.release(postings, totals)
+    }
 
   /** BM25 top-k from the STORED posting lists: identical ranking to
     * `TextOps.bm25TopK(corpus, ...)` whenever the index is current
@@ -140,15 +144,20 @@ object TextIndex {
     * totals — idf and avgdl stay exact for the grown corpus. The caller
     * owns id freshness (the [[IvfIndex.append]] / [[DedupIndex.append]]
     * contract): route admissions through the dedup gate first. The
-    * batch's tf/dl checkpoints are released once both inserts ran. */
+    * batch's tf/dl checkpoints are released once both inserts ran. Jobs
+    * are described `"textAppend derive"` and `"textAppend write"`, and
+    * the caller's description comes back on every exit path. */
   def append(spark: SparkSession, name: String, fresh: DataFrame,
-      textCol: String, docCol: String): Unit = {
-    val (postings, totals) = postingAndTotals(fresh, textCol, docCol)
-    try {
-      postings.write.mode("append").insertInto(s"${name}_postings")
-      totals.write.mode("append").insertInto(s"${name}_totals")
-    } finally Checkpoints.release(postings, totals)
-  }
+      textCol: String, docCol: String): Unit =
+    JobLabel.around(spark.sparkContext, "textAppend") { label =>
+      label("derive")
+      val (postings, totals) = postingAndTotals(fresh, textCol, docCol)
+      try {
+        label("write")
+        postings.write.mode("append").insertInto(s"${name}_postings")
+        totals.write.mode("append").insertInto(s"${name}_totals")
+      } finally Checkpoints.release(postings, totals)
+    }
 
   /** Maintenance: rewrite the appended postings one-file-per-bucket and
     * fold the per-batch totals rows back to one file — every one of

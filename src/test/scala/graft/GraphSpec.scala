@@ -405,6 +405,46 @@ class GraphSpec extends AnyFunSuite {
       s"personalizedPagerank with a missing source left RDDs ${leftover(before)} persisted")
   }
 
+  test("the DataFrame graph loops leave no persisted RDD behind, converged, at maxIter or cancelled") {
+    val sc = spark.sparkContext
+    def leftover(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    // path 0-15 plus K5 on 20..24
+    val g = edges((0L until 15L).map(i => (i, i + 1)) ++
+      (for (i <- 20L to 24L; j <- (i + 1) to 24L) yield (i, j)): _*)
+    val weighted = GraphOps.withWeights(g)
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ccFindStar" -> (() => Iterative.ccFindStar(g)),
+      "ccFindStar at maxIter" -> (() => Iterative.ccFindStar(g, maxIter = 2)),
+      "lubyMis" -> (() => Iterative.lubyMis(g)),
+      "lubyMis at maxIter" -> (() => Iterative.lubyMis(g, maxIter = 1)),
+      "maximalMatching" -> (() => Iterative.maximalMatching(g)),
+      "labelPropagation" -> (() => Iterative.labelPropagation(g)),
+      "kCore" -> (() => Iterative.kCore(g, 3)),
+      "kCore at maxIter" -> (() => Iterative.kCore(g, 3, maxIter = 1)),
+      "ssspMulti" -> (() => Iterative.ssspMulti(weighted, Seq(0L, 20L))),
+      "ssspMulti at maxIter" -> (() => Iterative.ssspMulti(weighted, Seq(0L, 20L), maxIter = 2)),
+      "kTruss" -> (() => Triangles.kTruss(g, 4)),
+      "anf estimate" -> (() => Anf.neighborhoodEstimate(g, 3)),
+      "anf harmonic" -> (() => Anf.harmonicCentrality(g, 3)))
+    for ((name, call) <- loops) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = call()
+      assert(out.collect().nonEmpty, s"$name returned no rows")
+      graft.core.Checkpoints.release(out)
+      assert(leftover(before).isEmpty, s"$name left RDDs ${leftover(before)} persisted")
+    }
+    val leaks = for ((name, call) <- loops if !name.endsWith("at maxIter"); n <- Seq(4, 8)) yield {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val thrown = SparkJobs.cancelFrom(n)(call())
+      assert(thrown.exists(e => Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("cancelled"))),
+        s"$name: job $n was not cancelled: $thrown")
+      s"$name with job $n cancelled" -> leftover(before)
+    }
+    assert(leaks.forall(_._2.isEmpty), leaks.collect { case (c, rdds) if rdds.nonEmpty =>
+      s"$c left RDDs $rdds persisted" }.mkString("; "))
+  }
+
   test("ANF with an ample sketch returns exact r-hop reach sizes") {
     // path 1-2-3-4 plus isolated edge 10-11; below k the KMV sketch
     // degenerates to the exact distinct count, so every vertex must

@@ -73,6 +73,26 @@ object SparkJobs {
       .map(_.tasks), buckets)
   }
 
+  /** Runs `body` in a fresh job group in which the `n`th Spark job, and
+    * every later one, is cancelled as it starts. Returns what `body`
+    * threw, or None if it returned before a cancellation landed. */
+  def cancelFrom(n: Int)(body: => Any): Option[Throwable] = {
+    val sc = TestSession.spark.sparkContext
+    try {
+      observe[Any, Int](body) { (group, started) =>
+        new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            if (e.properties != null &&
+                e.properties.getProperty("spark.jobGroup.id") == group) {
+              val k = started.synchronized { started += e.jobId; started.length }
+              if (k >= n) sc.cancelJob(e.jobId, s"job $k of $group cancelled")
+            }
+        }
+      }
+      None
+    } catch { case scala.util.control.NonFatal(t) => Some(t) }
+  }
+
   /** Runs `body` in a fresh job group with the listener `make(group,
     * out)` registered, and returns what the listener appended to `out`. */
   private def observe[T, E](body: => T)(

@@ -58,4 +58,23 @@ class TextIndexSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(grown == full && grown.nonEmpty)
   }
+
+  test("every job of build and append names its operator; the caller's description comes back") {
+    val sc = spark.sparkContext
+    val docs = Tables.documents(spark, sf0001)
+    def described(call: => Unit): Seq[String] = SparkJobs.describe {
+      sc.setJobDescription("caller")
+      call
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    }._2
+    val build = described(TextIndex.build(spark, docs.where(col("doc_id") % 5 =!= 0),
+      "text", "doc_id", "graft_text_label"))
+    val buildLabels = Set("textBuild derive") ++
+      TextIndex.tables(spark, "graft_text_label").map(t => s"create $t")
+    assert(build.contains("textBuild derive") && build.forall(buildLabels), build)
+    val append = described(TextIndex.append(spark, "graft_text_label",
+      docs.where(col("doc_id") % 5 === 0), "text", "doc_id"))
+    assert(append.contains("textAppend derive") && append.contains("textAppend write") &&
+      append.forall(Set("textAppend derive", "textAppend write")), append)
+  }
 }

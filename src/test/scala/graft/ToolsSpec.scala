@@ -77,4 +77,15 @@ class ToolsSpec extends AnyFunSuite {
     val strays = for ((f, text) <- sources; s <- spellings if text.contains(s)) yield s"$f: $s"
     assert(strays.isEmpty, s"nearest-centroid spellings outside the toolkit: ${strays.mkString("; ")}")
   }
+
+  test("the graph loops checkpoint, persist and release only through Rounds") {
+    val code = Seq("Iterative", "Triangles", "Anf").map { f =>
+      val path = s"src/main/scala/graft/graph/$f.scala"
+      path -> Files.readString(Paths.get(path))
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    }
+    val spellings = Seq("localCheckpoint", "persist(", "unpersist", "Checkpoints.release")
+    val strays = for ((f, text) <- code; s <- spellings if text.contains(s)) yield s"$f: $s"
+    assert(strays.isEmpty, s"lifecycle spellings outside Rounds: ${strays.mkString("; ")}")
+  }
 }
